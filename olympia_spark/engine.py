@@ -12,6 +12,11 @@ This is the rebuild of the reference's Spark integration surface
   after resolving ``ns.table`` references to temp views over the
   catalog-tracked parquet files — the Python-native equivalent of the
   reference's DSv2 catalog plugin (SURVEY §4: no Catalyst rule needed).
+  Every read or rewrite of statement text before ``spark.sql`` goes
+  through one lexer, ``sqltext.py``: one grammar for string literals
+  (``\\`` escapes and ``''`` doubling, both quote styles), backtick
+  identifiers and nesting comments, and from it a code view, keyword
+  and paren finds, a top-level comma split and a map over code runs.
 * **Read path (§3.1)** — table resolution = tree search → TableDef →
   ``spark.read.parquet(files)``, recording a TABLE_SELECT action on the
   transaction (reference OlympiaIcebergTableScan.java:31-48).
@@ -44,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from olympia_spark import sqltext
 from olympia_spark.catalog import Catalog
 from olympia_spark.catalog.actions import Action, ActionType
 from olympia_spark.catalog.catalog import DropNamespaceBehavior
@@ -93,11 +99,14 @@ _CARDINALITY_MARKER = "MERGE_CARDINALITY[b3f6c2e9]"
 # (trim, strip trailing ';', collapse whitespace, case-insensitive)
 _BEGIN_RE = re.compile(r"^BEGIN(\s+TRANSACTION)?$", re.I)
 # A whole-conjunct simple comparison for stats pruning: column op literal,
-# where the literal is a complete quoted string (escaped-quote aware) or a
-# complete signed number (decimal / scientific).
+# where the literal is a complete quoted string ('' doubling only — a
+# backslash escape would need unescaping to compare, so such a literal
+# never parses and never prunes) or a complete signed number (decimal /
+# scientific).
 _SIMPLE_CMP_RE = re.compile(
     r"^\s*(\w+)\s*(=|<=|>=|<|>)\s*"
-    r"('(?:[^']|'')*'|[+-]?(?:\d+(?:\.\d+)?|\.\d+)(?:[eE][+-]?\d+)?)\s*$")
+    r"('(?:[^'\\]|'')*'|[+-]?(?:\d+(?:\.\d+)?|\.\d+)(?:[eE][+-]?\d+)?)"
+    r"\s*$")
 _COMMIT_RE = re.compile(r"^COMMIT(\s+TRANSACTION)?$", re.I)
 _ROLLBACK_RE = re.compile(r"^ROLLBACK(\s+TRANSACTION)?$", re.I)
 
@@ -138,231 +147,22 @@ def _can_upcast(src: T.DataType, dst: T.DataType) -> bool:
     return False
 
 
-_SCRUB_RE = re.compile(
-    r"`[^`]*`"                     # backtick-quoted identifier
-    r"|'(?:[^'\\]|\\.|'')*'"       # single-quoted literal (\-escapes, '')
-    r'|"(?:[^"\\]|\\.)*"'          # double-quoted literal (\-escapes)
-    r"|--[^\n]*"                   # line comment
-    r"|/\*.*?\*/",                 # block comment
-    re.S)
-
-
-def _scrub_literals(s: str) -> str:
-    """Replace quoted identifiers, string literals and SQL comments in
-    ONE combined left-to-right pass — for keyword/identifier scans
-    that must never see quoted or comment content. One pass is
-    load-bearing: ANY sequential quote-stripping pass cross-pairs its
-    delimiter across the other syntax's spans (apostrophes across
-    double-quoted literals, backticks across string literals — review
-    r12 s2 passes 5+6, each reproduced), deleting REAL code between
-    them; backslash escapes must be part of the literal grammar for
-    the same reason (``'don\\'t'`` would otherwise close early and
-    cross-pair). Backtick-quoted identifiers become a POISON
-    placeholder, not nothing — a vanished ``` `rand`() ``` call would
-    slip call-site whitelists (the placeholder is an identifier no
-    whitelist knows, so gated callers downgrade conservatively)."""
-    return _SCRUB_RE.sub(
-        lambda m: " __quoted_ident__ " if m.group(0).startswith("`")
-        else " ", s)
-
-
-def _scan_sql(s: str) -> list[tuple[str, str]]:
-    """(kind, text) segments over the SQL literal grammar, ONE
-    left-to-right scan — kind is 'code', 'literal' (quoted string or
-    backtick identifier, verbatim WITH its quotes) or 'comment' (line,
-    or bracketed with NESTING — Spark bracketed comments nest,
-    SPARK-28880, which a lazy regex cannot count; r13 review pass 2,
-    reproduced). One scanner is load-bearing: any second pass with its
-    own quote grammar cross-pairs delimiters across the first pass's
-    spans (blind-spot #7 — _normalize's old whitespace-collapse split
-    missed backslash escapes and backticks, so it collapsed runs of
-    spaces INSIDE real literals of executed statement text; r13 review
-    pass 4, reproduced). Single-quoted literals honor backslash
-    escapes and '' doubling; double-quoted honor backslash escapes;
-    backticks run to the next backtick."""
-    segs: list[tuple[str, str]] = []
-    i, n = 0, len(s)
-    code_start = 0
-
-    def flush_code(end: int) -> None:
-        if end > code_start:
-            segs.append(("code", s[code_start:end]))
-
-    while i < n:
-        ch = s[i]
-        if ch in "'\"":
-            q, j = ch, i + 1
-            while j < n:
-                if s[j] == "\\" and j + 1 < n:
-                    j += 2
-                    continue
-                if s[j] == q:
-                    if q == "'" and s[j + 1:j + 2] == "'":
-                        j += 2          # '' doubling stays inside
-                        continue
-                    break
-                j += 1
-            flush_code(i)
-            segs.append(("literal", s[i:min(j + 1, n)]))
-            i = j + 1
-            code_start = i
-        elif ch == "`":
-            j = s.find("`", i + 1)
-            j = n - 1 if j < 0 else j
-            flush_code(i)
-            segs.append(("literal", s[i:j + 1]))
-            i = j + 1
-            code_start = i
-        elif s[i:i + 2] == "--":
-            flush_code(i)
-            j = s.find("\n", i)
-            end = n if j < 0 else j     # the newline itself stays code
-            segs.append(("comment", s[i:end]))
-            i = end
-            code_start = i
-        elif s[i:i + 2] == "/*":
-            flush_code(i)
-            depth, j = 1, i + 2
-            while j < n and depth:
-                if s[j:j + 2] == "/*":
-                    depth += 1
-                    j += 2
-                elif s[j:j + 2] == "*/":
-                    depth -= 1
-                    j += 2
-                else:
-                    j += 1
-            segs.append(("comment", s[i:j]))
-            i = j
-            code_start = i
-        else:
-            i += 1
-    flush_code(n)
-    return segs
-
-
-def _strip_comments(s: str) -> str:
-    """Remove SQL comments while PRESERVING every literal and quoted
-    identifier verbatim (a '--' INSIDE a string literal is content,
-    not a comment). Must run BEFORE whitespace collapse: a line
-    comment ends at its newline, so collapsing first would let it
-    swallow every clause after it on the re-assembled single line
-    (r13 review — statement-eating comments). Optimizer hints
-    (``/*+ ... */``) are comments to this engine and strip with the
-    rest."""
-    return "".join(" " if k == "comment" else t for k, t in _scan_sql(s))
-
-
-def _normalize(sql: str) -> str:
-    """Strip comments, trim, strip trailing ';', collapse whitespace —
-    but NEVER inside string literals or quoted identifiers (captured
-    statement fragments like INSERT payloads and DML predicates are
-    executed from the normalized text, so literal whitespace must
-    survive). Comment removal and the collapse share ONE scanner and
-    therefore one literal grammar — the old two-grammar split missed
-    backslash escapes and collapsed whitespace inside real literals
-    (r13 review pass 4, reproduced)."""
-    parts: list[tuple[str, str]] = []
-    for k, t in _scan_sql(sql):
-        if k == "comment":
-            k, t = "code", " "          # a comment is whitespace here
-        if k == "code" and parts and parts[-1][0] == "code":
-            parts[-1] = ("code", parts[-1][1] + t)   # merge so runs
-        else:                           # spanning a comment collapse
-            parts.append((k, t))        # to ONE space
-    out = "".join(re.sub(r"\s+", " ", t) if k == "code" else t
-                  for k, t in parts)
-    return out.strip().rstrip(";").strip()
-
-
-def _find_kw(s: str, kw: str, start: int = 0) -> int | None:
-    """Index of keyword ``kw`` at paren depth 0 outside string literals
-    (word-bounded, case-insensitive), or None."""
-    depth = 0
-    i = start
-    n, k = len(s), len(kw)
-    while i < n:
-        c = s[i]
-        if c in ("'", '"'):
-            q = c
-            i += 1
-            while i < n and s[i] != q:
-                i += 2 if q == "'" and s[i:i + 2] == "''" else 1
-            i += 1
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif (depth == 0 and s[i:i + k].upper() == kw.upper()
-              and (i == 0 or not (s[i - 1].isalnum() or s[i - 1] == "_"))
-              and (i + k >= n or not (s[i + k].isalnum()
-                                      or s[i + k] == "_"))):
-            return i
-        i += 1
-    return None
-
-
-def _match_paren(s: str, open_idx: int) -> int:
-    """Index one past the ')' matching the '(' at open_idx (string-aware)."""
-    depth = 0
-    i = open_idx
-    while i < len(s):
-        c = s[i]
-        if c in ("'", '"'):
-            q = c
-            i += 1
-            while i < len(s) and s[i] != q:
-                i += 2 if q == "'" and s[i:i + 2] == "''" else 1
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    raise ValueError("unbalanced parentheses in SQL")
-
-
 def _rewrite_exclude(stmt: str) -> str:
     """``SELECT * EXCLUDE (cols)`` (DuckDB/Snowflake spelling) → Spark's
-    native ``* EXCEPT (cols)``. Pure keyword alias, applied outside
-    string literals only."""
-    parts = re.split(r"('(?:[^']|'')*'|\"[^\"]*\")", stmt)
-    return "".join(
-        p if i % 2 else re.sub(r"\bEXCLUDE\s*\(", "EXCEPT (", p,
-                               flags=re.I)
-        for i, p in enumerate(parts))
+    native ``* EXCEPT (cols)``. Pure keyword alias, applied to code
+    only."""
+    return sqltext.map_code(stmt, lambda seg: re.sub(
+        r"\bEXCLUDE\s*\(", "EXCEPT (", seg, flags=re.I))
 
 
-def _rewrite_tablesample_subqueries(s: str) -> str:
-    """Apply the TABLESAMPLE rewrite inside every parenthesized group
-    (string-aware, any depth) — same recursion contract as
-    _rewrite_qualify_subqueries, so the documented syntax works in
-    subqueries and CTE bodies, not just at depth 0."""
-    out: list[str] = []
-    i, n = 0, len(s)
-    while i < n:
-        c = s[i]
-        if c in ("'", '"'):
-            j = i + 1
-            while j < n and s[j] != c:
-                j += 2 if c == "'" and s[j:j + 2] == "''" else 1
-            out.append(s[i:j + 1])
-            i = j + 1
-            continue
-        if c == "(":
-            end = _match_paren(s, i)          # one past the ')'
-            body = s[i + 1:end - 1]
-            if "(" in body or _find_kw(body, "TABLESAMPLE") is not None:
-                body = _rewrite_tablesample(
-                    _rewrite_tablesample_subqueries(body))
-            out.append("(" + body + ")")
-            i = end
-            continue
-        out.append(c)
-        i += 1
-    return "".join(out)
+def _rewrite_tablesample_all(stmt: str) -> str:
+    """The TABLESAMPLE rewrite at the top level and inside every
+    parenthesized group, so the documented syntax works in subqueries
+    and CTE bodies, not just at depth 0."""
+    if not re.search(r"\bTABLESAMPLE\b", stmt, re.I):
+        return stmt              # fast path: no paren walk on plain SQL
+    return _rewrite_tablesample(sqltext.rewrite_groups(
+        stmt, _rewrite_tablesample, "TABLESAMPLE"))
 
 
 def _rewrite_tablesample(stmt: str) -> str:
@@ -376,7 +176,8 @@ def _rewrite_tablesample(stmt: str) -> str:
     The whole spec lives inside the parens so a following JOIN ... ON is
     never consumed."""
     while True:
-        ti = _find_kw(stmt, "TABLESAMPLE")
+        code = sqltext.code_view(stmt)
+        ti = sqltext.find_kw(code, "TABLESAMPLE")
         if ti is None:
             return stmt
         j = ti - 1
@@ -390,8 +191,8 @@ def _rewrite_tablesample(stmt: str) -> str:
             raise ValueError("TABLESAMPLE must directly follow a table "
                              "reference")
         start = j + 1
-        op = stmt.index("(", ti)
-        cp = _match_paren(stmt, op)
+        op = code.index("(", ti)
+        cp = sqltext.match_paren(code, op)
         spec = stmt[op + 1:cp - 1].strip()
         m = re.fullmatch(
             r"(\d+(?:\.\d+)?)\s+PERCENT\s+ON\s+(.+?)(?:\s+SEED\s+(\d+))?",
@@ -436,77 +237,59 @@ def _rewrite_qualify(stmt: str) -> tuple[str, list[str]]:
     Returns (sql, hidden_column_names)."""
     if not re.search(r"\bQUALIFY\b", stmt, re.I):
         return stmt, []          # fast path: no paren-walk on plain SQL
-    return _rewrite_qualify_here(_rewrite_qualify_subqueries(stmt))
+    return _rewrite_qualify_here(sqltext.rewrite_groups(
+        stmt, _rewrite_qualify_nested, "QUALIFY"))
 
 
-def _rewrite_qualify_subqueries(s: str) -> str:
-    """Apply the QUALIFY rewrite inside every parenthesized group
-    (string-aware, any depth). Nested rewrites drop their hidden window
-    projections via ``SELECT * EXCEPT (...)`` so the subquery schema is
-    exactly what the un-rewritten query would have produced."""
-    out: list[str] = []
-    i, n = 0, len(s)
-    while i < n:
-        c = s[i]
-        if c in ("'", '"'):
-            j = i + 1
-            while j < n and s[j] != c:
-                j += 2 if c == "'" and s[j:j + 2] == "''" else 1
-            out.append(s[i:j + 1])
-            i = j + 1
-            continue
-        if c == "(":
-            end = _match_paren(s, i)          # one past the ')'
-            body = s[i + 1:end - 1]
-            if "(" in body or _find_kw(body, "QUALIFY") is not None:
-                rewritten, hidden = _rewrite_qualify_here(
-                    _rewrite_qualify_subqueries(body))
-                if hidden:
-                    rewritten = rewritten.replace(
-                        "SELECT * FROM",
-                        f"SELECT * EXCEPT ({', '.join(hidden)}) FROM", 1)
-                body = rewritten
-            out.append("(" + body + ")")
-            i = end
-            continue
-        out.append(c)
-        i += 1
-    return "".join(out)
+def _rewrite_qualify_nested(body: str) -> str:
+    """The QUALIFY rewrite of one parenthesized group. Nested rewrites
+    drop their hidden window projections via ``SELECT * EXCEPT (...)``
+    so the subquery schema is exactly what the un-rewritten query would
+    have produced."""
+    rewritten, hidden = _rewrite_qualify_here(body)
+    if hidden:
+        rewritten = rewritten.replace(
+            "SELECT * FROM",
+            f"SELECT * EXCEPT ({', '.join(hidden)}) FROM", 1)
+    return rewritten
 
 
 def _rewrite_qualify_here(stmt: str) -> tuple[str, list[str]]:
-    qi = _find_kw(stmt, "QUALIFY")
+    code = sqltext.code_view(stmt)
+    qi = sqltext.find_kw(code, "QUALIFY")
     if qi is None:
         return stmt, []
     inner = stmt[:qi].strip()
-    tail = stmt[qi + len("QUALIFY"):]
-    t_candidates = [p for p in (_find_kw(tail, "ORDER"),
-                                _find_kw(tail, "LIMIT")) if p is not None]
+    tail, tail_code = stmt[qi + len("QUALIFY"):], code[qi + len("QUALIFY"):]
+    t_candidates = [p for p in (sqltext.find_kw(tail_code, "ORDER"),
+                                sqltext.find_kw(tail_code, "LIMIT"))
+                    if p is not None]
     cut = min(t_candidates) if t_candidates else len(tail)
     cond, trailing = tail[:cut].strip(), tail[cut:].strip()
+    cond_code = sqltext.code_view(cond)
     # inline window expressions in the condition become hidden columns
     hidden: list[str] = []
     extra: list[str] = []
     while True:
-        oi = _find_kw(cond, "OVER")
+        oi = sqltext.find_kw(cond_code, "OVER")
         if oi is None:
             break
         # right: the OVER (...) frame
-        op = cond.index("(", oi)
-        end = _match_paren(cond, op)
+        op = cond_code.index("(", oi)
+        end = sqltext.match_paren(cond_code, op)
         # left: backwards over ws → the function call's closing paren
         j = oi - 1
-        while j >= 0 and cond[j].isspace():
+        while j >= 0 and cond_code[j].isspace():
             j -= 1
-        if j < 0 or cond[j] != ")":
+        if j < 0 or cond_code[j] != ")":
             raise ValueError("QUALIFY: cannot parse window function "
                              f"before OVER in: {cond}")
         depth = 0
         k = j
         while k >= 0:
-            if cond[k] == ")":
+            if cond_code[k] == ")":
                 depth += 1
-            elif cond[k] == "(":
+            elif cond_code[k] == "(":
                 depth -= 1
                 if depth == 0:
                     break
@@ -517,8 +300,10 @@ def _rewrite_qualify_here(stmt: str) -> tuple[str, list[str]]:
         extra.append(f"{cond[k:end]} AS {alias}")
         hidden.append(alias)
         cond = cond[:k] + alias + cond[end:]
+        cond_code = cond_code[:k] + alias + cond_code[end:]
     if extra:
-        si = _find_kw(inner, "SELECT")
+        inner_code = sqltext.code_view(inner)
+        si = sqltext.find_kw(inner_code, "SELECT")
         if si is not None and re.match(r"\s*DISTINCT\b",
                                        inner[si + len("SELECT"):], re.I):
             # injecting hidden projections into a DISTINCT select list
@@ -527,7 +312,7 @@ def _rewrite_qualify_here(stmt: str) -> tuple[str, list[str]]:
                 "QUALIFY with an inline window function over SELECT "
                 "DISTINCT is not supported: project the window "
                 "expression as a named column first, then QUALIFY on it")
-        fi = _find_kw(inner, "FROM")
+        fi = sqltext.find_kw(inner_code, "FROM")
         if fi is None:
             raise ValueError("QUALIFY: no top-level FROM to attach "
                              "window projections to")
@@ -2195,8 +1980,10 @@ class Engine:
         prefixes (``DATE '2024-01-01'``) are not column references —
         without these exclusions a column named `date` could never be
         dropped from a table whose expressions cast anything to DATE."""
-        e = re.sub(r"''", "", expr)
-        e = re.sub(r"'[^']*'", "'~'", e)      # blank string literals
+        # string literals become '~' (the typed-literal check below
+        # still sees the quote), comments become whitespace
+        e = "".join("'~'" if k == "literal" else " " if k == "comment"
+                    else t for k, t in sqltext.scan(expr))
         for m in re.finditer(rf"\b{re.escape(column)}\b", e, re.I):
             if re.search(r"\bAS\s*$", e[:m.start()], re.I):
                 continue                       # cast/alias target keyword
@@ -2718,15 +2505,23 @@ class Engine:
             # out as outer-table comparisons (`k IN (SELECT k FROM s
             # WHERE b = 2)` must not prune the target on b) — no pruning.
             return [f.path for f in tdef.data_files]
-        # Split on AND and keep ONLY conjuncts that are in their entirety a
-        # simple `col op literal` comparison with an exactly-parsed literal
-        # (escaped quotes, scientific notation, sign). Anything else — a
-        # mis-split string literal containing AND, IS NULL, BETWEEN, function
-        # calls, an unrecognized literal form — contributes no pruning:
-        # partially-parsed literals ('O''Brien' read as 'O', 1e5 read as 1)
-        # would prune files that DO contain matching rows.
+        # Split on the ANDs that are code (never one inside a literal:
+        # 'x AND v = 3' is data, not a conjunct) and keep ONLY conjuncts
+        # that are in their entirety a simple `col op literal` comparison
+        # with an exactly-parsed literal ('' doubling, scientific
+        # notation, sign). Anything else — IS NULL, BETWEEN, function
+        # calls, a backslash-escaped or unrecognized literal form —
+        # contributes no pruning: partially-parsed literals ('O''Brien'
+        # read as 'O', 1e5 read as 1) would prune files that DO contain
+        # matching rows.
+        conjuncts, pos = [], 0
+        for m in re.finditer(r"\bAND\b", sqltext.code_view(predicate),
+                             re.I):
+            conjuncts.append(predicate[pos:m.start()])
+            pos = m.end()
+        conjuncts.append(predicate[pos:])
         comparisons = []
-        for conj in re.split(r"\bAND\b", predicate, flags=re.I):
+        for conj in conjuncts:
             m = _SIMPLE_CMP_RE.match(conj)
             if m:
                 comparisons.append(m.groups())
@@ -3423,7 +3218,7 @@ class Engine:
         if m.group("dele"):
             return (cond.strip() if cond else None, "delete", None)
         assignments = {}
-        for part in re.split(r",(?![^()]*\))", m.group("sets")):
+        for part in sqltext.split_top_level(m.group("sets")):
             col, _, expr = part.partition("=")
             assignments[col.strip()] = expr.strip()
         return (cond.strip() if cond else None, "update", assignments)
@@ -3450,7 +3245,7 @@ class Engine:
             if m:
                 cond = m.group("cond")
                 ins_cols = [c.strip() for c in m.group("cols").split(",")]
-                ins_vals = re.split(r",(?![^()]*\))", m.group("vals"))
+                ins_vals = sqltext.split_top_level(m.group("vals"))
                 if len(ins_cols) != len(ins_vals):
                     raise ValueError(
                         "MERGE: INSERT column/value count mismatch")
@@ -3690,42 +3485,6 @@ class Engine:
         self._finish(txn)
 
     @staticmethod
-    def _split_top_level(s: str) -> list[str]:
-        """Split on commas at paren depth 0, OUTSIDE string literals
-        (column lists / partition lists / VALUES tuples whose entries
-        may contain parenthesized or quoted commas — a literal
-        ``'a, b'`` must not split; '' is the SQL escape for a quote)."""
-        parts, depth, cur, in_str = [], 0, [], False
-        i = 0
-        while i < len(s):
-            ch = s[i]
-            if in_str:
-                if ch == "'":
-                    if i + 1 < len(s) and s[i + 1] == "'":
-                        cur.append("''")
-                        i += 2
-                        continue
-                    in_str = False
-                cur.append(ch)
-                i += 1
-                continue
-            if ch == "'":
-                in_str = True
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            if ch == "," and depth == 0:
-                parts.append("".join(cur))
-                cur = []
-            else:
-                cur.append(ch)
-            i += 1
-        if cur:
-            parts.append("".join(cur))
-        return parts
-
-    @staticmethod
     def _split_generated_columns(cols: str) -> tuple[str, dict, dict]:
         """Split a CREATE TABLE column list into (plain DDL, generated
         map, constraints map): ``c DATE GENERATED ALWAYS AS (expr)``
@@ -3735,7 +3494,7 @@ class Engine:
         entries — which also makes SHOW CREATE TABLE output round-trip
         through this parser. The split is parenthesis-aware so
         expressions containing commas survive."""
-        parts = Engine._split_top_level(cols)
+        parts = sqltext.split_top_level(cols)
         plain, gen, cons = [], {}, {}
         for p in parts:
             m = re.match(r"\s*CONSTRAINT\s+(\w+)\s+CHECK"
@@ -5895,14 +5654,12 @@ class Engine:
         deltas (SUM/COUNT add; MIN/MAX are monotone under inserts; AVG
         decomposes exactly into SUM/COUNT companions — deletes ride the
         signed feed, or the group-scoped MIN/MAX recompute lane)."""
-        norm = _normalize(q)
+        norm = sqltext.normalize(q)
         low = norm.lower()
         if "\\" in norm or "`" in norm:
-            # _mv_code_view's documented precondition (no escape forms
-            # it cannot track): a backslash-escaped quote desyncs the
-            # code view, letting a COMPOUND aggregate pass the
-            # paren-balance check as a single call (ADVICE r13 — the
-            # union lane already refused both; mirror it here)
+            # escape forms and quoted identifiers stay on the full lane
+            # in every MV parser (ADVICE r13): the lanes' screens were
+            # only ever proven over text without them
             return None
         if len(re.findall(r"\bselect\b", low)) != 1:
             return None
@@ -5914,7 +5671,7 @@ class Engine:
         # positions 1:1 with norm) so a literal containing ' HAVING '
         # or ' GROUP BY ' can never mis-partition the clauses; each
         # clause then slices from norm so literals survive verbatim
-        code = self._mv_code_view(norm)
+        code = sqltext.code_view(norm)
         m = re.match(r"SELECT (.+?) FROM (\S+)(?: WHERE (.+?))?"
                      r"(?: GROUP BY (.+?))?(?: HAVING (.+))?$",
                      code, re.I | re.S)
@@ -6000,7 +5757,7 @@ class Engine:
         several stored rows per key value, a silently multi-matching
         merge. Unaliased expression keys refuse too (the stored column
         needs a deterministic name)."""
-        group_exprs = ([g.strip() for g in self._split_top_level(gb)]
+        group_exprs = ([g.strip() for g in sqltext.split_top_level(gb)]
                        if gb else [])
         gcanon = [self._mv_canon_expr(g) for g in group_exprs]
         if len(gcanon) != len(set(gcanon)):
@@ -6010,7 +5767,7 @@ class Engine:
             return None
         bare_pat = r"\w+(?:\.\w+)?" if qualified else r"\w+"
         keys, aggs = [], []   # keys: (canon_expr, alias|None, item, out)
-        for item in self._split_top_level(items_raw):
+        for item in sqltext.split_top_level(items_raw):
             item = item.strip()
             agg = self._mv_agg_item(item)
             if agg is not None:
@@ -6074,7 +5831,7 @@ class Engine:
         agg_by_canon = {
             f"{kind.lower()}({self._mv_canon_expr(inner)})": out
             for kind, inner, out in plan["aggs"]}
-        code = self._mv_code_view(having)
+        code = sqltext.code_view(having)
         pat = re.compile(r"\b(count|sum|min|max|avg)\s*\(", re.I)
         res, pos = [], 0
         while True:
@@ -6083,16 +5840,9 @@ class Engine:
                 res.append(having[pos:])
                 break
             res.append(having[pos:m.start()])
-            depth, j = 1, None
-            for k in range(m.end(), len(code)):
-                if code[k] == "(":
-                    depth += 1
-                elif code[k] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        j = k
-                        break
-            if j is None:
+            try:
+                j = sqltext.match_paren(code, m.end() - 1) - 1
+            except ValueError:
                 return None
             canon = (m.group(1).lower() + "("
                      + self._mv_canon_expr(having[m.end():j]) + ")")
@@ -6120,20 +5870,18 @@ class Engine:
         compound expression with single-aggregate math (silently wrong:
         least() of sums-of-mins — r13 review pass 3, reproduced). A
         genuine single call's inner is paren-BALANCED and never dips
-        negative; count on the code view so parens inside string
-        literals don't miscount."""
+        negative, i.e. the call's '(' closes exactly at the ')' that
+        ends the inner group — matched on the code view so parens inside
+        string literals don't count."""
         am = cls._MV_AGG_RE.match(item)
         if not am:
             return None
-        depth = 0
-        for ch in cls._mv_code_view(am.group(2)):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth < 0:
-                    return None
-        if depth != 0:
+        try:
+            closes = sqltext.match_paren(sqltext.code_view(item),
+                                         am.start(2) - 1)
+        except ValueError:
+            return None
+        if closes != am.end(2) + 1:
             return None
         return (am.group(1).upper(), am.group(2).strip(), am.group(3))
 
@@ -6152,10 +5900,10 @@ class Engine:
         safe word in its own right (a column named rand must not
         whitelist the function rand() — review r12 s2 pass 3) and not
         in banned_calls (union branches may not aggregate). Quoted
-        identifiers + both literal syntaxes + comments scrub in ONE
-        pass (_scrub_literals — sequential variants cross-paired, r12
-        s2 passes 4-6); digit-led literals scrub before tokenizing."""
-        scrubbed = _scrub_literals(body)
+        identifiers, literals and comments scrub in the one lexer's
+        pass (sqltext.scrub — sequential variants cross-paired, r12 s2
+        passes 4-6); digit-led literals scrub before tokenizing."""
+        scrubbed = sqltext.scrub(body)
         scrubbed = re.sub(r"\b\d[\w.]*", " ", scrubbed)
         calls = {t.lower() for t in
                  re.findall(r"([A-Za-z_]\w*)\s*\(", scrubbed)}
@@ -6167,26 +5915,6 @@ class Engine:
                     - aliases)
 
     _MV_AGG_WORDS = frozenset({"count", "sum", "min", "max", "avg"})
-
-    @staticmethod
-    def _mv_code_view(text: str) -> str:
-        """Length-preserving copy with string-literal CONTENTS blanked
-        (quote chars kept) — positions map 1:1 to the original, so
-        paren balancing and keyword matching run on code only. No
-        escape forms: callers refuse backslashes and backticks up
-        front; a doubled quote parses as two adjacent literals, which
-        is equivalent for skipping purposes."""
-        out = list(text)
-        quote = None
-        for i, ch in enumerate(text):
-            if quote:
-                if ch == quote:
-                    quote = None
-                else:
-                    out[i] = " "
-            elif ch in "'\"":
-                quote = ch
-        return "".join(out)
 
     def _mv_union_plan(self, q: str, sources: list[str], txn=None):
         """Append-only MULTI-SOURCE incremental shape (VERDICT r12 #4):
@@ -6201,18 +5929,16 @@ class Engine:
         output names — refuses to the always-correct full lane."""
         if txn is None:
             return None
-        norm = _normalize(q)
+        norm = sqltext.normalize(q)
         low = norm.lower()
         if "__mv_" in low or "\\" in norm or "`" in norm:
-            # no escape/quoting forms the position-preserving code view
-            # cannot track — full lane
-            return None
-        # comments cannot reach this parse: _normalize strips them in
-        # the same one-pass grammar as _scrub_literals BEFORE whitespace
-        # collapse (r13 review — a surviving '-- UNION ALL SELECT …'
-        # comment would otherwise parse as a PHANTOM branch here while
-        # the executed query treats it as a comment)
-        code = self._mv_code_view(norm)
+            return None              # escapes / quoted identifiers: full
+        # comments cannot reach this parse: sqltext.normalize strips
+        # them BEFORE whitespace collapse (r13 review — a surviving
+        # '-- UNION ALL SELECT …' comment would otherwise parse as a
+        # PHANTOM branch here while the executed query treats it as a
+        # comment)
+        code = sqltext.code_view(norm)
         for kw in ("join", "over", "distinct", "having",
                    "limit", "order"):
             if re.search(rf"\b{kw}\b", code, re.I):
@@ -6221,17 +5947,9 @@ class Engine:
         if not m:
             return None
         items_raw = norm[m.start(1):m.end(1)]
-        # balanced-paren scan ON THE CODE VIEW for the FROM subquery
-        depth, j = 1, None
-        for i in range(m.end(), len(code)):
-            if code[i] == "(":
-                depth += 1
-            elif code[i] == ")":
-                depth -= 1
-                if depth == 0:
-                    j = i
-                    break
-        if j is None:
+        try:                         # the FROM subquery's closing paren
+            j = sqltext.match_paren(code, m.end() - 1) - 1
+        except ValueError:
             return None
         inner, inner_code = norm[m.end():j], code[m.end():j]
         rest, rest_code = norm[j + 1:], code[j + 1:]
@@ -6247,16 +5965,13 @@ class Engine:
         if head and not re.fullmatch(r"(?:AS\s+)?\w+", head, re.I):
             return None              # only an optional derived-table alias
         # split the subquery into branches at top-level UNION ALL
-        depth, pos_depth = 0, []
-        for ch in inner_code:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            pos_depth.append(depth)
-        spans = [(um.start(), um.end()) for um in
-                 re.finditer(r"\bUNION\s+ALL\b", inner_code, re.I)
-                 if pos_depth[um.start()] == 0]
+        spans = []
+        u = sqltext.find_kw(inner_code, "UNION")
+        while u is not None:
+            um = re.compile(r"UNION\s+ALL\b", re.I).match(inner_code, u)
+            if um:
+                spans.append((u, um.end()))
+            u = sqltext.find_kw(inner_code, "UNION", u + len("UNION"))
         if not spans:
             return None
         if re.search(r"\bUNION\b(?!\s+ALL\b)", inner_code, re.I):
@@ -6290,7 +6005,7 @@ class Engine:
             if src is None:
                 return None
             names = []
-            for item in self._split_top_level(bitems):
+            for item in sqltext.split_top_level(bitems):
                 item = item.strip()
                 am = re.fullmatch(r"(.+?)\s+AS\s+(\w+)", item,
                                   re.I | re.S)
@@ -6365,10 +6080,10 @@ class Engine:
         forces full via the probe."""
         if txn is None or not 2 <= len(sources) <= 4:
             return None
-        norm = _normalize(q)
+        norm = sqltext.normalize(q)
         if "__mv_" in norm.lower() or "\\" in norm or "`" in norm:
-            return None                 # _mv_code_view precondition
-        code = self._mv_code_view(norm)
+            return None                 # escapes / quoted identifiers
+        code = sqltext.code_view(norm)
         for kw in ("over", "distinct", "having", "union", "limit",
                    "order", "right", "full", "cross", "semi",
                    "anti", "natural", "lateral", "using"):
@@ -6625,15 +6340,6 @@ class Engine:
         for the delta's own pre-aggregation (guide §2.4: do fewer
         shuffles; operations keyed the same way share one exchange).
 
-        r16 construction change (guide §5 — the driver should do almost
-        no work): the merged frame is built as ONE ``spark.sql`` text
-        over two temp views instead of the column-by-column DataFrame
-        chain — the chain cost 737 py4j round-trips per merge (measured
-        0.34–0.45s of pure driver latency per refresh at sf0.01); the
-        SQL text costs ~8. The SQL is the same plan verbatim
-        (plans/r16/mv_merge_sqltext_{before,after}.txt differ only in
-        expression ids); `_mv_merge_classic` — the previous builder —
-        stays as the fallback and the semantics oracle.
         The per-aggregate combine semantics map onto aggregate
         functions exactly: COUNT adds via SUM (contributions are
         SIGNED, so deletes arrive negative and subtract), SUM/AVG
@@ -6662,22 +6368,34 @@ class Engine:
         driver latency per refresh, measured at sf0.01); the SQL text
         costs ~8 and produces the same plan (plans/r16/
         mv_merge_sqltext_{before,after}.txt differ only in expression
-        ids). `_mv_merge_classic` keeps the previous builder as the
-        fallback and the semantics oracle the tests compare against."""
+        ids). A construction failure is raised with the plan shape
+        named — there is no second builder to fall back to."""
         try:
             return Engine._mv_merge_sql(old, delta, plan, schema)
-        except Exception:
-            return Engine._mv_merge_classic(old, delta, plan, schema)
+        except Exception as e:
+            lane = ("join" if "join" in plan
+                    else "union" if "branches" in plan else "single-source")
+            keys = ", ".join(plan["group"]) or "none (global)"
+            aggs = ", ".join(f"{k}({i}) AS {o}" for k, i, o in plan["aggs"])
+            raise RuntimeError(
+                f"materialized view merge failed for a {lane} plan with "
+                f"group keys [{keys}] and aggregates [{aggs}]: {e}") from e
 
     @staticmethod
     def _mv_merge_sql(old: DataFrame, delta: DataFrame, plan: dict,
                       schema: T.StructType) -> DataFrame:
-        """SQL-text construction of the merge — semantics identical to
-        `_mv_merge_classic`, clause by clause (the delta-side casts to
-        stored types, the shared column set, the positional UNION ALL
-        with identical select lists ≡ unionByName, the null-safe GROUP
-        BY, the companion recombine CASE, the rowcount filter, the
-        final schema casts)."""
+        """SQL-text construction of the merge, clause by clause: the
+        delta leg casts to the STORED types (a subset-of-branches union
+        delta skips the full union's type coercion, so a key emitted
+        NARROWER by its lone branch — INT vs the stored STRING — would
+        numeric-promote at the merge and collapse several stored groups,
+        r13 review pass 4); the positional UNION ALL over identical
+        select lists; the null-safe GROUP BY; SUM/AVG recombined from
+        the merged companions, NULL when the merged count is 0 (which
+        plain subtraction cannot say for SUM); grouped plans drop groups
+        whose row count reached 0 while a global plan keeps its one row
+        (COUNT 0 / SUM NULL, the recompute-on-empty result); the final
+        casts to the MV's schema."""
         spark = old.sparkSession
         old_types = {f.name: f.dataType for f in old.schema.fields}
 
@@ -6763,90 +6481,6 @@ class Engine:
         finally:                        # plan already resolved
             spark.catalog.dropTempView(vo)
             spark.catalog.dropTempView(vd)
-
-    @staticmethod
-    def _mv_merge_classic(old: DataFrame, delta: DataFrame, plan: dict,
-                          schema: T.StructType) -> DataFrame:
-        """The DataFrame-API merge builder (pre-r16) — fallback for any
-        SQL-construction edge and the reference the SQL text is checked
-        against (tests pin both paths to identical results)."""
-        # align the delta to the STORED side's physical types BEFORE
-        # the union: a subset-of-branches union delta skips the full
-        # union's type coercion, so a group key emitted NARROWER by
-        # its lone branch (INT vs the stored STRING) would numeric-
-        # promote at the merge boundary and could collapse SEVERAL
-        # stored groups ('01' = 1 AND '1' = 1) — double-counted merges
-        # (r13 review pass 4). Casting to the stored types IS the
-        # coercion the full union query would have applied; companions
-        # follow the stored files' canonical types (minted by the
-        # augmented create/full recompute) so the physical type stays
-        # stable across refreshes.
-        old_types = {f.name: f.dataType for f in old.schema.fields}
-        delta = delta.select(*[
-            F.col(c).cast(old_types[c]).alias(c) if c in old_types
-            else F.col(c) for c in delta.columns])
-        keys = list(plan["group"]) or ["__mv_k"]
-        if not plan["group"]:
-            old = old.withColumn("__mv_k", F.lit(1))
-            delta = delta.withColumn("__mv_k", F.lit(1))
-        companions = Engine._mv_companions(plan)
-        comp_by_out = {out: (s, c) for s, c, _i, out in companions}
-        rc = Engine._MV_ROWCNT
-        # SUM/AVG outputs are re-derived from their companions — their
-        # stored/delta values never enter the union (narrower rows
-        # through the one exchange)
-        shared = (keys
-                  + [out for k, _i, out in plan["aggs"]
-                     if k not in ("AVG", "SUM")]
-                  + [x for s, c, _i, _o in companions for x in (s, c)]
-                  + [rc])
-        u = old.select(*shared).unionByName(delta.select(*shared))
-        aggs = []
-        for kind, _inner, out in plan["aggs"]:
-            if kind in ("AVG", "SUM"):
-                continue                # derived from companions below
-            if kind == "COUNT":
-                aggs.append(F.sum(out).cast(old_types[out]).alias(out))
-            elif kind == "MIN":
-                aggs.append(F.min(out).alias(out))
-            else:
-                aggs.append(F.max(out).alias(out))
-        for s, c, _inner, _out in companions:
-            aggs.append(F.sum(s).cast(old_types[s]).alias(s))
-            aggs.append(F.sum(c).cast(old_types[c]).alias(c))
-        aggs.append(F.sum(rc).cast(old_types[rc]).alias(rc))
-        g = u.groupBy(*keys).agg(*aggs)
-        cols = [F.col(k) for k in plan["group"]]
-        for kind, _inner, out in plan["aggs"]:
-            if kind in ("AVG", "SUM"):
-                # recombined EXACTLY from the merged companions — the
-                # same sum/count Spark's aggregates evaluate; merged
-                # cnt==0 (a group whose every NON-NULL input is gone —
-                # all-NULL at create, or the retraction lane deleted
-                # the last non-null row) yields NULL, which plain
-                # subtraction cannot express for SUM (it says 0)
-                s, c = comp_by_out[out]
-                ms, mc = F.col(s), F.col(c)
-                cols.append(F.when(
-                    mc > 0, ms / mc if kind == "AVG" else ms).alias(out))
-            else:
-                cols.append(F.col(out))
-        res = g.select(*cols,
-                       *[F.col(s) for s, _c, _i, _o in companions],
-                       *[F.col(c) for _s, c, _i, _o in companions],
-                       F.col(rc))
-        if plan["group"]:
-            # a group whose every contributing row was deleted VANISHES
-            # from the recompute — drop its stored row. Global
-            # aggregates keep their single row (COUNT 0 / SUM NULL /
-            # AVG NULL, exactly the recompute-on-empty result).
-            res = res.filter(F.col(rc) > 0)
-        return res.select(
-            *[F.col(f.name).cast(f.dataType).alias(f.name)
-              for f in schema.fields],
-            *[F.col(s) for s, _c, _i, _o in companions],
-            *[F.col(c) for _s, c, _i, _o in companions],
-            F.col(rc))
 
     @staticmethod
     def _mv_guard(tdef: TableDef, name: str, op: str) -> None:
@@ -6971,46 +6605,27 @@ class Engine:
             raise ValueError(f"expected ns.table, got {name!r}")
         return parts[0], parts[1]
 
-    # Both quote styles are literal text under Spark defaults ("..." is a
-    # string literal unless ANSI double-quoted identifiers are on) — the
-    # same pattern _normalize protects.
-    _LITERAL_RE = r"('(?:[^']|'')*'|\"[^\"]*\")"
-
-    @classmethod
-    def _map_nonliteral(cls, sql: str, fn) -> str:
-        """Apply ``fn`` to the segments of ``sql`` OUTSIDE string literals
-        (escaped-quote aware, both quote styles) — alias substitution and
-        identifier scanning must never touch literal text ('ns1.t' or
-        "ns1.t" the string is data, not a reference)."""
-        parts = re.split(cls._LITERAL_RE, sql)
-        return "".join(p if i % 2 else fn(p) for i, p in enumerate(parts))
-
-    @classmethod
-    def _literal_spans(cls, sql: str) -> list[tuple[int, int]]:
-        return [m.span() for m in re.finditer(cls._LITERAL_RE, sql)]
-
-    def _candidate_idents(self, sql: str) -> list[tuple[str, str]]:
-        """Dotted identifiers appearing outside string literals — the
-        candidates for catalog point-lookups. O(statement length), NOT
-        O(catalog size): with millions of objects each lookup is a tree
-        descent (A19), never an enumeration."""
+    @staticmethod
+    def _candidate_idents(runs: list[str]) -> list[tuple[str, str]]:
+        """Dotted identifiers in a statement's code runs (the even pieces
+        of sqltext.split_code — never inside a literal or comment: 'ns1.t'
+        or "ns1.t" the string is data, not a reference) — the candidates
+        for catalog point-lookups. O(statement length), NOT O(catalog
+        size): with millions of objects each lookup is a tree descent
+        (A19), never an enumeration."""
         found: list[tuple[str, str]] = []
-
-        def scan(seg: str) -> str:
+        for seg in runs:
             for m in re.finditer(r"`?\b(\w+)\b`?\.`?\b(\w+)\b`?", seg):
                 pair = (m.group(1), m.group(2))
                 if pair not in found:
                     found.append(pair)
-            return seg
-
-        self._map_nonliteral(sql, scan)
         return found
 
     def _referenced_tables(self, sql: str, txn: Transaction):
         """Catalog tables/views whose `ns.name` appears in the SQL (outside
         string literals) — resolved by per-candidate point-lookup."""
         refs = set()
-        for ns, obj in self._candidate_idents(sql):
+        for ns, obj in self._candidate_idents(sqltext.split_code(sql)[::2]):
             if (self.catalog.table_exists(txn, ns, obj)
                     or self.catalog.view_exists(txn, ns, obj)):
                 refs.add((ns, obj))
@@ -7024,11 +6639,9 @@ class Engine:
         table reference resolve against the catalog's root chain
         (A27/A28) — catalog-level time travel, since the whole catalog is
         versioned, not just one table."""
-        # Every rewrite below applies ONLY outside string literals: a
-        # predicate like  WHERE v = 'ns1.t'  compares against the string
-        # 'ns1.t', never against a rewritten alias.
-        out = self._map_nonliteral(sql, lambda seg: re.sub(
-            r"\bolympia\.", "", seg))
+        # Every rewrite below applies ONLY to code (sqltext.split_code's
+        # runs): a predicate like  WHERE v = 'ns1.t'  compares against
+        # the string 'ns1.t', never against a rewritten alias.
         # metadata virtual tables: ns.t$files / $history / $partitions
         def _meta(seg: str) -> str:
             for m in list(re.finditer(
@@ -7041,7 +6654,6 @@ class Engine:
                 df.createOrReplaceTempView(alias)
                 seg = seg.replace(m.group(0), alias)
             return seg
-        out = self._map_nonliteral(out, _meta)
         # A36: objects inside a persisted distributed transaction —
         # sys.dtxns.dtxn_<id>.<ns>.<table> reads the table as seen by that
         # transaction's running tree (reference docs/spark.md:110-142,
@@ -7057,7 +6669,6 @@ class Engine:
                     .createOrReplaceTempView(alias)
                 seg = seg.replace(m.group(0), alias)
             return seg
-        out = self._map_nonliteral(out, _dtxn)
         def _vtravel(seg: str) -> str:
             for m in list(re.finditer(
                     r"(\w+)\.(\w+)\s+VERSION AS OF (\d+)", seg, re.I)):
@@ -7068,53 +6679,45 @@ class Engine:
                     .createOrReplaceTempView(alias)
                 seg = seg.replace(m.group(0), alias)
             return seg
-        out = self._map_nonliteral(out, _vtravel)
-        # VERSION AS OF '<tag>' spans a literal (the tag name): resolve
-        # the tag to its pinned version, then time-travel exactly as the
-        # numeric form does. Full-text match, skipping starts inside
-        # string literals (same protocol as TIMESTAMP AS OF below).
-        while True:
-            lits = self._literal_spans(out)
-            for m in re.finditer(
-                    r"(\w+)\.(\w+)\s+VERSION AS OF '([^']+)'", out, re.I):
-                if any(a <= m.start() < b for a, b in lits):
-                    continue
-                ns, tbl, tag = m.group(1), m.group(2), m.group(3)
-                version = self.catalog.resolve_tag(tag)
-                snap = self.catalog.at_version(version)
-                alias = f"olympia__tt__{ns}__{tbl}__v{version}"
+        parts = sqltext.split_code(sql)
+        parts[::2] = [_vtravel(_dtxn(_meta(re.sub(r"\bolympia\.", "", p))))
+                      for p in parts[::2]]
+        if re.search(r"AS OF '", sql, re.I):
+            # VERSION AS OF '<tag>' and TIMESTAMP AS OF '<ts>' span a
+            # literal (the tag name, the timestamp): matched on the code
+            # view, where a literal keeps its quotes and blanks its
+            # contents, so no match can start inside one
+            out = "".join(parts)
+            code = sqltext.code_view(out)
+            res, pos = [], 0
+            for m in re.finditer(r"(\w+)\.(\w+)\s+(VERSION|TIMESTAMP) AS OF "
+                                 r"'([^']+)'", code, re.I):
+                ns, tbl = m.group(1), m.group(2)
+                lit = out[m.start(4):m.end(4)]
+                if m.group(3).upper() == "VERSION":
+                    # the tag resolves to its pinned version, then time-
+                    # travels exactly as the numeric form does
+                    version = self.catalog.resolve_tag(lit)
+                    snap = self.catalog.at_version(version)
+                    alias = f"olympia__tt__{ns}__{tbl}__v{version}"
+                else:
+                    import datetime as _dt
+                    parsed = _dt.datetime.fromisoformat(lit)
+                    if parsed.tzinfo is None:   # naive timestamps mean UTC;
+                        parsed = parsed.replace(tzinfo=_dt.timezone.utc)
+                    millis = int(parsed.timestamp() * 1000)  # offsets honored
+                    snap = self.catalog.before_timestamp(millis)
+                    alias = f"olympia__tt__{ns}__{tbl}__t{millis}"
                 self.read_table(f"{ns}.{tbl}", snap, historical=True) \
                     .createOrReplaceTempView(alias)
-                out = out[:m.start()] + alias + out[m.end():]
-                break                       # re-scan: spans have shifted
-            else:
-                break
-        # TIMESTAMP AS OF spans a literal (the timestamp) — match on the
-        # full text but skip matches that START inside a string literal.
-        while True:
-            lits = self._literal_spans(out)
-            for m in re.finditer(
-                    r"(\w+)\.(\w+)\s+TIMESTAMP AS OF '([^']+)'", out, re.I):
-                if any(a <= m.start() < b for a, b in lits):
-                    continue
-                ns, tbl, ts = m.group(1), m.group(2), m.group(3)
-                import datetime as _dt
-                parsed = _dt.datetime.fromisoformat(ts)
-                if parsed.tzinfo is None:   # naive timestamps mean UTC;
-                    parsed = parsed.replace(tzinfo=_dt.timezone.utc)
-                millis = int(parsed.timestamp() * 1000)  # offsets honored
-                snap = self.catalog.before_timestamp(millis)
-                alias = f"olympia__tt__{ns}__{tbl}__t{millis}"
-                self.read_table(f"{ns}.{tbl}", snap, historical=True) \
-                    .createOrReplaceTempView(alias)
-                out = out[:m.start()] + alias + out[m.end():]
-                break                       # re-scan: spans have shifted
-            else:
-                break
+                res += [out[pos:m.start()], alias]
+                pos = m.end()
+            if res:
+                parts = sqltext.split_code("".join(res) + out[pos:])
         # Plain ns.obj references: extract candidates from the statement,
         # then point-look each up (tree descent, A19) — O(statement), not
         # O(catalog); see docs/format.md:24-63 for the reference cost model.
-        for ns, obj in self._candidate_idents(out):
+        for ns, obj in self._candidate_idents(parts[::2]):
             is_table = self.catalog.table_exists(txn, ns, obj)
             if not is_table and not self.catalog.view_exists(txn, ns, obj):
                 continue
@@ -7127,9 +6730,8 @@ class Engine:
                     .createOrReplaceTempView(alias)
             pattern = (rf"`?\b{re.escape(ns)}\b`?\."
                        rf"`?\b{re.escape(obj)}\b`?")
-            out = self._map_nonliteral(
-                out, lambda seg, p=pattern, a=alias: re.sub(p, a, seg))
-        return out
+            parts[::2] = [re.sub(pattern, alias, p) for p in parts[::2]]
+        return "".join(parts)
 
     # --- metadata virtual tables --------------------------------------------
 
@@ -7250,7 +6852,7 @@ class Engine:
 
     def sql(self, statement: str) -> DataFrame:
         """Single entry point: txn gate → DDL/DML → delegate."""
-        norm = _normalize(statement)
+        norm = sqltext.normalize(statement)
         spark = self.spark
 
         def ok(msg: str = "OK") -> DataFrame:
@@ -7434,7 +7036,7 @@ class Engine:
             # paren-aware split: transform entries like bucket(16, id)
             # contain top-level-looking commas inside their parens
             partition_by = ([c.strip() for c in
-                             self._split_top_level(part)]
+                             sqltext.split_top_level(part)]
                             if part else [])
             properties = {}
             if props_raw:
@@ -7681,7 +7283,8 @@ class Engine:
                 # SELECT/VALUES/WITH (string- and paren-aware): a lazy
                 # regex would cut inside `id IN (SELECT ...)` or inside a
                 # string literal containing the word
-                cuts = [p for p in (_find_kw(rest, k) for k in
+                rest_code = sqltext.code_view(rest)
+                cuts = [p for p in (sqltext.find_kw(rest_code, k) for k in
                                     ("SELECT", "VALUES", "WITH"))
                         if p is not None]
                 if not cuts:
@@ -7700,9 +7303,9 @@ class Engine:
             col_list: list[str] | None = None
             if payload.startswith("("):
                 # explicit column list: INSERT INTO t (a, b) VALUES/SELECT
-                end = _match_paren(payload, 0)
-                col_list = [c.strip().strip("`")
-                            for c in payload[1:end - 1].split(",")]
+                end = sqltext.match_paren(sqltext.code_view(payload), 0)
+                col_list = [c.strip().strip("`") for c in
+                            sqltext.split_top_level(payload[1:end - 1])]
                 payload = payload[end:].strip()
                 unknown = set(col_list) - {f.name for f in schema.fields}
                 if unknown:
@@ -7721,12 +7324,13 @@ class Engine:
                     # alone would send a mixed-arity list downstream to
                     # a Spark error that never mentions this binding.
                     arities = []
-                    i0 = payload.find("(")
+                    code = sqltext.code_view(payload)
+                    i0 = code.find("(")
                     while i0 != -1:
-                        end = _match_paren(payload, i0)
-                        arities.append(len(self._split_top_level(
+                        end = sqltext.match_paren(code, i0)
+                        arities.append(len(sqltext.split_top_level(
                             payload[i0 + 1:end - 1])))
-                        i0 = payload.find("(", end)
+                        i0 = code.find("(", end)
                     plain_cols = [f.name for f in schema.fields
                                   if f.name not in
                                   tdef_ins.generated_columns]
@@ -7807,7 +7411,7 @@ class Engine:
         if m:
             name, sets, pred = m.groups()
             assignments = {}
-            for part in re.split(r",(?![^()]*\))", sets):
+            for part in sqltext.split_top_level(sets):
                 col, _, expr = part.partition("=")
                 assignments[col.strip()] = expr.strip()
             n = self.update(name, assignments, pred or "true")
@@ -7941,7 +7545,7 @@ class Engine:
             # alias/CTE named `update` etc. is still refused — the
             # conservative direction; quote it in backticks or run the
             # query directly.
-            stripped = _scrub_literals(m.group(2))
+            stripped = sqltext.scrub(m.group(2))
             if re.search(r"\b(INSERT|MERGE|DELETE|UPDATE)\b",
                          stripped, re.I):
                 raise ValueError(
@@ -7962,7 +7566,6 @@ class Engine:
             statement = re.sub(r"\bsys\.dtxns\b(?!\.dtxn_)",
                                "olympia__sys__dtxns", statement)
         rewritten, hidden = _rewrite_qualify(
-            _rewrite_tablesample(_rewrite_tablesample_subqueries(
-                _rewrite_exclude(statement))))
+            _rewrite_tablesample_all(_rewrite_exclude(statement)))
         df = spark.sql(self._resolve_sql(rewritten, txn))
         return df.drop(*hidden) if hidden else df

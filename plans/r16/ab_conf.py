@@ -1,6 +1,6 @@
 """Interleaved A/B of runtime SQL confs over registry queries.
 
-Usage: python plans/r15/ab_conf.py <sf_dir> <reps> k1=v1,k2=v2 name1 ...
+Usage: python plans/r16/ab_conf.py <sf_dir> <reps> k1=v1,k2=v2 name1 ...
 Runs each query alternately with the session defaults (A) and with the
 given conf overrides (B), reps times each, interleaved A,B,A,B,... so
 host drift hits both arms equally. Prints per-query min/median per arm.

@@ -1,8 +1,8 @@
 """Capture .explain('formatted') for registry queries (final frame), and
 optionally the MV refresh's merged frame for MV lanes.
 
-Usage: python plans/r15/capture_query_plan.py <sf_dir> <out_suffix> [--conf k=v] name...
-Writes plans/r15/<name>_<out_suffix>.txt
+Usage: python plans/r16/capture_query_plan.py <sf_dir> <out_suffix> [--conf k=v] name...
+Writes plans/r16/<name>_<out_suffix>.txt
 """
 import io
 import os

@@ -1,6 +1,6 @@
 """Isolation timer: run named registry queries N times at a given sf dir.
 
-Usage: python plans/r15/isolate.py <sf_dir> <reps> name1 name2 ...
+Usage: python plans/r16/isolate.py <sf_dir> <reps> name1 name2 ...
 Prints per-rep wall seconds (count() action, same methodology as bench.py).
 """
 import os

@@ -3,7 +3,7 @@
 Timing on a small box is ±30% noisy; the number of jobs a query launches
 is exact and is what per-job fixed overhead multiplies. Usage:
 
-    python plans/r15/jobcount.py <sf_dir> name1 name2 ...
+    python plans/r16/jobcount.py <sf_dir> name1 name2 ...
 
 Prints jobs + wall seconds for one post-warmup run of each query.
 """

@@ -1,6 +1,6 @@
 """Per-engine-call Spark job counts for one registry query.
 
-Usage: python plans/r15/jobs_by_call.py <sf_dir> name
+Usage: python plans/r16/jobs_by_call.py <sf_dir> name
 Wraps the engine + DataFrame action entry points, prints job-count and
 wall-time deltas per call (depth-indented), after an sf0.01 warmup.
 """

@@ -3,7 +3,7 @@ Engine.write_table, Engine.refresh_materialized_view and
 Engine._write_files with timers, runs the query once (after an sf0.01
 warmup run), and prints the per-call breakdown of the timed run.
 
-Usage: python plans/r15/profile_engine_calls.py <sf_dir> name [name...]
+Usage: python plans/r16/profile_engine_calls.py <sf_dir> name [name...]
 """
 import os
 import sys

@@ -13,63 +13,19 @@ SF_MED = "/root/testdata/sf0.01"
 # Suite gating (VERDICT r15 #3): the full suite outgrew the driver's
 # verification window (54m34s at r16 start — the r15 driver's pytest was
 # cut at ~40% and tests_ok went false without any failing test). The
-# DEFAULT run skips the heaviest property soaks / scale proofs (every
-# entry measured >= ~13s in the r16 full-suite durations log) and
-# samples the registry-wide oracle sweep (see test_oracle_parity.py);
-# SPARK_GRAFT_FULL_SUITE=1 restores the complete suite — builders run
-# that before committing (and the end-of-round log records it).
+# DEFAULT run skips the heaviest property soaks / scale proofs (the
+# tests marked ``slow``: each measured >= ~13s in the r16 full-suite
+# durations log) and samples the registry-wide oracle sweep (see
+# test_oracle_parity.py); SPARK_GRAFT_FULL_SUITE=1 restores the
+# complete suite — builders run that before committing (and the
+# end-of-round log records it).
 FULL_SUITE = os.environ.get("SPARK_GRAFT_FULL_SUITE", "") == "1"
 
-_SLOW_TESTS = {
-    # plan contracts / scale proofs
-    "test_registry_has_no_unjustified_single_partition_exchange",  # 204s
-    "test_shadow_registration_chunks_past_100_dirs",               # 44s
-    "test_fifty_commit_partitioned_table_plans_one_scan",          # 21s
-    # maintenance / compaction property soaks
-    "test_auto_compaction_off_property",                           # 56s
-    "test_small_file_compaction_respects_byte_budget",             # 54s
-    "test_append_to_large_file_table_never_rewrites",              # 40s
-    "test_small_file_compaction_leaves_large_files_alone",         # 32s
-    "test_auto_compaction_bounds_write_dir_count",                 # 23s
-    "test_candidate_files_pruning_soundness_property",             # 14s
-    # MOR / adoption end-to-end soaks
-    "test_pointer_mor_export_does_not_persist_stale_stamp",        # 52s
-    "test_pointer_mor_changefeed_never_resurrects",                # 50s
-    # MV grammar-refusal / soak batteries (the core refresh lanes,
-    # the retraction soak and the randomized-sequence soak stay in)
-    "test_union_mv_grammar_refusals_downgrade_to_full",            # 104s
-    "test_join_lane_matches_recompute_under_alternating_appends",  # 34s
-    "test_union_mv_retraction_in_one_source_subtracts",            # 29s
-    "test_union_mv_literal_containing_keywords_stays_sound",       # 22s
-    "test_having_soak_matches_recompute",                          # 18s
-    # TPC-shape boundary batteries (each declared query is ALSO
-    # hash-checked against DuckDB by the oracle sweep + the driver)
-    "test_b159_dim_gate_strict_and_having_floor",                  # 46s
-    "test_b158_mismatch_only_and_tie_order",                       # 37s
-    "test_b130_group_average_gate_and_single_member_groups",       # 34s
-    "test_b155_gate_boundaries",                                   # 22s
-    "test_b157_null_groups_are_real_groups",                       # 22s
-    "test_q21_counts_only_sole_late_supplier_on_multi_supplier_orders",
-    "test_b149_rank_gate_and_level_ranks",                         # 21s
-    "test_q20_half_share_threshold_and_nation_gate",               # 20s
-    "test_b168_integer_average_split_is_exact_floor",              # 19s
-    "test_b165_b166_window_and_gate_complement",                   # 18s
-    "test_b164_gate_is_strict_and_pairs_dedup",                    # 16s
-    "test_c2_cap_semantics_exact_scores_capped_candidates",        # 15s
-    "test_b160_netting_coalesce_and_negative",                     # 15s
-    "test_b132_band_boundaries_and_zero_pm",                       # 15s
-    "test_q11_threshold_is_1_5x_mean_part_value",                  # 15s
-    "test_b135_deviation_gate_exact_boundary",                     # 14s
-    "test_b131_cells_need_both_periods",                           # 14s
-    "test_b134_decline_needs_adjacent_years",                      # 13s
-    "test_b136_integer_ratio_boundary_inclusive",                  # 13s
-    # misc heavy end-to-end checks
-    "test_watermark_finalization_boundary_is_inclusive",           # 38s
-    "test_merge_by_source_unpersist_on_write_failure",             # 19s
-    "test_check_constraints_enforced_everywhere",                  # 16s
-    "test_lsh_probe_is_partition_pruned",                          # 15s
-    "test_stateful_streaming_counter_equals_batch",                # 15s
-}
+
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "slow: heavy soak or scale proof (>= ~13s each); "
+        "skipped unless SPARK_GRAFT_FULL_SUITE=1")
 
 
 def pytest_collection_modifyitems(config, items):
@@ -78,8 +34,7 @@ def pytest_collection_modifyitems(config, items):
     skip = pytest.mark.skip(
         reason="heavy soak — run with SPARK_GRAFT_FULL_SUITE=1")
     for item in items:
-        base = item.name.split("[", 1)[0]
-        if base in _SLOW_TESTS:
+        if item.get_closest_marker("slow"):
             item.add_marker(skip)
 
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from olympia_spark.operators import similarity as sim
@@ -48,6 +49,7 @@ def _assert_probe_prunes(eng, probe_df, table: str, col: str,
         assert probe_df.count() > 0
 
 
+@pytest.mark.slow
 def test_lsh_probe_is_partition_pruned(spark):
     eng = sim._ann_engine(spark, SF)
     corpus, _q = sim._lsh_probe(spark, SF)

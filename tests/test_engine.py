@@ -831,6 +831,7 @@ def test_replace_where_subquery_predicate_splits_correctly(engine):
         engine.sql("INSERT OVERWRITE ns1.rws REPLACE WHERE grp = 'a'")
 
 
+@pytest.mark.slow
 def test_merge_by_source_unpersist_on_write_failure(engine, spark):
     """Round-6 ADVICE: if the write stage raises after the by-source
     count, the persisted staging block must still be released — a leak
@@ -879,6 +880,7 @@ def test_replace_where_empty_source_tracks_no_zero_row_files(engine):
         [(f.path, f.num_rows) for f in tdef.data_files]
 
 
+@pytest.mark.slow
 def test_check_constraints_enforced_everywhere(engine, spark):
     """B78: ADD CONSTRAINT validates existing rows, then EVERY write
     path (INSERT, UPDATE, MERGE) enforces row-by-row inside the write

@@ -497,6 +497,7 @@ def test_duplicate_bucket_columns_refused(engine, spark):
                    "CLUSTERED BY (k, k) INTO 8 BUCKETS")
 
 
+@pytest.mark.slow
 def test_shadow_registration_chunks_past_100_dirs(engine, spark):
     """The batched ADD IF NOT EXISTS statement chunks at 100 partitions
     — a table with >100 write dirs must register across chunks with no

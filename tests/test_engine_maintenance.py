@@ -772,6 +772,7 @@ def test_describe_detail(engine):
     assert d.catalog_version >= 3
 
 
+@pytest.mark.slow
 def test_candidate_files_pruning_soundness_property(engine, spark):
     """Hypothesis property: stats-based file pruning must NEVER skip a
     file containing a row that matches the predicate (over random data
@@ -932,6 +933,7 @@ def test_zorder_tolerates_nan_values(engine, spark):
     assert engine.sql("SELECT COUNT(*) AS n FROM ns1.zn2").first().n == 50
 
 
+@pytest.mark.slow
 def test_fifty_commit_partitioned_table_plans_one_scan(engine, spark):
     """VERDICT r7 next-round #1: a partitioned table with 50 appends
     (a month and a half of daily loads) must plan ONE parquet relation,
@@ -986,6 +988,7 @@ def test_partition_evolution_plans_one_scan_per_era(engine, spark):
     assert n == 4
 
 
+@pytest.mark.slow
 def test_auto_compaction_bounds_write_dir_count(engine, spark):
     """40 appends with the default auto.compact.threshold=32: the
     write-dir count stays bounded by construction, history/time travel
@@ -1009,6 +1012,7 @@ def test_auto_compaction_bounds_write_dir_count(engine, spark):
                       "VERSION AS OF 10").first().n <= 40
 
 
+@pytest.mark.slow
 def test_auto_compaction_off_property(engine, spark):
     engine.sql("CREATE TABLE ns1.nc (id BIGINT) "
                "TBLPROPERTIES ('auto.compact.threshold'='off')")
@@ -1046,6 +1050,7 @@ def test_auto_compaction_skipped_inside_explicit_txn(engine, spark):
 # --- small-file bin-packing auto-compaction (round 9) -----------------------
 
 
+@pytest.mark.slow
 def test_small_file_compaction_leaves_large_files_alone(engine, spark):
     """r8 VERDICT #1: a table with large + many tiny files bin-packs
     ONLY the tiny ones in one versioned commit; the large files'
@@ -1080,6 +1085,7 @@ def test_small_file_compaction_leaves_large_files_alone(engine, spark):
         == (6006, sum(range(6000)) + sum(range(6000, 6006)))
 
 
+@pytest.mark.slow
 def test_append_to_large_file_table_never_rewrites(engine, spark):
     """The append chokepoint must not trigger any rewrite of large
     files: 35 large-file appends (> threshold dirs) leave every file
@@ -1121,6 +1127,7 @@ def test_small_file_compaction_era_local_partition_values_survive(
     assert all("src=" in f.path for f in tdef.data_files)
 
 
+@pytest.mark.slow
 def test_small_file_compaction_respects_byte_budget(engine, spark):
     """Per-run budget: only ~budget bytes rewrite per trigger; the
     remainder waits for the next run instead of one unbounded rewrite."""

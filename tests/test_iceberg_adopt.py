@@ -1121,6 +1121,7 @@ def test_pointer_mor_analyze_and_changefeed_see_net_rows(spark, tmp_path):
     assert eng.sql("SELECT COUNT(*) AS n FROM lake.t").first().n == 12
 
 
+@pytest.mark.slow
 def test_pointer_mor_export_does_not_persist_stale_stamp(spark,
                                                          tmp_path):
     """Review r12 pass-2 (empirically reproduced): exporting a hydrated
@@ -1169,6 +1170,7 @@ def test_pointer_mor_export_does_not_persist_stale_stamp(spark,
     assert eng.sql("SELECT COUNT(*) AS n FROM lake.t").first().n == 13
 
 
+@pytest.mark.slow
 def test_pointer_mor_changefeed_never_resurrects(spark, tmp_path):
     """Review r12 pass-2: the change feed across pointer refreshes must
     diff NET relations — a file-diff over raw MOR files would emit

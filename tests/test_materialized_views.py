@@ -992,6 +992,7 @@ def test_union_mv_same_source_in_two_branches(eng):
     assert _mv_rows(eng) == [("A", 222.0), ("B", 5.0)]
 
 
+@pytest.mark.slow
 def test_union_mv_retraction_in_one_source_subtracts(eng):
     """r14: UNION_Q is COUNT/SUM/AVG-only, so a DELETE in one source
     rides the SIGNED delta through that source's branches and
@@ -1008,6 +1009,7 @@ def test_union_mv_retraction_in_one_source_subtracts(eng):
         .getPersistentRDDs().size() == 0
 
 
+@pytest.mark.slow
 def test_union_mv_grammar_refusals_downgrade_to_full(eng):
     """Shapes the union plan must NOT claim: aggregating branches, bare
     UNION (dedups — not append-safe), mismatched branch output names,
@@ -1041,6 +1043,7 @@ def test_union_mv_grammar_refusals_downgrade_to_full(eng):
         assert got == "full", (q, got)
 
 
+@pytest.mark.slow
 def test_union_mv_literal_containing_keywords_stays_sound(eng):
     """Branch/outer literals containing ' GROUP BY ', ' UNION ALL ' or
     parens must not confuse the position-preserving code view — the
@@ -1903,6 +1906,7 @@ def test_retraction_lane_matches_recompute_under_random_ops(eng):
         assert got == want, (step, op, got, want)
 
 
+@pytest.mark.slow
 def test_join_lane_matches_recompute_under_alternating_appends(eng):
     """Oracle-by-construction for the join lane: alternating fact and
     dim appends (one side per refresh window), each refresh asserted
@@ -2430,6 +2434,7 @@ def test_stacked_mv_over_having_mv_refreshes_correctly(eng):
             eng.sql("SELECT * FROM ns1.mv2").collect()] == [(3, 240.0)]
 
 
+@pytest.mark.slow
 def test_having_soak_matches_recompute(eng):
     """Seeded random ops against a HAVING MV — visible rows equal the
     full query (WITH its HAVING) recomputed from scratch after every
@@ -2731,52 +2736,60 @@ def test_retraction_refresh_uses_meta_counts_no_feed_count_job(eng,
     assert calls == [], "feed count job ran despite meta fast path"
 
 
-def test_mv_merge_sql_text_matches_classic_builder(eng):
+def test_mv_merge_sql_text_matches_full_recompute(eng):
     """r16: _mv_merge builds its frame as one spark.sql text (737 -> ~8
-    py4j round-trips per merge); this pins the SQL construction to the
-    classic DataFrame builder it replaced — same rows, same schema, on
-    a plan exercising every clause family at once: plain group key,
-    COUNT, SUM+AVG companions, MIN/MAX, signed deletes, a vanishing
-    group, and the no-GROUP-BY (global) shape."""
+    py4j round-trips per merge); this pins every merge it builds to a
+    full recompute of the same query — same rows, same column names and
+    types — on the clause families at once: a grouped plan with every
+    aggregate family (COUNT(*), COUNT(col), SUM+AVG companions, MIN/MAX,
+    a NULL group key, a NULL value), the signed lane's deletes with a
+    vanishing group (no MIN/MAX: a delete sends those to the
+    group-scoped recompute instead), and the no-GROUP-BY (global)
+    shape."""
+    import unittest.mock as mock
+
     from olympia_spark.engine import Engine as E
     _seed(eng, [(1, "A", 10.0), (2, "A", 20.0), (3, "B", 5.0),
                 (4, None, 2.0)])
-    eng.sql("CREATE MATERIALIZED VIEW ns1.mv AS SELECT grp, "
-            "COUNT(*) AS n, SUM(v) AS sv, AVG(v) AS av, MIN(v) AS mn, "
-            "MAX(v) AS mx FROM ns1.src GROUP BY grp")
-    eng.sql("INSERT INTO ns1.src VALUES (5, 'B', 7.0), (6, 'C', 1.0), "
-            "(7, NULL, 4.0)")
+    queries = {
+        "ns1.mv": "SELECT grp, COUNT(*) AS n, COUNT(v) AS nv, "
+                  "SUM(v) AS sv, AVG(v) AS av, MIN(v) AS mn, MAX(v) AS mx "
+                  "FROM ns1.src GROUP BY grp",
+        "ns1.mvd": "SELECT grp, COUNT(*) AS n, COUNT(v) AS nv, "
+                   "SUM(v) AS sv, AVG(v) AS av FROM ns1.src GROUP BY grp",
+        "ns1.mvg": "SELECT COUNT(*) AS n, SUM(v) AS sv, AVG(v) AS av "
+                   "FROM ns1.src"}
+    for mv, q in queries.items():
+        eng.sql(f"CREATE MATERIALIZED VIEW {mv} AS {q}")
     calls = []
     orig = E._mv_merge_sql
 
     def spy(old, delta, plan, schema):
-        sql_df = orig(old, delta, plan, schema)
-        classic_df = E._mv_merge_classic(old, delta, plan, schema)
-        assert [f.name for f in sql_df.schema.fields] == \
-            [f.name for f in classic_df.schema.fields]
-        assert [f.dataType for f in sql_df.schema.fields] == \
-            [f.dataType for f in classic_df.schema.fields]
-        key = [f.name for f in sql_df.schema.fields]
-        rows_sql = sorted(map(tuple, sql_df.collect()),
-                          key=lambda r: tuple((x is None, str(x))
-                                              for x in r))
-        rows_classic = sorted(map(tuple, classic_df.collect()),
-                              key=lambda r: tuple((x is None, str(x))
-                                                  for x in r))
-        assert rows_sql == rows_classic, key
-        calls.append(1)
-        return sql_df
+        calls.append(plan)
+        return orig(old, delta, plan, schema)
 
-    import unittest.mock as mock
-    with mock.patch.object(E, "_mv_merge_sql", staticmethod(spy)):
-        r = eng.sql("REFRESH MATERIALIZED VIEW ns1.mv").collect()[0]
-    assert r.mode == "incremental" and calls
+    def rows(df):
+        return sorted(map(tuple, df.collect()),
+                      key=lambda r: tuple((x is None, str(x)) for x in r))
 
-    # global-aggregate shape (constant-key GROUP BY inside the merge)
-    eng.sql("CREATE MATERIALIZED VIEW ns1.mvg AS SELECT COUNT(*) AS n, "
-            "SUM(v) AS sv FROM ns1.src")
-    eng.sql("INSERT INTO ns1.src VALUES (8, 'D', 3.0)")
-    calls.clear()
-    with mock.patch.object(E, "_mv_merge_sql", staticmethod(spy)):
-        r = eng.sql("REFRESH MATERIALIZED VIEW ns1.mvg").collect()[0]
-    assert r.mode == "incremental" and calls
+    def refresh_matches_recompute(mv):
+        calls.clear()
+        with mock.patch.object(E, "_mv_merge_sql", staticmethod(spy)):
+            r = eng.sql(f"REFRESH MATERIALIZED VIEW {mv}").collect()[0]
+        assert r.mode == "incremental" and calls
+        got, want = eng.sql(f"SELECT * FROM {mv}"), eng.sql(queries[mv])
+        assert [(f.name, f.dataType) for f in got.schema.fields] == \
+            [(f.name, f.dataType) for f in want.schema.fields]
+        assert rows(got) == rows(want)
+
+    eng.sql("INSERT INTO ns1.src VALUES (5, 'B', 7.0), (6, 'C', 1.0), "
+            "(7, NULL, 4.0), (8, 'A', NULL)")
+    for mv in queries:
+        refresh_matches_recompute(mv)
+    # signed deletes: stored group C vanishes, A and the NULL group
+    # shrink; the global shape (constant-key GROUP BY inside the merge)
+    # takes the same signed window
+    eng.sql("DELETE FROM ns1.src WHERE grp = 'C' OR id IN (1, 4)")
+    eng.sql("INSERT INTO ns1.src VALUES (9, 'D', 3.0)")
+    refresh_matches_recompute("ns1.mvd")
+    refresh_matches_recompute("ns1.mvg")

@@ -191,6 +191,7 @@ def _tpch(spark, tmp_path, **tables):
     return d
 
 
+@pytest.mark.slow
 def test_q21_counts_only_sole_late_supplier_on_multi_supplier_orders(
         spark, tmp_path):
     """B91 ground truth: supplier 1 waits-blame on order 100 ONLY —
@@ -272,6 +273,7 @@ def test_q22_exact_decimal_threshold_and_dormancy(spark, tmp_path):
     assert out == [(2, 1, 300.0)]
 
 
+@pytest.mark.slow
 def test_q20_half_share_threshold_and_nation_gate(spark, tmp_path):
     """B94 ground truth: supplier 1 ships part 1 ('small x') mostly in
     the recent window (6 of 10 → qualifies); supplier 2's recent share
@@ -327,6 +329,7 @@ def test_encoding_gate_flags_mojibake_and_boundary(spark, tmp_path):
     assert out.susp_chars > 0
 
 
+@pytest.mark.slow
 def test_q11_threshold_is_1_5x_mean_part_value(spark, tmp_path):
     """B96 ground truth: part values 10/1/1/1 → mean 3.25 → 1.5× mean
     = 4.875 → only part 1 qualifies; a supplier outside the nation
@@ -715,6 +718,7 @@ def test_b116_presence_classes_ground_truth(spark, tmp_path):
                    "UML": (1, 7.0), "-M-": (1, 7.0)}
 
 
+@pytest.mark.slow
 def test_c2_cap_semantics_exact_scores_capped_candidates(spark, tmp_path):
     """C2 crafted pin (r10 VERDICT #6): a pair whose ENTIRE overlap is
     >-cap boilerplate shingles is excluded from candidates, while a
@@ -1008,6 +1012,7 @@ def test_b129_order_level_existence_and_window_revenue(spark, tmp_path):
     assert (r.n_orders, r.revenue) == (2, 250.0)
 
 
+@pytest.mark.slow
 def test_b130_group_average_gate_and_single_member_groups(spark, tmp_path):
     """B130 crafted pin: the 1.2x gate admits only members strictly
     above their group's mean x1.2 (nation 1: avg 200 -> only the 400
@@ -1031,6 +1036,7 @@ def test_b130_group_average_gate_and_single_member_groups(spark, tmp_path):
     assert got == [(3, 1, 400.0)]
 
 
+@pytest.mark.slow
 def test_b131_cells_need_both_periods(spark, tmp_path):
     """B131 crafted pin: a (priority, weekday) cell present in only one
     period drops; weekday numbering is DuckDB dow (Sunday=0); years
@@ -1048,6 +1054,7 @@ def test_b131_cells_need_both_periods(spark, tmp_path):
     assert got == [("P", 0, 10.0, 30.0, 3.0)]
 
 
+@pytest.mark.slow
 def test_b132_band_boundaries_and_zero_pm(spark, tmp_path):
     """B132 crafted pin: hour bands are inclusive [6,11]/[18,23], noon
     belongs to neither, pm=0 groups are excluded (no inf/NULL rows)."""
@@ -1085,6 +1092,7 @@ def test_b133_excess_gate_strict_and_windowed(spark, tmp_path):
     assert (r.n_lines, r.excess_revenue) == (1, 100.0)
 
 
+@pytest.mark.slow
 def test_b134_decline_needs_adjacent_years(spark, tmp_path):
     """B134 crafted pin: returns NET against sales; only a decline in
     the IMMEDIATELY following year reports (a gap year breaks the
@@ -1109,6 +1117,7 @@ def test_b134_decline_needs_adjacent_years(spark, tmp_path):
     assert got == [("X", 1997, 10, 5)]
 
 
+@pytest.mark.slow
 def test_b135_deviation_gate_exact_boundary(spark, tmp_path):
     """B135 crafted pin: months 100/100/130 (total 330, mean 110) —
     only the 130 month deviates by more than 10% of the mean (20 > 11;
@@ -1130,6 +1139,7 @@ def test_b135_deviation_gate_exact_boundary(spark, tmp_path):
     assert got == [("X", dt.date(1997, 3, 1), 130.0)]
 
 
+@pytest.mark.slow
 def test_b136_integer_ratio_boundary_inclusive(spark, tmp_path):
     """B136 crafted pin: the integer cross-multiplication gate keeps
     the EXACT 3/2 boundary (bef 30 / aft 20: 2x30 == 3x20 → in), drops
@@ -1405,6 +1415,7 @@ def test_b148_distinct_counts_per_band(spark, tmp_path):
     assert (r.b4_n, r.b4_d, r.b4_v) == (2, 1, 15.0)
 
 
+@pytest.mark.slow
 def test_b149_rank_gate_and_level_ranks(spark, tmp_path):
     """B149 crafted pin: nations NE and NF TIE at total 60 — the gate's
     deterministic (total DESC, nation) tiebreak keeps NE and drops NF
@@ -1666,6 +1677,7 @@ def test_b154_exact_ppm_ordering_and_window_filter(spark, tmp_path):
     ]
 
 
+@pytest.mark.slow
 def test_b155_gate_boundaries(spark, tmp_path):
     """B155 crafted pin: ret exactly AT 1.2× the nation average is
     excluded (strict >, exact decimal cross-multiplication); a
@@ -1720,6 +1732,7 @@ def test_b156_band_bounds_and_common_conjunct(spark, tmp_path):
         == (4, 310000.0, 2, 1, 1)
 
 
+@pytest.mark.slow
 def test_b157_null_groups_are_real_groups(spark, tmp_path):
     """B157 crafted pin: each channel's literal-NULL dimensions group
     as REAL groups, distinct across channels; the customer leg joins
@@ -1746,6 +1759,7 @@ def test_b157_null_groups_are_real_groups(spark, tmp_path):
     ]
 
 
+@pytest.mark.slow
 def test_b158_mismatch_only_and_tie_order(spark, tmp_path):
     """B158 crafted pin: only (supplier nation ≠ customer nation) pairs
     survive; per-(order, nation) revenues aggregate before the join;
@@ -1770,6 +1784,7 @@ def test_b158_mismatch_only_and_tie_order(spark, tmp_path):
                    (2, "C2", "N1", "N0", 10.0)]
 
 
+@pytest.mark.slow
 def test_b159_dim_gate_strict_and_having_floor(spark, tmp_path):
     """B159 crafted pin: a part exactly AT its category average is
     excluded (strict >); the HAVING floor keeps a nation at exactly 10
@@ -1795,6 +1810,7 @@ def test_b159_dim_gate_strict_and_having_floor(spark, tmp_path):
     assert got == [("NA", 10)]
 
 
+@pytest.mark.slow
 def test_b160_netting_coalesce_and_negative(spark, tmp_path):
     """B160 crafted pin: an order without returns nets at gross (LEFT
     JOIN + COALESCE, never dropped); returns exceeding gross net
@@ -1928,6 +1944,7 @@ def test_b163_month_windows_gate_each_lens(spark, tmp_path):
     assert got == [("B1", 1, 10.0, 5.0, 2.0)]
 
 
+@pytest.mark.slow
 def test_b164_gate_is_strict_and_pairs_dedup(spark, tmp_path):
     """B164 crafted pin: total 60 over 3 pairs → the 5%-of-mean gate
     sits exactly at 1.0; the customer AT the boundary (paid 1.0) is
@@ -1949,6 +1966,7 @@ def test_b164_gate_is_strict_and_pairs_dedup(spark, tmp_path):
     assert got == [(1, 2.0)]
 
 
+@pytest.mark.slow
 def test_b165_b166_window_and_gate_complement(spark, tmp_path):
     """B165/B166 crafted pin: the two gates partition the
     anchor-present customers — Q10 keeps anchor AND (other OR other),
@@ -2007,6 +2025,7 @@ def test_b167_gate_counts_family_not_self(spark, tmp_path):
     assert got == ["n_family_rides", "n_in_band"]
 
 
+@pytest.mark.slow
 def test_b168_integer_average_split_is_exact_floor(spark, tmp_path):
     """B168 crafted pin: the two-step average split equals
     floor(S·10⁶/n) exactly — a group of 3 rows with quantity sum 10

@@ -703,6 +703,7 @@ _SINGLE_PARTITION_ALLOWLIST = {
 }
 
 
+@pytest.mark.slow
 def test_registry_has_no_unjustified_single_partition_exchange(spark):
     """r8 VERDICT #2 (generalized from the C66 contract): NO registry
     query may plan an `Exchange SinglePartition` over data-scale input

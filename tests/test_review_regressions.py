@@ -39,6 +39,48 @@ def test_delete_with_not_predicate(engine, spark):
     assert ids == [5]
 
 
+def test_delete_and_inside_literal_is_not_a_pruning_conjunct(engine):
+    """Stats pruning split the predicate on every AND, even one inside a
+    string literal, so `v = 3` inside the literal pruned the file that
+    holds the matching row and the DELETE silently missed it."""
+    engine.sql("CREATE TABLE ns1.t (v BIGINT, w STRING)")
+    engine.sql("INSERT INTO ns1.t VALUES (1, 'x AND v = 3 AND y'), (2, 'q')")
+    engine.sql("INSERT INTO ns1.t VALUES (3, 'r'), (4, 's')")
+    engine.sql("DELETE FROM ns1.t WHERE w = 'x AND v = 3 AND y'")
+    assert sorted(r.v for r in engine.sql("SELECT v FROM ns1.t").collect()) \
+        == [2, 3, 4]
+
+
+def test_delete_backslash_escaped_literal_not_pruned(engine, spark):
+    """Stats pruning compared the raw text of a backslash-escaped literal
+    ('a\\\\b' is the value a\\b) with the file's min/max, pruned the
+    file that holds it, and the DELETE silently missed the row."""
+    engine.sql("CREATE TABLE ns1.b (v BIGINT, w STRING)")
+    engine.sql("INSERT INTO ns1.b VALUES (1, 'a\\\\b'), (2, 'c')")
+    value = spark.sql("SELECT 'a\\\\b' AS w").first().w
+    assert value == "a\\b"
+    assert engine.sql("SELECT w FROM ns1.b WHERE v = 1").first().w == value
+    engine.sql("DELETE FROM ns1.b WHERE w = 'a\\\\b'")
+    assert [r.v for r in engine.sql("SELECT v FROM ns1.b").collect()] == [2]
+
+
+def test_update_set_literal_with_comma(engine, spark):
+    """UPDATE SET and MERGE assignments split on every comma outside a
+    one-level paren group — one inside a string literal too."""
+    engine.sql("CREATE TABLE ns1.u (v BIGINT, w STRING)")
+    engine.sql("INSERT INTO ns1.u VALUES (1, 'a'), (2, 'b')")
+    engine.sql("UPDATE ns1.u SET w = 'x, v = 9', v = v + 10 WHERE v = 1")
+    assert sorted(tuple(r) for r in engine.sql("SELECT * FROM ns1.u")
+                  .collect()) == [(2, "b"), (11, "x, v = 9")]
+    spark.createDataFrame([(2, "m")], "v BIGINT, w STRING") \
+        .createOrReplaceTempView("upd_src")
+    engine.sql("MERGE INTO ns1.u AS t USING upd_src AS s ON t.v = s.v "
+               "WHEN MATCHED THEN UPDATE SET w = concat(s.w, ', (') "
+               "WHEN NOT MATCHED THEN INSERT (v, w) VALUES (s.v, 'n, o')")
+    assert sorted(tuple(r) for r in engine.sql("SELECT * FROM ns1.u")
+                  .collect()) == [(2, "m, ("), (11, "x, v = 9")]
+
+
 def test_update_simultaneous_assignment_swaps(engine):
     engine.sql("CREATE TABLE ns1.s (a BIGINT, b BIGINT)")
     engine.sql("INSERT INTO ns1.s VALUES (1, 2)")
@@ -166,6 +208,45 @@ def test_table_reference_inside_double_quoted_literal_untouched(
     # and identifier scanning must still find references AROUND them
     assert engine.sql('SELECT COUNT(*) AS n FROM ns1.t '
                       'WHERE v <> "nope" AND v = "ns1.t"').first().n == 1
+
+
+def test_backslash_escaped_literal_naming_a_table_untouched(engine, spark):
+    """A backslash-escaped quote closed the identifier rewrite's literal
+    early, so the rest of the literal was rewritten as code."""
+    engine.sql("CREATE TABLE ns1.t (k BIGINT)")
+    stmt = "SELECT 'it\\'s ns1.t' AS x"
+    assert engine.sql(stmt).first().x == spark.sql(stmt).first().x \
+        == "it's ns1.t"
+
+
+def test_quote_inside_backtick_identifier_opens_no_literal(engine, spark):
+    """An apostrophe inside a backtick identifier paired with the next
+    literal's opening quote, so the literal 'ns1.t' was rewritten."""
+    engine.sql("CREATE TABLE ns1.t (k BIGINT)")
+    engine.sql("INSERT INTO ns1.t VALUES (1)")
+    row = engine.sql("SELECT k AS `it's`, 'ns1.t' AS z FROM ns1.t").first()
+    assert row.z == spark.sql("SELECT 'ns1.t' AS z").first().z == "ns1.t"
+    assert row["it's"] == 1
+
+
+def test_qualify_with_escaped_quote_and_paren_in_literal(engine, spark):
+    """The QUALIFY paren walk closed the literal at the escaped quote and
+    counted the literal's '(' as code: unbalanced parentheses."""
+    engine.sql("CREATE TABLE ns1.t (k BIGINT)")
+    engine.sql("INSERT INTO ns1.t VALUES (2), (1), (3)")
+    rows = engine.sql("SELECT k, 'it\\'s (' AS x FROM ns1.t "
+                      "QUALIFY row_number() OVER (ORDER BY k) = 1").collect()
+    lit = spark.sql("SELECT 'it\\'s (' AS x").first().x
+    assert lit == "it's ("
+    assert [tuple(r) for r in rows] == [(1, lit)]
+
+
+def test_exclude_inside_escaped_literal_untouched(engine, spark):
+    """The EXCLUDE alias rewrite ended the literal at the escaped quote
+    and rewrote 'EXCLUDE (' inside it."""
+    stmt = "SELECT 'p\\'EXCLUDE (q' AS x"
+    assert engine.sql(stmt).first().x == spark.sql(stmt).first().x \
+        == "p'EXCLUDE (q"
 
 
 def test_double_quoted_literal_whitespace_preserved(engine):
@@ -327,6 +408,7 @@ def test_stream_ingest_committed_table_ts_readable(spark):
     assert row.ts_min == src.lo and row.ts_max == src.hi
 
 
+@pytest.mark.slow
 def test_stateful_streaming_counter_equals_batch(spark):
     """b32_stream_stateful_counter (applyInPandasWithState) must equal the
     batch groupBy over the same fixture — state accumulates correctly
@@ -381,6 +463,7 @@ def test_sql_frontend_edge_cases(engine, spark):
     assert q("  SELECT COUNT(*) AS n FROM ns1.edge ;  ").first().n == 3
 
 
+@pytest.mark.slow
 def test_watermark_finalization_boundary_is_inclusive(spark, tmp_path):
     """b32_stream_watermark_append's oracle finalizes windows with
     window_end <= watermark (inclusive). Pin Spark's behavior at the
@@ -581,13 +664,17 @@ def test_check_marker_is_collision_resistant(spark, tmp_path):
 
 
 def test_split_top_level_string_aware():
-    """A literal 'a, b' must not split; '' escapes a quote."""
-    from olympia_spark.engine import Engine
-    assert Engine._split_top_level("1, 'a, b', 2") == \
-        ["1", " 'a, b'", " 2"]
-    assert Engine._split_top_level("'it''s, fine', x") == \
-        ["'it''s, fine'", " x"]
-    assert Engine._split_top_level("f(a, b), c") == ["f(a, b)", " c"]
+    """A literal 'a, b' must not split; '' and \\' keep a quote inside
+    the literal; double-quoted literals and backtick identifiers hold
+    commas and parens too."""
+    from olympia_spark.sqltext import split_top_level
+    assert split_top_level("1, 'a, b', 2") == ["1", " 'a, b'", " 2"]
+    assert split_top_level("'it''s, fine', x") == ["'it''s, fine'", " x"]
+    assert split_top_level("f(a, b), c") == ["f(a, b)", " c"]
+    assert split_top_level('"a, (b", `c, d)`, e') == \
+        ['"a, (b"', " `c, d)`", " e"]
+    assert split_top_level("'it\\'s, (', \"x\\\", y\", z") == \
+        ["'it\\'s, ('", ' "x\\", y"', " z"]
 
 
 def test_insert_values_literal_comma_into_transform_table(engine, spark):
