@@ -9,10 +9,12 @@ Reference surfaces re-expressed here:
 
 * ``StorageOps`` contract (exists/read/write/overwrite/delete/list) —
   reference storage/StorageOps.java:24-45, CatalogStorage.java:29-73.
-* Local put-if-absent via ``open(path, 'xb')`` (O_EXCL) — the semantic of
-  reference storage/local/LocalAtomicStagingOutputStream.java (staging file
-  + atomic rename); on POSIX O_EXCL create is itself the atomic primitive,
-  so no staging file is needed.
+* Local put-if-absent via a staging file sealed with ``os.link`` — the
+  semantic of reference storage/local/LocalAtomicStagingOutputStream.java
+  (staging file + atomic rename). The data is written in full first and
+  the link publishes it atomically, failing if the path exists; an
+  O_EXCL create alone would let a reader see the file before (or without)
+  its bytes.
 * S3 put-if-absent via ``PutObject`` + ``IfNoneMatch='*'`` — reference
   s3/.../S3AtomicOutputStream.java:42-47.
 
@@ -119,7 +121,8 @@ class Storage(ABC):
 
 
 class LocalStorage(Storage):
-    """Local-filesystem storage. O_EXCL create is the atomic seal."""
+    """Local-filesystem storage. ``os.link`` of a staged file is the
+    atomic seal."""
 
     def __init__(self, root: str):
         self.root = os.path.abspath(root)
@@ -140,15 +143,25 @@ class LocalStorage(Storage):
 
     def write_atomic(self, path: str, data: bytes) -> None:
         full = self._abs(path)
-        os.makedirs(os.path.dirname(full), exist_ok=True)
+        directory = os.path.dirname(full)
+        os.makedirs(directory, exist_ok=True)
+        # stage the whole payload under a private name, then link it into
+        # place: link(2) fails with EEXIST if the path exists, so exactly
+        # one concurrent creator succeeds, and a reader sees either no
+        # file or all of its bytes, never an empty or partial one
+        fd, tmp = tempfile.mkstemp(
+            dir=directory, prefix=f".{os.path.basename(full)}.",
+            suffix=".tmp")
         try:
-            # 'x' = O_CREAT|O_EXCL — exactly one concurrent creator succeeds.
-            with open(full, "xb") as f:
+            with open(fd, "wb") as f:
                 f.write(data)
+            os.link(tmp, full)
         except FileExistsError as e:
             raise StorageAtomicSealFailureError(path) from e
         except OSError as e:
             raise StorageWriteFailureError(path) from e
+        finally:
+            os.unlink(tmp)
 
     def overwrite(self, path: str, data: bytes) -> None:
         full = self._abs(path)

@@ -43,6 +43,7 @@ import json
 import math
 import os
 import re
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -1995,11 +1996,23 @@ class Engine:
             return True
         return False
 
+    @staticmethod
+    def _new_data_dir(ns: str, tbl: str) -> str:
+        """A fresh uuid-unique, warehouse-relative write dir."""
+        return f"{_DATA_DIR}/{ns}/{tbl}/{uuid.uuid4()}"
+
     def _write_files(self, df: DataFrame, ns: str, tbl: str,
                      partition_by: list[str] | None = None,
                      tdef: TableDef | None = None,
-                     generated_applied: bool = False) -> list[DataFile]:
-        rel_dir = f"{_DATA_DIR}/{ns}/{tbl}/{uuid.uuid4()}"
+                     generated_applied: bool = False,
+                     rel_dir: str | None = None,
+                     drop_empty: bool = False) -> list[DataFile]:
+        """Write ``df`` as parquet into a fresh dir (``rel_dir`` when the
+        caller must be able to discard it) and return the new files with
+        their footer stats. ``drop_empty`` removes zero-row part files
+        from the result and from disk — always done for bucketed
+        layouts, whose dir-completeness counts must match the disk."""
+        rel_dir = rel_dir or self._new_data_dir(ns, tbl)
         # direct lane: executors write straight to the object store
         # (s3a://); spool lane: write into the local read-cache dir,
         # then upload every part file below
@@ -2060,17 +2073,18 @@ class Engine:
                     f"{dict(tdef.constraints) if tdef else {}}") from e
             raise
         files = self._collect_stats(rel_dir)
-        if bspec:
-            # zero-row part files are dropped from TRACKING by the DML
-            # paths (num_rows > 0 filters) — delete them from DISK too
-            # and stamp dir_files over live files only, so tracked
+        if bspec or drop_empty:
+            # zero-row part files are dropped from TRACKING — delete them
+            # from DISK too (before the spool upload), so no untracked
+            # file is left for VACUUM. Bucketed layouts always do this:
+            # dir_files is stamped over live files only, so tracked
             # count, dir_files and the on-disk count agree; a surviving
             # zero-row file would mark its dir permanently incomplete
             # and silently downgrade every later read (ADVICE r10)
             dead = [f for f in files if f.num_rows == 0]
             if dead:
                 files = [f for f in files if f.num_rows > 0]
-                if self.data_plane == "direct" and self._object_store:
+                if self.data_plane == "direct":
                     self.catalog.storage.delete_many(
                         [f.path for f in dead])
                 else:
@@ -2079,6 +2093,7 @@ class Engine:
                             os.remove(self._abs(f.path))
                         except OSError:
                             pass
+        if bspec:
             # dir-completeness bookkeeping for the bucketed read path:
             # record per leaf dir how many files this write put there
             by_dir: dict[str, int] = {}
@@ -2562,17 +2577,125 @@ class Engine:
                 f"table; copy it into a native table first "
                 f"(CREATE TABLE ... AS SELECT)")
 
+    def _touched_files(self, tdef: TableDef, predicate: str,
+                       txn: Transaction,
+                       name: str) -> tuple[list[str], int | None]:
+        """The files a copy-on-write statement rewrites, and the exact
+        number of rows matching ``predicate`` — or None when the count
+        is left to the rewrite job (:meth:`_rewrite_files`).
+
+        Single pass: when stats pruning, after bucket-dir expansion,
+        leaves ONE file and the predicate is plain (no subquery) and
+        deterministic, that file is the answer and no job runs here.
+        Otherwise one job finds the files that hold matches and the
+        per-file match counts (input_file_name groupBy — only names and
+        counts reach the driver): a table whose file ranges overlap
+        never rewrites a file without a match, and a nondeterministic
+        predicate is counted once. The count is the EXACT number of
+        matching rows, not the row count of the rewritten files, which
+        bucket-dir expansion would inflate to whole commits (review r10
+        #4)."""
+        candidates = self._candidate_files(tdef, predicate)
+        expanded = self._expand_bucket_dirs(tdef, candidates)
+        if (len(expanded) == 1 and self._deterministic(predicate)
+                and not re.search(r"\bSELECT\b", predicate, re.I)):
+            return expanded, None
+        if not candidates:
+            return [], 0
+        from urllib.parse import unquote
+        # input_file_name() URI-encodes hive-escaped dirs a second time
+        # (src=a%3Ab arrives as src=a%253Ab) — one unquote strips the
+        # URI layer so suffix matching sees the on-disk form; python
+        # unquote leaves '+' alone (not unquote_plus)
+        per_file = (self._pred_matches(self._scan(tdef, candidates),
+                                       predicate, txn, name)
+                    .groupBy(F.input_file_name().alias("_f"))
+                    .count().collect())
+        matched_abs = [unquote(r["_f"]) for r in per_file]
+        cand_abs = [self._scan_uri(p) for p in candidates]
+        matched = [p for p, a in zip(candidates, cand_abs)
+                   if any(m.endswith(a) or a.endswith(
+                       m.removeprefix("file://")) for m in matched_abs)]
+        if not matched:
+            return [], 0
+        return (self._expand_bucket_dirs(tdef, matched),
+                sum(r["count"] for r in per_file))
+
+    def _deterministic(self, expr: str) -> bool:
+        """True when every function call in ``expr`` is on the
+        deterministic whitelist the MV incremental lane uses. An unknown
+        call (rand(), uuid(), a UDF) may give two evaluations of one row
+        two answers."""
+        calls = {t.lower() for t in re.findall(
+            r"([A-Za-z_]\w*)\s*\(", sqltext.scrub(expr))}
+        return calls <= self._MV_SAFE_WORDS
+
+    def _rewrite_files(self, tdef: TableDef, ns: str, tbl: str,
+                       files: list[str], n: int | None, predicate: str,
+                       transform) -> tuple[list[DataFile], int]:
+        """Write ``transform(scan of files)`` into a fresh dir and return
+        the new non-empty files and the match count. With ``n`` None
+        (single pass) the count is ``count_if(predicate)`` observed on
+        the scan the write job already runs; an observed 0 means nothing
+        matched, so the written dir is discarded and nothing is to be
+        committed. When the write's plan holds no rows at all, the
+        optimizer may drop the observed scan, and the count then takes
+        a job of its own. A failed write (CHECK violation, executor
+        error) is discarded too, leaving the disk as it was."""
+        scan = self._scan(tdef, files)
+        obs = None
+        if n is None:
+            from pyspark.sql import Observation
+            obs = Observation()
+            scan = scan.observe(obs, F.expr(f"count_if({predicate}) AS n"))
+        rel_dir = self._new_data_dir(ns, tbl)
+        try:
+            new_files = self._write_files(
+                transform(scan), ns, tbl, tdef.partition_by, tdef=tdef,
+                rel_dir=rel_dir, drop_empty=True)
+        except Exception:
+            self._discard_write(rel_dir)
+            raise
+        if obs is not None:
+            row = obs._jo.getRow()
+            # an empty row: the optimizer dropped the observed scan from
+            # the plan it ran (a DELETE filter folded to false, or AQE
+            # replaced a shuffle stage with no output), so the count
+            # never reached the driver — count the matches in a job
+            n = (row.getLong(0) if row.length()
+                 else self._scan(tdef, files).filter(predicate).count())
+            if n == 0:
+                self._discard_write(rel_dir)
+                return [], 0
+        return new_files, n
+
+    def _discard_write(self, rel_dir: str) -> None:
+        """Delete a write dir no commit will reference, through the lane
+        that wrote it: the object-store copies (direct lane: every
+        object Spark wrote; spool lane: the uploaded part files) and the
+        local dir (local lane: the data; spool lane: the cache copy).
+        VACUUM and space accounting then never see it."""
+        if self._object_store:
+            storage = self.catalog.storage
+            storage.delete_many(list(storage.list(f"{rel_dir}/")))
+        if self.data_plane != "direct":
+            shutil.rmtree(self._abs(rel_dir), ignore_errors=True)
+
     def _rewrite(self, name: str, predicate: str,
                  transform) -> int:
         """Shared copy-on-write core for DELETE/UPDATE:
-        1. stats-prune candidate files;
-        2. one Spark job finds files actually containing matches AND
-           the exact per-file match counts (input_file_name groupBy —
-           only file names + counts reach the driver; the summed count
-           is the returned rows-affected number);
-        3. rewrite only those files via `transform(df)` (bucketed
-           tables expand to whole write dirs);
-        4. CAS-commit added+removed file lists.
+        1. stats-prune candidate files (bucketed tables expand to whole
+           write dirs) — :meth:`_touched_files`;
+        2. if one file is left and the predicate is plain and
+           deterministic, go straight to 3; otherwise one Spark job
+           finds the files actually containing matches and the exact
+           match count;
+        3. rewrite those files via `transform(df)` — :meth:`_rewrite_files`.
+           On the single pass the same job counts the matches
+           (``count_if`` Observation); an observed 0 discards the
+           written dir and commits nothing. Zero-row output files are
+           dropped from tracking and from disk;
+        4. CAS-commit added+removed file lists; return the match count.
 
         GOVERNANCE ASYMMETRY (deliberate — ADVICE r9 #3): predicates
         here evaluate against RAW scans, not the policy-filtered view.
@@ -2595,45 +2718,21 @@ class Engine:
         schema = tdef.spark_schema()
         self._record_select(txn, ns, tbl,
                             [f.name for f in schema.fields], predicate)
-        candidates = self._candidate_files(tdef, predicate)
-        if not candidates:
-            self._finish(txn)
-            return 0
-        cand_abs = [self._scan_uri(p) for p in candidates]
-        scan = self._scan(tdef, candidates)
-        from urllib.parse import unquote
-        # input_file_name() URI-encodes hive-escaped dirs a second time
-        # (src=a%3Ab arrives as src=a%253Ab) — one unquote strips the
-        # URI layer so suffix matching sees the on-disk form; python
-        # unquote leaves '+' alone (not unquote_plus). Per-FILE match
-        # counts ride the same job, so the returned row count is the
-        # EXACT number of predicate-matching rows — not the row count
-        # of the rewritten files, which bucketed-table dir expansion
-        # would inflate to whole commits (review r10 #4) — and the
-        # separate pre-rewrite count job disappears.
-        per_file = (self._pred_matches(scan, predicate, txn, name)
-                    .groupBy(F.input_file_name().alias("_f"))
-                    .count().collect())
-        matched_abs = [unquote(r["_f"]) for r in per_file]
-        n_matched = sum(r["count"] for r in per_file)
-        matched = [p for p, a in zip(candidates, cand_abs)
-                   if any(m.endswith(a) or a.endswith(
-                       m.removeprefix("file://")) for m in matched_abs)]
-        matched = self._expand_bucket_dirs(tdef, matched)
-        if not matched:
-            self._finish(txn)
-            return 0
-        affected = self._scan(tdef, matched)
-        new_files = self._write_files(transform(affected, txn), ns, tbl,
-                                      tdef.partition_by, tdef=tdef)
-        action = (ActionType.TABLE_DELETE if transform.__name__ == "_delete"
-                  else ActionType.TABLE_UPDATE)
-        self.catalog.update_table_files(
-            txn, ns, tbl, new_files, matched, action,
-            {"added": [f.path for f in new_files], "removed": matched,
-             "expression": predicate})
+        files, n = self._touched_files(tdef, predicate, txn, name)
+        if files:
+            new_files, n = self._rewrite_files(
+                tdef, ns, tbl, files, n, predicate,
+                lambda df: transform(df, txn))
+        if n:
+            action = (ActionType.TABLE_DELETE
+                      if transform.__name__ == "_delete"
+                      else ActionType.TABLE_UPDATE)
+            self.catalog.update_table_files(
+                txn, ns, tbl, new_files, files, action,
+                {"added": [f.path for f in new_files], "removed": files,
+                 "expression": predicate})
         self._finish(txn)
-        return n_matched
+        return n
 
     def replace_where(self, name: str, df: DataFrame,
                       predicate: str) -> int:
@@ -2695,42 +2794,22 @@ class Engine:
                 f"survive a later replace of a different slice")
         self._record_select(txn, ns, tbl,
                             [f.name for f in schema.fields], predicate)
-        candidates = self._candidate_files(tdef, predicate)
-        removed: list[str] = []
+        files, n_replaced = self._touched_files(tdef, predicate, txn, name)
         new_files: list[DataFile] = []
-        n_replaced = 0
-        if candidates:
-            scan = self._scan(tdef, candidates)
-            from urllib.parse import unquote
-            matched_abs = [unquote(r[0]) for r in (
-                self._pred_matches(scan, predicate, txn, name)
-                .select(F.input_file_name()).distinct().collect())]
-            cand_abs = [self._scan_uri(p) for p in candidates]
-            matched = self._expand_bucket_dirs(
-                tdef,
-                [p for p, a in zip(candidates, cand_abs)
-                 if any(m.endswith(a) or a.endswith(
-                     m.removeprefix("file://")) for m in matched_abs)])
-            if matched:
-                affected = self._scan(tdef, matched)
-                n_replaced = affected.count()
-                kept = keep_complement(affected)
-                new_files += [f for f in self._write_files(
-                                  kept, ns, tbl, tdef.partition_by,
-                                  tdef=tdef)
-                              if f.num_rows > 0]
-                n_replaced -= sum(f.num_rows for f in new_files)
-                removed += matched
-        # skip empty part files (same num_rows > 0 filter the merge insert
-        # path applies) — an empty/skewed source must not leave zero-row
-        # parquet files tracked in table metadata
-        ins_files = [f for f in self._write_files(
-                         df, ns, tbl, tdef.partition_by, tdef=tdef,
-                         # replace_where already normalized the payload
-                         # (the predicate guard needed post-recompute
-                         # values) — don't recompute a second time
-                         generated_applied=bool(tdef.generated_columns))
-                     if f.num_rows > 0]
+        if files:
+            new_files, n_replaced = self._rewrite_files(
+                tdef, ns, tbl, files, n_replaced, predicate,
+                keep_complement)
+        removed = files if n_replaced else []
+        # an empty/skewed source must not leave zero-row parquet files
+        # tracked in table metadata
+        ins_files = self._write_files(
+            df, ns, tbl, tdef.partition_by, tdef=tdef,
+            # replace_where already normalized the payload (the
+            # predicate guard needed post-recompute values) — don't
+            # recompute a second time
+            generated_applied=bool(tdef.generated_columns),
+            drop_empty=True)
         new_files += ins_files
         self.catalog.update_table_files(
             txn, ns, tbl, new_files, removed, ActionType.TABLE_UPDATE,
@@ -3112,7 +3191,8 @@ class Engine:
                         try:
                             new_files += self._write_files(
                                 rewrite_out, ns, tbl,
-                                tdef.partition_by, tdef=tdef)
+                                tdef.partition_by, tdef=tdef,
+                                drop_empty=True)
                         except Exception as e:  # folded-in guard
                             if _CARDINALITY_MARKER in str(e):
                                 raise MergeCardinalityError(
@@ -3155,10 +3235,9 @@ class Engine:
                 # the matched files' row counts (no deletes), so
                 # inserted = written − matched_rows
                 try:
-                    files = [f for f in self._write_files(
-                                 rewrite_out.unionByName(ins_df), ns,
-                                 tbl, tdef.partition_by, tdef=tdef)
-                             if f.num_rows > 0]
+                    files = self._write_files(
+                        rewrite_out.unionByName(ins_df), ns, tbl,
+                        tdef.partition_by, tdef=tdef, drop_empty=True)
                 except Exception as e:       # folded-in guard
                     if _CARDINALITY_MARKER in str(e):
                         raise MergeCardinalityError(
@@ -3170,10 +3249,9 @@ class Engine:
                 n_changed += sum(f.num_rows for f in files) - matched_rows
                 new_files += files
             else:
-                ins_files = [f for f in self._write_files(
-                                 ins_df, ns, tbl,
-                                 tdef.partition_by, tdef=tdef)
-                             if f.num_rows > 0]     # skip empty part files
+                ins_files = self._write_files(
+                    ins_df, ns, tbl, tdef.partition_by, tdef=tdef,
+                    drop_empty=True)
                 n_changed += sum(f.num_rows for f in ins_files)
                 new_files += ins_files
         if evolved_names:
@@ -4511,7 +4589,13 @@ class Engine:
         """GC maintenance: delete data files under the warehouse that no
         live catalog version references (left behind by failed writes or
         expired versions). Only files under data/ are considered — node
-        and def files belong to the version-expiry path."""
+        and def files belong to the version-expiry path.
+
+        Fails closed: every def a live root, a pinned root or a saved
+        distributed transaction names is read before anything is
+        deleted, and an error reading one raises. Skipping an unreadable
+        def would turn a transient read error into the deletion of the
+        live files it references."""
         from olympia_spark.catalog import locations as loc
         from olympia_spark.catalog.defs import read_def
         referenced: set[str] = set()
@@ -4520,11 +4604,8 @@ class Engine:
             for _k, def_path in self.catalog.tree.traverse(root):
                 if not def_path.startswith(loc.TABLE_DEF_DIR):
                     continue
-                try:
-                    tdef = read_def(
-                        self.catalog.storage.read(def_path), def_path)
-                except Exception:  # noqa: BLE001 — expired def file
-                    continue
+                tdef = read_def(self.catalog.storage.read(def_path),
+                                def_path)
                 if isinstance(tdef, TableDef):
                     referenced.update(tdef.file_paths())
 
@@ -4543,11 +4624,8 @@ class Engine:
         pinned += [loc.root_node_path(v)
                    for v in self.catalog.list_tags().values()]
         for root_path in pinned:
-            try:
-                if self.catalog.storage.exists(root_path):
-                    collect(self.catalog.tree.load_root(root_path))
-            except Exception:  # noqa: BLE001 — export root may be foreign
-                continue
+            if self.catalog.storage.exists(root_path):
+                collect(self.catalog.tree.load_root(root_path))
         # saved-but-uncommitted distributed transactions reference files
         # no version root knows about yet — they are NOT orphans.
         # Protection reads EVERY existing copy of each handle directly
@@ -4557,19 +4635,14 @@ class Engine:
         # (review r11 pass-3 #1). GC pins the UNION of the copies'
         # running roots; deciding which copy is current stays the
         # resume path's problem.
-        from olympia_spark.catalog.defs import read_def
         from olympia_spark.catalog.tree import RootNode
+        tree = self.catalog.tree
         for txn_id in self.catalog.list_dist_transactions():
             for dpath in self.catalog.dtxn_def_paths(txn_id):
-                try:
-                    d = read_def(self.catalog.storage.read(dpath), dpath)
-                    running = RootNode(path=d.running_root_path)
-                    tree = self.catalog.tree
-                    tree._parse(tree._read_table(d.running_root_path),
-                                running)
-                    collect(running)
-                except Exception:  # noqa: BLE001 — corrupt/expired
-                    continue
+                d = read_def(self.catalog.storage.read(dpath), dpath)
+                running = RootNode(path=d.running_root_path)
+                tree._parse(tree._read_table(d.running_root_path), running)
+                collect(running)
         removed = []
         if self._object_store:
             # enumerate the data prefix via the object-store listing —
@@ -7406,10 +7479,15 @@ class Engine:
         if m:
             n = self.delete_from(m.group(1), m.group(2) or "true")
             return self._local_df([(n,)], "rows_affected long")
-        m = re.match(r"UPDATE (\S+\.\S+) SET (.+?)(?: WHERE (.+))?$",
-                     norm, re.I | re.S)
+        m = re.match(r"UPDATE (\S+\.\S+) SET (.+)$", norm, re.I | re.S)
         if m:
-            name, sets, pred = m.groups()
+            name, sets = m.groups()
+            # split at the first code WHERE at depth 0 — never one inside
+            # a literal or a parenthesized subquery on the SET side
+            at = sqltext.find_kw(sqltext.code_view(sets), "WHERE")
+            pred = None
+            if at is not None:
+                sets, pred = sets[:at].strip(), sets[at + 5:].strip()
             assignments = {}
             for part in sqltext.split_top_level(sets):
                 col, _, expr = part.partition("=")

@@ -71,3 +71,27 @@ def hidden_files(paths):
     finally:
         for p in renamed:
             os.rename(p + ".hidden", p)
+
+
+@contextlib.contextmanager
+def spark_jobs(spark):
+    """Count the Spark jobs the block launches from this thread: the
+    block runs under a fresh job group, and on exit, once the listener
+    bus has delivered every job event, ``statusTracker`` reports the job
+    ids of that group (``with spark_jobs(s) as jobs: ...; assert
+    jobs.n == 1``). The thread's previous group is restored."""
+    import types
+    import uuid
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    prev_desc = sc.getLocalProperty("spark.job.description")
+    group = f"test-jobs-{uuid.uuid4().hex}"
+    counted = types.SimpleNamespace(n=0)
+    sc.setJobGroup(group, "spark_jobs")
+    try:
+        yield counted
+    finally:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        counted.n = len(sc.statusTracker().getJobIdsForGroup(group))
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+        sc.setLocalProperty("spark.job.description", prev_desc)

@@ -2694,8 +2694,11 @@ def test_feed_counts_meta_delete_plus_append_window_declines(eng):
 def test_feed_counts_meta_rollback_in_window_declines(eng):
     """A rollback root carries file-list changes with NO table action —
     the provenance walk cannot prove the window delete-only and must
-    decline."""
-    _seed(eng, [(1, "A", 10.0), (2, "B", 5.0)])
+    decline. Both rows share one file, so each DELETE rewrites it to a
+    non-empty file and the window's file diff is two-sided."""
+    eng.write_table(eng.spark.createDataFrame(
+        [(1, "A", 10.0), (2, "B", 5.0)],
+        "id LONG, grp STRING, v DOUBLE").coalesce(1), "ns1.src")
     v0 = eng.catalog.history()[0]["version"]
     eng.sql("DELETE FROM ns1.src WHERE grp = 'A'")
     eng.catalog.rollback_to(v0)

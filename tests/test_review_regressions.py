@@ -81,6 +81,18 @@ def test_update_set_literal_with_comma(engine, spark):
                   .collect()) == [(2, "m, ("), (11, "x, v = 9")]
 
 
+def test_update_where_inside_literal_is_data(engine):
+    """The SET/WHERE split is the first WHERE in code at depth 0: one
+    inside a string literal is data, not the clause."""
+    engine.sql("CREATE TABLE ns1.uw (k BIGINT, w STRING)")
+    engine.sql("INSERT INTO ns1.uw VALUES (1, 'x'), (2, 'y')")
+    n = engine.sql("UPDATE ns1.uw SET w = 'a WHERE b' WHERE k = 1").first()
+    assert n.rows_affected == 1
+    engine.sql("UPDATE ns1.uw SET w = concat(w, ' where (') WHERE (k = 2)")
+    assert sorted(tuple(r) for r in engine.sql("SELECT * FROM ns1.uw")
+                  .collect()) == [(1, "a WHERE b"), (2, "y where (")]
+
+
 def test_update_simultaneous_assignment_swaps(engine):
     engine.sql("CREATE TABLE ns1.s (a BIGINT, b BIGINT)")
     engine.sql("INSERT INTO ns1.s VALUES (1, 2)")
@@ -143,6 +155,47 @@ def test_orphan_gc_protects_pending_dist_txn_files(engine):
     engine.resume_dist(tid)
     engine.sql("COMMIT")
     assert engine.sql("SELECT COUNT(*) AS n FROM ns1.p").first().n == 2
+
+
+@pytest.mark.parametrize("unreadable", ["def/table/", "def/dtxn/"])
+def test_vacuum_fails_closed_on_unreadable_def(engine, spark, monkeypatch,
+                                              unreadable):
+    """A def VACUUM cannot read (a transient storage error) names live
+    files it cannot see: VACUUM must raise before deleting anything,
+    not skip the def and delete those files as orphans."""
+    import os
+    import shutil
+    engine.sql("CREATE TABLE ns1.g (x BIGINT)")
+    engine.sql("INSERT INTO ns1.g VALUES (1)")
+    engine.sql("BEGIN")
+    engine.sql("INSERT INTO ns1.g VALUES (2)")      # only the dtxn knows it
+    tid = engine.begin_dist()
+    engine.rollback()
+    root = engine.catalog.storage.root
+    live = sorted(os.path.join(d, n) for d, _s, names
+                  in os.walk(os.path.join(root, "data")) for n in names
+                  if n.endswith(".parquet"))
+    assert len(live) == 2
+    stray = os.path.join(root, "data", "ns1", "g", "stray", "part.parquet")
+    os.makedirs(os.path.dirname(stray))
+    shutil.copy(live[0], stray)
+    storage = engine.catalog.storage
+    read = storage.read
+
+    def flaky(path):
+        if path.startswith(unreadable):
+            raise OSError("transient read error")
+        return read(path)
+
+    monkeypatch.setattr(storage, "read", flaky)
+    with pytest.raises(OSError, match="transient"):
+        engine.remove_orphan_files()
+    assert all(os.path.exists(p) for p in live + [stray])
+    monkeypatch.undo()
+    assert engine.remove_orphan_files() == [os.path.relpath(stray, root)]
+    engine.resume_dist(tid)
+    engine.sql("COMMIT")
+    assert engine.sql("SELECT COUNT(*) AS n FROM ns1.g").first().n == 2
 
 
 # (round 6: the s3:// data plane exists now — Engine on an object-store

@@ -16,7 +16,8 @@ import pytest
 from olympia_spark.catalog import Catalog
 from olympia_spark.catalog.defs import CatalogDef
 from olympia_spark.catalog.errors import (StorageAtomicSealFailureError,
-                                          StorageFileOpenFailureError)
+                                          StorageFileOpenFailureError,
+                                          StorageWriteFailureError)
 from olympia_spark.catalog.storage import LocalStorage, S3Storage
 
 from tests.fake_s3 import FakeS3Client
@@ -87,6 +88,62 @@ def test_write_atomic_racing_writers_one_winner(storage):
         t.join()
     assert len(results) == 1
     assert storage.read("race/key.txt") == f"writer{results[0]}".encode()
+
+
+class _StagedWrite:
+    """File wrapper for LocalStorage.write_atomic's staging write: records
+    whether the final path is visible while the bytes are being written,
+    and with ``fail`` writes half of them and raises."""
+
+    def __init__(self, f, final, seen, fail):
+        self._f, self._final, self._seen, self._fail = f, final, seen, fail
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc):
+        self._f.close()
+
+    def write(self, data):
+        self._seen.append(os.path.exists(self._final))
+        if self._fail:
+            self._f.write(data[:len(data) // 2])
+            self._f.flush()
+            raise OSError("disk full")
+        return self._f.write(data)
+
+
+@pytest.mark.parametrize("fail", [False, True])
+def test_local_write_atomic_never_shows_a_partial_file(tmp_path,
+                                                       monkeypatch, fail):
+    """The sealed path appears only once all of its bytes are written: a
+    reader never finds an empty or partial root, and a write that fails
+    partway leaves no file (nor its staging file) behind."""
+    from olympia_spark.catalog import storage as st
+    s = LocalStorage(str(tmp_path / "wh"))
+    final = os.path.join(s.root, "vn", "00000001")
+    seen: list[bool] = []
+    real_open = open
+    monkeypatch.setattr(
+        st, "open", lambda *a, **kw: _StagedWrite(real_open(*a, **kw),
+                                                  final, seen, fail),
+        raising=False)
+    if fail:
+        with pytest.raises(StorageWriteFailureError):
+            s.write_atomic("vn/00000001", b"x" * 100)
+    else:
+        s.write_atomic("vn/00000001", b"x" * 100)
+    monkeypatch.undo()
+    assert seen == [False]
+    assert os.listdir(os.path.dirname(final)) == ([] if fail
+                                                  else ["00000001"])
+    if fail:
+        s.write_atomic("vn/00000001", b"x" * 100)
+    # a lost seal still raises, and leaves the winner's bytes alone
+    with pytest.raises(StorageAtomicSealFailureError):
+        s.write_atomic("vn/00000001", b"other")
+    assert s.read("vn/00000001") == b"x" * 100
+    assert os.listdir(os.path.dirname(final)) == ["00000001"]
 
 
 def test_overwrite_replaces(storage):
