@@ -9,9 +9,11 @@ This is the rebuild of the reference's Spark integration surface
   (OlympiaSparkSqlExtensionsParser.scala:115-133), handles catalog DDL
   (CREATE/DROP NAMESPACE|TABLE|VIEW, SHOW, DESCRIBE) and DML
   (INSERT/DELETE/UPDATE), and delegates everything else to ``spark.sql``
-  after resolving ``ns.table`` references to temp views over the
+  after resolving ``ns.table`` references to frames over the
   catalog-tracked parquet files — the Python-native equivalent of the
   reference's DSv2 catalog plugin (SURVEY §4: no Catalyst rule needed).
+  A statement binds them in one ``_StatementScope`` under names no
+  other statement uses, dropped once the text is analyzed.
   Every read or rewrite of statement text before ``spark.sql`` goes
   through one lexer, ``sqltext.py``: one grammar for string literals
   (``\\`` escapes and ``''`` doubling, both quote styles), backtick
@@ -39,6 +41,8 @@ produces.
 
 from __future__ import annotations
 
+import contextlib
+import itertools
 import json
 import math
 import os
@@ -347,6 +351,49 @@ def _s3a_on_classpath(spark: SparkSession) -> bool:
         return True
     except Exception:
         return False
+
+
+# One counter for the process: every Engine and thread on a SparkSession
+# shares its temp-view namespace.
+_STATEMENT_NAMES = itertools.count()
+
+
+class _StatementScope(contextlib.AbstractContextManager):
+    """The session names one statement's SQL reads its frames under:
+    ``bind`` registers a frame as a temp view under a name no other
+    statement uses, and leaving the ``with`` block drops every name it
+    registered, also when the statement fails. Classic Spark analyzes
+    eagerly, so a DataFrame built over the names inside the block keeps
+    its plan once they are gone. A key says what a frame stands for
+    (``("obj", ns, tbl)``, a snapshot, a metadata table); one key is one
+    name, which :meth:`name` hands out before the frame is bound."""
+
+    def __init__(self, spark: SparkSession):
+        self.spark = spark
+        self._names: dict[tuple, str] = {}
+        self._bound: list[str] = []
+
+    def name(self, *key) -> str:
+        if key not in self._names:
+            hint = re.sub(r"\W+", "_", "_".join(map(str, key)))
+            self._names[key] = f"olympia__{next(_STATEMENT_NAMES)}_{hint}"
+        return self._names[key]
+
+    def bind(self, df: DataFrame, *key) -> str:
+        name = self.name(*key)
+        if name not in self._bound:             # a key keeps its frame
+            df.createOrReplaceTempView(name)
+            self._bound.append(name)
+        return name
+
+    def __exit__(self, *exc) -> None:
+        # the session catalog's drop releases the name only; the one of
+        # ``spark.catalog`` also uncaches the frame's plan, unpinning a
+        # persisted frame (a REPLACE WHERE source) still in use
+        if self._bound:
+            catalog = self.spark._jsparkSession.sessionState().catalog()
+            for name in self._bound:
+                catalog.dropTempView(name)
 
 
 class Engine:
@@ -2775,16 +2822,8 @@ class Engine:
 
     def _replace_where_body(self, txn, tdef, ns, tbl, df, predicate,
                             name, schema) -> int:
-        plain = not re.search(r"\bSELECT\b", predicate, re.I)
-
         def keep_complement(d: DataFrame) -> DataFrame:
-            """Rows NOT matching the predicate — subquery predicates
-            route through _pred_matches + exceptAll, exactly like
-            delete_from's keep set."""
-            if plain:
-                return d.filter(
-                    f"NOT ({predicate}) OR ({predicate}) IS NULL")
-            return d.exceptAll(self._pred_matches(d, predicate, txn, name))
+            return self._pred_unmatched(d, predicate, txn, name)
 
         n_bad = keep_complement(df).count()
         if n_bad:
@@ -3021,10 +3060,18 @@ class Engine:
         src = source.alias(source_alias).persist(
             StorageLevel.MEMORY_AND_DISK)
         try:
-            return self._merge_body(
-                txn, tdef, ns, tbl, src, on, target_alias, source_alias,
-                cols, schema, matched_clauses, not_matched_clauses,
-                by_src, extra_properties, evolved_names)
+            # subqueries in ON, WHEN and SET/VALUES read the statement's
+            # snapshot, like its source and target
+            with _StatementScope(self.spark) as scope:
+                clauses = [[tuple(self._resolve_expr(x, txn, scope)
+                                  for x in clause) for clause in family]
+                           for family in (matched_clauses,
+                                          not_matched_clauses, by_src)]
+                return self._merge_body(
+                    txn, tdef, ns, tbl, src,
+                    self._resolve_expr(on, txn, scope), target_alias,
+                    source_alias, cols, schema, *clauses, extra_properties,
+                    evolved_names)
         finally:
             src.unpersist()
 
@@ -3346,27 +3393,33 @@ class Engine:
                       target: str | None = None) -> DataFrame:
         """Rows of ``df`` matching a DML predicate. Plain predicates go
         through ``filter``; predicates containing a subquery (IN/EXISTS/
-        scalar — Catalyst only admits them via the SQL path) register the
-        frame as a temp view, resolve any ``ns.tbl`` references inside the
-        subquery against the SAME transaction snapshot, and evaluate with
-        ``spark.sql``. Standard DML semantics fall out: the subquery reads
-        the pre-statement state of every table it names, including the
-        target itself."""
+        scalar — Catalyst only admits them via the SQL path) bind the
+        frame in a statement scope, resolve any ``ns.tbl`` references
+        inside the subquery against the SAME transaction snapshot, and
+        evaluate with ``spark.sql``. Standard DML semantics fall out: the
+        subquery reads the pre-statement state of every table it names,
+        including the target itself."""
         if not re.search(r"\bSELECT\b", predicate, re.I):
             return df.filter(predicate)
-        vname = f"olympia__dml__{uuid.uuid4().hex[:12]}"
-        df.createOrReplaceTempView(vname)
-        # Alias the target frame with the name the resolver gives the
-        # target TABLE, so a correlated reference to `ns.tbl.col` inside
-        # the subquery binds to the OUTER frame (nearest-alias scoping),
-        # not to a second full-table scan.
-        alias = ""
-        if target:
-            ns, tbl = self._split(target)
-            alias = f" AS olympia__{ns}__{tbl}"
-        stmt = self._resolve_sql(
-            f"SELECT * FROM {vname}{alias} WHERE {predicate}", txn)
-        return self.spark.sql(stmt)
+        with _StatementScope(self.spark) as scope:
+            frame = scope.bind(df, "dml")
+            # Alias the target frame with the name the scope gives the
+            # target TABLE, so a correlated reference to `ns.tbl.col`
+            # inside the subquery binds to the OUTER frame (nearest-alias
+            # scoping), not to a second full-table scan.
+            alias = (f" AS {scope.name('obj', *self._split(target))}"
+                     if target else "")
+            return self.spark.sql(self._resolve_sql(
+                f"SELECT * FROM {frame}{alias} WHERE {predicate}", txn,
+                scope))
+
+    def _pred_unmatched(self, df: DataFrame, predicate: str,
+                        txn: Transaction, target: str) -> DataFrame:
+        """The rows of ``df`` a DELETE keeps: the complement of
+        :meth:`_pred_matches` by bag semantics, NULL outcomes included."""
+        if not re.search(r"\bSELECT\b", predicate, re.I):
+            return df.filter(f"NOT ({predicate}) OR ({predicate}) IS NULL")
+        return df.exceptAll(self._pred_matches(df, predicate, txn, target))
 
     def delete_from(self, name: str, predicate: str) -> int:
         """B29 — DELETE WHERE: rewrite affected files minus matching rows
@@ -3376,11 +3429,7 @@ class Engine:
         non-matching rows are kept, exactly the complement of the
         matched set."""
         def _delete(df: DataFrame, txn: Transaction) -> DataFrame:
-            if not re.search(r"\bSELECT\b", predicate, re.I):
-                return df.filter(
-                    f"NOT ({predicate}) OR ({predicate}) IS NULL")
-            return df.exceptAll(
-                self._pred_matches(df, predicate, txn, name))
+            return self._pred_unmatched(df, predicate, txn, name)
         return self._rewrite(name, predicate, _delete)
 
     def update(self, name: str, assignments: dict[str, str],
@@ -3394,18 +3443,21 @@ class Engine:
         def _update(df: DataFrame, txn: Transaction) -> DataFrame:
             # ALL right-hand sides evaluate against the pre-update row
             # (SQL simultaneous-assignment semantics — `SET a = b, b = a`
-            # swaps; chained withColumn would not)
-            if re.search(r"\bSELECT\b", predicate, re.I):
-                matched = self._pred_matches(df, predicate, txn, name)
-                updated = matched.select(*[
-                    F.expr(assignments[c]).alias(c) if c in assignments
-                    else F.col(c) for c in df.columns])
-                return df.exceptAll(matched).unionByName(updated)
-            cond = F.expr(predicate)
-            return df.select(*[
-                (F.when(cond, F.expr(assignments[c])).otherwise(F.col(c))
-                 .alias(c)) if c in assignments else F.col(c)
-                for c in df.columns])
+            # swaps; chained withColumn would not); a subquery in one
+            # reads the statement's snapshot
+            with _StatementScope(self.spark) as scope:
+                sets = self._resolve_expr(assignments, txn, scope)
+                if re.search(r"\bSELECT\b", predicate, re.I):
+                    matched = self._pred_matches(df, predicate, txn, name)
+                    updated = matched.select(*[
+                        F.expr(sets[c]).alias(c) if c in sets
+                        else F.col(c) for c in df.columns])
+                    return df.exceptAll(matched).unionByName(updated)
+                cond = F.expr(predicate)
+                return df.select(*[
+                    (F.when(cond, F.expr(sets[c])).otherwise(F.col(c))
+                     .alias(c)) if c in sets else F.col(c)
+                    for c in df.columns])
         return self._rewrite(name, predicate, _update)
 
     # --- schema evolution (A15) + maintenance --------------------------------
@@ -4681,8 +4733,7 @@ class Engine:
                     schema_binding: bool = False) -> None:
         ns, view = self._split(name)
         txn = self._txn()
-        resolved = self._resolve_sql(sql_text, txn)
-        df = self.spark.sql(resolved)
+        df = self._query(sql_text, txn)
         schema = df.schema
         # the Spark-native analogue of the reference's substrait payload
         # (proto/objects.proto:81-85): the ANALYZED Catalyst plan — a
@@ -4778,7 +4829,7 @@ class Engine:
             # bytes were carried losslessly but not executable)
             df = self._exec_substrait_view(vdef, ns, view, txn)
         else:
-            df = self.spark.sql(self._resolve_sql(vdef.sql_text, txn))
+            df = self._query(vdef.sql_text, txn)
         if vdef.schema_binding and vdef.schema_json:
             bound = T.StructType.fromJson(json.loads(vdef.schema_json))
             if [f.name for f in df.schema.fields] != \
@@ -4985,8 +5036,7 @@ class Engine:
         # see _mv_companions; the declared schema excludes them
         srcs = sorted(f"{n}.{t}" for n, t in tables)
         cplan = self._mv_plan(sql_text, srcs, txn)
-        df = self.spark.sql(self._resolve_sql(
-            self._mv_augmented_sql(cplan) or sql_text, txn))
+        df = self._query(self._mv_augmented_sql(cplan) or sql_text, txn)
         comp_names = {c for pair in
                       (self._mv_companions(cplan) if cplan else [])
                       for c in pair[:2]}
@@ -5398,7 +5448,7 @@ class Engine:
                 # rewrite restores the companions and the NEXT refresh
                 # can take the incremental lane again
                 aug = self._mv_augmented_sql(cplan)
-                merged = self.spark.sql(self._resolve_sql(aug or q, txn))
+                merged = self._query(aug or q, txn)
                 schema = tdef.spark_schema()
                 merged = merged.select(
                     *[F.col(f.name).cast(f.dataType).alias(f.name)
@@ -5621,20 +5671,16 @@ class Engine:
         the merged frame, or None → full lane (touched-key set larger
         than _MV_SCOPED_KEYS_MAX, or a key value with no faithful SQL
         literal)."""
-        a = f"olympia__mv_delta__{uuid.uuid4().hex[:8]}"
-        feed.drop("_change_type").createOrReplaceTempView(a)
-        try:
-            sql = (f"SELECT DISTINCT "
-                   f"{', '.join(plan['group_items'])} FROM {a}")
+        with _StatementScope(self.spark) as scope:
+            sql = (f"SELECT DISTINCT {', '.join(plan['group_items'])} "
+                   f"FROM {scope.bind(feed.drop('_change_type'), 'feed')}")
             if plan["where"]:
                 # a feed row failing the MV's WHERE never contributed —
                 # its group needs no recompute
                 sql += f" WHERE {plan['where']}"
             aff = self.spark.sql(sql)
-            aff_schema = aff.schema
-            keys = aff.limit(self._MV_SCOPED_KEYS_MAX + 1).collect()
-        finally:
-            self.spark.catalog.dropTempView(a)
+        aff_schema = aff.schema
+        keys = aff.limit(self._MV_SCOPED_KEYS_MAX + 1).collect()
         if len(keys) > self._MV_SCOPED_KEYS_MAX:
             return None
         if not keys:
@@ -5643,8 +5689,8 @@ class Engine:
             self._mv_key_exprs(plan), keys, plan["group"])
         if pred is None:
             return None
-        rec = self.spark.sql(self._resolve_sql(
-            self._mv_augmented_sql(plan, extra_where=pred), txn))
+        rec = self._query(self._mv_augmented_sql(plan, extra_where=pred),
+                          txn)
         aff_df = self._local_df(keys, aff_schema)
         cond = None
         for k in plan["group"]:
@@ -6333,30 +6379,20 @@ class Engine:
         the refresh's pinned version — the delta joins them under the
         stored query's own aliases, exact for INNER chains because the
         joined relation is multilinear in each input."""
-        tmps, views = [], {}
+        with _StatementScope(self.spark) as scope:
+            def _signed(src: str, df: DataFrame) -> str:
+                return scope.bind(df.withColumn(
+                    "__mv_sign",
+                    F.when(F.col("_change_type") == "delete", F.lit(-1))
+                    .otherwise(F.lit(1))).drop("_change_type"), "feed", src)
 
-        def _reg(df: DataFrame) -> str:
-            a = f"olympia__mv_delta__{uuid.uuid4().hex[:8]}"
-            df.createOrReplaceTempView(a)
-            tmps.append(a)
-            return a
-
-        def _signed(df: DataFrame) -> str:
-            return _reg(df.withColumn(
-                "__mv_sign",
-                F.when(F.col("_change_type") == "delete", F.lit(-1))
-                .otherwise(F.lit(1))).drop("_change_type"))
-
-        try:
             if "branches" in plan:
                 legs = []
                 for src, bitems, bwhere in plan["branches"]:
                     if src not in rows:
                         continue        # unchanged source: empty delta
-                    if src not in views:
-                        views[src] = _signed(rows[src])
                     leg = (f"SELECT {bitems}, __mv_sign "
-                           f"FROM {views[src]}")
+                           f"FROM {_signed(src, rows[src])}")
                     if bwhere:
                         leg += f" WHERE {bwhere}"
                     legs.append(leg)
@@ -6365,7 +6401,7 @@ class Engine:
                 (dsrc, feed), = rows.items()
                 j = plan["join"]
                 # rebuild the stored chain with each table swapped for
-                # its temp view — the signed feed in the changed slot,
+                # its bound frame — the signed feed in the changed slot,
                 # the pinned-version reads (``dim``: {source: df})
                 # everywhere else; aliases and ON conditions re-bind
                 # verbatim. LEFT reaches here only with the delta on
@@ -6373,8 +6409,8 @@ class Engine:
                 # enforces it.
                 def _slot_view(src: str) -> str:
                     if src.lower() == dsrc.lower():
-                        return _signed(feed)
-                    return _reg(dim[src])
+                        return _signed(src, feed)
+                    return scope.bind(dim[src], "dim", src)
                 slots = j["slots"]
                 frm = f"{_slot_view(slots[0][0])} {slots[0][1]}"
                 for k, (jt, cond) in enumerate(j["conds"]):
@@ -6382,7 +6418,7 @@ class Engine:
                     frm += (f" {kw} {_slot_view(slots[k + 1][0])} "
                             f"{slots[k + 1][1]} ON ({cond})")
             else:
-                frm = _signed(rows)
+                frm = _signed("", rows)
             sel = list(plan.get("group_items") or plan["group"])
             sel += [f"{self._mv_signed_row(kind, inner)} AS {out}"
                     for kind, inner, out in plan["aggs"]
@@ -6395,11 +6431,7 @@ class Engine:
             sql = f"SELECT {', '.join(sel)} FROM {frm}"
             if plan["where"]:
                 sql += f" WHERE {plan['where']}"
-            out = self.spark.sql(sql)
-        finally:
-            for a in tmps:              # plan already resolved
-                self.spark.catalog.dropTempView(a)
-        return out
+            return self.spark.sql(sql)
 
     @staticmethod
     def _mv_merge(old: DataFrame, delta: DataFrame, plan: dict,
@@ -6532,28 +6564,22 @@ class Engine:
                  + [q(s) for s, _c, _i, _o in companions]
                  + [q(c) for _s, c, _i, _o in companions]
                  + [q(rc)])
-        vo = f"olympia__mv_old__{uuid.uuid4().hex[:8]}"
-        vd = f"olympia__mv_new__{uuid.uuid4().hex[:8]}"
-        old.createOrReplaceTempView(vo)
-        delta.createOrReplaceTempView(vd)
-        try:
-            sql = (
+        with _StatementScope(spark) as scope:
+            return spark.sql(
                 f"SELECT {', '.join(final)} FROM ("
                 f"SELECT {', '.join(derive)} FROM ("
                 f"SELECT {', '.join(q(k) for k in keys)}, "
                 f"{', '.join(aggs_sql)} FROM ("
-                f"SELECT {', '.join(old_leg)} FROM {vo} "
+                f"SELECT {', '.join(old_leg)} FROM "
+                f"{scope.bind(old, 'mv_old')} "
                 f"UNION ALL "
-                f"SELECT {', '.join(delta_leg)} FROM {vd}"
+                f"SELECT {', '.join(delta_leg)} FROM "
+                f"{scope.bind(delta, 'mv_delta')}"
                 f") olympia__mv_u GROUP BY "
                 f"{', '.join(q(k) for k in keys)}"
                 f") olympia__mv_g"
                 + (f" WHERE {q(rc)} > 0" if grouped else "")
                 + ") olympia__mv_m")
-            return spark.sql(sql)
-        finally:                        # plan already resolved
-            spark.catalog.dropTempView(vo)
-            spark.catalog.dropTempView(vd)
 
     @staticmethod
     def _mv_guard(tdef: TableDef, name: str, op: str) -> None:
@@ -6678,133 +6704,117 @@ class Engine:
             raise ValueError(f"expected ns.table, got {name!r}")
         return parts[0], parts[1]
 
-    @staticmethod
-    def _candidate_idents(runs: list[str]) -> list[tuple[str, str]]:
-        """Dotted identifiers in a statement's code runs (the even pieces
-        of sqltext.split_code — never inside a literal or comment: 'ns1.t'
-        or "ns1.t" the string is data, not a reference) — the candidates
-        for catalog point-lookups. O(statement length), NOT O(catalog
-        size): with millions of objects each lookup is a tree descent
-        (A19), never an enumeration."""
-        found: list[tuple[str, str]] = []
-        for seg in runs:
-            for m in re.finditer(r"`?\b(\w+)\b`?\.`?\b(\w+)\b`?", seg):
-                pair = (m.group(1), m.group(2))
-                if pair not in found:
-                    found.append(pair)
-        return found
+    # A catalog reference, matched on the ref view (no match starts in a
+    # literal or comment; an `olympia.` catalog prefix is dropped): a
+    # table in a saved distributed transaction, `sys.dtxns`, or `ns.obj`
+    # with an optional `$files|$history|$partitions` suffix or `VERSION
+    # AS OF n|'<tag>'` / `TIMESTAMP AS OF '<ts>'` clause.
+    _REF_RE = re.compile(
+        r"(?:\bolympia\.)?(?:"
+        r"\bsys\.dtxns\.dtxn_(?P<dtxn>[\w-]+)\.(?P<dns>\w+)\.(?P<dtbl>\w+)"
+        r"|(?P<sys>\bsys\.dtxns\b)"
+        r"|`?\b(?P<ns>\w+)\b`?\.`?\b(?P<obj>\w+)\b`?(?:"
+        r"\$(?P<meta>files|history|partitions)"
+        r"|\s+(?i:VERSION\s+AS\s+OF)\s+(?P<version>\d+)\b"
+        r"|\s+(?P<asof>(?i:VERSION|TIMESTAMP))\s+(?i:AS\s+OF)\s+"
+        r"'(?P<lit>[^']+)')?)")
 
     def _referenced_tables(self, sql: str, txn: Transaction):
-        """Catalog tables/views whose `ns.name` appears in the SQL (outside
-        string literals) — resolved by per-candidate point-lookup."""
+        """Catalog tables/views whose `ns.name` the SQL references (the
+        `ns.obj` matches :meth:`_resolve_sql` binds, never text inside a
+        literal or comment) — each found by a point lookup."""
         refs = set()
-        for ns, obj in self._candidate_idents(sqltext.split_code(sql)[::2]):
-            if (self.catalog.table_exists(txn, ns, obj)
-                    or self.catalog.view_exists(txn, ns, obj)):
+        for m in self._REF_RE.finditer(sqltext.ref_view(sql)):
+            ns, obj = m.group("ns"), m.group("obj")
+            if ns and (self.catalog.table_exists(txn, ns, obj)
+                       or self.catalog.view_exists(txn, ns, obj)):
                 refs.add((ns, obj))
         return refs
 
-    def _resolve_sql(self, sql: str, txn: Transaction) -> str:
-        """Rewrite `ns.obj` references to registered temp views (SURVEY
-        §3.1 rebuild flow; quoted identifiers and `olympia.` prefixes are
-        normalized first). Views expand recursively through their own
-        resolved SQL. `VERSION AS OF n` / `TIMESTAMP AS OF ts` after a
-        table reference resolve against the catalog's root chain
-        (A27/A28) — catalog-level time travel, since the whole catalog is
-        versioned, not just one table."""
-        # Every rewrite below applies ONLY to code (sqltext.split_code's
-        # runs): a predicate like  WHERE v = 'ns1.t'  compares against
-        # the string 'ns1.t', never against a rewritten alias.
-        # metadata virtual tables: ns.t$files / $history / $partitions
-        def _meta(seg: str) -> str:
-            for m in list(re.finditer(
-                    r"(\w+)\.(\w+)\$(files|history|partitions)", seg)):
-                ns, tbl, kind = m.groups()
-                df = {"files": self.table_files,
-                      "history": self.table_history,
-                      "partitions": self.table_partitions}[kind](f"{ns}.{tbl}")
-                alias = f"olympia__meta__{ns}__{tbl}__{kind}"
-                df.createOrReplaceTempView(alias)
-                seg = seg.replace(m.group(0), alias)
-            return seg
-        # A36: objects inside a persisted distributed transaction —
-        # sys.dtxns.dtxn_<id>.<ns>.<table> reads the table as seen by that
-        # transaction's running tree (reference docs/spark.md:110-142,
-        # IcebergToOlympia.parseTableIdentifier:80-149).
-        def _dtxn(seg: str) -> str:
-            for m in list(re.finditer(
-                    r"\bsys\.dtxns\.dtxn_([\w-]+)\.(\w+)\.(\w+)", seg)):
-                txn_id, ns, tbl = m.groups()
-                dtxn = self.catalog.load_dist_transaction(txn_id)
-                alias = f"olympia__dtxn__{ns}__{tbl}"
-                self.read_table(f"{ns}.{tbl}", dtxn,
-                                historical=True) \
-                    .createOrReplaceTempView(alias)
-                seg = seg.replace(m.group(0), alias)
-            return seg
-        def _vtravel(seg: str) -> str:
-            for m in list(re.finditer(
-                    r"(\w+)\.(\w+)\s+VERSION AS OF (\d+)", seg, re.I)):
-                ns, tbl, version = m.group(1), m.group(2), int(m.group(3))
-                snap = self.catalog.at_version(version)
-                alias = f"olympia__tt__{ns}__{tbl}__v{version}"
-                self.read_table(f"{ns}.{tbl}", snap, historical=True) \
-                    .createOrReplaceTempView(alias)
-                seg = seg.replace(m.group(0), alias)
-            return seg
-        parts = sqltext.split_code(sql)
-        parts[::2] = [_vtravel(_dtxn(_meta(re.sub(r"\bolympia\.", "", p))))
-                      for p in parts[::2]]
-        if re.search(r"AS OF '", sql, re.I):
-            # VERSION AS OF '<tag>' and TIMESTAMP AS OF '<ts>' span a
-            # literal (the tag name, the timestamp): matched on the code
-            # view, where a literal keeps its quotes and blanks its
-            # contents, so no match can start inside one
-            out = "".join(parts)
-            code = sqltext.code_view(out)
-            res, pos = [], 0
-            for m in re.finditer(r"(\w+)\.(\w+)\s+(VERSION|TIMESTAMP) AS OF "
-                                 r"'([^']+)'", code, re.I):
-                ns, tbl = m.group(1), m.group(2)
-                lit = out[m.start(4):m.end(4)]
-                if m.group(3).upper() == "VERSION":
-                    # the tag resolves to its pinned version, then time-
-                    # travels exactly as the numeric form does
-                    version = self.catalog.resolve_tag(lit)
-                    snap = self.catalog.at_version(version)
-                    alias = f"olympia__tt__{ns}__{tbl}__v{version}"
-                else:
-                    import datetime as _dt
-                    parsed = _dt.datetime.fromisoformat(lit)
-                    if parsed.tzinfo is None:   # naive timestamps mean UTC;
-                        parsed = parsed.replace(tzinfo=_dt.timezone.utc)
-                    millis = int(parsed.timestamp() * 1000)  # offsets honored
-                    snap = self.catalog.before_timestamp(millis)
-                    alias = f"olympia__tt__{ns}__{tbl}__t{millis}"
-                self.read_table(f"{ns}.{tbl}", snap, historical=True) \
-                    .createOrReplaceTempView(alias)
-                res += [out[pos:m.start()], alias]
+    def _resolve_sql(self, sql: str, txn: Transaction,
+                     scope: _StatementScope) -> str:
+        """``sql`` with each catalog reference replaced by the name its
+        frame is bound under in ``scope`` (SURVEY §3.1 rebuild flow).
+        Plain `ns.obj` reads ``txn``; a view expands through its own
+        resolved SQL; a `ns.obj` that is no table or view (an alias-
+        qualified column) is left as written. Each is a point lookup
+        (tree descent, A19): O(statement), not O(catalog)."""
+        found: dict[tuple, str | None] = {}
+        out, pos = [], 0
+        for m in self._REF_RE.finditer(sqltext.ref_view(sql)):
+            g = m.groupdict()
+            plain = not (g["dtxn"] or g["sys"] or g["meta"]
+                         or g["version"] or g["asof"])
+            key = (("obj", g["ns"], g["obj"]) if plain
+                   else (sql[m.start():m.end()],))
+            if key not in found:
+                df = self._ref_frame(g, sql[m.start("lit"):m.end("lit")],
+                                     txn)
+                found[key] = (None if df is None
+                              else scope.bind(df, *key))
+            if found[key]:
+                out += [sql[pos:m.start()], found[key]]
                 pos = m.end()
-            if res:
-                parts = sqltext.split_code("".join(res) + out[pos:])
-        # Plain ns.obj references: extract candidates from the statement,
-        # then point-look each up (tree descent, A19) — O(statement), not
-        # O(catalog); see docs/format.md:24-63 for the reference cost model.
-        for ns, obj in self._candidate_idents(parts[::2]):
-            is_table = self.catalog.table_exists(txn, ns, obj)
-            if not is_table and not self.catalog.view_exists(txn, ns, obj):
-                continue
-            alias = f"olympia__{ns}__{obj}"
-            if is_table:
-                self.read_table(f"{ns}.{obj}", txn) \
-                    .createOrReplaceTempView(alias)
-            else:
-                self.read_view(f"{ns}.{obj}", txn) \
-                    .createOrReplaceTempView(alias)
-            pattern = (rf"`?\b{re.escape(ns)}\b`?\."
-                       rf"`?\b{re.escape(obj)}\b`?")
-            parts[::2] = [re.sub(pattern, alias, p) for p in parts[::2]]
-        return "".join(parts)
+        return "".join(out) + sql[pos:]
+
+    def _ref_frame(self, g: dict, lit: str,
+                   txn: Transaction) -> DataFrame | None:
+        """The frame of one :data:`_REF_RE` match (``lit``: its AS OF
+        literal), or None for a `ns.obj` that is no table or view. Time
+        travel reads the catalog's root chain (A27/A28): the whole
+        catalog is versioned, not one table. A dtxn reference reads the
+        saved transaction's tree (A36, reference docs/spark.md:110)."""
+        if g["dtxn"]:
+            return self.read_table(
+                f"{g['dns']}.{g['dtbl']}",
+                self.catalog.load_dist_transaction(g["dtxn"]),
+                historical=True)
+        if g["sys"]:
+            return self._sys_dtxns_df()
+        name = f"{g['ns']}.{g['obj']}"
+        if g["meta"]:
+            return {"files": self.table_files,
+                    "history": self.table_history,
+                    "partitions": self.table_partitions}[g["meta"]](name)
+        if g["version"] or (g["asof"] or "").upper() == "VERSION":
+            # a tag resolves to its pinned version, then time-travels
+            # exactly as the numeric form does
+            snap = self.catalog.at_version(
+                int(g["version"]) if g["version"]
+                else self.catalog.resolve_tag(lit))
+        elif g["asof"]:
+            import datetime as _dt
+            parsed = _dt.datetime.fromisoformat(lit)
+            if parsed.tzinfo is None:   # naive timestamps mean UTC;
+                parsed = parsed.replace(tzinfo=_dt.timezone.utc)
+            snap = self.catalog.before_timestamp(
+                int(parsed.timestamp() * 1000))  # offsets honored
+        elif self.catalog.table_exists(txn, g["ns"], g["obj"]):
+            return self.read_table(name, txn)
+        elif self.catalog.view_exists(txn, g["ns"], g["obj"]):
+            return self.read_view(name, txn)
+        else:
+            return None
+        return self.read_table(name, snap, historical=True)
+
+    def _query(self, sql: str, txn: Transaction) -> DataFrame:
+        """``sql`` analyzed over the catalog objects it names, read at
+        ``txn``; the names they were bound under are gone on return."""
+        with _StatementScope(self.spark) as scope:
+            return self.spark.sql(self._resolve_sql(sql, txn, scope))
+
+    def _resolve_expr(self, expr, txn: Transaction,
+                      scope: _StatementScope):
+        """A DML expression (UPDATE SET, MERGE ON/WHEN/SET), or a dict of
+        them, with subqueries' references bound like a statement's.
+        Without a subquery a dotted name can only be a column or a
+        field, and the text (or None, or a clause's kind) is kept."""
+        if isinstance(expr, dict):
+            return {c: self._resolve_expr(e, txn, scope)
+                    for c, e in expr.items()}
+        if expr and re.search(r"\bSELECT\b", expr, re.I):
+            return self._resolve_sql(expr, txn, scope)
+        return expr
 
     # --- metadata virtual tables --------------------------------------------
 
@@ -7111,11 +7121,7 @@ class Engine:
             partition_by = ([c.strip() for c in
                              sqltext.split_top_level(part)]
                             if part else [])
-            properties = {}
-            if props_raw:
-                for km in re.finditer(r"'([^']*)'\s*=\s*'([^']*)'",
-                                      props_raw):
-                    properties[km.group(1)] = km.group(2)
+            properties = sqltext.key_values(props_raw or "")
             txn = self._txn()
             if if_not_exists and self.catalog.table_exists(txn, ns, tbl):
                 self._finish(txn)
@@ -7133,7 +7139,7 @@ class Engine:
                     int(clust_n))
 
             if ctas:
-                df = spark.sql(self._resolve_sql(ctas, txn))
+                df = self._query(ctas, txn)
                 partition_by, extra, tgen, tsp = \
                     self._expand_partition_transforms(partition_by,
                                                       df.schema)
@@ -7267,12 +7273,11 @@ class Engine:
                      r"(?:\s+OPTIONS\s*\((.*?)\))?$", norm, re.I | re.S)
         if m:
             name, src, fmt, opts_raw = m.groups()
-            src_paths = re.findall(r"'([^']+)'", src)
-            opts = dict(re.findall(r"'([^']+)'\s*=\s*'([^']*)'",
-                                   opts_raw or ""))
+            src_paths = [sqltext.word(p) for p in sqltext.split_top_level(
+                src[1:-1] if src.startswith("(") else src)]
             loaded, rows, skipped = self.copy_into(
                 name, *src_paths, format=(fmt or "parquet"),
-                options=opts)
+                options=sqltext.key_values(opts_raw or ""))
             return self._local_df(
                 [(loaded, rows, skipped)],
                 "files_loaded long, rows_loaded long, files_skipped long")
@@ -7325,6 +7330,25 @@ class Engine:
                     f"(use DROP TABLE)")
             self.catalog.drop_table(txn, ns, tbl)
             self._finish(txn)
+            return ok()
+        m = re.match(r"(?:CREATE( OR REPLACE)? (GLOBAL )?TEMP(?:ORARY)? VIEW"
+                     r"|CACHE( LAZY)? (TABLE)) (\S+?)(?:\s*\(([^)]*)\))? AS "
+                     r"(.+)$", norm, re.I | re.S)
+        if m:
+            # the user's own session view (CREATE TEMP VIEW, CACHE TABLE
+            # ... AS) is the bound frame, pinned at creation: a SQL view
+            # re-resolves its text on read, after the names are dropped
+            replace, glob, lazy, cache, view, cols, query = m.groups()
+            df = self._query(query, self._txn())
+            if cols:
+                df = df.toDF(*[c.strip().strip("`")
+                               for c in sqltext.split_top_level(cols)])
+            getattr(df, f"create{'OrReplace' if replace else ''}"
+                        f"{'Global' if glob else ''}TempView")(view)
+            if cache:
+                spark.catalog.cacheTable(view)
+                if not lazy:
+                    spark.table(view).count()     # CACHE TABLE is eager
             return ok()
         m = re.match(r"CREATE( OR REPLACE)? VIEW (\S+\.\S+) AS (.+)$",
                      norm, re.I | re.S)
@@ -7423,7 +7447,7 @@ class Engine:
                 df = spark.sql(f"SELECT * FROM ({payload}) "
                                f"AS v({', '.join(target_cols)})")
             else:
-                df = spark.sql(self._resolve_sql(payload, txn_src))
+                df = self._query(payload, txn_src)
                 if col_list is not None:
                     # explicit column list: positional mapping (SQL
                     # semantics). Without a list the query's own column
@@ -7461,10 +7485,9 @@ class Engine:
             txn_src = self._txn()
             src_text = src_text.strip()
             if src_text.startswith("("):
-                src_df = spark.sql(self._resolve_sql(src_text[1:-1], txn_src))
+                src_df = self._query(src_text[1:-1], txn_src)
             else:
-                src_df = spark.sql(self._resolve_sql(
-                    f"SELECT * FROM {src_text}", txn_src))
+                src_df = self._query(f"SELECT * FROM {src_text}", txn_src)
             matched_clauses, not_matched_clauses, by_source_clauses = \
                 self._parse_merge_whens(whens)
             n = self.merge(name, src_df, on,
@@ -7567,8 +7590,7 @@ class Engine:
             ns, tbl = self._split(m.group(1))
             txn = self._txn()
             tdef = self.catalog.describe_table(txn, ns, tbl)
-            tdef.properties.update(dict(
-                re.findall(r"'([^']+)'\s*=\s*'([^']*)'", m.group(2))))
+            tdef.properties.update(sqltext.key_values(m.group(2)))
             # pointer defs persist pointer-minimal (review r12 pass-3:
             # committing the hydrated def froze the pointer)
             self.catalog.alter_table(txn, ns, tbl,
@@ -7589,8 +7611,8 @@ class Engine:
         if m:
             txn = self._txn()
             self.catalog.set_namespace_properties(
-                txn, m.group(1).replace("`", ""), dict(
-                    re.findall(r"'([^']+)'\s*=\s*'([^']*)'", m.group(2))))
+                txn, m.group(1).replace("`", ""),
+                sqltext.key_values(m.group(2)))
             self._finish(txn)
             return ok()
         m = re.match(r"ALTER (?:NAMESPACE|DATABASE|SCHEMA) (\S+) UNSET "
@@ -7599,7 +7621,8 @@ class Engine:
             txn = self._txn()
             self.catalog.unset_namespace_properties(
                 txn, m.group(1).replace("`", ""),
-                [k.strip().strip("'") for k in m.group(2).split(",")])
+                [sqltext.word(k)
+                 for k in sqltext.split_top_level(m.group(2))])
             self._finish(txn)
             return ok()
 
@@ -7638,12 +7661,7 @@ class Engine:
                 [(inner._jdf.queryExecution().explainString(jmode),)],
                 "plan string")
         # pass-through: resolve catalog identifiers, delegate to Catalyst
-        txn = self._txn()
-        if re.search(r"\bsys\.dtxns\b(?!\.dtxn_)", norm):
-            self._sys_dtxns_df().createOrReplaceTempView("olympia__sys__dtxns")
-            statement = re.sub(r"\bsys\.dtxns\b(?!\.dtxn_)",
-                               "olympia__sys__dtxns", statement)
         rewritten, hidden = _rewrite_qualify(
             _rewrite_tablesample_all(_rewrite_exclude(statement)))
-        df = spark.sql(self._resolve_sql(rewritten, txn))
+        df = self._query(rewritten, self._txn())
         return df.drop(*hidden) if hidden else df

@@ -19,6 +19,9 @@ ANSI double-quoted identifiers off):
 * ``"..."`` — string literal; ``\\`` escapes the next character (a
   doubled ``""`` lexes as two adjacent literals, covering the same
   text).
+* ``r'...'`` / ``R"..."`` — raw string literal: no escapes, it runs to
+  the next quote of its kind (``r'C:\\'`` is ``C:\\``). The ``r`` opens one
+  only where it starts a token, not after a letter, digit or ``_``.
 * ```...``` — quoted identifier, running to the next backtick.
 * ``-- ...`` — line comment up to (not including) the newline.
 * ``/* ... */`` — block comment; block comments NEST (SPARK-28880), so
@@ -34,7 +37,8 @@ import re
 from typing import Callable
 
 _TOKEN_RE = re.compile(
-    r"(?P<literal>'(?:[^'\\]+|\\[\s\S]?|'')*'?"
+    r"(?P<literal>(?<!\w)[rR](?:'[^']*'?|\"[^\"]*\"?)"
+    r"|'(?:[^'\\]+|\\[\s\S]?|'')*'?"
     r'|"(?:[^"\\]+|\\[\s\S]?)*"?)'
     r"|(?P<ident>`[^`]*`?)"
     r"|(?P<comment>--[^\n]*)"
@@ -104,12 +108,13 @@ def _blank(kind: str, t: str) -> str:
         return t
     if kind == "comment":
         return " " * len(t)
-    if len(t) == 1:
+    lead = 2 if t[0] in "rR" else 1     # a raw literal keeps its r
+    if len(t) <= lead:
         return t                        # an opening quote at the end
     # keep both delimiters; the last character is kept only when it is
     # the same quote (an unterminated literal runs to the end anyway)
-    close = t[-1] if t[-1] == t[0] else " "
-    return t[0] + " " * (len(t) - 2) + close
+    close = t[-1] if t[-1] == t[lead - 1] else " "
+    return t[:lead] + " " * (len(t) - lead - 1) + close
 
 
 def code_view(s: str) -> str:
@@ -120,6 +125,13 @@ def code_view(s: str) -> str:
     view and slice the text. Splicing quote-free code into ``s`` at
     code positions can be mirrored in the view without a new scan."""
     return "".join(_blank(k, t) for k, t in scan(s))
+
+
+def ref_view(s: str) -> str:
+    """:func:`code_view` with quoted identifiers kept verbatim: the view
+    table references are matched on (```ns1`.`t```), where a match can
+    still never start inside a literal or a comment."""
+    return "".join(t if k == "ident" else _blank(k, t) for k, t in scan(s))
 
 
 def scrub(s: str) -> str:
@@ -223,3 +235,38 @@ def rewrite_groups(s: str, fn: Callable[[str], str], kw: str) -> str:
         out.append(s[pos:])
         return "".join(out)
     return walk(s, code_view(s))
+
+
+_ESCAPES = {"0": "\0", "b": "\b", "n": "\n", "r": "\r", "t": "\t",
+            "Z": "\x1a", "%": "\\%", "_": "\\_"}
+_UNESCAPE_RE = re.compile(r"\\(u[0-9a-fA-F]{4}|[\s\S])|''")
+
+
+def word(t: str) -> str:
+    """The value of one key, value or path: a lone literal read the way
+    Spark reads it (a raw literal verbatim; otherwise ``''`` in ``'...'``
+    is a quote, ``\\uXXXX`` a code point, ``\\n`` and the other escapes of
+    Spark's ``unescapeSQLString`` their character, and ``\\`` before any
+    other character that character), any other text stripped."""
+    t = t.strip()
+    if scan(t)[:1] != [("literal", t)]:
+        return t
+    if t[0] in "rR":
+        return t[2:-1]
+    return _UNESCAPE_RE.sub(
+        lambda m: (("'" if t[0] == "'" else "''") if m.group(1) is None
+                   else chr(int(m.group(1)[1:], 16)) if len(m.group(1)) == 5
+                   else _ESCAPES.get(m.group(1), m.group(1))), t[1:-1])
+
+
+def key_values(s: str) -> dict[str, str]:
+    """The ``'key' = 'value', ...`` list inside a TBLPROPERTIES, OPTIONS
+    or SET PROPERTIES clause (without its parentheses), each side read
+    by :func:`word`."""
+    out = {}
+    for item in split_top_level(s):
+        eq = code_view(item).find("=")
+        if eq < 0:
+            raise ValueError(f"expected 'key' = 'value', got {item!r}")
+        out[word(item[:eq])] = word(item[eq + 1:])
+    return out

@@ -45,6 +45,23 @@ def spark():
     yield s
 
 
+@pytest.fixture(autouse=True)
+def _no_statement_name_outlives_its_statement(request):
+    """Every temp view an Engine statement binds (``olympia__*``) is
+    dropped when the statement ends, also when it fails. After each test
+    that used the session, fail on any left behind; they are dropped
+    first, so one leak fails one test, not every later one."""
+    yield
+    if "spark" not in request.fixturenames:
+        return
+    spark = request.getfixturevalue("spark")
+    leaked = [t.name for t in spark.catalog.listTables(pattern="olympia__*")
+              if t.isTemporary]
+    for name in leaked:
+        spark.catalog.dropTempView(name)
+    assert not leaked, f"temp views outlived their statements: {leaked}"
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMALL

@@ -7,7 +7,8 @@ The generator builds text from typed segments and constructs the
 EXPECTED comment-stripped text and code view alongside — an oracle by
 construction, so the properties hold for every interleaving of
 literals (with backslash escapes and '' doubling), quoted identifiers,
-comments and code (the cross-pairing class of memory blind-spot #7).
+comments, raw r'...' literals (no escapes) and code (the
+cross-pairing class of memory blind-spot #7).
 The keyword, paren and split oracles are plain loops over the
 constructed code view, which holds no quotes to skip."""
 
@@ -35,6 +36,8 @@ _DQ_PIECE = st.one_of(
     st.text(alphabet="abc -*/(),", min_size=0, max_size=6),
     st.just('\\"'), st.just("\\\\"), st.just("--x"), st.just("/*y*/"),
     st.just("'"), st.just("`"), st.just("SELECT"))
+# raw literal bodies: no escapes, so a backslash may end the body
+_RAW_BODY = st.text(alphabet="abc -*/(),\\`'\"", max_size=6)
 _KW = "SELECT"
 
 
@@ -46,7 +49,7 @@ def _quoted(t):
 def _segment(draw):
     """(kind, text, comment-stripped text, code view) of one segment."""
     kind = draw(st.sampled_from(
-        ["code", "kw", "sq", "dq", "bt", "line", "block"]))
+        ["code", "kw", "sq", "dq", "raw", "bt", "line", "block"]))
     if kind == "code":
         t = draw(_CODE)
         return kind, t, t, t
@@ -60,6 +63,11 @@ def _segment(draw):
     if kind == "dq":
         t = '"' + "".join(draw(st.lists(_DQ_PIECE, max_size=4))) + '"'
         return kind, t, t, _quoted(t)
+    if kind == "raw":
+        q = draw(st.sampled_from(["'", '"']))
+        body = draw(_RAW_BODY).replace(q, "")
+        t = draw(st.sampled_from("rR")) + q + body + q
+        return kind, t, t, t[:2] + " " * (len(t) - 3) + q
     if kind == "bt":
         body = draw(st.text(alphabet="abc -*/(),'\"\\", max_size=6))
         t = f"`{body}`"
@@ -84,12 +92,14 @@ def _segment(draw):
 def _compose(segs):
     """(text, comment-stripped text, code view). Two adjacent
     single-quoted literals would lex as ONE literal with a '' inside,
-    so a space separates them."""
+    and an r right after a letter, digit or _ is part of that word, not
+    a raw literal's prefix, so a space separates them."""
     out, prev = [], None
     for kind, t, stripped, view in segs:
         if not t:
             continue
-        if kind == prev == "sq":
+        if kind == prev == "sq" or (kind == "raw" and out and (
+                out[-1][0][-1].isalnum() or out[-1][0][-1] == "_")):
             out.append((" ", " ", " "))
         out.append((t, stripped, view))
         prev = kind
