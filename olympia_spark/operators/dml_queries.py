@@ -1054,8 +1054,8 @@ def b151c_mv_union_refresh(spark: SparkSession, sf: str) -> DataFrame:
     aggregation over a UNION ALL of projection/filter branches over TWO
     source tables (the channel-report shape, cf. b126) refreshes
     O(delta) PER SOURCE — an append to one channel consumes only that
-    source's change feed through ITS branch (engine._mv_union_plan /
-    _mv_apply_query); the unchanged channel contributes nothing. The
+    source's change feed through ITS branch (engine._mv_plan's union
+    lane / _mv_apply_query); the unchanged channel contributes nothing. The
     refresh is ASSERTED incremental; AVG rides its SUM/COUNT companions
     and SUM accumulates in exact DECIMAL. The oracle reproduces the
     post-refresh state as a pure SELECT over both channels ∪ the
@@ -1121,8 +1121,9 @@ ORDER BY band
 """)
 def b151e_mv_join_refresh(spark: SparkSession, sf: str) -> DataFrame:
     """B151e — the fact-JOIN-small-dim MV shape on the INCREMENTAL lane
-    (VERDICT r13 #1, engine._mv_join_plan): the most common dashboard
-    MV after plain GROUP BY — ``fact JOIN dim GROUP BY dim.attr``.
+    (VERDICT r13 #1, engine._mv_plan's join lane): the most common
+    dashboard MV after plain GROUP BY — ``fact JOIN dim GROUP BY
+    dim.attr``.
     Under an append-only FACT delta with an UNCHANGED dim, the refresh
     consumes ONLY the fact's change feed and joins it to the dim at the
     pinned version — exact for inner joins because (F ∪ ΔF) ⋈ D =
@@ -1360,8 +1361,8 @@ ORDER BY day
 """)
 def b151i_mv_expr_key_refresh(spark: SparkSession, sf: str) -> DataFrame:
     """B151i — the EXPRESSION GROUP BY key MV shape on the incremental
-    lane (VERDICT r14 #2, engine._mv_group_select): ``GROUP BY
-    date_trunc('day', ts)`` is THE dashboard bucket; the MV's key
+    lane (VERDICT r14 #2, engine._mv_plan / _mv_group_select):
+    ``GROUP BY date_trunc('day', ts)`` is THE dashboard bucket; the MV's key
     column stores the expression's VALUE (under its alias) and the
     refresh re-emits the SAME expression over the change feed, so a
     daily-append fact refreshes O(one day's files) — the

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from olympia_spark.engine import Engine
+from tests.conftest import spark_jobs
 
 
 @pytest.fixture()
@@ -122,9 +123,9 @@ def test_non_incrementalizable_shapes_take_full_lane(eng):
     assert r.mode == "full"
     assert [tuple(x) for x in
             eng.sql("SELECT * FROM ns1.mv").collect()] == [("A", 1)]
-    # RIGHT OUTER join → full (only the two-source INNER and LEFT
-    # shapes are incrementalizable — _mv_join_plan, r14; the aliased
-    # join lanes have their own suite below)
+    # RIGHT OUTER join → full (only INNER chains and the two-source
+    # LEFT shape are incrementalizable — _mv_plan's join lane; the
+    # aliased join lanes have their own suite below)
     eng.sql("CREATE MATERIALIZED VIEW ns1.mv2 AS "
             "SELECT s.grp AS grp, COUNT(*) AS n FROM ns1.src s "
             "RIGHT JOIN ns1.dim d ON s.grp = d.grp GROUP BY s.grp")
@@ -140,14 +141,13 @@ def test_backslash_escaped_quote_compound_takes_full_lane(eng):
     backslash-escaped quote desyncs it — MIN('\\'') || MAX(v) passes
     the paren-balance check as a SINGLE MIN (real code blanked as
     literal) and the merge would apply least() to a value containing
-    MAX. The single-source lane must refuse backslashes up front,
-    mirroring _mv_union_plan's guard."""
+    MAX. _mv_plan refuses backslashes up front, in every lane."""
     _seed(eng, [(1, "A", 10.0), (2, "A", 20.0)])
     q = ("SELECT grp, MIN('\\'') || MAX(v) AS m "
          "FROM ns1.src GROUP BY grp")
     eng.sql(f"CREATE MATERIALIZED VIEW ns1.mv AS {q}")
     txn = eng.catalog.begin(read_only=True)
-    assert eng._mv_incremental_plan(q, "ns1.src", txn) is None
+    assert eng._mv_plan(q, ["ns1.src"], txn) is None
     eng.sql("INSERT INTO ns1.src VALUES (3, 'A', 99.0)")
     r = eng.sql("REFRESH MATERIALIZED VIEW ns1.mv").collect()[0]
     assert r.mode == "full"
@@ -669,8 +669,8 @@ def test_backticks_inside_literals_and_escaped_quotes(eng):
     refuse UNCONDITIONALLY (ADVICE r13): _mv_code_view tracks neither
     escape nor quoted-identifier forms, so their mere presence
     downgrades to full even when the WHERE itself is deterministic —
-    the always-correct lane, mirroring _mv_union_plan's guard and
-    keeping _mv_code_view's documented precondition explicit."""
+    the always-correct lane: _mv_plan refuses both up front, in every
+    lane, keeping _mv_code_view's documented precondition explicit."""
     _seed(eng, [(1, "A", 1.0, "x")],
           schema="id LONG, grp STRING, v DOUBLE, tag STRING")
     cases = [
@@ -689,6 +689,98 @@ def test_backticks_inside_literals_and_escaped_quotes(eng):
         got = eng.sql(f"REFRESH MATERIALIZED VIEW ns1.mvq{i}") \
             .collect()[0].mode
         assert got == lane, (where, got)
+
+
+def test_keyword_inside_literal_keeps_the_incremental_lane(eng):
+    """_mv_plan scans keywords on the code view: 'union' and 'order'
+    inside WHERE literals are data, not structure, so the single-source
+    lane holds and its rows equal a full recompute."""
+    _seed(eng, [(1, "A", 10.0, "x"), (2, "B", 5.0, "union")],
+          schema="id LONG, grp STRING, v DOUBLE, tag STRING")
+    eng.sql("CREATE MATERIALIZED VIEW ns1.mv AS "
+            "SELECT grp, COUNT(*) AS n, SUM(v) AS sv FROM ns1.src "
+            "WHERE tag <> 'union' AND tag <> 'order' GROUP BY grp")
+    eng.sql("INSERT INTO ns1.src VALUES (3, 'A', 1.0, 'y'), "
+            "(4, 'C', 2.0, 'order'), (5, 'C', 4.0, 'z')")
+    r = eng.sql("REFRESH MATERIALIZED VIEW ns1.mv").collect()[0]
+    assert (r.mode, r.delta_rows) == ("incremental", 3)
+    incremental = _mv_rows(eng)
+    assert incremental == [("A", 2, 11.0), ("C", 1, 4.0)]
+    r = eng.sql("REFRESH MATERIALIZED VIEW ns1.mv FULL").collect()[0]
+    assert r.mode == "full"
+    assert _mv_rows(eng) == incremental
+
+
+@pytest.fixture(scope="module")
+def lane_eng(spark, tmp_path_factory):
+    e = Engine(spark, str(tmp_path_factory.mktemp("lanes") / "wh"))
+    e.sql("CREATE NAMESPACE ns1")
+    for tbl in ("src", "src2"):
+        e.sql(f"CREATE TABLE ns1.{tbl} "
+              "(id BIGINT, grp STRING, v DOUBLE, tag STRING, ts TIMESTAMP)")
+    e.sql("CREATE TABLE ns1.dim (grp STRING, label STRING)")
+    e.sql("CREATE TABLE ns1.dim2 (label STRING, region STRING)")
+    return e
+
+
+_U2 = ("(SELECT grp, v FROM ns1.src UNION ALL "
+       "SELECT grp, v FROM ns1.src2) u")
+_LANES = [
+    ("single", ["src"], "SELECT grp, COUNT(*) AS n, SUM(v) AS sv "
+     "FROM ns1.src GROUP BY grp"),
+    ("single", ["src"], "SELECT date_trunc('day', ts) AS day, "
+     "COUNT(*) AS n FROM ns1.src GROUP BY date_trunc('day', ts)"),
+    ("single", ["src"], "SELECT grp, SUM(v) AS sv FROM ns1.src "
+     "GROUP BY grp HAVING SUM(v) > 10"),
+    ("single", ["src"], "SELECT COUNT(*) AS n, AVG(v) AS av FROM ns1.src"),
+    ("union", ["src"], "SELECT grp, COUNT(*) AS n FROM (SELECT grp "
+     "FROM ns1.src WHERE v > 0 UNION ALL SELECT grp FROM ns1.src "
+     "WHERE v < 0) u GROUP BY grp"),
+    ("union", ["src", "src2"], f"SELECT grp, SUM(v) AS sv FROM {_U2} "
+     "GROUP BY grp"),
+    ("union", ["src", "src2"], f"SELECT grp, COUNT(*) AS n FROM {_U2} "
+     "WHERE v > 1 GROUP BY grp"),
+    ("join", ["dim", "src"], "SELECT d.label AS label, COUNT(*) AS n, "
+     "SUM(f.v) AS sv FROM ns1.src f JOIN ns1.dim d ON f.grp = d.grp "
+     "GROUP BY d.label"),
+    ("join", ["dim", "dim2", "src"], "SELECT e.region AS region, "
+     "COUNT(*) AS n FROM ns1.src f JOIN ns1.dim d ON f.grp = d.grp "
+     "JOIN ns1.dim2 e ON d.label = e.label GROUP BY e.region"),
+    ("join", ["dim", "src"], "SELECT f.grp AS grp, COUNT(d.label) AS n "
+     "FROM ns1.src f LEFT JOIN ns1.dim d ON f.grp = d.grp GROUP BY f.grp"),
+    (None, ["src"], "SELECT `grp`, COUNT(*) AS n FROM ns1.src "
+     "GROUP BY `grp`"),
+    (None, ["src"], "SELECT grp, COUNT(*) AS n FROM ns1.src "
+     "WHERE tag <> 'a\\'b' GROUP BY grp"),
+    (None, ["src"], "SELECT grp, COUNT(DISTINCT v) AS nd FROM ns1.src "
+     "GROUP BY grp"),
+    (None, ["src"], "SELECT grp, SUM(v) OVER (PARTITION BY grp) AS sv "
+     "FROM ns1.src"),
+    (None, ["src", "src2"], "SELECT grp, COUNT(*) AS n FROM (SELECT grp "
+     "FROM ns1.src UNION SELECT grp FROM ns1.src2) u GROUP BY grp"),
+    (None, ["src"], "SELECT grp, COUNT(*) AS n FROM ns1.src "
+     "WHERE src.v > 0 GROUP BY grp"),
+    (None, ["dim", "src"], "SELECT grp, COUNT(*) AS n FROM ns1.src "
+     "JOIN ns1.dim ON src.grp = dim.grp GROUP BY grp"),
+    (None, ["src"], "SELECT grp, COUNT(*) AS __mv_n FROM ns1.src "
+     "GROUP BY grp"),
+    (None, ["dim", "src"], "SELECT d.grp AS grp, COUNT(*) AS n "
+     "FROM ns1.src f RIGHT JOIN ns1.dim d ON f.grp = d.grp "
+     "GROUP BY d.grp"),
+    (None, ["src", "src2"], f"SELECT grp, COUNT(*) AS n FROM {_U2} "
+     "GROUP BY grp HAVING COUNT(*) > 1"),
+]
+
+
+@pytest.mark.parametrize("lane,tables,q", _LANES)
+def test_mv_plan_lane_routing(lane_eng, spark, lane, tables, q):
+    """The FROM shape picks the lane; every refusal is None. The parse
+    reads table definitions only and runs no Spark job."""
+    txn = lane_eng.catalog.begin(read_only=True)
+    with spark_jobs(spark) as jobs:
+        plan = lane_eng._mv_plan(q, [f"ns1.{t}" for t in tables], txn)
+    assert (plan and plan.lane) == lane
+    assert jobs.n == 0
 
 
 def test_refresh_leaves_no_persistent_rdds(eng, spark):

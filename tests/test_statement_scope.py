@@ -93,6 +93,20 @@ def test_merge_subqueries_in_when_condition_and_update_set(engine, spark):
         [(1, 31), (2, 20), (3, 30), (4, 7)]
 
 
+def test_merge_schema_evolution_types_a_subquery_assignment(engine):
+    """MERGE WITH SCHEMA EVOLUTION types a new column from its
+    assignment; a subquery there binds its table like the rest of the
+    statement, so the type can be inferred."""
+    engine.sql("CREATE TABLE ns1.t (k BIGINT, w BIGINT)")
+    engine.sql("INSERT INTO ns1.t VALUES (1, 10), (2, 20)")
+    engine.sql("CREATE TABLE ns1.s (k BIGINT, w BIGINT)")
+    engine.sql("INSERT INTO ns1.s VALUES (1, 5), (3, 7)")
+    engine.sql("MERGE WITH SCHEMA EVOLUTION INTO ns1.t AS t "
+               "USING ns1.s AS s ON t.k = s.k "
+               "WHEN MATCHED THEN UPDATE SET z = (SELECT max(w) FROM ns1.s)")
+    assert sorted(tuple(r) for r in engine.sql(
+        "SELECT k, w, z FROM ns1.t").collect()) == [(1, 10, 7), (2, 20, None)]
+
 def test_sql_temp_view_keeps_its_creation_snapshot(engine, spark):
     """CREATE TEMP VIEW (and CACHE TABLE ... AS) through Engine.sql make
     the user's own session view: it outlives the statement, stays
