@@ -58,6 +58,10 @@ class Transaction:
     ops: list = field(default_factory=list)             # list[TxnOp]
     committed: bool = False
     read_only: bool = False
+    # a resumed distributed transaction: its handle's saved running root
+    # and how many leading ops replay from action payloads (set on load)
+    resumed_root_path: str = ""
+    resumed_ops: int = 0
 
     @property
     def actions(self) -> list:
@@ -145,13 +149,37 @@ def _resolve_or_raise(txn: Transaction, lost_version: int) -> None:
             f"unresolvable conflict between transaction {txn.id} and "
             f"versions {base_version + 1}..{latest.version}")
     # no-conflict or resolvable: roll forward — replay ops on latest state
-    txn.running_root = tree.load_root(latest.path)
-    txn.running_root.actions = []
-    txn.base_version = latest.version
-    txn.write_actions = []
-    ops, txn.ops = txn.ops, []
-    for op in ops:
-        txn.apply(op)
+    _rebuild(txn, tree.load_root(latest.path), txn.ops)
+
+
+def roll_back_to(txn: Transaction, n_ops: int) -> None:
+    """Undo every op after the first ``n_ops``: rebuild the running tree
+    from the base root, or a resumed distributed transaction's from its
+    saved running root (its payload-replay ops re-run only inserts),
+    and replay only the earlier ops."""
+    root = txn.tree.load_root(txn.resumed_root_path
+                              or loc.root_node_path(txn.base_version))
+    if txn.resumed_root_path:
+        root.path, root.dirty = txn.beginning_root.path, True
+    _rebuild(txn, root, txn.ops[txn.resumed_ops:n_ops], txn.resumed_ops)
+
+
+def _rebuild(txn: Transaction, root: RootNode, ops: list,
+             kept: int = 0) -> None:
+    """Make ``root`` the running tree, keep the first ``kept`` ops (their
+    effect is in ``root``) and re-apply ``ops`` — the one rebuild of
+    conflict resolution and :func:`roll_back_to`. If an op raises, the
+    transaction is left as it was."""
+    before = vars(txn).copy()
+    root.actions = []
+    txn.running_root, txn.base_version = root, root.version
+    txn.write_actions, txn.ops = txn.write_actions[:kept], txn.ops[:kept]
+    try:
+        for op in ops:
+            txn.apply(op)
+    except BaseException:
+        vars(txn).update(before)
+        raise
 
 
 # --- distributed transactions (A5) ------------------------------------------
@@ -197,8 +225,7 @@ def load_dist_transaction(tree: Tree, txn_id: str,
     dpath = loc.dist_txn_def_path(txn_id, suffix)
     d = read_def(tree.storage.read(dpath), dpath)
     beginning = tree.load_root(d.beginning_root_path)
-    running = RootNode(path=d.running_root_path)
-    tree._parse(tree._read_table(d.running_root_path), running)
+    running = tree.load_root(d.running_root_path)
     running.path = beginning.path   # commit targets version paths
     running.dirty = True
     running.actions = []
@@ -207,6 +234,8 @@ def load_dist_transaction(tree: Tree, txn_id: str,
         ttl_millis=d.expire_at_millis - d.began_at_millis,
         id=d.id, began_at_millis=d.began_at_millis,
         beginning_root=beginning, running_root=running,
-        base_version=beginning.version)
+        base_version=beginning.version,
+        resumed_root_path=d.running_root_path, resumed_ops=len(d.actions))
     txn.write_actions = [Action.from_row(k, v) for k, v in d.actions]
     return txn
+

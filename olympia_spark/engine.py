@@ -51,6 +51,7 @@ import os
 import re
 import shutil
 import uuid
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -65,7 +66,7 @@ from olympia_spark.catalog.errors import (CheckConstraintError,
                                           MergeCardinalityError,
                                           ObjectNotFoundError,
                                           TransactionValueError)
-from olympia_spark.catalog.transactions import Transaction
+from olympia_spark.catalog.transactions import Transaction, roll_back_to
 
 _DATA_DIR = "data"
 _ZCOL = "__zorder"
@@ -481,7 +482,6 @@ class Engine:
         self.isolation_level = (isolation_level
                                 or self.catalog.catalog_def.txn_isolation_level)
         self.current_txn: Transaction | None = None
-        self._auto_txn: Transaction | None = None
         # bucket() partition transforms hash with Iceberg's
         # murmur3_x86_32 through these session UDFs — registration is
         # idempotent and session-wide, so every engine on the session
@@ -491,19 +491,32 @@ class Engine:
 
     # --- transaction session state (A35) ------------------------------------
 
-    def _txn(self) -> Transaction:
-        """Current explicit txn, else a fresh auto-commit txn (reference
-        beginOrLoadTransaction, OlympiaIcebergCatalog.java:639-665)."""
-        if self.current_txn is not None:
-            return self.current_txn
-        self._auto_txn = self.catalog.begin(self.isolation_level)
-        return self._auto_txn
-
-    def _finish(self, txn: Transaction) -> None:
-        """Auto-commit unless inside an explicit BEGIN block."""
-        if txn is self._auto_txn:
+    @contextlib.contextmanager
+    def _statement(self) -> Iterator[Transaction]:
+        """The transaction one statement runs in (reference
+        beginOrLoadTransaction, OlympiaIcebergCatalog.java:639-665): an
+        open BEGIN block's, else a fresh one that only this scope holds
+        and commits on normal exit. A statement that raises commits
+        nothing; inside a BEGIN block its staged ops are undone, so the
+        block's COMMIT publishes none of them. If they cannot be undone,
+        the block keeps them and the statement's own error is raised."""
+        txn = self.current_txn
+        if txn is None:
+            txn = self.catalog.begin(self.isolation_level)
+            yield txn
             self.catalog.commit(txn)
-            self._auto_txn = None
+            return
+        n_ops = len(txn.ops)
+        try:
+            yield txn
+        except BaseException as err:
+            if len(txn.ops) > n_ops:
+                try:
+                    roll_back_to(txn, n_ops)
+                except Exception as undo:
+                    err.add_note("its staged changes stay in the open "
+                                 f"transaction: {undo}")
+            raise
 
     def begin(self) -> None:
         if self.current_txn is not None:
@@ -646,8 +659,10 @@ class Engine:
         AS OF a pre-policy version must not be an RLS escape hatch.
         Latest-state reads take the policies straight off the tdef in
         hand, paying ZERO extra catalog I/O on the hot path."""
+        if txn is None:
+            with self._statement() as txn:
+                return self.read_table(name, txn, historical=historical)
         ns, tbl = self._split(name)
-        txn = txn or self._txn()
         tdef = self.catalog.describe_table(txn, ns, tbl)
         schema = tdef.spark_schema()
         self._record_select(txn, ns, tbl, [f.name for f in schema.fields])
@@ -692,14 +707,11 @@ class Engine:
                           fallback: TableDef) -> dict:
         """The LATEST committed policy set for a table — time-travel /
         dtxn reads enforce today's governance over yesterday's data.
-        Reads through the ambient explicit txn or a READ-ONLY snapshot
-        — NEVER ``_txn()``, which would replace ``_auto_txn`` mid-
-        statement and silently swallow the enclosing statement's
-        commit (a CREATE VIEW that resolves its SELECT through here
-        would never persist). Only the documented table-dropped case
-        falls back to the snapshot's own properties — any other error
-        (storage hiccup, expired hint) PROPAGATES rather than failing
-        open on governance."""
+        Reads through the ambient explicit txn or a READ-ONLY snapshot.
+        Only the documented table-dropped case falls back to the
+        snapshot's own properties — any other error (storage hiccup,
+        expired hint) PROPAGATES rather than failing open on
+        governance."""
         from olympia_spark.catalog.errors import ObjectNotFoundError
         try:
             probe = self.current_txn or self.catalog.begin(read_only=True)
@@ -759,30 +771,28 @@ class Engine:
         current schema before it is admitted (an unanalyzable filter
         would brick every read)."""
         ns, tbl = self._split(name)
-        txn = self._txn()
-        tdef = self.catalog.describe_table(txn, ns, tbl)
-        self._require_native(tdef, name, "SET ROW FILTER")
-        empty = self._local_df([], tdef.spark_schema())
-        empty.filter(F.expr(expr))          # analyze-or-raise
-        tdef.properties = {**tdef.properties, "policy.row_filter": expr}
-        self.catalog.alter_table(txn, ns, tbl, tdef,
-                                 ActionType.TABLE_ALTER,
-                                 {"set_row_filter": [expr]})
-        self._finish(txn)
+        with self._statement() as txn:
+            tdef = self.catalog.describe_table(txn, ns, tbl)
+            self._require_native(tdef, name, "SET ROW FILTER")
+            empty = self._local_df([], tdef.spark_schema())
+            empty.filter(F.expr(expr))          # analyze-or-raise
+            tdef.properties = {**tdef.properties, "policy.row_filter": expr}
+            self.catalog.alter_table(txn, ns, tbl, tdef,
+                                     ActionType.TABLE_ALTER,
+                                     {"set_row_filter": [expr]})
 
     def drop_row_filter(self, name: str) -> None:
         ns, tbl = self._split(name)
-        txn = self._txn()
-        tdef = self.catalog.describe_table(txn, ns, tbl)
-        self._require_native(tdef, name, "DROP ROW FILTER")
-        if "policy.row_filter" not in tdef.properties:
-            raise ValueError(f"{name} has no row filter")
-        tdef.properties = {k: v for k, v in tdef.properties.items()
-                           if k != "policy.row_filter"}
-        self.catalog.alter_table(txn, ns, tbl, tdef,
-                                 ActionType.TABLE_ALTER,
-                                 {"drop_row_filter": []})
-        self._finish(txn)
+        with self._statement() as txn:
+            tdef = self.catalog.describe_table(txn, ns, tbl)
+            self._require_native(tdef, name, "DROP ROW FILTER")
+            if "policy.row_filter" not in tdef.properties:
+                raise ValueError(f"{name} has no row filter")
+            tdef.properties = {k: v for k, v in tdef.properties.items()
+                               if k != "policy.row_filter"}
+            self.catalog.alter_table(txn, ns, tbl, tdef,
+                                     ActionType.TABLE_ALTER,
+                                     {"drop_row_filter": []})
 
     def set_column_mask(self, name: str, col: str, expr: str) -> None:
         """``ALTER TABLE ... ALTER COLUMN c SET MASK (<expr>)``: every
@@ -791,35 +801,33 @@ class Engine:
         declared type — schema-stable redaction at the resolution
         chokepoint, zero data rewrite."""
         ns, tbl = self._split(name)
-        txn = self._txn()
-        tdef = self.catalog.describe_table(txn, ns, tbl)
-        self._require_native(tdef, name, "SET MASK")
-        schema = tdef.spark_schema()
-        types = {f.name: f.dataType for f in schema.fields}
-        if col not in types:
-            raise ValueError(f"no such column: {col}")
-        empty = self._local_df([], schema)
-        empty.select(F.expr(expr).cast(types[col]))   # analyze-or-raise
-        tdef.properties = {**tdef.properties,
-                           f"policy.mask.{col}": expr}
-        self.catalog.alter_table(txn, ns, tbl, tdef,
-                                 ActionType.TABLE_ALTER,
-                                 {"set_column_mask": [col, expr]})
-        self._finish(txn)
+        with self._statement() as txn:
+            tdef = self.catalog.describe_table(txn, ns, tbl)
+            self._require_native(tdef, name, "SET MASK")
+            schema = tdef.spark_schema()
+            types = {f.name: f.dataType for f in schema.fields}
+            if col not in types:
+                raise ValueError(f"no such column: {col}")
+            empty = self._local_df([], schema)
+            empty.select(F.expr(expr).cast(types[col]))   # analyze-or-raise
+            tdef.properties = {**tdef.properties,
+                               f"policy.mask.{col}": expr}
+            self.catalog.alter_table(txn, ns, tbl, tdef,
+                                     ActionType.TABLE_ALTER,
+                                     {"set_column_mask": [col, expr]})
 
     def drop_column_mask(self, name: str, col: str) -> None:
         ns, tbl = self._split(name)
-        txn = self._txn()
-        tdef = self.catalog.describe_table(txn, ns, tbl)
-        self._require_native(tdef, name, "DROP MASK")
-        if f"policy.mask.{col}" not in tdef.properties:
-            raise ValueError(f"{name}.{col} has no mask")
-        tdef.properties = {k: v for k, v in tdef.properties.items()
-                           if k != f"policy.mask.{col}"}
-        self.catalog.alter_table(txn, ns, tbl, tdef,
-                                 ActionType.TABLE_ALTER,
-                                 {"drop_column_mask": [col]})
-        self._finish(txn)
+        with self._statement() as txn:
+            tdef = self.catalog.describe_table(txn, ns, tbl)
+            self._require_native(tdef, name, "DROP MASK")
+            if f"policy.mask.{col}" not in tdef.properties:
+                raise ValueError(f"{name}.{col} has no mask")
+            tdef.properties = {k: v for k, v in tdef.properties.items()
+                               if k != f"policy.mask.{col}"}
+            self.catalog.alter_table(txn, ns, tbl, tdef,
+                                     ActionType.TABLE_ALTER,
+                                     {"drop_column_mask": [col]})
 
     def table_changes(self, name: str, from_version: int,
                       to_version: int) -> DataFrame:
@@ -1304,13 +1312,12 @@ class Engine:
                      names, partition_by or [], list(bucket_by[0]),
                      int(bucket_by[1]))
                  if bucket_by else {})
-        txn = self._txn()
-        self.catalog.create_table(txn, ns, tbl, TableDef(
-            schema_json=schema.json(), properties=properties or {},
-            partition_by=list(partition_by or []),
-            generated_columns=dict(generated_columns or {}),
-            bucket_by=bspec))
-        self._finish(txn)
+        with self._statement() as txn:
+            self.catalog.create_table(txn, ns, tbl, TableDef(
+                schema_json=schema.json(), properties=properties or {},
+                partition_by=list(partition_by or []),
+                generated_columns=dict(generated_columns or {}),
+                bucket_by=bspec))
 
     @staticmethod
     def _validate_bucket_spec(schema_names: set, partition_by: list,
@@ -1384,14 +1391,13 @@ class Engine:
                 n = counts.get(os.path.abspath(p), 0)
                 files.append(DataFile(path=p, num_rows=n,
                                       size_bytes=os.path.getsize(p)))
-        txn = self._txn()
-        self.catalog.create_table(txn, ns, tbl, TableDef(
-            format=fmt, schema_json=schema.json(),
-            properties={f"read.option.{k}": v for k, v in opts.items()}))
-        self.catalog.update_table_files(
-            txn, ns, tbl, files, [], ActionType.TABLE_INSERT,
-            {"added": [f.path for f in files], "external": True})
-        self._finish(txn)
+        with self._statement() as txn:
+            self.catalog.create_table(txn, ns, tbl, TableDef(
+                format=fmt, schema_json=schema.json(),
+                properties={f"read.option.{k}": v for k, v in opts.items()}))
+            self.catalog.update_table_files(
+                txn, ns, tbl, files, [], ActionType.TABLE_INSERT,
+                {"added": [f.path for f in files], "external": True})
 
     def adopt_iceberg_table(self, name: str, location: str, *,
                             snapshot_id: int | None = None,
@@ -1441,24 +1447,23 @@ class Engine:
         if meta.get("metadata-log"):
             prev = meta["metadata-log"][-1].get("metadata-file", "")
         ns, tbl = self._split(name)
-        txn = self._txn()
-        self.catalog.create_table(txn, ns, tbl, TableDef(
-            format="PARQUET" if as_native else "ICEBERG",
-            schema_json=schema.json(),
-            metadata_location=mloc,
-            previous_metadata_location=prev,
-            properties={
-                "iceberg.format-version": str(meta["format-version"]),
-                "iceberg.snapshot-id": str(
-                    snapshot.get("snapshot-id", "")),
-                "iceberg.table-uuid": meta.get("table-uuid", ""),
-                **({"iceberg.identity_fill": ident_fill}
-                   if ident_fill else {}),
-            }))
-        self.catalog.update_table_files(
-            txn, ns, tbl, files, [], ActionType.TABLE_INSERT,
-            {"added": [f.path for f in files], "adopted_from": mloc})
-        self._finish(txn)
+        with self._statement() as txn:
+            self.catalog.create_table(txn, ns, tbl, TableDef(
+                format="PARQUET" if as_native else "ICEBERG",
+                schema_json=schema.json(),
+                metadata_location=mloc,
+                previous_metadata_location=prev,
+                properties={
+                    "iceberg.format-version": str(meta["format-version"]),
+                    "iceberg.snapshot-id": str(
+                        snapshot.get("snapshot-id", "")),
+                    "iceberg.table-uuid": meta.get("table-uuid", ""),
+                    **({"iceberg.identity_fill": ident_fill}
+                       if ident_fill else {}),
+                }))
+            self.catalog.update_table_files(
+                txn, ns, tbl, files, [], ActionType.TABLE_INSERT,
+                {"added": [f.path for f in files], "adopted_from": mloc})
         return len(files)
 
     def _adopt_with_deletes(self, name: str, mloc: str,
@@ -1508,29 +1513,28 @@ class Engine:
         if meta.get("metadata-log"):
             prev = meta["metadata-log"][-1].get("metadata-file", "")
         ns, tbl = self._split(name)
-        txn = self._txn()
-        self.catalog.create_table(txn, ns, tbl, TableDef(
-            format="PARQUET" if as_native else "ICEBERG",
-            schema_json=schema.json(),
-            metadata_location=mloc,
-            previous_metadata_location=prev,
-            properties={
-                "iceberg.format-version": str(meta["format-version"]),
-                "iceberg.snapshot-id": str(
-                    snapshot.get("snapshot-id", "")),
-                "iceberg.table-uuid": meta.get("table-uuid", ""),
-                "iceberg.position-deletes-applied": str(len(pos_dels)),
-                "iceberg.equality-deletes-applied": str(len(eq_dels)),
-            }))
-        files = self._write_files(net, ns, tbl, [])
-        self.catalog.update_table_files(
-            txn, ns, tbl, files, [], ActionType.TABLE_INSERT,
-            {"added": [f.path for f in files], "adopted_from": mloc,
-             "position_deletes_applied": [d["file_path"]
-                                          for d in pos_dels],
-             "equality_deletes_applied": [d["file_path"]
-                                          for d in eq_dels]})
-        self._finish(txn)
+        with self._statement() as txn:
+            self.catalog.create_table(txn, ns, tbl, TableDef(
+                format="PARQUET" if as_native else "ICEBERG",
+                schema_json=schema.json(),
+                metadata_location=mloc,
+                previous_metadata_location=prev,
+                properties={
+                    "iceberg.format-version": str(meta["format-version"]),
+                    "iceberg.snapshot-id": str(
+                        snapshot.get("snapshot-id", "")),
+                    "iceberg.table-uuid": meta.get("table-uuid", ""),
+                    "iceberg.position-deletes-applied": str(len(pos_dels)),
+                    "iceberg.equality-deletes-applied": str(len(eq_dels)),
+                }))
+            files = self._write_files(net, ns, tbl, [])
+            self.catalog.update_table_files(
+                txn, ns, tbl, files, [], ActionType.TABLE_INSERT,
+                {"added": [f.path for f in files], "adopted_from": mloc,
+                 "position_deletes_applied": [d["file_path"]
+                                              for d in pos_dels],
+                 "equality_deletes_applied": [d["file_path"]
+                                              for d in eq_dels]})
         return len(files)
 
     def _iceberg_mor_net(self, schema: T.StructType, entries: list[dict],
@@ -1668,52 +1672,54 @@ class Engine:
         survive until no live table references them (refcount semantics
         without a refcount). Returns the number of shared files."""
         ns_s, tbl_s = self._split(source)
-        txn_src = (self.catalog.at_version(version)
-                   if version is not None else self._txn())
-        sdef = self.catalog.describe_table(txn_src, ns_s, tbl_s)
+        if version is not None:
+            sdef = self.catalog.describe_table(
+                self.catalog.at_version(version), ns_s, tbl_s)
+        else:
+            with self._statement() as txn_src:
+                sdef = self.catalog.describe_table(txn_src, ns_s, tbl_s)
         self._require_native(sdef, source, "SHALLOW CLONE")
         ns_t, tbl_t = self._split(target)
-        txn = self._txn()
-        self.catalog.create_table(txn, ns_t, tbl_t, TableDef(
-            format=sdef.format, schema_json=sdef.schema_json,
-            partition_by=list(sdef.partition_by),
-            # the clone shares the source's FILES, so it must share the
-            # logical->physical column mapping too — without it a clone
-            # of a renamed table reads the renamed column as all-NULL
-            column_mapping=dict(sdef.column_mapping),
-            # shared files can also contain dropped-column bytes — the
-            # clone inherits the tombstones or it would resurrect them
-            retired_columns=list(sdef.retired_columns),
-            # ...and the invariants/derivations: the clone's writes must
-            # honor the same CHECK contract and keep generated columns
-            # consistent with their sources
-            constraints=dict(sdef.constraints),
-            generated_columns=dict(sdef.generated_columns),
-            # the clone shares bucketed FILES — inheriting the spec
-            # keeps its reads bucketed and its writes layout-consistent
-            bucket_by=dict(sdef.bucket_by),
-            # governance policies come EXACTLY from the source's
-            # CURRENT def (snapshot policy keys stripped first) — CLONE
-            # ... VERSION AS OF of a pre-policy version must not mint
-            # an ungoverned copy of governed data, and a since-dropped
-            # policy must not resurrect on the clone
-            properties={**{k: v for k, v in sdef.properties.items()
-                           if not k.startswith("policy.")},
-                        **{k: v for k, v in self._current_policies(
-                               ns_s, tbl_s, sdef).items()
-                           if k.startswith("policy.")},
-                        "cloned_from": f"{source}"
-                        + (f"@v{version}" if version is not None else "")}))
-        # same warehouse, same relative paths — both defs resolve them
-        # against the shared root, so the clone is truly zero-copy
-        files = [DataFile(path=f.path, num_rows=f.num_rows,
-                          size_bytes=f.size_bytes, stats=dict(f.stats),
-                          dir_files=f.dir_files)
-                 for f in sdef.data_files]
-        self.catalog.update_table_files(
-            txn, ns_t, tbl_t, files, [], ActionType.TABLE_INSERT,
-            {"added": [f.path for f in files], "cloned_from": source})
-        self._finish(txn)
+        with self._statement() as txn:
+            self.catalog.create_table(txn, ns_t, tbl_t, TableDef(
+                format=sdef.format, schema_json=sdef.schema_json,
+                partition_by=list(sdef.partition_by),
+                # the clone shares the source's FILES, so it must share the
+                # logical->physical column mapping too — without it a clone
+                # of a renamed table reads the renamed column as all-NULL
+                column_mapping=dict(sdef.column_mapping),
+                # shared files can also contain dropped-column bytes — the
+                # clone inherits the tombstones or it would resurrect them
+                retired_columns=list(sdef.retired_columns),
+                # ...and the invariants/derivations: the clone's writes must
+                # honor the same CHECK contract and keep generated columns
+                # consistent with their sources
+                constraints=dict(sdef.constraints),
+                generated_columns=dict(sdef.generated_columns),
+                # the clone shares bucketed FILES — inheriting the spec
+                # keeps its reads bucketed and its writes layout-consistent
+                bucket_by=dict(sdef.bucket_by),
+                # governance policies come EXACTLY from the source's
+                # CURRENT def (snapshot policy keys stripped first) — CLONE
+                # ... VERSION AS OF of a pre-policy version must not mint
+                # an ungoverned copy of governed data, and a since-dropped
+                # policy must not resurrect on the clone
+                properties={**{k: v for k, v in sdef.properties.items()
+                               if not k.startswith("policy.")},
+                            **{k: v for k, v in self._current_policies(
+                                   ns_s, tbl_s, sdef).items()
+                               if k.startswith("policy.")},
+                            "cloned_from": f"{source}"
+                            + (f"@v{version}" if version is not None else "")}))
+            # same warehouse, same relative paths — both defs resolve them
+            # against the shared root, so the clone is truly zero-copy
+            files = [DataFile(path=f.path, num_rows=f.num_rows,
+                              size_bytes=f.size_bytes, stats=dict(f.stats),
+                              dir_files=f.dir_files)
+                     for f in sdef.data_files]
+            self.catalog.update_table_files(
+                txn, ns_t, tbl_t, files, [], ActionType.TABLE_INSERT,
+                {"added": [f.path for f in files], "cloned_from": source})
         return len(files)
 
     def restore_table(self, name: str, version: int) -> tuple[int, int]:
@@ -1752,22 +1758,21 @@ class Engine:
                 f"RESTORE {name} TO VERSION {version}: {len(missing)} "
                 f"historical data file(s) no longer exist (expired by "
                 f"VACUUM/expire_versions), e.g. {missing[0]}")
-        txn = self._txn()
-        cur = self.catalog.describe_table(txn, ns, tbl)
-        self._require_native(cur, name, "RESTORE")
-        # restoring an MV would rewrite its rows UNDER the refresh
-        # watermark — later refreshes would noop forever against stale
-        # numbers; recompute via REFRESH ... FULL instead
-        self._mv_guard(cur, name, "RESTORE")
-        cur_paths = set(cur.file_paths())
-        old_paths = {f.path for f in old.data_files}
-        add = [f for f in old.data_files if f.path not in cur_paths]
-        remove = sorted(cur_paths - old_paths)
-        self.catalog.update_table_files(
-            txn, ns, tbl, add, remove, ActionType.TABLE_UPDATE,
-            {"added": [f.path for f in add], "removed": remove,
-             "expression": f"RESTORE VERSION {version}"})
-        self._finish(txn)
+        with self._statement() as txn:
+            cur = self.catalog.describe_table(txn, ns, tbl)
+            self._require_native(cur, name, "RESTORE")
+            # restoring an MV would rewrite its rows UNDER the refresh
+            # watermark — later refreshes would noop forever against stale
+            # numbers; recompute via REFRESH ... FULL instead
+            self._mv_guard(cur, name, "RESTORE")
+            cur_paths = set(cur.file_paths())
+            old_paths = {f.path for f in old.data_files}
+            add = [f for f in old.data_files if f.path not in cur_paths]
+            remove = sorted(cur_paths - old_paths)
+            self.catalog.update_table_files(
+                txn, ns, tbl, add, remove, ActionType.TABLE_UPDATE,
+                {"added": [f.path for f in add], "removed": remove,
+                 "expression": f"RESTORE VERSION {version}"})
         return (len(add), len(remove))
 
     def copy_into(self, name: str, *paths: str,
@@ -1799,31 +1804,29 @@ class Engine:
             found.extend(os.path.abspath(h) for h in hits)
         found = sorted(dict.fromkeys(found))     # dedup, stable order
         ns, tbl = self._split(name)
-        txn = self._txn()
-        tdef = self.catalog.describe_table(txn, ns, tbl)
-        self._require_native(tdef, name, "COPY INTO")
-        self._mv_guard(tdef, name, "COPY INTO")
-        ledger = set(json.loads(
-            tdef.properties.get("copy_into.loaded", "[]")))
-        new = [p for p in found if p not in ledger]
-        if not new:
-            self._finish(txn)
-            return (0, 0, len(found))
-        schema = tdef.spark_schema()
-        opts = dict(options or {})
-        if fmt == "CSV":
-            opts.setdefault("header", "true")
-        reader = self.spark.read.schema(schema).options(**opts)
-        df = (reader.parquet(*new) if fmt == "PARQUET"
-              else reader.csv(new) if fmt == "CSV" else reader.json(new))
-        new_files = self._write_files(df, ns, tbl, tdef.partition_by,
-                                      tdef=tdef)
-        self.catalog.update_table_files(
-            txn, ns, tbl, new_files, [], ActionType.TABLE_INSERT,
-            {"added": [f.path for f in new_files], "copied_from": new},
-            extra_properties={"copy_into.loaded": json.dumps(
-                sorted(ledger | set(new)))})
-        self._finish(txn)
+        with self._statement() as txn:
+            tdef = self.catalog.describe_table(txn, ns, tbl)
+            self._require_native(tdef, name, "COPY INTO")
+            self._mv_guard(tdef, name, "COPY INTO")
+            ledger = set(json.loads(
+                tdef.properties.get("copy_into.loaded", "[]")))
+            new = [p for p in found if p not in ledger]
+            if not new:
+                return (0, 0, len(found))
+            schema = tdef.spark_schema()
+            opts = dict(options or {})
+            if fmt == "CSV":
+                opts.setdefault("header", "true")
+            reader = self.spark.read.schema(schema).options(**opts)
+            df = (reader.parquet(*new) if fmt == "PARQUET"
+                  else reader.csv(new) if fmt == "CSV" else reader.json(new))
+            new_files = self._write_files(df, ns, tbl, tdef.partition_by,
+                                          tdef=tdef)
+            self.catalog.update_table_files(
+                txn, ns, tbl, new_files, [], ActionType.TABLE_INSERT,
+                {"added": [f.path for f in new_files], "copied_from": new},
+                extra_properties={"copy_into.loaded": json.dumps(
+                    sorted(ledger | set(new)))})
         return (len(new), sum(f.num_rows for f in new_files), len(found) - len(new))
 
     def export_iceberg_table(self, name: str, dest_dir: str) -> str:
@@ -1835,8 +1838,8 @@ class Engine:
         from olympia_spark.catalog import iceberg as il
 
         ns, tbl = self._split(name)
-        txn = self._txn()
-        tdef = self.catalog.describe_table(txn, ns, tbl)
+        with self._statement() as txn:
+            tdef = self.catalog.describe_table(txn, ns, tbl)
         self._require_native(tdef, name, "export_iceberg_table")
         # TRANSFORM-partitioned tables (B83 hidden partitioning) export
         # faithfully: the synthesized column is an Iceberg partition
@@ -1942,28 +1945,27 @@ class Engine:
         ``partition_by`` applies on first write of a new table; appends to
         an existing table reuse its recorded partition spec."""
         ns, tbl = self._split(name)
-        txn = self._txn()
-        if not self.catalog.table_exists(txn, ns, tbl):
-            self.catalog.create_table(txn, ns, tbl, TableDef(
-                schema_json=df.schema.json(),
-                partition_by=list(partition_by or [])))
-        tdef0 = self.catalog.describe_table(txn, ns, tbl)
-        self._require_native(tdef0, name, "write_table")
-        self._mv_guard(tdef0, name, "write_table")
-        new_files = self._write_files(df, ns, tbl, tdef0.partition_by,
-                                      tdef=tdef0)
-        tdef = self.catalog.describe_table(txn, ns, tbl)
-        if mode == "overwrite":
-            self.catalog.update_table_files(
-                txn, ns, tbl, new_files, tdef.file_paths(),
-                ActionType.TABLE_UPDATE,
-                {"added": [f.path for f in new_files],
-                 "removed": tdef.file_paths(), "expression": "true"})
-        else:
-            self.catalog.update_table_files(
-                txn, ns, tbl, new_files, [], ActionType.TABLE_INSERT,
-                {"added": [f.path for f in new_files]})
-        self._finish(txn)
+        with self._statement() as txn:
+            if not self.catalog.table_exists(txn, ns, tbl):
+                self.catalog.create_table(txn, ns, tbl, TableDef(
+                    schema_json=df.schema.json(),
+                    partition_by=list(partition_by or [])))
+            tdef0 = self.catalog.describe_table(txn, ns, tbl)
+            self._require_native(tdef0, name, "write_table")
+            self._mv_guard(tdef0, name, "write_table")
+            new_files = self._write_files(df, ns, tbl, tdef0.partition_by,
+                                          tdef=tdef0)
+            tdef = self.catalog.describe_table(txn, ns, tbl)
+            if mode == "overwrite":
+                self.catalog.update_table_files(
+                    txn, ns, tbl, new_files, tdef.file_paths(),
+                    ActionType.TABLE_UPDATE,
+                    {"added": [f.path for f in new_files],
+                     "removed": tdef.file_paths(), "expression": "true"})
+            else:
+                self.catalog.update_table_files(
+                    txn, ns, tbl, new_files, [], ActionType.TABLE_INSERT,
+                    {"added": [f.path for f in new_files]})
         if mode != "overwrite":
             self._maybe_autocompact(ns, tbl)
 
@@ -2783,27 +2785,26 @@ class Engine:
         enforcement should gate DML by privilege, not by policy —
         policies here are a read-projection mechanism, not an ACL."""
         ns, tbl = self._split(name)
-        txn = self._txn()
-        tdef = self.catalog.describe_table(txn, ns, tbl)
-        self._require_native(tdef, name, "DELETE/UPDATE")
-        self._mv_guard(tdef, name, "DELETE/UPDATE")
-        schema = tdef.spark_schema()
-        self._record_select(txn, ns, tbl,
-                            [f.name for f in schema.fields], predicate)
-        files, n = self._touched_files(tdef, predicate, txn, name)
-        if files:
-            new_files, n = self._rewrite_files(
-                tdef, ns, tbl, files, n, predicate,
-                lambda df: transform(df, txn))
-        if n:
-            action = (ActionType.TABLE_DELETE
-                      if transform.__name__ == "_delete"
-                      else ActionType.TABLE_UPDATE)
-            self.catalog.update_table_files(
-                txn, ns, tbl, new_files, files, action,
-                {"added": [f.path for f in new_files], "removed": files,
-                 "expression": predicate})
-        self._finish(txn)
+        with self._statement() as txn:
+            tdef = self.catalog.describe_table(txn, ns, tbl)
+            self._require_native(tdef, name, "DELETE/UPDATE")
+            self._mv_guard(tdef, name, "DELETE/UPDATE")
+            schema = tdef.spark_schema()
+            self._record_select(txn, ns, tbl,
+                                [f.name for f in schema.fields], predicate)
+            files, n = self._touched_files(tdef, predicate, txn, name)
+            if files:
+                new_files, n = self._rewrite_files(
+                    tdef, ns, tbl, files, n, predicate,
+                    lambda df: transform(df, txn))
+            if n:
+                action = (ActionType.TABLE_DELETE
+                          if transform.__name__ == "_delete"
+                          else ActionType.TABLE_UPDATE)
+                self.catalog.update_table_files(
+                    txn, ns, tbl, new_files, files, action,
+                    {"added": [f.path for f in new_files], "removed": files,
+                     "expression": predicate})
         return n
 
     def replace_where(self, name: str, df: DataFrame,
@@ -2817,33 +2818,33 @@ class Engine:
         different slice, so violations raise instead. File pruning
         applies: only stats-candidate files are scanned for matches."""
         ns, tbl = self._split(name)
-        txn = self._txn()
-        tdef = self.catalog.describe_table(txn, ns, tbl)
-        self._require_native(tdef, name, "INSERT OVERWRITE REPLACE WHERE")
-        self._mv_guard(tdef, name, "INSERT OVERWRITE REPLACE WHERE")
-        schema = tdef.spark_schema()
-        df = df.select(*[F.col(f.name).cast(f.dataType).alias(f.name)
-                         for f in schema.fields])
-        if tdef.generated_columns:
-            # recompute BEFORE the predicate guard: the guard must see
-            # the values that will actually be WRITTEN — a payload whose
-            # explicit/NULL-filled generated values differ from their
-            # recomputed ones would otherwise pass validation yet land
-            # outside the replaced slice (or be falsely rejected)
-            df = self._apply_generated(df, tdef)
-        # Pin the source before validating: the validation count and the
-        # data write are separate evaluations, so a non-deterministic
-        # source (rand(), re-shuffling scan) could pass the check yet
-        # write violating rows — the exact corruption the check exists to
-        # prevent (same reason merge() materializes its source).
-        from pyspark import StorageLevel
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        df.count()
-        try:
-            return self._replace_where_body(
-                txn, tdef, ns, tbl, df, predicate, name, schema)
-        finally:
-            df.unpersist()
+        with self._statement() as txn:
+            tdef = self.catalog.describe_table(txn, ns, tbl)
+            self._require_native(tdef, name, "INSERT OVERWRITE REPLACE WHERE")
+            self._mv_guard(tdef, name, "INSERT OVERWRITE REPLACE WHERE")
+            schema = tdef.spark_schema()
+            df = df.select(*[F.col(f.name).cast(f.dataType).alias(f.name)
+                             for f in schema.fields])
+            if tdef.generated_columns:
+                # recompute BEFORE the predicate guard: the guard must see
+                # the values that will actually be WRITTEN — a payload whose
+                # explicit/NULL-filled generated values differ from their
+                # recomputed ones would otherwise pass validation yet land
+                # outside the replaced slice (or be falsely rejected)
+                df = self._apply_generated(df, tdef)
+            # Pin the source before validating: the validation count and the
+            # data write are separate evaluations, so a non-deterministic
+            # source (rand(), re-shuffling scan) could pass the check yet
+            # write violating rows — the exact corruption the check exists to
+            # prevent (same reason merge() materializes its source).
+            from pyspark import StorageLevel
+            df = df.persist(StorageLevel.MEMORY_AND_DISK)
+            df.count()
+            try:
+                return self._replace_where_body(
+                    txn, tdef, ns, tbl, df, predicate, name, schema)
+            finally:
+                df.unpersist()
 
     def _replace_where_body(self, txn, tdef, ns, tbl, df, predicate,
                             name, schema) -> int:
@@ -2879,7 +2880,6 @@ class Engine:
             txn, ns, tbl, new_files, removed, ActionType.TABLE_UPDATE,
             {"added": [f.path for f in new_files], "removed": removed,
              "expression": f"REPLACE WHERE {predicate}"})
-        self._finish(txn)
         return n_replaced + sum(f.num_rows for f in ins_files)
 
     def merge(self, name: str, source: DataFrame, on: str,
@@ -2975,134 +2975,134 @@ class Engine:
                            if a else a))
                 for c, kind, a in not_matched_by_source_clauses]
         ns, tbl = self._split(name)
-        txn = self._txn()
-        tdef = self.catalog.describe_table(txn, ns, tbl)
-        self._require_native(tdef, name, "MERGE")
-        self._mv_guard(tdef, name, "MERGE")
-        schema = tdef.spark_schema()
-        evolved_names: list[str] = []
-        if schema_evolution:
-            # Delta autoMerge with explicit clauses: evolve EXACTLY the
-            # assignment/insert TARGET names missing from the schema
-            # (never every incidental source column — a stray staging
-            # column would otherwise permanently enter the table, and
-            # dropping it would burn the name via retired_columns).
-            # Types come from analyzing the assignment expression
-            # against the source. The TableDef mutates in-memory NOW
-            # (the target scan must NULL-fill the new columns and
-            # validation must accept them) but the ALTER action is
-            # recorded only after the merge body succeeds — a failing
-            # merge must not leave the column without the rows.
-            existing = {f.name.lower() for f in schema.fields}
+        with self._statement() as txn:
+            tdef = self.catalog.describe_table(txn, ns, tbl)
+            self._require_native(tdef, name, "MERGE")
+            self._mv_guard(tdef, name, "MERGE")
+            schema = tdef.spark_schema()
+            evolved_names: list[str] = []
+            if schema_evolution:
+                # Delta autoMerge with explicit clauses: evolve EXACTLY the
+                # assignment/insert TARGET names missing from the schema
+                # (never every incidental source column — a stray staging
+                # column would otherwise permanently enter the table, and
+                # dropping it would burn the name via retired_columns).
+                # Types come from analyzing the assignment expression
+                # against the source. The TableDef mutates in-memory NOW
+                # (the target scan must NULL-fill the new columns and
+                # validation must accept them) but the ALTER action is
+                # recorded only after the merge body succeeds — a failing
+                # merge must not leave the column without the rows.
+                existing = {f.name.lower() for f in schema.fields}
 
-            def norm_key(k: str) -> str:
-                # keys are already target-alias-stripped; any REMAINING
-                # dotted name is a user error, never a new column to mint
-                if "." in k:
-                    raise ValueError(
-                        f"MERGE schema evolution: cannot evolve "
-                        f"qualified column name {k!r}")
-                return k
+                def norm_key(k: str) -> str:
+                    # keys are already target-alias-stripped; any REMAINING
+                    # dotted name is a user error, never a new column to mint
+                    if "." in k:
+                        raise ValueError(
+                            f"MERGE schema evolution: cannot evolve "
+                            f"qualified column name {k!r}")
+                    return k
 
-            want: dict[str, str] = {}
-            for _c, kind, assigns in list(matched_clauses or []) + list(
-                    not_matched_by_source_clauses or []):
-                if kind == "update":
-                    for k, v in (assigns or {}).items():
+                want: dict[str, str] = {}
+                for _c, kind, assigns in list(matched_clauses or []) + list(
+                        not_matched_by_source_clauses or []):
+                    if kind == "update":
+                        for k, v in (assigns or {}).items():
+                            k = norm_key(k)
+                            if k.lower() not in existing:
+                                want.setdefault(k, v)
+                for _c, imap in (not_matched_clauses or []):
+                    for k, v in imap.items():
                         k = norm_key(k)
                         if k.lower() not in existing:
                             want.setdefault(k, v)
-            for _c, imap in (not_matched_clauses or []):
-                for k, v in imap.items():
-                    k = norm_key(k)
-                    if k.lower() not in existing:
-                        want.setdefault(k, v)
-            if want:
-                self._check_new_column_names(tdef, list(want),
-                                             "MERGE schema evolution")
-                # type inference against an empty t⋈s probe, so matched
-                # assignments (s. and t. refs) AND by-source assignments
-                # (t.-only refs) both resolve; a subquery's references
-                # bind like the statement's
-                probe = (self._local_df([], schema)
-                         .alias(target_alias)
-                         .crossJoin(self._local_df(
-                             [], source.schema).alias(source_alias)))
-                with _StatementScope(self.spark) as scope:
-                    for k, v in want.items():
-                        try:
-                            dt = probe.select(F.expr(self._resolve_expr(
-                                v, txn, scope))).schema[0].dataType
-                        except Exception as e:
-                            raise ValueError(
-                                f"MERGE schema evolution: cannot infer "
-                                f"the type of new column {k} from ({v})"
-                            ) from e
-                        schema = schema.add(T.StructField(k, dt, True))
-                tdef.schema_json = schema.json()
-                evolved_names = list(want)
-        cols = [f.name for f in schema.fields]
-        # SQL analysis rule: assignment / insert targets must be table
-        # columns — a typo'd column would otherwise make the clause a
-        # silent no-op (the merge still rewrites files and reports rows).
-        by_src = not_matched_by_source_clauses or []
-        # A by-source row has NO source columns (all-NULL side of the left
-        # join): a source reference in its condition silently skips the
-        # clause and in an assignment silently writes NULL — reject both
-        # (Delta raises the same analysis error).
-        for cond, _kind, assigns in by_src:
-            for text in ([cond] if cond else []) +                     list((assigns or {}).values()):
-                if re.search(rf"\b{re.escape(source_alias)}\s*\.", text):
-                    raise ValueError(
-                        "MERGE: WHEN NOT MATCHED BY SOURCE conditions/"
-                        "assignments may reference target columns only; "
-                        f"found source reference in {text!r}")
-        for _c, kind, assigns in list(matched_clauses) + by_src:
-            if kind == "update":
-                unknown = set(assigns) - set(cols)
+                if want:
+                    self._check_new_column_names(tdef, list(want),
+                                                 "MERGE schema evolution")
+                    # type inference against an empty t⋈s probe, so matched
+                    # assignments (s. and t. refs) AND by-source assignments
+                    # (t.-only refs) both resolve; a subquery's references
+                    # bind like the statement's
+                    probe = (self._local_df([], schema)
+                             .alias(target_alias)
+                             .crossJoin(self._local_df(
+                                 [], source.schema).alias(source_alias)))
+                    with _StatementScope(self.spark) as scope:
+                        for k, v in want.items():
+                            try:
+                                dt = probe.select(F.expr(self._resolve_expr(
+                                    v, txn, scope))).schema[0].dataType
+                            except Exception as e:
+                                raise ValueError(
+                                    f"MERGE schema evolution: cannot infer "
+                                    f"the type of new column {k} from ({v})"
+                                ) from e
+                            schema = schema.add(T.StructField(k, dt, True))
+                    tdef.schema_json = schema.json()
+                    evolved_names = list(want)
+            cols = [f.name for f in schema.fields]
+            # SQL analysis rule: assignment / insert targets must be table
+            # columns — a typo'd column would otherwise make the clause a
+            # silent no-op (the merge still rewrites files and reports rows).
+            by_src = not_matched_by_source_clauses or []
+            # A by-source row has NO source columns (all-NULL side of the left
+            # join): a source reference in its condition silently skips the
+            # clause and in an assignment silently writes NULL — reject both
+            # (Delta raises the same analysis error).
+            for cond, _kind, assigns in by_src:
+                for text in ([cond] if cond else []) +                     list((assigns or {}).values()):
+                    if re.search(rf"\b{re.escape(source_alias)}\s*\.", text):
+                        raise ValueError(
+                            "MERGE: WHEN NOT MATCHED BY SOURCE conditions/"
+                            "assignments may reference target columns only; "
+                            f"found source reference in {text!r}")
+            for _c, kind, assigns in list(matched_clauses) + by_src:
+                if kind == "update":
+                    unknown = set(assigns) - set(cols)
+                    if unknown:
+                        raise ValueError(
+                            f"MERGE: UPDATE SET references non-existent "
+                            f"column(s) {sorted(unknown)} of {name}")
+            for _c, imap in not_matched_clauses:
+                unknown = set(imap) - set(cols)
                 if unknown:
                     raise ValueError(
-                        f"MERGE: UPDATE SET references non-existent "
-                        f"column(s) {sorted(unknown)} of {name}")
-        for _c, imap in not_matched_clauses:
-            unknown = set(imap) - set(cols)
-            if unknown:
-                raise ValueError(
-                    f"MERGE: INSERT references non-existent column(s) "
-                    f"{sorted(unknown)} of {name}")
-        self._record_select(txn, ns, tbl, cols, on)
-        all_paths = tdef.file_paths()
-        # Materialize the source ONCE: the merge runs up to three jobs over
-        # it (file-pruning semi join, rewrite join, not-matched anti join).
-        # Without pinning, a non-deterministic source (rand() sampling,
-        # now(), a re-shuffling scan) presents DIFFERENT rows to each job —
-        # updating against one snapshot while inserting against another
-        # (the reason Delta materializes merge sources). The persist IS the
-        # pin: the FIRST consumer (the pruning semi-join) computes the
-        # source plan exactly once into the cache and every later job
-        # reads the blocks — the eager count() that used to pre-populate
-        # the cache was one whole extra job per MERGE for nothing
-        # (VERDICT r15 #5 / guide §1.4; single evaluation is pinned by
-        # test_merge_source_materialized_once's accumulator either way).
-        # try/finally releases the blocks (the round-2 cache-leak lesson).
-        from pyspark import StorageLevel
-        src = source.alias(source_alias).persist(
-            StorageLevel.MEMORY_AND_DISK)
-        try:
-            # subqueries in ON, WHEN and SET/VALUES read the statement's
-            # snapshot, like its source and target
-            with _StatementScope(self.spark) as scope:
-                clauses = [[tuple(self._resolve_expr(x, txn, scope)
-                                  for x in clause) for clause in family]
-                           for family in (matched_clauses,
-                                          not_matched_clauses, by_src)]
-                return self._merge_body(
-                    txn, tdef, ns, tbl, src,
-                    self._resolve_expr(on, txn, scope), target_alias,
-                    source_alias, cols, schema, *clauses, extra_properties,
-                    evolved_names)
-        finally:
-            src.unpersist()
+                        f"MERGE: INSERT references non-existent column(s) "
+                        f"{sorted(unknown)} of {name}")
+            self._record_select(txn, ns, tbl, cols, on)
+            all_paths = tdef.file_paths()
+            # Materialize the source ONCE: the merge runs up to three jobs over
+            # it (file-pruning semi join, rewrite join, not-matched anti join).
+            # Without pinning, a non-deterministic source (rand() sampling,
+            # now(), a re-shuffling scan) presents DIFFERENT rows to each job —
+            # updating against one snapshot while inserting against another
+            # (the reason Delta materializes merge sources). The persist IS the
+            # pin: the FIRST consumer (the pruning semi-join) computes the
+            # source plan exactly once into the cache and every later job
+            # reads the blocks — the eager count() that used to pre-populate
+            # the cache was one whole extra job per MERGE for nothing
+            # (VERDICT r15 #5 / guide §1.4; single evaluation is pinned by
+            # test_merge_source_materialized_once's accumulator either way).
+            # try/finally releases the blocks (the round-2 cache-leak lesson).
+            from pyspark import StorageLevel
+            src = source.alias(source_alias).persist(
+                StorageLevel.MEMORY_AND_DISK)
+            try:
+                # subqueries in ON, WHEN and SET/VALUES read the statement's
+                # snapshot, like its source and target
+                with _StatementScope(self.spark) as scope:
+                    clauses = [[tuple(self._resolve_expr(x, txn, scope)
+                                      for x in clause) for clause in family]
+                               for family in (matched_clauses,
+                                              not_matched_clauses, by_src)]
+                    return self._merge_body(
+                        txn, tdef, ns, tbl, src,
+                        self._resolve_expr(on, txn, scope), target_alias,
+                        source_alias, cols, schema, *clauses, extra_properties,
+                        evolved_names)
+            finally:
+                src.unpersist()
 
     def _merge_body(self, txn, tdef, ns, tbl, src, on, target_alias,
                     source_alias, cols, schema, matched_clauses,
@@ -3339,14 +3339,12 @@ class Engine:
                 {"column_names": evolved_names,
                  "merge_schema_evolution": True})
         if not new_files and not removed:
-            self._finish(txn)
             return 0
         self.catalog.update_table_files(
             txn, ns, tbl, new_files, removed, ActionType.TABLE_UPDATE,
             {"added": [f.path for f in new_files], "removed": removed,
              "expression": f"MERGE ON {on}"},
             extra_properties=extra_properties)
-        self._finish(txn)
         return n_changed
 
     _MERGE_MATCHED_RE = re.compile(
@@ -3498,85 +3496,84 @@ class Engine:
         translate through ``TableDef.column_mapping``. Not a rewrite:
         zero bytes of data move, old versions keep the old name."""
         ns, tbl = self._split(name)
-        txn = self._txn()
-        tdef = self.catalog.describe_table(txn, ns, tbl)
-        self._require_native(tdef, name, "ALTER TABLE RENAME COLUMN")
-        self._mv_guard_schema(tdef, name, "ALTER TABLE RENAME COLUMN")
-        schema = tdef.spark_schema()
-        names = [f.name for f in schema.fields]
-        if old not in names:
-            raise ValueError(f"no such column: {old}")
-        # same case-INSENSITIVE guard as ALTER ADD COLUMNS / merge
-        # evolution (Spark resolves case-insensitively, so `Value`
-        # colliding with existing `value` — or a case variant of a
-        # retired physical name — is the same hazard as an exact hit);
-        # the column being renamed is excluded so a pure case-change
-        # rename (v → V) stays legal
-        self._check_new_column_names(tdef, [new],
-                                     "ALTER TABLE RENAME COLUMN",
-                                     exclude=old)
-        for cname, cexpr in tdef.constraints.items():
-            if self._expr_refs(cexpr, old):
+        with self._statement() as txn:
+            tdef = self.catalog.describe_table(txn, ns, tbl)
+            self._require_native(tdef, name, "ALTER TABLE RENAME COLUMN")
+            self._mv_guard_schema(tdef, name, "ALTER TABLE RENAME COLUMN")
+            schema = tdef.spark_schema()
+            names = [f.name for f in schema.fields]
+            if old not in names:
+                raise ValueError(f"no such column: {old}")
+            # same case-INSENSITIVE guard as ALTER ADD COLUMNS / merge
+            # evolution (Spark resolves case-insensitively, so `Value`
+            # colliding with existing `value` — or a case variant of a
+            # retired physical name — is the same hazard as an exact hit);
+            # the column being renamed is excluded so a pure case-change
+            # rename (v → V) stays legal
+            self._check_new_column_names(tdef, [new],
+                                         "ALTER TABLE RENAME COLUMN",
+                                         exclude=old)
+            for cname, cexpr in tdef.constraints.items():
+                if self._expr_refs(cexpr, old):
+                    raise ValueError(
+                        f"cannot rename column {old}: referenced by CHECK "
+                        f"constraint {cname} ({cexpr}); DROP CONSTRAINT first")
+            if old in tdef.generated_columns:
                 raise ValueError(
-                    f"cannot rename column {old}: referenced by CHECK "
-                    f"constraint {cname} ({cexpr}); DROP CONSTRAINT first")
-        if old in tdef.generated_columns:
-            raise ValueError(
-                f"cannot rename generated column {old}; drop and "
-                f"re-declare it instead")
-        for g, gexpr in tdef.generated_columns.items():
-            if self._expr_refs(gexpr, old):
+                    f"cannot rename generated column {old}; drop and "
+                    f"re-declare it instead")
+            for g, gexpr in tdef.generated_columns.items():
+                if self._expr_refs(gexpr, old):
+                    raise ValueError(
+                        f"cannot rename column {old}: source of generated "
+                        f"column {g} ({gexpr})")
+            # governance policies (B97): expressions store the old name and
+            # would brick every read after the rename — conservative refuse
+            # (the mask ON the renamed column re-keys only if its expression
+            # doesn't reference the column; self-referencing masks refuse)
+            rf = tdef.properties.get("policy.row_filter", "")
+            if rf and self._expr_refs(rf, old):
                 raise ValueError(
-                    f"cannot rename column {old}: source of generated "
-                    f"column {g} ({gexpr})")
-        # governance policies (B97): expressions store the old name and
-        # would brick every read after the rename — conservative refuse
-        # (the mask ON the renamed column re-keys only if its expression
-        # doesn't reference the column; self-referencing masks refuse)
-        rf = tdef.properties.get("policy.row_filter", "")
-        if rf and self._expr_refs(rf, old):
-            raise ValueError(
-                f"cannot rename column {old}: referenced by the row "
-                f"filter ({rf}); DROP ROW FILTER first")
-        for key, mexpr in list(tdef.properties.items()):
-            if not key.startswith("policy.mask."):
-                continue
-            mcol = key.removeprefix("policy.mask.")
-            if self._expr_refs(mexpr, old):
-                raise ValueError(
-                    f"cannot rename column {old}: referenced by the "
-                    f"mask on {mcol} ({mexpr}); DROP MASK first")
-            if mcol == old:
-                tdef.properties = {
-                    **{k: v for k, v in tdef.properties.items()
-                       if k != key},
-                    f"policy.mask.{new}": mexpr}
-        mapping = dict(tdef.column_mapping)
-        # carry the ORIGINAL physical name through rename chains; renaming
-        # BACK to the creation name drops the entry entirely (no identity
-        # mapping lingering on the fast path)
-        phys = mapping.pop(old, old)
-        if phys != new:
-            mapping[new] = phys
-        tdef.column_mapping = mapping
-        tdef.schema_json = T.StructType([
-            T.StructField(new if f.name == old else f.name,
-                          f.dataType, f.nullable, f.metadata)
-            for f in schema.fields]).json()
-        if old in tdef.partition_by:
-            tdef.partition_by = [new if c == old else c
-                                 for c in tdef.partition_by]
-        if old in tdef.bucket_by.get("columns", []):
-            # the layout keys on the PHYSICAL name (unchanged by a
-            # rename) — re-key the logical spec, zero data movement
-            tdef.bucket_by = {
-                **tdef.bucket_by,
-                "columns": [new if c == old else c
-                            for c in tdef.bucket_by["columns"]]}
-        self.catalog.alter_table(txn, ns, tbl, tdef,
-                                 ActionType.TABLE_ALTER,
-                                 {"rename_column": [old, new]})
-        self._finish(txn)
+                    f"cannot rename column {old}: referenced by the row "
+                    f"filter ({rf}); DROP ROW FILTER first")
+            for key, mexpr in list(tdef.properties.items()):
+                if not key.startswith("policy.mask."):
+                    continue
+                mcol = key.removeprefix("policy.mask.")
+                if self._expr_refs(mexpr, old):
+                    raise ValueError(
+                        f"cannot rename column {old}: referenced by the "
+                        f"mask on {mcol} ({mexpr}); DROP MASK first")
+                if mcol == old:
+                    tdef.properties = {
+                        **{k: v for k, v in tdef.properties.items()
+                           if k != key},
+                        f"policy.mask.{new}": mexpr}
+            mapping = dict(tdef.column_mapping)
+            # carry the ORIGINAL physical name through rename chains; renaming
+            # BACK to the creation name drops the entry entirely (no identity
+            # mapping lingering on the fast path)
+            phys = mapping.pop(old, old)
+            if phys != new:
+                mapping[new] = phys
+            tdef.column_mapping = mapping
+            tdef.schema_json = T.StructType([
+                T.StructField(new if f.name == old else f.name,
+                              f.dataType, f.nullable, f.metadata)
+                for f in schema.fields]).json()
+            if old in tdef.partition_by:
+                tdef.partition_by = [new if c == old else c
+                                     for c in tdef.partition_by]
+            if old in tdef.bucket_by.get("columns", []):
+                # the layout keys on the PHYSICAL name (unchanged by a
+                # rename) — re-key the logical spec, zero data movement
+                tdef.bucket_by = {
+                    **tdef.bucket_by,
+                    "columns": [new if c == old else c
+                                for c in tdef.bucket_by["columns"]]}
+            self.catalog.alter_table(txn, ns, tbl, tdef,
+                                     ActionType.TABLE_ALTER,
+                                     {"rename_column": [old, new]})
 
     def _check_new_column_names(self, tdef: TableDef, names: list[str],
                                 ctx: str,
@@ -3624,24 +3621,23 @@ class Engine:
         new columns; the explicit read schema fills them with NULLs —
         schema evolution without rewriting a byte (the 100 TB property)."""
         ns, tbl = self._split(name)
-        txn = self._txn()
-        tdef = self.catalog.describe_table(txn, ns, tbl)
-        # CSV applies the stored schema POSITIONALLY — evolving it would
-        # silently shift every later scan's columns, so schema evolution
-        # is part of the read-only contract for external formats
-        self._require_native(tdef, name, "ALTER TABLE ADD COLUMNS")
-        self._mv_guard_schema(tdef, name, "ALTER TABLE ADD COLUMNS")
-        schema = tdef.spark_schema()
-        self._check_new_column_names(
-            tdef, [f.name for f in columns.fields], "ALTER TABLE")
-        for f in columns.fields:
-            schema = schema.add(f)
-        tdef.schema_json = schema.json()
-        self.catalog.alter_table(txn, ns, tbl, tdef,
-                                 ActionType.TABLE_ALTER_ADD_COLUMNS,
-                                 {"column_names": [f.name for f in
-                                                   columns.fields]})
-        self._finish(txn)
+        with self._statement() as txn:
+            tdef = self.catalog.describe_table(txn, ns, tbl)
+            # CSV applies the stored schema POSITIONALLY — evolving it would
+            # silently shift every later scan's columns, so schema evolution
+            # is part of the read-only contract for external formats
+            self._require_native(tdef, name, "ALTER TABLE ADD COLUMNS")
+            self._mv_guard_schema(tdef, name, "ALTER TABLE ADD COLUMNS")
+            schema = tdef.spark_schema()
+            self._check_new_column_names(
+                tdef, [f.name for f in columns.fields], "ALTER TABLE")
+            for f in columns.fields:
+                schema = schema.add(f)
+            tdef.schema_json = schema.json()
+            self.catalog.alter_table(txn, ns, tbl, tdef,
+                                     ActionType.TABLE_ALTER_ADD_COLUMNS,
+                                     {"column_names": [f.name for f in
+                                                       columns.fields]})
 
     @staticmethod
     def _split_generated_columns(cols: str) -> tuple[str, dict, dict]:
@@ -3835,87 +3831,86 @@ class Engine:
         expression for pre-evolution write dirs (see ``_scan``) while
         new writes hive-partition by it and partition-prune."""
         ns, tbl = self._split(name)
-        txn = self._txn()
-        tdef = self.catalog.describe_table(txn, ns, tbl)
-        self._require_native(tdef, name, "ADD PARTITION FIELD")
-        # an MV's spec/schema derive from the stored query: a transform
-        # spelling would inject a synthesized generated column the next
-        # REFRESH's recompute cannot produce → AnalysisException on
-        # every refresh until the MV is dropped (r13 review pass 2)
-        self._mv_guard_schema(tdef, name, "ADD PARTITION FIELD")
-        schema = tdef.spark_schema()
-        # resolve the target name FIRST so a duplicate add reports
-        # "already a partition field", not the schema-collision error —
-        # CASE-INSENSITIVE like all schema resolution (a case-variant
-        # duplicate would make partitionBy reject every later write)
-        target = self._transform_field_name(spec) or spec.strip()
-        if target.lower() in {p.lower() for p in tdef.partition_by}:
-            raise ValueError(
-                f"{target} is already a partition field of {name}")
-        is_transform = self._transform_field_name(spec) is not None
-        by_lower = {f.name.lower(): f.name for f in schema.fields}
-        if is_transform and target.lower() in by_lower:
-            # RE-ADD after DROP PARTITION FIELD: the synthesized column
-            # stayed in the schema as a generated column — reuse it
-            # (values are already in-file or hive-encoded; no derive
-            # marker needed). A plain column of that name is refused.
-            col = by_lower[target.lower()]
-            if col not in tdef.generated_columns:
+        with self._statement() as txn:
+            tdef = self.catalog.describe_table(txn, ns, tbl)
+            self._require_native(tdef, name, "ADD PARTITION FIELD")
+            # an MV's spec/schema derive from the stored query: a transform
+            # spelling would inject a synthesized generated column the next
+            # REFRESH's recompute cannot produce → AnalysisException on
+            # every refresh until the MV is dropped (r13 review pass 2)
+            self._mv_guard_schema(tdef, name, "ADD PARTITION FIELD")
+            schema = tdef.spark_schema()
+            # resolve the target name FIRST so a duplicate add reports
+            # "already a partition field", not the schema-collision error —
+            # CASE-INSENSITIVE like all schema resolution (a case-variant
+            # duplicate would make partitionBy reject every later write)
+            target = self._transform_field_name(spec) or spec.strip()
+            if target.lower() in {p.lower() for p in tdef.partition_by}:
                 raise ValueError(
-                    f"partition transform {spec} would synthesize "
-                    f"column {col}, which exists as a plain column — "
-                    f"partition on it directly")
-            extra = []
-        else:
-            cols, extra, gen, tsp = self._expand_partition_transforms(
-                [spec], schema)
-            col = cols[0]
-            if tsp:
-                tdef.properties = {
-                    **tdef.properties,
-                    **{f"iceberg.transform.{k}": v
-                       for k, v in tsp.items()}}
-        if extra:
-            # synthesized column joins the schema through the same
-            # collision guards as ALTER ADD COLUMNS (retired/physical
-            # names included), and its generation expression must
-            # ANALYZE against the schema NOW — days(bigint_col) caught
-            # here, not as an AnalysisException bricking every later
-            # read and write (CREATE-path probe parity)
-            self._check_new_column_names(tdef, [col],
-                                         "ADD PARTITION FIELD")
-            probe = self._local_df([], schema)
-            for gname, gexpr in gen.items():
-                try:
-                    probe.select(F.expr(gexpr)).schema
-                except Exception as e:
+                    f"{target} is already a partition field of {name}")
+            is_transform = self._transform_field_name(spec) is not None
+            by_lower = {f.name.lower(): f.name for f in schema.fields}
+            if is_transform and target.lower() in by_lower:
+                # RE-ADD after DROP PARTITION FIELD: the synthesized column
+                # stayed in the schema as a generated column — reuse it
+                # (values are already in-file or hive-encoded; no derive
+                # marker needed). A plain column of that name is refused.
+                col = by_lower[target.lower()]
+                if col not in tdef.generated_columns:
                     raise ValueError(
-                        f"partition transform {spec}: generated "
-                        f"expression ({gexpr}) does not resolve "
-                        f"against the table schema") from e
-            for f in extra:
-                schema = schema.add(f)
-            tdef.schema_json = schema.json()
-            tdef.generated_columns = {**tdef.generated_columns, **gen}
-            if tdef.data_files:
-                # pre-evolution files carry the column neither in-file
-                # nor hive-encoded — mark it for on-read derivation
-                cur = [c for c in tdef.properties.get(
-                    "spec.derive_on_read", "").split(",") if c]
-                tdef.properties = {
-                    **tdef.properties,
-                    "spec.derive_on_read": ",".join([*cur, col])}
-        elif (not is_transform
-              and col.lower() not in by_lower):
-            raise ValueError(
-                f"partition field {col} is not in the table schema")
-        elif not is_transform:
-            col = by_lower[col.lower()]
-        tdef.partition_by = [*tdef.partition_by, col]
-        self.catalog.alter_table(txn, ns, tbl, tdef,
-                                 ActionType.TABLE_ALTER,
-                                 {"add_partition_field": [spec, col]})
-        self._finish(txn)
+                        f"partition transform {spec} would synthesize "
+                        f"column {col}, which exists as a plain column — "
+                        f"partition on it directly")
+                extra = []
+            else:
+                cols, extra, gen, tsp = self._expand_partition_transforms(
+                    [spec], schema)
+                col = cols[0]
+                if tsp:
+                    tdef.properties = {
+                        **tdef.properties,
+                        **{f"iceberg.transform.{k}": v
+                           for k, v in tsp.items()}}
+            if extra:
+                # synthesized column joins the schema through the same
+                # collision guards as ALTER ADD COLUMNS (retired/physical
+                # names included), and its generation expression must
+                # ANALYZE against the schema NOW — days(bigint_col) caught
+                # here, not as an AnalysisException bricking every later
+                # read and write (CREATE-path probe parity)
+                self._check_new_column_names(tdef, [col],
+                                             "ADD PARTITION FIELD")
+                probe = self._local_df([], schema)
+                for gname, gexpr in gen.items():
+                    try:
+                        probe.select(F.expr(gexpr)).schema
+                    except Exception as e:
+                        raise ValueError(
+                            f"partition transform {spec}: generated "
+                            f"expression ({gexpr}) does not resolve "
+                            f"against the table schema") from e
+                for f in extra:
+                    schema = schema.add(f)
+                tdef.schema_json = schema.json()
+                tdef.generated_columns = {**tdef.generated_columns, **gen}
+                if tdef.data_files:
+                    # pre-evolution files carry the column neither in-file
+                    # nor hive-encoded — mark it for on-read derivation
+                    cur = [c for c in tdef.properties.get(
+                        "spec.derive_on_read", "").split(",") if c]
+                    tdef.properties = {
+                        **tdef.properties,
+                        "spec.derive_on_read": ",".join([*cur, col])}
+            elif (not is_transform
+                  and col.lower() not in by_lower):
+                raise ValueError(
+                    f"partition field {col} is not in the table schema")
+            elif not is_transform:
+                col = by_lower[col.lower()]
+            tdef.partition_by = [*tdef.partition_by, col]
+            self.catalog.alter_table(txn, ns, tbl, tdef,
+                                     ActionType.TABLE_ALTER,
+                                     {"add_partition_field": [spec, col]})
 
     def drop_partition_field(self, name: str, spec: str) -> None:
         """``ALTER TABLE ... DROP PARTITION FIELD <col | transform(col)>``
@@ -3926,25 +3921,24 @@ class Engine:
         regular generated column — the Iceberg void-transform
         analogue."""
         ns, tbl = self._split(name)
-        txn = self._txn()
-        tdef = self.catalog.describe_table(txn, ns, tbl)
-        # _require_native FIRST, matching every other DDL site (rename/
-        # add/drop column, add partition field, add constraint) so error
-        # precedence for non-native+MV-prop states is uniform (ADVICE r13)
-        self._require_native(tdef, name, "DROP PARTITION FIELD")
-        self._mv_guard_schema(tdef, name, "DROP PARTITION FIELD")
-        want = (self._transform_field_name(spec) or spec.strip()).lower()
-        match = [c for c in tdef.partition_by if c.lower() == want]
-        if not match:
-            raise ValueError(
-                f"{spec.strip()} is not a partition field of {name} "
-                f"(fields: {tdef.partition_by})")
-        col = match[0]
-        tdef.partition_by = [c for c in tdef.partition_by if c != col]
-        self.catalog.alter_table(txn, ns, tbl, tdef,
-                                 ActionType.TABLE_ALTER,
-                                 {"drop_partition_field": [col]})
-        self._finish(txn)
+        with self._statement() as txn:
+            tdef = self.catalog.describe_table(txn, ns, tbl)
+            # _require_native FIRST, matching every other DDL site (rename/
+            # add/drop column, add partition field, add constraint) so error
+            # precedence for non-native+MV-prop states is uniform (ADVICE r13)
+            self._require_native(tdef, name, "DROP PARTITION FIELD")
+            self._mv_guard_schema(tdef, name, "DROP PARTITION FIELD")
+            want = (self._transform_field_name(spec) or spec.strip()).lower()
+            match = [c for c in tdef.partition_by if c.lower() == want]
+            if not match:
+                raise ValueError(
+                    f"{spec.strip()} is not a partition field of {name} "
+                    f"(fields: {tdef.partition_by})")
+            col = match[0]
+            tdef.partition_by = [c for c in tdef.partition_by if c != col]
+            self.catalog.alter_table(txn, ns, tbl, tdef,
+                                     ActionType.TABLE_ALTER,
+                                     {"drop_partition_field": [col]})
 
     def add_constraint(self, name: str, cname: str, expr: str) -> None:
         """``ALTER TABLE ... ADD CONSTRAINT <name> CHECK (<expr>)``
@@ -3956,124 +3950,121 @@ class Engine:
         enforces it row-by-row inside the write job (no extra pass).
         SQL semantics: NULL/UNKNOWN passes, only FALSE violates."""
         ns, tbl = self._split(name)
-        txn = self._txn()
-        tdef = self.catalog.describe_table(txn, ns, tbl)
-        self._require_native(tdef, name, "ADD CONSTRAINT")
-        # a CHECK on an MV would fire INSIDE the refresh rewrite on
-        # derived rows — refuse up front (r13 review pass 2)
-        self._mv_guard_schema(tdef, name, "ADD CONSTRAINT")
-        if cname in tdef.constraints:
-            raise ValueError(f"constraint already exists: {cname}")
-        scan = self._scan(tdef, tdef.file_paths())
-        n_bad = scan.filter(
-            F.expr(f"NOT coalesce(({expr}), true)")).count()
-        if n_bad:
-            raise CheckConstraintError(
-                f"cannot add CHECK constraint {cname}: {n_bad} existing "
-                f"row(s) of {name} violate ({expr})")
-        tdef.constraints = {**tdef.constraints, cname: expr}
-        self.catalog.alter_table(txn, ns, tbl, tdef,
-                                 ActionType.TABLE_ALTER,
-                                 {"add_constraint": [cname, expr]})
-        self._finish(txn)
+        with self._statement() as txn:
+            tdef = self.catalog.describe_table(txn, ns, tbl)
+            self._require_native(tdef, name, "ADD CONSTRAINT")
+            # a CHECK on an MV would fire INSIDE the refresh rewrite on
+            # derived rows — refuse up front (r13 review pass 2)
+            self._mv_guard_schema(tdef, name, "ADD CONSTRAINT")
+            if cname in tdef.constraints:
+                raise ValueError(f"constraint already exists: {cname}")
+            scan = self._scan(tdef, tdef.file_paths())
+            n_bad = scan.filter(
+                F.expr(f"NOT coalesce(({expr}), true)")).count()
+            if n_bad:
+                raise CheckConstraintError(
+                    f"cannot add CHECK constraint {cname}: {n_bad} existing "
+                    f"row(s) of {name} violate ({expr})")
+            tdef.constraints = {**tdef.constraints, cname: expr}
+            self.catalog.alter_table(txn, ns, tbl, tdef,
+                                     ActionType.TABLE_ALTER,
+                                     {"add_constraint": [cname, expr]})
 
     def drop_constraint(self, name: str, cname: str) -> None:
         ns, tbl = self._split(name)
-        txn = self._txn()
-        tdef = self.catalog.describe_table(txn, ns, tbl)
-        self._require_native(tdef, name, "DROP CONSTRAINT")
-        if cname not in tdef.constraints:
-            raise ValueError(f"no such constraint: {cname}")
-        tdef.constraints = {k: v for k, v in tdef.constraints.items()
-                            if k != cname}
-        self.catalog.alter_table(txn, ns, tbl, tdef,
-                                 ActionType.TABLE_ALTER,
-                                 {"drop_constraint": [cname]})
-        self._finish(txn)
+        with self._statement() as txn:
+            tdef = self.catalog.describe_table(txn, ns, tbl)
+            self._require_native(tdef, name, "DROP CONSTRAINT")
+            if cname not in tdef.constraints:
+                raise ValueError(f"no such constraint: {cname}")
+            tdef.constraints = {k: v for k, v in tdef.constraints.items()
+                                if k != cname}
+            self.catalog.alter_table(txn, ns, tbl, tdef,
+                                     ActionType.TABLE_ALTER,
+                                     {"drop_constraint": [cname]})
 
     def drop_columns(self, name: str, column_names: list[str]) -> None:
         """A15 remove-columns: drop from the table schema; data files are
         untouched (column pruning never reads them again)."""
         ns, tbl = self._split(name)
-        txn = self._txn()
-        tdef = self.catalog.describe_table(txn, ns, tbl)
-        self._require_native(tdef, name, "ALTER TABLE DROP COLUMNS")
-        self._mv_guard_schema(tdef, name, "ALTER TABLE DROP COLUMNS")
-        schema = tdef.spark_schema()
-        missing = set(column_names) - {f.name for f in schema.fields}
-        if missing:
-            raise ValueError(f"no such columns: {sorted(missing)}")
-        parts = [c for c in column_names if c in tdef.partition_by]
-        if parts:
-            # partition_by would point at a nonexistent column and every
-            # later write's partitionBy would fail — the table bricks
-            raise ValueError(
-                f"cannot drop partition column(s) {parts}")
-        bcols = [c for c in column_names
-                 if c in tdef.bucket_by.get("columns", [])]
-        if bcols:
-            # same brick: the bucketed writer hashes these columns
-            raise ValueError(
-                f"cannot drop bucket column(s) {bcols}: the table is "
-                f"CLUSTERED BY them; recreate without the bucket spec "
-                f"(CTAS) first")
-        for cname, expr in tdef.constraints.items():
-            hit = [c for c in column_names if self._expr_refs(expr, c)]
+        with self._statement() as txn:
+            tdef = self.catalog.describe_table(txn, ns, tbl)
+            self._require_native(tdef, name, "ALTER TABLE DROP COLUMNS")
+            self._mv_guard_schema(tdef, name, "ALTER TABLE DROP COLUMNS")
+            schema = tdef.spark_schema()
+            missing = set(column_names) - {f.name for f in schema.fields}
+            if missing:
+                raise ValueError(f"no such columns: {sorted(missing)}")
+            parts = [c for c in column_names if c in tdef.partition_by]
+            if parts:
+                # partition_by would point at a nonexistent column and every
+                # later write's partitionBy would fail — the table bricks
+                raise ValueError(
+                    f"cannot drop partition column(s) {parts}")
+            bcols = [c for c in column_names
+                     if c in tdef.bucket_by.get("columns", [])]
+            if bcols:
+                # same brick: the bucketed writer hashes these columns
+                raise ValueError(
+                    f"cannot drop bucket column(s) {bcols}: the table is "
+                    f"CLUSTERED BY them; recreate without the bucket spec "
+                    f"(CTAS) first")
+            for cname, expr in tdef.constraints.items():
+                hit = [c for c in column_names if self._expr_refs(expr, c)]
+                if hit:
+                    raise ValueError(
+                        f"cannot drop column(s) {hit}: referenced by CHECK "
+                        f"constraint {cname} ({expr}); DROP CONSTRAINT first")
+            for g, gexpr in tdef.generated_columns.items():
+                hit = [c for c in column_names
+                       if c != g and self._expr_refs(gexpr, c)]
+                if hit:
+                    raise ValueError(
+                        f"cannot drop column(s) {hit}: source of generated "
+                        f"column {g} ({gexpr}); drop {g} first")
+            # governance policies (B97): dropping a column another policy's
+            # expression references would brick every read; a column's OWN
+            # mask simply leaves with it
+            rf = tdef.properties.get("policy.row_filter", "")
+            hit = [c for c in column_names if rf and self._expr_refs(rf, c)]
             if hit:
                 raise ValueError(
-                    f"cannot drop column(s) {hit}: referenced by CHECK "
-                    f"constraint {cname} ({expr}); DROP CONSTRAINT first")
-        for g, gexpr in tdef.generated_columns.items():
-            hit = [c for c in column_names
-                   if c != g and self._expr_refs(gexpr, c)]
-            if hit:
-                raise ValueError(
-                    f"cannot drop column(s) {hit}: source of generated "
-                    f"column {g} ({gexpr}); drop {g} first")
-        # governance policies (B97): dropping a column another policy's
-        # expression references would brick every read; a column's OWN
-        # mask simply leaves with it
-        rf = tdef.properties.get("policy.row_filter", "")
-        hit = [c for c in column_names if rf and self._expr_refs(rf, c)]
-        if hit:
-            raise ValueError(
-                f"cannot drop column(s) {hit}: referenced by the row "
-                f"filter ({rf}); DROP ROW FILTER first")
-        for key, mexpr in list(tdef.properties.items()):
-            if not key.startswith("policy.mask."):
-                continue
-            mcol = key.removeprefix("policy.mask.")
-            if mcol in column_names:
-                tdef.properties = {k: v for k, v in
-                                   tdef.properties.items() if k != key}
-                continue
-            hit = [c for c in column_names if self._expr_refs(mexpr, c)]
-            if hit:
-                raise ValueError(
-                    f"cannot drop column(s) {hit}: referenced by the "
-                    f"mask on {mcol} ({mexpr}); DROP MASK first")
-        # dropping a generated column removes its derivation with it
-        tdef.generated_columns = {
-            g: e for g, e in tdef.generated_columns.items()
-            if g not in column_names}
-        tdef.schema_json = T.StructType(
-            [f for f in schema.fields if f.name not in column_names]).json()
-        # purge the dropped columns' mapping entries — a stale
-        # logical->physical entry would resurrect dropped data under a
-        # later re-added column of the same name — and RETIRE their
-        # physical names: live files still physically contain those
-        # bytes, so re-admitting the name (mapped or not) would bind a
-        # future column to the dropped column's old values
-        retired = set(tdef.retired_columns)
-        for c in column_names:
-            phys = tdef.column_mapping.pop(c, c)
-            if phys not in retired:
-                retired.add(phys)
-                tdef.retired_columns.append(phys)
-        self.catalog.alter_table(txn, ns, tbl, tdef,
-                                 ActionType.TABLE_ALTER_REMOVE_COLUMNS,
-                                 {"column_names": list(column_names)})
-        self._finish(txn)
+                    f"cannot drop column(s) {hit}: referenced by the row "
+                    f"filter ({rf}); DROP ROW FILTER first")
+            for key, mexpr in list(tdef.properties.items()):
+                if not key.startswith("policy.mask."):
+                    continue
+                mcol = key.removeprefix("policy.mask.")
+                if mcol in column_names:
+                    tdef.properties = {k: v for k, v in
+                                       tdef.properties.items() if k != key}
+                    continue
+                hit = [c for c in column_names if self._expr_refs(mexpr, c)]
+                if hit:
+                    raise ValueError(
+                        f"cannot drop column(s) {hit}: referenced by the "
+                        f"mask on {mcol} ({mexpr}); DROP MASK first")
+            # dropping a generated column removes its derivation with it
+            tdef.generated_columns = {
+                g: e for g, e in tdef.generated_columns.items()
+                if g not in column_names}
+            tdef.schema_json = T.StructType(
+                [f for f in schema.fields if f.name not in column_names]).json()
+            # purge the dropped columns' mapping entries — a stale
+            # logical->physical entry would resurrect dropped data under a
+            # later re-added column of the same name — and RETIRE their
+            # physical names: live files still physically contain those
+            # bytes, so re-admitting the name (mapped or not) would bind a
+            # future column to the dropped column's old values
+            retired = set(tdef.retired_columns)
+            for c in column_names:
+                phys = tdef.column_mapping.pop(c, c)
+                if phys not in retired:
+                    retired.add(phys)
+                    tdef.retired_columns.append(phys)
+            self.catalog.alter_table(txn, ns, tbl, tdef,
+                                     ActionType.TABLE_ALTER_REMOVE_COLUMNS,
+                                     {"column_names": list(column_names)})
 
     def compact_table(self, name: str, min_files: int = 2,
                       zorder_by: list[str] | None = None,
@@ -4097,53 +4088,51 @@ class Engine:
         can't give. At 100 TB this is the difference between scanning a
         full table and a thin slab for the second/third filter column."""
         ns, tbl = self._split(name)
-        txn = self._txn()
-        tdef = self.catalog.describe_table(txn, ns, tbl)
-        self._require_native(tdef, name, "OPTIMIZE")
-        if zorder_by is not None and not 1 <= len(zorder_by) <= 4:
-            raise ValueError("ZORDER BY takes 1-4 columns")
-        if zorder_by and tdef.bucket_by:
-            # contradictory layouts: the bucketed writer re-distributes
-            # by the bucket hash, which would destroy the z-curve
-            # clustering in the same write — refuse rather than silently
-            # produce neither layout
-            raise ValueError(
-                f"OPTIMIZE ... ZORDER BY: {ns}.{tbl} is CLUSTERED BY "
-                f"{tdef.bucket_by['columns']} — the bucket layout and a "
-                f"z-order rewrite are mutually exclusive; drop one")
-        if target_files is not None and tdef.bucket_by:
-            # the bucketed writer emits one file per bucket regardless —
-            # honoring target_files is impossible, so refuse loudly
-            # (review r10 #5) instead of silently ignoring the knob
-            raise ValueError(
-                f"OPTIMIZE: {ns}.{tbl} is CLUSTERED BY — its file count "
-                f"is fixed at num_buckets="
-                f"{tdef.bucket_by['num_buckets']}; drop target_files")
-        old_paths = tdef.file_paths()
-        if not zorder_by and len(old_paths) < min_files:
-            self._finish(txn)
-            return 0
-        df = self._scan(tdef, old_paths)
-        total_bytes = sum(f.size_bytes for f in tdef.data_files
-                          if f.size_bytes > 0)
-        # ~128 MiB target files, at least 1
-        n_out = int(target_files or max(1, total_bytes // (128 << 20)))
-        if zorder_by:
-            df = self._zorder(df, tdef, zorder_by)
-            out_df = (df.repartitionByRange(n_out, F.col(_ZCOL))
-                      .sortWithinPartitions(_ZCOL).drop(_ZCOL))
-        elif tdef.bucket_by:
-            out_df = df      # the bucketed writer distributes itself
-        else:
-            out_df = df.coalesce(n_out)
-        new_files = self._write_files(out_df, ns, tbl, tdef.partition_by,
-                                      tdef=tdef)
-        self.catalog.update_table_files(
-            txn, ns, tbl, new_files, old_paths, ActionType.TABLE_UPDATE,
-            {"added": [f.path for f in new_files], "removed": old_paths,
-             "maintenance": ("zorder:" + ",".join(zorder_by)
-                             if zorder_by else "compaction")})
-        self._finish(txn)
+        with self._statement() as txn:
+            tdef = self.catalog.describe_table(txn, ns, tbl)
+            self._require_native(tdef, name, "OPTIMIZE")
+            if zorder_by is not None and not 1 <= len(zorder_by) <= 4:
+                raise ValueError("ZORDER BY takes 1-4 columns")
+            if zorder_by and tdef.bucket_by:
+                # contradictory layouts: the bucketed writer re-distributes
+                # by the bucket hash, which would destroy the z-curve
+                # clustering in the same write — refuse rather than silently
+                # produce neither layout
+                raise ValueError(
+                    f"OPTIMIZE ... ZORDER BY: {ns}.{tbl} is CLUSTERED BY "
+                    f"{tdef.bucket_by['columns']} — the bucket layout and a "
+                    f"z-order rewrite are mutually exclusive; drop one")
+            if target_files is not None and tdef.bucket_by:
+                # the bucketed writer emits one file per bucket regardless —
+                # honoring target_files is impossible, so refuse loudly
+                # (review r10 #5) instead of silently ignoring the knob
+                raise ValueError(
+                    f"OPTIMIZE: {ns}.{tbl} is CLUSTERED BY — its file count "
+                    f"is fixed at num_buckets="
+                    f"{tdef.bucket_by['num_buckets']}; drop target_files")
+            old_paths = tdef.file_paths()
+            if not zorder_by and len(old_paths) < min_files:
+                return 0
+            df = self._scan(tdef, old_paths)
+            total_bytes = sum(f.size_bytes for f in tdef.data_files
+                              if f.size_bytes > 0)
+            # ~128 MiB target files, at least 1
+            n_out = int(target_files or max(1, total_bytes // (128 << 20)))
+            if zorder_by:
+                df = self._zorder(df, tdef, zorder_by)
+                out_df = (df.repartitionByRange(n_out, F.col(_ZCOL))
+                          .sortWithinPartitions(_ZCOL).drop(_ZCOL))
+            elif tdef.bucket_by:
+                out_df = df      # the bucketed writer distributes itself
+            else:
+                out_df = df.coalesce(n_out)
+            new_files = self._write_files(out_df, ns, tbl, tdef.partition_by,
+                                          tdef=tdef)
+            self.catalog.update_table_files(
+                txn, ns, tbl, new_files, old_paths, ActionType.TABLE_UPDATE,
+                {"added": [f.path for f in new_files], "removed": old_paths,
+                 "maintenance": ("zorder:" + ",".join(zorder_by)
+                                 if zorder_by else "compaction")})
         return len(old_paths) - len(new_files)
 
     def _small_file_leaves(self, tdef: TableDef,
@@ -4177,70 +4166,68 @@ class Engine:
         OPTIMIZE/compact_table command. One versioned commit; returns
         the net file-count reduction (0 = nothing worth packing)."""
         ns, tbl = self._split(name)
-        txn = self._txn()
-        tdef = self.catalog.describe_table(txn, ns, tbl)
-        self._require_native(tdef, name, "compact_small_files")
-        floor = int(floor_bytes if floor_bytes is not None
-                    else tdef.properties.get("auto.compact.file_floor",
-                                             str(32 << 20)))
-        budget = int(budget_bytes if budget_bytes is not None
-                     else tdef.properties.get("auto.compact.max_bytes",
-                                              str(2 << 30)))
-        if tdef.bucket_by:
-            return self._compact_bucketed(txn, ns, tbl, tdef, floor,
-                                          budget)
-        small = [f for f in tdef.data_files
-                 if not os.path.isabs(f.path) and f.size_bytes < floor]
-        # group FIRST, drop unpackable single-file leaves, THEN spend
-        # the budget on whole leaves — budget consumed by unpackable
-        # singles would make every run a no-op while the trigger keeps
-        # firing (the exact loop the packable-count probe prevents)
-        all_leaves = {k: g for k, g in
-                      self._small_file_leaves(tdef, small).items()
-                      if len(g) >= 2}
-        eras: dict[tuple, list] = {}
-        cum = 0
-        for key, group in sorted(
-                all_leaves.items(),
-                key=lambda kv: (sum(f.size_bytes for f in kv[1]),
-                                kv[0])):
-            g = sorted(group, key=lambda f: (f.size_bytes, f.path))
-            take, tb = [], 0
-            for f in g:
-                if len(take) >= 2 and cum + tb + f.size_bytes > budget:
-                    break               # leaf partially packs this run
-                take.append(f)
-                tb += f.size_bytes
-            if len(take) < 2:
-                if eras:
-                    break               # budget exhausted
-                take = g[:2]            # progress guarantee: pack ≥2
-                tb = sum(f.size_bytes for f in take)
-            eras[key] = take
-            cum += tb
-            if cum >= budget:
-                break
-        inv = {p: l for l, p in tdef.column_mapping.items()}
-        old_paths: list[str] = []
-        new_files: list[DataFile] = []
-        for (era, _vals), group in sorted(eras.items()):
-            if len(group) < 2:     # nothing to pack in this hive leaf
-                continue
-            paths = [f.path for f in group]
-            df = self._scan(tdef, paths)
-            n_out = max(1, sum(f.size_bytes for f in group) // (128 << 20))
-            new_files += self._write_files(
-                df.coalesce(int(n_out)), ns, tbl,
-                [inv.get(c, c) for c in era], tdef=tdef)
-            old_paths += paths
-        if not old_paths:
-            self._finish(txn)
-            return 0
-        self.catalog.update_table_files(
-            txn, ns, tbl, new_files, old_paths, ActionType.TABLE_UPDATE,
-            {"added": [f.path for f in new_files], "removed": old_paths,
-             "maintenance": "compact-small-files"})
-        self._finish(txn)
+        with self._statement() as txn:
+            tdef = self.catalog.describe_table(txn, ns, tbl)
+            self._require_native(tdef, name, "compact_small_files")
+            floor = int(floor_bytes if floor_bytes is not None
+                        else tdef.properties.get("auto.compact.file_floor",
+                                                 str(32 << 20)))
+            budget = int(budget_bytes if budget_bytes is not None
+                         else tdef.properties.get("auto.compact.max_bytes",
+                                                  str(2 << 30)))
+            if tdef.bucket_by:
+                return self._compact_bucketed(txn, ns, tbl, tdef, floor,
+                                              budget)
+            small = [f for f in tdef.data_files
+                     if not os.path.isabs(f.path) and f.size_bytes < floor]
+            # group FIRST, drop unpackable single-file leaves, THEN spend
+            # the budget on whole leaves — budget consumed by unpackable
+            # singles would make every run a no-op while the trigger keeps
+            # firing (the exact loop the packable-count probe prevents)
+            all_leaves = {k: g for k, g in
+                          self._small_file_leaves(tdef, small).items()
+                          if len(g) >= 2}
+            eras: dict[tuple, list] = {}
+            cum = 0
+            for key, group in sorted(
+                    all_leaves.items(),
+                    key=lambda kv: (sum(f.size_bytes for f in kv[1]),
+                                    kv[0])):
+                g = sorted(group, key=lambda f: (f.size_bytes, f.path))
+                take, tb = [], 0
+                for f in g:
+                    if len(take) >= 2 and cum + tb + f.size_bytes > budget:
+                        break               # leaf partially packs this run
+                    take.append(f)
+                    tb += f.size_bytes
+                if len(take) < 2:
+                    if eras:
+                        break               # budget exhausted
+                    take = g[:2]            # progress guarantee: pack ≥2
+                    tb = sum(f.size_bytes for f in take)
+                eras[key] = take
+                cum += tb
+                if cum >= budget:
+                    break
+            inv = {p: l for l, p in tdef.column_mapping.items()}
+            old_paths: list[str] = []
+            new_files: list[DataFile] = []
+            for (era, _vals), group in sorted(eras.items()):
+                if len(group) < 2:     # nothing to pack in this hive leaf
+                    continue
+                paths = [f.path for f in group]
+                df = self._scan(tdef, paths)
+                n_out = max(1, sum(f.size_bytes for f in group) // (128 << 20))
+                new_files += self._write_files(
+                    df.coalesce(int(n_out)), ns, tbl,
+                    [inv.get(c, c) for c in era], tdef=tdef)
+                old_paths += paths
+            if not old_paths:
+                return 0
+            self.catalog.update_table_files(
+                txn, ns, tbl, new_files, old_paths, ActionType.TABLE_UPDATE,
+                {"added": [f.path for f in new_files], "removed": old_paths,
+                 "maintenance": "compact-small-files"})
         return len(old_paths) - len(new_files)
 
     def _bucket_pack_dirs(self, tdef: TableDef,
@@ -4276,7 +4263,6 @@ class Engine:
             take.append(d)
             cum += b
         if len(take) < 2:
-            self._finish(txn)
             return 0
         paths = [f.path for f in tdef.data_files
                  if self._dir_of(f.path) in set(take)]
@@ -4287,7 +4273,6 @@ class Engine:
             txn, ns, tbl, new_files, paths, ActionType.TABLE_UPDATE,
             {"added": [f.path for f in new_files], "removed": paths,
              "maintenance": "compact-small-files"})
-        self._finish(txn)
         return len(paths) - len(new_files)
 
     def _zorder(self, df: DataFrame, tdef: TableDef,
@@ -4359,46 +4344,45 @@ class Engine:
         (partial aggregation, one tiny result row to the driver) is
         unchanged."""
         ns, tbl = self._split(name)
-        txn = self._txn()
-        tdef = self.catalog.describe_table(txn, ns, tbl)
-        schema = tdef.spark_schema()
-        names = [f.name for f in schema.fields]
-        if columns:
-            missing = set(columns) - set(names)
-            if missing:
-                raise ValueError(f"no such columns: {sorted(missing)}")
-        else:
-            columns = names
-        numeric = {f.name for f in schema.fields
-                   if isinstance(f.dataType, (
-                       T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-                       T.FloatType, T.DoubleType, T.DecimalType))}
-        # MOR pointers: stats must describe the NET rows, not the raw
-        # files (review r12 pass-2 — ANALYZE reported 15 where SELECT
-        # correctly returns 12)
-        df = self._mor_scan(tdef) or self._scan(tdef, tdef.file_paths())
-        aggs = [F.count("*").alias("__n")]
-        for c in columns:
-            aggs.append(F.countDistinct(c).alias(f"{c}__ndv"))
-            aggs.append(F.sum(F.when(F.col(c).isNull(), 1).otherwise(0))
-                        .cast("long").alias(f"{c}__nulls"))
-            if c in numeric:
-                aggs.append(F.min(F.col(c).cast("double"))
-                            .alias(f"{c}__min"))
-                aggs.append(F.max(F.col(c).cast("double"))
-                            .alias(f"{c}__max"))
-        row = df.agg(*aggs).first()     # one stats row — catalog metadata
-        stats: dict = {"row_count": int(row["__n"]), "columns": {}}
-        for c in columns:
-            ent = {"n_distinct": int(row[f"{c}__ndv"]),
-                   "n_nulls": int(row[f"{c}__nulls"] or 0)}
-            if c in numeric:
-                ent["min"] = row[f"{c}__min"]
-                ent["max"] = row[f"{c}__max"]
-            stats["columns"][c] = ent
-        tdef.properties[self._STATS_PROP] = json.dumps(stats, sort_keys=True)
-        self.catalog.alter_table(txn, ns, tbl, self._persistable(tdef))
-        self._finish(txn)
+        with self._statement() as txn:
+            tdef = self.catalog.describe_table(txn, ns, tbl)
+            schema = tdef.spark_schema()
+            names = [f.name for f in schema.fields]
+            if columns:
+                missing = set(columns) - set(names)
+                if missing:
+                    raise ValueError(f"no such columns: {sorted(missing)}")
+            else:
+                columns = names
+            numeric = {f.name for f in schema.fields
+                       if isinstance(f.dataType, (
+                           T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+                           T.FloatType, T.DoubleType, T.DecimalType))}
+            # MOR pointers: stats must describe the NET rows, not the raw
+            # files (review r12 pass-2 — ANALYZE reported 15 where SELECT
+            # correctly returns 12)
+            df = self._mor_scan(tdef) or self._scan(tdef, tdef.file_paths())
+            aggs = [F.count("*").alias("__n")]
+            for c in columns:
+                aggs.append(F.countDistinct(c).alias(f"{c}__ndv"))
+                aggs.append(F.sum(F.when(F.col(c).isNull(), 1).otherwise(0))
+                            .cast("long").alias(f"{c}__nulls"))
+                if c in numeric:
+                    aggs.append(F.min(F.col(c).cast("double"))
+                                .alias(f"{c}__min"))
+                    aggs.append(F.max(F.col(c).cast("double"))
+                                .alias(f"{c}__max"))
+            row = df.agg(*aggs).first()     # one stats row — catalog metadata
+            stats: dict = {"row_count": int(row["__n"]), "columns": {}}
+            for c in columns:
+                ent = {"n_distinct": int(row[f"{c}__ndv"]),
+                       "n_nulls": int(row[f"{c}__nulls"] or 0)}
+                if c in numeric:
+                    ent["min"] = row[f"{c}__min"]
+                    ent["max"] = row[f"{c}__max"]
+                stats["columns"][c] = ent
+            tdef.properties[self._STATS_PROP] = json.dumps(stats, sort_keys=True)
+            self.catalog.alter_table(txn, ns, tbl, self._persistable(tdef))
         return stats
 
     @staticmethod
@@ -4429,8 +4413,8 @@ class Engine:
         """``SHOW STATS [FOR] ns.tbl`` — the recorded ANALYZE output as a
         relation (numeric min/max NULL for non-numeric columns)."""
         ns, tbl = self._split(name)
-        txn = self._txn()
-        tdef = self.catalog.describe_table(txn, ns, tbl)
+        with self._statement() as txn:
+            tdef = self.catalog.describe_table(txn, ns, tbl)
         raw = tdef.properties.get(self._STATS_PROP)
         if raw is None:
             raise ValueError(
@@ -4761,38 +4745,37 @@ class Engine:
                     replace: bool = False,
                     schema_binding: bool = False) -> None:
         ns, view = self._split(name)
-        txn = self._txn()
-        df = self._query(sql_text, txn)
-        schema = df.schema
-        # the Spark-native analogue of the reference's substrait payload
-        # (proto/objects.proto:81-85): the ANALYZED Catalyst plan — a
-        # resolved engine-level IR of the view query at creation time
-        try:
-            plan_ir = df._jdf.queryExecution().analyzed().toJSON()
-        except Exception:       # classic-mode internals; never block DDL
-            plan_ir = ""
-        refs = sorted(self._referenced_tables(sql_text, txn))
-        props: dict = {}
-        sub = self._substrait_payload_for(sql_text, txn)
-        if sub:
-            # outbound interop: a simple single-table projection also
-            # gets a GENUINE ReadRel payload (named-table + base
-            # schema, catalog/substrait.py), so a binpb view def we
-            # write is executable by the Java reference's
-            # SubstraitUtil — not just carried. Complex views keep the
-            # SQL-text/IR extension only (documented deviation).
-            import base64 as _b64
-            from olympia_spark.catalog.proto_io import _EXT_SUBSTRAIT
-            props[_EXT_SUBSTRAIT] = _b64.b64encode(sub).decode()
-        self.catalog.create_view(txn, ns, view, ViewDef(
-            sql_text=sql_text, plan_ir_json=plan_ir,
-            schema_json=schema.json(),
-            default_namespace=ns,
-            referenced_objects=[f"{n}.{t}" for n, t in refs],
-            schema_binding=schema_binding,
-            properties=props),
-            replace=replace)
-        self._finish(txn)
+        with self._statement() as txn:
+            df = self._query(sql_text, txn)
+            schema = df.schema
+            # the Spark-native analogue of the reference's substrait payload
+            # (proto/objects.proto:81-85): the ANALYZED Catalyst plan — a
+            # resolved engine-level IR of the view query at creation time
+            try:
+                plan_ir = df._jdf.queryExecution().analyzed().toJSON()
+            except Exception:       # classic-mode internals; never block DDL
+                plan_ir = ""
+            refs = sorted(self._referenced_tables(sql_text, txn))
+            props: dict = {}
+            sub = self._substrait_payload_for(sql_text, txn)
+            if sub:
+                # outbound interop: a simple single-table projection also
+                # gets a GENUINE ReadRel payload (named-table + base
+                # schema, catalog/substrait.py), so a binpb view def we
+                # write is executable by the Java reference's
+                # SubstraitUtil — not just carried. Complex views keep the
+                # SQL-text/IR extension only (documented deviation).
+                import base64 as _b64
+                from olympia_spark.catalog.proto_io import _EXT_SUBSTRAIT
+                props[_EXT_SUBSTRAIT] = _b64.b64encode(sub).decode()
+            self.catalog.create_view(txn, ns, view, ViewDef(
+                sql_text=sql_text, plan_ir_json=plan_ir,
+                schema_json=schema.json(),
+                default_namespace=ns,
+                referenced_objects=[f"{n}.{t}" for n, t in refs],
+                schema_binding=schema_binding,
+                properties=props),
+                replace=replace)
 
     def _substrait_payload_for(self, sql_text: str,
                                txn: Transaction) -> bytes | None:
@@ -4848,8 +4831,10 @@ class Engine:
         tables is cast back to the bound column types, and a structural
         change (renamed/added/dropped columns) is an error instead of
         silently changing the view's shape."""
+        if txn is None:
+            with self._statement() as txn:
+                return self.read_view(name, txn)
         ns, view = self._split(name)
-        txn = txn or self._txn()
         vdef = self.catalog.describe_view(txn, ns, view)
         if not vdef.sql_text:
             # reference-authored view: no SQL-text extension, only the
@@ -5040,75 +5025,74 @@ class Engine:
                 "transaction (the refresh watermark must be a committed "
                 "catalog version)")
         ns, tbl = self._split(name)
-        txn = self._txn()
-        refs = sorted(self._referenced_tables(sql_text, txn))
-        if (ns, tbl) in refs:
-            raise ValueError(
-                f"materialized view {ns}.{tbl} cannot reference itself")
-        tables, view_texts = self._mv_expand_sources(refs, txn)
-        if (ns, tbl) in tables:
-            # view-mediated self-reference: the query reads a VIEW that
-            # reads this MV (only possible under OR REPLACE) — the MV's
-            # own refresh rewrite would register as a source change and
-            # full-recompute a self-compounding result forever
-            # (review r12 s2 pass 2, reproduced)
-            raise ValueError(
-                f"materialized view {ns}.{tbl} cannot reference itself "
-                f"(reached through a referenced view)")
-        if not tables:
-            raise ValueError(
-                "a materialized view must reference at least one "
-                "catalog table")
-        # AVG decomposition (VERDICT r12 #3): if the query is
-        # incrementally maintainable and carries AVG aggregates,
-        # materialize hidden SUM/COUNT companion columns alongside —
-        # see _mv_companions; the declared schema excludes them
-        srcs = sorted(f"{n}.{t}" for n, t in tables)
-        cplan = self._mv_plan(sql_text, srcs, txn)
-        df = self._query(self._mv_augmented_sql(cplan) or sql_text, txn)
-        rogue = [] if cplan else [f.name for f in df.schema.fields
-                                  if f.name.startswith("__mv_")]
-        if rogue:
-            # the declared-schema strip below would silently DROP a
-            # user column named __mv_* on non-incrementalizable queries
-            # (_mv_plan refuses any __mv_ text, so with a plan every
-            # such column is a companion — r13 review pass 3); refuse
-            raise ValueError(
-                f"materialized view output column(s) {rogue}: the "
-                f"__mv_ name prefix is reserved for internal companion "
-                f"columns")
-        declared = T.StructType([f for f in df.schema.fields
-                                 if not f.name.startswith("__mv_")])
-        if self.catalog.table_exists(txn, ns, tbl):
-            if not replace:
-                raise ValueError(f"table {ns}.{tbl} already exists")
-            old = self.catalog.describe_table(txn, ns, tbl)
-            if not old.properties.get(self._MV_QUERY_PROP):
+        with self._statement() as txn:
+            refs = sorted(self._referenced_tables(sql_text, txn))
+            if (ns, tbl) in refs:
                 raise ValueError(
-                    f"{ns}.{tbl} exists and is not a materialized view")
-            self.catalog.drop_table(txn, ns, tbl)
-        if cplan and cplan.having_out:
-            # HAVING lane (VERDICT r14 #5): the augmented query above
-            # ran WITHOUT the HAVING, so the files keep all groups; the
-            # rewritten predicate persists as a def property the read
-            # chokepoint applies. Validate it NOW against the computed
-            # frame — a screen-passing but unanalyzable predicate must
-            # fail the CREATE, not the first read.
-            df.filter(F.expr(cplan.having_out))
-        tdef = TableDef(
-            schema_json=declared.json(),
-            properties={
-                self._MV_QUERY_PROP: sql_text,
-                **self._mv_stamp(txn.base_version,
-                                 [f"{n}.{t}" for n, t in refs], tables,
-                                 view_texts, self._session_tz(), cplan),
-            })
-        self.catalog.create_table(txn, ns, tbl, tdef)
-        files = self._write_files(df, ns, tbl, [], tdef=tdef)
-        self.catalog.update_table_files(
-            txn, ns, tbl, files, [], ActionType.TABLE_INSERT,
-            {"added": [f.path for f in files]})
-        self._finish(txn)
+                    f"materialized view {ns}.{tbl} cannot reference itself")
+            tables, view_texts = self._mv_expand_sources(refs, txn)
+            if (ns, tbl) in tables:
+                # view-mediated self-reference: the query reads a VIEW that
+                # reads this MV (only possible under OR REPLACE) — the MV's
+                # own refresh rewrite would register as a source change and
+                # full-recompute a self-compounding result forever
+                # (review r12 s2 pass 2, reproduced)
+                raise ValueError(
+                    f"materialized view {ns}.{tbl} cannot reference itself "
+                    f"(reached through a referenced view)")
+            if not tables:
+                raise ValueError(
+                    "a materialized view must reference at least one "
+                    "catalog table")
+            # AVG decomposition (VERDICT r12 #3): if the query is
+            # incrementally maintainable and carries AVG aggregates,
+            # materialize hidden SUM/COUNT companion columns alongside —
+            # see _mv_companions; the declared schema excludes them
+            srcs = sorted(f"{n}.{t}" for n, t in tables)
+            cplan = self._mv_plan(sql_text, srcs, txn)
+            df = self._query(self._mv_augmented_sql(cplan) or sql_text, txn)
+            rogue = [] if cplan else [f.name for f in df.schema.fields
+                                      if f.name.startswith("__mv_")]
+            if rogue:
+                # the declared-schema strip below would silently DROP a
+                # user column named __mv_* on non-incrementalizable queries
+                # (_mv_plan refuses any __mv_ text, so with a plan every
+                # such column is a companion — r13 review pass 3); refuse
+                raise ValueError(
+                    f"materialized view output column(s) {rogue}: the "
+                    f"__mv_ name prefix is reserved for internal companion "
+                    f"columns")
+            declared = T.StructType([f for f in df.schema.fields
+                                     if not f.name.startswith("__mv_")])
+            if self.catalog.table_exists(txn, ns, tbl):
+                if not replace:
+                    raise ValueError(f"table {ns}.{tbl} already exists")
+                old = self.catalog.describe_table(txn, ns, tbl)
+                if not old.properties.get(self._MV_QUERY_PROP):
+                    raise ValueError(
+                        f"{ns}.{tbl} exists and is not a materialized view")
+                self.catalog.drop_table(txn, ns, tbl)
+            if cplan and cplan.having_out:
+                # HAVING lane (VERDICT r14 #5): the augmented query above
+                # ran WITHOUT the HAVING, so the files keep all groups; the
+                # rewritten predicate persists as a def property the read
+                # chokepoint applies. Validate it NOW against the computed
+                # frame — a screen-passing but unanalyzable predicate must
+                # fail the CREATE, not the first read.
+                df.filter(F.expr(cplan.having_out))
+            tdef = TableDef(
+                schema_json=declared.json(),
+                properties={
+                    self._MV_QUERY_PROP: sql_text,
+                    **self._mv_stamp(txn.base_version,
+                                     [f"{n}.{t}" for n, t in refs], tables,
+                                     view_texts, self._session_tz(), cplan),
+                })
+            self.catalog.create_table(txn, ns, tbl, tdef)
+            files = self._write_files(df, ns, tbl, [], tdef=tdef)
+            self.catalog.update_table_files(
+                txn, ns, tbl, files, [], ActionType.TABLE_INSERT,
+                {"added": [f.path for f in files]})
 
     def _mv_stamp(self, version: int, refs: list[str], tables: set,
                   view_texts: dict, tz: str,
@@ -5175,340 +5159,339 @@ class Engine:
                 "transaction (uncommitted source writes would be read "
                 "now and replayed by the next refresh)")
         ns, tbl = self._split(name)
-        txn = self._txn()
-        tdef = self.catalog.describe_table(txn, ns, tbl)
-        q = tdef.properties.get(self._MV_QUERY_PROP)
-        if not q:
-            raise ValueError(f"{ns}.{tbl} is not a materialized view")
-        last = int(tdef.properties[self._MV_VERSION_PROP])
-        cur = txn.base_version
-        sources = json.loads(
-            tdef.properties.get(self._MV_SOURCES_PROP, "[]"))
+        with self._statement() as txn:
+            tdef = self.catalog.describe_table(txn, ns, tbl)
+            q = tdef.properties.get(self._MV_QUERY_PROP)
+            if not q:
+                raise ValueError(f"{ns}.{tbl} is not a materialized view")
+            last = int(tdef.properties[self._MV_VERSION_PROP])
+            cur = txn.base_version
+            sources = json.loads(
+                tdef.properties.get(self._MV_SOURCES_PROP, "[]"))
 
-        def report(mode: str, n: int) -> DataFrame:
-            self._finish(txn)
-            return self._local_df(
-                [(mode, n)], "mode string, delta_rows long")
+            def report(mode: str, n: int) -> DataFrame:
+                return self._local_df(
+                    [(mode, n)], "mode string, delta_rows long")
 
-        if cur <= last and not full:
-            # degenerate guard only: the watermark is the version the
-            # refresh READ (its own commit lands later), so after ANY
-            # rewrite cur > last and the steady-state noop path is the
-            # metadata probe below — O(sources) describes, commits
-            # nothing (r13 review pass 4 corrected the earlier claim
-            # that this branch short-circuits repeat refreshes). FULL
-            # always recomputes — the user's override for every change
-            # the probe cannot see.
-            return report("noop", 0)
+            if cur <= last and not full:
+                # degenerate guard only: the watermark is the version the
+                # refresh READ (its own commit lands later), so after ANY
+                # rewrite cur > last and the steady-state noop path is the
+                # metadata probe below — O(sources) describes, commits
+                # nothing (r13 review pass 4 corrected the earlier claim
+                # that this branch short-circuits repeat refreshes). FULL
+                # always recomputes — the user's override for every change
+                # the probe cannot see.
+                return report("noop", 0)
 
-        # metadata-only change probe: per-source SIGNATURE diff — the
-        # signature is (file list, policy props): a row-filter/mask
-        # change alters what the stored query returns without touching
-        # a single data file (review r12 s2 — the governance leak).
-        # Referenced views re-expand and re-hash first: a redefined
-        # view (or one re-pointed at different tables) is likewise
-        # invisible to file diffs.
-        # legacy MVs (persisted before mv.refs existed) fall back to
-        # the table sources as the direct refs — their expansion is the
-        # identity, so an unchanged legacy MV still noops; the rewrite
-        # stamp below backfills all three props (review r12 s2 pass 2)
-        refs_raw = json.loads(
-            tdef.properties.get(self._MV_REFS_PROP, "null")) or sources
-        stored_hash = tdef.properties.get(self._MV_VIEWS_PROP)
-        cur_tz = self._session_tz()
+            # metadata-only change probe: per-source SIGNATURE diff — the
+            # signature is (file list, policy props): a row-filter/mask
+            # change alters what the stored query returns without touching
+            # a single data file (review r12 s2 — the governance leak).
+            # Referenced views re-expand and re-hash first: a redefined
+            # view (or one re-pointed at different tables) is likewise
+            # invisible to file diffs.
+            # legacy MVs (persisted before mv.refs existed) fall back to
+            # the table sources as the direct refs — their expansion is the
+            # identity, so an unchanged legacy MV still noops; the rewrite
+            # stamp below backfills all three props (review r12 s2 pass 2)
+            refs_raw = json.loads(
+                tdef.properties.get(self._MV_REFS_PROP, "null")) or sources
+            stored_hash = tdef.properties.get(self._MV_VIEWS_PROP)
+            cur_tz = self._session_tz()
 
-        # files_changed → incremental candidate; force_full → the
-        # change is NOT representable as a data delta (policy flip,
-        # view redefinition, source-set drift, expired roots): the
-        # stored rows were materialized under the OLD semantics, so
-        # only a recompute is sound — an "empty delta" incremental
-        # merge would silently keep them (review r12 s2)
-        files_changed, force_full = [], False
-        sig_now: dict[str, tuple] = {}
-        tables_now, vtexts_now = set(), {}
-        if tdef.properties.get(self._MV_TZ_PROP) != cur_tz:
-            # session-timezone drift (or a legacy MV without the stamp):
-            # _MV_SAFE_WORDS admits zone-dependent functions (to_date,
-            # date_format, date_trunc on strings) — evaluating the delta
-            # under the NEW zone and merging into stored rows computed
-            # under the OLD one would mix semantics in one MV with no
-            # probe signal (ADVICE r12); recompute whole under the
-            # current zone and restamp
-            force_full = True
-        try:
-            tables_now, vtexts_now = self._mv_expand_sources(
-                [self._split(r) for r in refs_raw], txn)
-            if (sorted(f"{t[0]}.{t[1]}" for t in tables_now) != sorted(sources)
-                    or (stored_hash is not None
-                        and self._mv_view_hash(vtexts_now) != stored_hash)):
+            # files_changed → incremental candidate; force_full → the
+            # change is NOT representable as a data delta (policy flip,
+            # view redefinition, source-set drift, expired roots): the
+            # stored rows were materialized under the OLD semantics, so
+            # only a recompute is sound — an "empty delta" incremental
+            # merge would silently keep them (review r12 s2)
+            files_changed, force_full = [], False
+            sig_now: dict[str, tuple] = {}
+            tables_now, vtexts_now = set(), {}
+            if tdef.properties.get(self._MV_TZ_PROP) != cur_tz:
+                # session-timezone drift (or a legacy MV without the stamp):
+                # _MV_SAFE_WORDS admits zone-dependent functions (to_date,
+                # date_format, date_trunc on strings) — evaluating the delta
+                # under the NEW zone and merging into stored rows computed
+                # under the OLD one would mix semantics in one MV with no
+                # probe signal (ADVICE r12); recompute whole under the
+                # current zone and restamp
                 force_full = True
-            else:
-                t_last = self.catalog.at_version(last)
-                for s in sources:
-                    sns, stbl = self._split(s)
-                    td0 = self.catalog.describe_table(t_last, sns, stbl)
-                    td1 = self.catalog.describe_table(txn, sns, stbl)
-                    sig_now[s] = self._mv_semantic_sig(td1)
-                    if self._mv_semantic_sig(td0) != sig_now[s]:
-                        force_full = True
-                    # a TIME-DEPENDENT policy expression (a row filter
-                    # with current_date(), say) invalidates stored rows
-                    # between refreshes with an UNCHANGED signature and
-                    # no retraction events (rows age out of untouched
-                    # files) — only a recompute, which re-evaluates the
-                    # policy now, is sound (r13 review pass 3). Screen
-                    # with the same whitelist as the query: any
-                    # unrecognized call/identifier forces full.
-                    pcols = {f.name.lower()
-                             for f in td1.spark_schema().fields}
-                    for _k, pexpr in self._policy_props(td1.properties):
-                        if not self._mv_screen(pexpr, pcols, set()):
+            try:
+                tables_now, vtexts_now = self._mv_expand_sources(
+                    [self._split(r) for r in refs_raw], txn)
+                if (sorted(f"{t[0]}.{t[1]}" for t in tables_now) != sorted(sources)
+                        or (stored_hash is not None
+                            and self._mv_view_hash(vtexts_now) != stored_hash)):
+                    force_full = True
+                else:
+                    t_last = self.catalog.at_version(last)
+                    for s in sources:
+                        sns, stbl = self._split(s)
+                        td0 = self.catalog.describe_table(t_last, sns, stbl)
+                        td1 = self.catalog.describe_table(txn, sns, stbl)
+                        sig_now[s] = self._mv_semantic_sig(td1)
+                        if self._mv_semantic_sig(td0) != sig_now[s]:
                             force_full = True
-                    if sorted(td0.file_paths()) != sorted(td1.file_paths()):
-                        files_changed.append(s)
-        except Exception:
-            # expired root / renamed source — the full lane re-derives
-            force_full = True
-        if (ns, tbl) in tables_now:
-            # a referenced view was REPOINTED at this MV after creation
-            # — a refresh would recompute the MV from its own previous
-            # output and compound a wrong result forever (review r12 s2
-            # pass 3, reproduced); refuse loudly, OUTSIDE the probe's
-            # catch-and-downgrade
-            raise ValueError(
-                f"materialized view {ns}.{tbl}: its dependency graph "
-                f"now reaches itself (a referenced view was redefined "
-                f"over the MV); repoint the view or drop and recreate "
-                f"the MV")
-        if not files_changed and not force_full and not full:
-            # COMMIT NOTHING: stamping the watermark here would itself
-            # advance the catalog version, so every no-op refresh would
-            # re-probe forever (and pile up metadata commits). THIS
-            # probe — O(sources) metadata reads — IS the steady-state
-            # noop path: the stamped watermark is the version the
-            # refresh READ, so the MV's own commit keeps cur > last
-            # forever and the cheap cur<=last guard above stays
-            # degenerate (stamping the post-commit version instead
-            # would SKIP any source commit that landed between the
-            # read and the CAS — the data-loss case the concurrent-
-            # append test pins).
-            return report("noop", 0)
-        cplan = self._mv_plan(q, sources, txn)
-        plan = None if (full or force_full) else cplan
-        changed = {s.lower() for s in files_changed}
-        if plan is not None and plan.lane == "join":
-            # INNER chains take ANY subset of changed sides (VERDICT
-            # r14 #3): the joined relation is multilinear, so the
-            # full delta telescopes into one term per changed slot —
-            # see the expansion at the apply site below. LEFT joins
-            # keep the one-sided rule: only the PRESERVED side may be
-            # the delta (a dim-side append would need to RETRACT
-            # previously NULL-padded rows, which no additive delta can
-            # express), and the two-sided expansion's cross-term fold
-            # is not NULL-padding-safe either.
-            if plan.join["conds"][0][0] == "left" and (
-                    changed != {plan.join["slots"][0][0].lower()}):
-                plan = None
-        stored = None
-        if plan is not None:
-            # companions + the row count live OUTSIDE the declared
-            # schema — read the MV's files RAW (engine-written plain
-            # parquet, never mapped/bucketed/partitioned). A legacy MV
-            # whose files predate the companion set (or the r14 row
-            # count) lacks them → full recompute this once, which
-            # writes them back via the augmented query
-            comp_cols = [c for pair in self._mv_companions(plan)
-                         for c in pair[:2]] + [self._MV_ROWCNT]
-            if tdef.file_paths():
-                stored = self._parquet_read(
-                    None, tuple(self._scan_uris(tdef.file_paths())))
-                if not set(comp_cols) <= set(stored.columns):
-                    plan, stored = None, None
-            else:  # empty materialization — trivially recompute whole
-                plan = None
-        deltas: dict[str, DataFrame] = {}
-        feed_counts: dict[str, int] = {}
-        has_minmax = plan is not None and any(
-            k in ("MIN", "MAX") for k, _i, _o in plan.aggs)
-        minmax_scoped = False
-        try:
+                        # a TIME-DEPENDENT policy expression (a row filter
+                        # with current_date(), say) invalidates stored rows
+                        # between refreshes with an UNCHANGED signature and
+                        # no retraction events (rows age out of untouched
+                        # files) — only a recompute, which re-evaluates the
+                        # policy now, is sound (r13 review pass 3). Screen
+                        # with the same whitelist as the query: any
+                        # unrecognized call/identifier forces full.
+                        pcols = {f.name.lower()
+                                 for f in td1.spark_schema().fields}
+                        for _k, pexpr in self._policy_props(td1.properties):
+                            if not self._mv_screen(pexpr, pcols, set()):
+                                force_full = True
+                        if sorted(td0.file_paths()) != sorted(td1.file_paths()):
+                            files_changed.append(s)
+            except Exception:
+                # expired root / renamed source — the full lane re-derives
+                force_full = True
+            if (ns, tbl) in tables_now:
+                # a referenced view was REPOINTED at this MV after creation
+                # — a refresh would recompute the MV from its own previous
+                # output and compound a wrong result forever (review r12 s2
+                # pass 3, reproduced); refuse loudly, OUTSIDE the probe's
+                # catch-and-downgrade
+                raise ValueError(
+                    f"materialized view {ns}.{tbl}: its dependency graph "
+                    f"now reaches itself (a referenced view was redefined "
+                    f"over the MV); repoint the view or drop and recreate "
+                    f"the MV")
+            if not files_changed and not force_full and not full:
+                # COMMIT NOTHING: stamping the watermark here would itself
+                # advance the catalog version, so every no-op refresh would
+                # re-probe forever (and pile up metadata commits). THIS
+                # probe — O(sources) metadata reads — IS the steady-state
+                # noop path: the stamped watermark is the version the
+                # refresh READ, so the MV's own commit keeps cur > last
+                # forever and the cheap cur<=last guard above stays
+                # degenerate (stamping the post-commit version instead
+                # would SKIP any source commit that landed between the
+                # read and the CAS — the data-loss case the concurrent-
+                # append test pins).
+                return report("noop", 0)
+            cplan = self._mv_plan(q, sources, txn)
+            plan = None if (full or force_full) else cplan
+            changed = {s.lower() for s in files_changed}
+            if plan is not None and plan.lane == "join":
+                # INNER chains take ANY subset of changed sides (VERDICT
+                # r14 #3): the joined relation is multilinear, so the
+                # full delta telescopes into one term per changed slot —
+                # see the expansion at the apply site below. LEFT joins
+                # keep the one-sided rule: only the PRESERVED side may be
+                # the delta (a dim-side append would need to RETRACT
+                # previously NULL-padded rows, which no additive delta can
+                # express), and the two-sided expansion's cross-term fold
+                # is not NULL-padding-safe either.
+                if plan.join["conds"][0][0] == "left" and (
+                        changed != {plan.join["slots"][0][0].lower()}):
+                    plan = None
+            stored = None
             if plan is not None:
-                # persist: each changed source's feed is consumed by the
-                # retraction probe (MIN/MAX plans only), the count and
-                # the delta aggregation — O(changed files) rows, cached
-                # once, RELEASED in the finally below, which must also
-                # cover the probe itself: a probe count that throws
-                # (scan failure, expired files) would otherwise leak the
-                # persisted DataFrame for the session lifetime (ADVICE
-                # r12; localCheckpoint leaks likewise, r12 s2 pass 6).
-                # Feed cardinalities come from metadata when the diff
-                # is structurally one-sided and unfiltered
-                # (_feed_counts_meta — parquet footer counts, ZERO
-                # jobs); otherwise ONE aggregate per feed returns
-                # (event count, delete count) together — it
-                # materializes the persist and replaces both the old
-                # delete probe (filter(...).limit(1).count(), whose
-                # executeTake ramp ran several sequential mini-jobs
-                # against the not-yet-cached feed — measured 0.63s vs
-                # 0.13s for a plain count at sf0.1) and the later
-                # per-feed d.count() for the report (guide §1.4/§2.4:
-                # one pass, not three).
-                for s in sorted(set(files_changed)):
-                    d = self.table_changes(s, last, cur).persist()
-                    deltas[s] = d
-                    fmeta = self._feed_counts_meta(s, last, cur)
-                    if fmeta["n_inserts"] is not None:
-                        feed_counts[s] = (fmeta["n_inserts"]
-                                          + fmeta["n_deletes"])
-                        n_del = fmeta["n_deletes"]
-                    elif not has_minmax:
-                        # the count is only needed for the REPORT (the
-                        # delete probe below is MIN/MAX-only) — defer it
-                        # to after the rewrite, whose single pass
-                        # materializes the persisted feed; the deferred
-                        # count then reads the cache as ONE job instead
-                        # of evaluating the exceptAll pair separately
-                        # as a 5-job AQE cascade (guide §1.4 — measured
-                        # 1.18s on b151h's cascade parent at sf0.1; the
-                        # cached count is ~0.05s)
-                        feed_counts[s] = -1         # deferred sentinel
-                        n_del = 0
-                    else:
-                        crow = d.agg(
-                            F.count(F.lit(1)).alias("n"),
-                            F.count(F.when(
-                                F.col("_change_type") == "delete", 1))
-                            .alias("nd")).first()
-                        feed_counts[s] = int(crow["n"])
-                        n_del = int(crow["nd"])
-                    if has_minmax and n_del:
-                        # a delete can un-extreme MIN/MAX (no retraction
-                        # state can restore the runner-up).
-                        # SUM/COUNT/AVG plans keep the signed lane:
-                        # deletes ride the SIGNED delta and subtract
-                        # exactly (VERDICT r13 #2). Single-source
-                        # GROUPED plans take the GROUP-SCOPED recompute
-                        # instead of full (VERDICT r14 #4): only the
-                        # touched groups re-aggregate from the source;
-                        # join/union/global shapes still go full.
-                        if plan.lane != "single" or not plan.group:
+                # companions + the row count live OUTSIDE the declared
+                # schema — read the MV's files RAW (engine-written plain
+                # parquet, never mapped/bucketed/partitioned). A legacy MV
+                # whose files predate the companion set (or the r14 row
+                # count) lacks them → full recompute this once, which
+                # writes them back via the augmented query
+                comp_cols = [c for pair in self._mv_companions(plan)
+                             for c in pair[:2]] + [self._MV_ROWCNT]
+                if tdef.file_paths():
+                    stored = self._parquet_read(
+                        None, tuple(self._scan_uris(tdef.file_paths())))
+                    if not set(comp_cols) <= set(stored.columns):
+                        plan, stored = None, None
+                else:  # empty materialization — trivially recompute whole
+                    plan = None
+            deltas: dict[str, DataFrame] = {}
+            feed_counts: dict[str, int] = {}
+            has_minmax = plan is not None and any(
+                k in ("MIN", "MAX") for k, _i, _o in plan.aggs)
+            minmax_scoped = False
+            try:
+                if plan is not None:
+                    # persist: each changed source's feed is consumed by the
+                    # retraction probe (MIN/MAX plans only), the count and
+                    # the delta aggregation — O(changed files) rows, cached
+                    # once, RELEASED in the finally below, which must also
+                    # cover the probe itself: a probe count that throws
+                    # (scan failure, expired files) would otherwise leak the
+                    # persisted DataFrame for the session lifetime (ADVICE
+                    # r12; localCheckpoint leaks likewise, r12 s2 pass 6).
+                    # Feed cardinalities come from metadata when the diff
+                    # is structurally one-sided and unfiltered
+                    # (_feed_counts_meta — parquet footer counts, ZERO
+                    # jobs); otherwise ONE aggregate per feed returns
+                    # (event count, delete count) together — it
+                    # materializes the persist and replaces both the old
+                    # delete probe (filter(...).limit(1).count(), whose
+                    # executeTake ramp ran several sequential mini-jobs
+                    # against the not-yet-cached feed — measured 0.63s vs
+                    # 0.13s for a plain count at sf0.1) and the later
+                    # per-feed d.count() for the report (guide §1.4/§2.4:
+                    # one pass, not three).
+                    for s in sorted(set(files_changed)):
+                        d = self.table_changes(s, last, cur).persist()
+                        deltas[s] = d
+                        fmeta = self._feed_counts_meta(s, last, cur)
+                        if fmeta["n_inserts"] is not None:
+                            feed_counts[s] = (fmeta["n_inserts"]
+                                              + fmeta["n_deletes"])
+                            n_del = fmeta["n_deletes"]
+                        elif not has_minmax:
+                            # the count is only needed for the REPORT (the
+                            # delete probe below is MIN/MAX-only) — defer it
+                            # to after the rewrite, whose single pass
+                            # materializes the persisted feed; the deferred
+                            # count then reads the cache as ONE job instead
+                            # of evaluating the exceptAll pair separately
+                            # as a 5-job AQE cascade (guide §1.4 — measured
+                            # 1.18s on b151h's cascade parent at sf0.1; the
+                            # cached count is ~0.05s)
+                            feed_counts[s] = -1         # deferred sentinel
+                            n_del = 0
+                        else:
+                            crow = d.agg(
+                                F.count(F.lit(1)).alias("n"),
+                                F.count(F.when(
+                                    F.col("_change_type") == "delete", 1))
+                                .alias("nd")).first()
+                            feed_counts[s] = int(crow["n"])
+                            n_del = int(crow["nd"])
+                        if has_minmax and n_del:
+                            # a delete can un-extreme MIN/MAX (no retraction
+                            # state can restore the runner-up).
+                            # SUM/COUNT/AVG plans keep the signed lane:
+                            # deletes ride the SIGNED delta and subtract
+                            # exactly (VERDICT r13 #2). Single-source
+                            # GROUPED plans take the GROUP-SCOPED recompute
+                            # instead of full (VERDICT r14 #4): only the
+                            # touched groups re-aggregate from the source;
+                            # join/union/global shapes still go full.
+                            if plan.lane != "single" or not plan.group:
+                                plan = None
+                                break
+                            minmax_scoped = True
+                    if not deltas:
+                        plan = None         # defensive: nothing to consume
+                if plan is not None:
+                    # concurrent-commit seal (r13 review pass 3): the change
+                    # feeds are governed at the LATEST committed policies
+                    # (_current_policies), baked into each feed's plan at
+                    # table_changes() CONSTRUCTION time above — a
+                    # policy/pointer commit that landed between this
+                    # refresh's pinned read and that construction would
+                    # merge new-semantics delta rows into old-semantics
+                    # stored rows. Re-describe each source NOW (after
+                    # construction); any signature drift downgrades to the
+                    # full lane, whose recompute is internally consistent.
+                    chk = self.catalog.begin(read_only=True)
+                    for s in sources:
+                        sns_c, stbl_c = self._split(s)
+                        td_c = self.catalog.describe_table(chk, sns_c, stbl_c)
+                        if self._mv_semantic_sig(td_c) != sig_now.get(s):
                             plan = None
                             break
-                        minmax_scoped = True
-                if not deltas:
-                    plan = None         # defensive: nothing to consume
-            if plan is not None:
-                # concurrent-commit seal (r13 review pass 3): the change
-                # feeds are governed at the LATEST committed policies
-                # (_current_policies), baked into each feed's plan at
-                # table_changes() CONSTRUCTION time above — a
-                # policy/pointer commit that landed between this
-                # refresh's pinned read and that construction would
-                # merge new-semantics delta rows into old-semantics
-                # stored rows. Re-describe each source NOW (after
-                # construction); any signature drift downgrades to the
-                # full lane, whose recompute is internally consistent.
-                chk = self.catalog.begin(read_only=True)
-                for s in sources:
-                    sns_c, stbl_c = self._split(s)
-                    td_c = self.catalog.describe_table(chk, sns_c, stbl_c)
-                    if self._mv_semantic_sig(td_c) != sig_now.get(s):
-                        plan = None
-                        break
-            if plan is not None and minmax_scoped:
-                merged = self._mv_groupwise_recompute(
-                    plan, deltas[sources[0]], stored, txn)
-                if merged is None:
-                    plan = None         # too many keys / no literal form
-                else:
+                if plan is not None and minmax_scoped:
+                    merged = self._mv_groupwise_recompute(
+                        plan, deltas[sources[0]], stored, txn)
+                    if merged is None:
+                        plan = None         # too many keys / no literal form
+                    else:
+                        mode = "incremental"
+                        n = sum(feed_counts.values())
+                elif plan is not None:
+                    if plan.lane == "join":
+                        # telescoping expansion (VERDICT r14 #3): with
+                        # T_post = T_pre ∪ ΔT per slot, the multilinear
+                        # INNER chain expands EXACTLY as
+                        #   ⋈ᵢ Tᵢ_post − ⋈ᵢ Tᵢ_pre =
+                        #     Σᵢ (T₁_post ⋈ … ⋈ ΔTᵢ ⋈ … ⋈ Tₙ_pre)
+                        # — one term per CHANGED slot i, sides BEFORE i
+                        # read at the POST (current) version, sides AFTER
+                        # i at the PRE (watermark) version; the ΔF ⋈ ΔD
+                        # cross term folds into the post-side reads. Each
+                        # term's signed aggregate merges sequentially —
+                        # every intermediate is the consistent state with
+                        # slots ≤ i updated. Unchanged slots read post
+                        # (pre ≡ post for them); with ONE changed slot
+                        # this degenerates to the r14 single-side lane.
+                        # Policies are baked from the sealed describes, so
+                        # every side read is deterministic under the seal.
+                        slots = plan.join["slots"]
+                        t_pre = self.catalog.at_version(last)
+                        merged = stored
+                        for i, (src_i, _alias) in enumerate(slots):
+                            if src_i.lower() not in changed:
+                                continue
+                            others = {}
+                            for jdx, (src_j, _aj) in enumerate(slots):
+                                if jdx == i:
+                                    continue
+                                others[src_j] = (
+                                    self.read_table(src_j, t_pre,
+                                                    historical=True)
+                                    if jdx > i
+                                    and src_j.lower() in changed
+                                    else self.read_table(src_j, txn))
+                            term = self._mv_apply_query(
+                                plan, {src_i: deltas[src_i]}, dim=others)
+                            merged = self._mv_merge(merged, term, plan,
+                                                    tdef.spark_schema())
+                    else:
+                        delta_agg = self._mv_apply_query(
+                            plan, deltas if plan.lane == "union"
+                            else deltas[sources[0]])
+                        merged = self._mv_merge(stored, delta_agg, plan,
+                                                tdef.spark_schema())
                     mode = "incremental"
                     n = sum(feed_counts.values())
-            elif plan is not None:
-                if plan.lane == "join":
-                    # telescoping expansion (VERDICT r14 #3): with
-                    # T_post = T_pre ∪ ΔT per slot, the multilinear
-                    # INNER chain expands EXACTLY as
-                    #   ⋈ᵢ Tᵢ_post − ⋈ᵢ Tᵢ_pre =
-                    #     Σᵢ (T₁_post ⋈ … ⋈ ΔTᵢ ⋈ … ⋈ Tₙ_pre)
-                    # — one term per CHANGED slot i, sides BEFORE i
-                    # read at the POST (current) version, sides AFTER
-                    # i at the PRE (watermark) version; the ΔF ⋈ ΔD
-                    # cross term folds into the post-side reads. Each
-                    # term's signed aggregate merges sequentially —
-                    # every intermediate is the consistent state with
-                    # slots ≤ i updated. Unchanged slots read post
-                    # (pre ≡ post for them); with ONE changed slot
-                    # this degenerates to the r14 single-side lane.
-                    # Policies are baked from the sealed describes, so
-                    # every side read is deterministic under the seal.
-                    slots = plan.join["slots"]
-                    t_pre = self.catalog.at_version(last)
-                    merged = stored
-                    for i, (src_i, _alias) in enumerate(slots):
-                        if src_i.lower() not in changed:
-                            continue
-                        others = {}
-                        for jdx, (src_j, _aj) in enumerate(slots):
-                            if jdx == i:
-                                continue
-                            others[src_j] = (
-                                self.read_table(src_j, t_pre,
-                                                historical=True)
-                                if jdx > i
-                                and src_j.lower() in changed
-                                else self.read_table(src_j, txn))
-                        term = self._mv_apply_query(
-                            plan, {src_i: deltas[src_i]}, dim=others)
-                        merged = self._mv_merge(merged, term, plan,
-                                                tdef.spark_schema())
-                else:
-                    delta_agg = self._mv_apply_query(
-                        plan, deltas if plan.lane == "union"
-                        else deltas[sources[0]])
-                    merged = self._mv_merge(stored, delta_agg, plan,
-                                            tdef.spark_schema())
-                mode = "incremental"
-                n = sum(feed_counts.values())
-            if plan is None:
-                # full recompute still goes through the AUGMENTED query
-                # when the shape is AVG-incrementalizable (cplan), so the
-                # rewrite restores the companions and the NEXT refresh
-                # can take the incremental lane again
-                aug = self._mv_augmented_sql(cplan)
-                merged = self._query(aug or q, txn)
-                schema = tdef.spark_schema()
-                merged = merged.select(
-                    *[F.col(f.name).cast(f.dataType).alias(f.name)
-                      for f in schema.fields],
-                    *[F.col(c) for c in merged.columns
-                      if c.startswith("__mv_")])
-                mode, n = "full", 0
-            files = self._write_files(merged, ns, tbl, [], tdef=tdef)
-            if mode == "incremental":
-                # resolve deferred feed counts (two-sided windows on
-                # non-MIN/MAX plans): the rewrite above materialized
-                # the persisted feeds, so these are cached single-job
-                # counts — must run before the finally unpersists
-                for s, c in list(feed_counts.items()):
-                    if c < 0:
-                        feed_counts[s] = deltas[s].count()
-                n = sum(feed_counts.values())
-        finally:
-            for d in deltas.values():
-                d.unpersist()
-        # restamp the WHOLE dependency record, not just the watermark:
-        # a force_full caused by a view redefinition or source drift
-        # must store the NEW expansion, or every later refresh
-        # re-detects the same drift and full-recomputes forever
-        # (review r12 s2 pass 2, reproduced)
-        extra = self._mv_stamp(cur, list(refs_raw), tables_now,
-                               vtexts_now, cur_tz, cplan)
-        self.catalog.update_table_files(
-            txn, ns, tbl, files, tdef.file_paths(), ActionType.TABLE_UPDATE,
-            {"added": [f.path for f in files],
-             "removed": tdef.file_paths(),
-             "expression": f"mv refresh {mode}"},
-            extra_properties=extra)
+                if plan is None:
+                    # full recompute still goes through the AUGMENTED query
+                    # when the shape is AVG-incrementalizable (cplan), so the
+                    # rewrite restores the companions and the NEXT refresh
+                    # can take the incremental lane again
+                    aug = self._mv_augmented_sql(cplan)
+                    merged = self._query(aug or q, txn)
+                    schema = tdef.spark_schema()
+                    merged = merged.select(
+                        *[F.col(f.name).cast(f.dataType).alias(f.name)
+                          for f in schema.fields],
+                        *[F.col(c) for c in merged.columns
+                          if c.startswith("__mv_")])
+                    mode, n = "full", 0
+                files = self._write_files(merged, ns, tbl, [], tdef=tdef)
+                if mode == "incremental":
+                    # resolve deferred feed counts (two-sided windows on
+                    # non-MIN/MAX plans): the rewrite above materialized
+                    # the persisted feeds, so these are cached single-job
+                    # counts — must run before the finally unpersists
+                    for s, c in list(feed_counts.items()):
+                        if c < 0:
+                            feed_counts[s] = deltas[s].count()
+                    n = sum(feed_counts.values())
+            finally:
+                for d in deltas.values():
+                    d.unpersist()
+            # restamp the WHOLE dependency record, not just the watermark:
+            # a force_full caused by a view redefinition or source drift
+            # must store the NEW expansion, or every later refresh
+            # re-detects the same drift and full-recomputes forever
+            # (review r12 s2 pass 2, reproduced)
+            extra = self._mv_stamp(cur, list(refs_raw), tables_now,
+                                   vtexts_now, cur_tz, cplan)
+            self.catalog.update_table_files(
+                txn, ns, tbl, files, tdef.file_paths(), ActionType.TABLE_UPDATE,
+                {"added": [f.path for f in files],
+                 "removed": tdef.file_paths(),
+                 "expression": f"mv refresh {mode}"},
+                extra_properties=extra)
         return report(mode, n)
 
     def refresh_materialized_view_cascade(self, name: str,
@@ -5857,10 +5840,12 @@ class Engine:
         # because _resolve_sql pins the table behind an alias, but the
         # delta re-aggregation runs over a bound frame where they cannot
         # resolve — full lane, never a mid-refresh AnalysisException
-        # (review r12 s2). The join lane re-binds every alias.
+        # (review r12 s2). The join lane re-binds every alias. A dotted
+        # literal ('a.b') is data: the check reads the code view.
         if lane != "join" and re.search(
-                r"\b[A-Za-z_]\w*\.[A-Za-z_]\w*", " ".join(filter(None, (
-                    items, where, *(t for b in branches for t in b[1:]))))):
+                r"\b[A-Za-z_]\w*\.[A-Za-z_]\w*", sqltext.code_view(
+                    " ".join(filter(None, (items, where, *(
+                        t for b in branches for t in b[1:])))))):
             return None
         gs = self._mv_group_select(items, gb, ambient,
                                    qualified=lane == "join")
@@ -6761,12 +6746,7 @@ class Engine:
         Refused on governed tables (fail-closed, like export)."""
         import json as _json
         ns, tbl = self._split(name)
-        # ambient explicit txn or a READ-ONLY snapshot — NEVER _txn(),
-        # which replaces _auto_txn mid-statement and silently swallows
-        # the enclosing statement's commit (a CREATE MATERIALIZED VIEW
-        # whose query joins ns.t$files would stage into a dropped txn
-        # and "succeed" without existing — r13 review pass 3; same
-        # hazard class as _current_policies' documented rule)
+        # ambient explicit txn or a READ-ONLY snapshot
         txn = self.current_txn or self.catalog.begin(read_only=True)
         tdef = self.catalog.describe_table(txn, ns, tbl)
         self._refuse_governed_metadata(tdef, f"{ns}.{tbl}", "$files")
@@ -6800,7 +6780,7 @@ class Engine:
         (fail-closed, like export)."""
         import json as _json
         ns, tbl = self._split(name)
-        # read-only snapshot, never _txn() (see table_files)
+        # ambient explicit txn or a READ-ONLY snapshot
         txn = self.current_txn or self.catalog.begin(read_only=True)
         tdef = self.catalog.describe_table(txn, ns, tbl)
         self._refuse_governed_metadata(tdef, f"{ns}.{tbl}", "$partitions")
@@ -6879,25 +6859,23 @@ class Engine:
                 # (docs/iceberg.md:73-179); the Engine constructor already
                 # did, so this is idempotent success.
                 return ok()
-            txn = self._txn()
-            if not (m.group(1) and self.catalog.namespace_exists(txn, ns)):
-                self.catalog.create_namespace(txn, ns)
-            self._finish(txn)
+            with self._statement() as txn:
+                if not (m.group(1) and self.catalog.namespace_exists(txn, ns)):
+                    self.catalog.create_namespace(txn, ns)
             return ok()
         m = re.match(r"DROP (?:NAMESPACE|DATABASE|SCHEMA) (\S+?)"
                      r"( CASCADE| RESTRICT)?$", norm, re.I)
         if m:
-            txn = self._txn()
-            behavior = (DropNamespaceBehavior.CASCADE
-                        if (m.group(2) or "").strip().upper() == "CASCADE"
-                        else DropNamespaceBehavior.RESTRICT)
-            self.catalog.drop_namespace(txn, m.group(1).replace("`", ""),
-                                        behavior)
-            self._finish(txn)
+            with self._statement() as txn:
+                behavior = (DropNamespaceBehavior.CASCADE
+                            if (m.group(2) or "").strip().upper() == "CASCADE"
+                            else DropNamespaceBehavior.RESTRICT)
+                self.catalog.drop_namespace(txn, m.group(1).replace("`", ""),
+                                            behavior)
             return ok()
         if re.match(r"SHOW (?:NAMESPACES|DATABASES|SCHEMAS)$", norm, re.I):
-            txn = self._txn()
-            names = self.catalog.show_namespaces(txn)
+            with self._statement() as txn:
+                names = self.catalog.show_namespaces(txn)
             return self._local_df([(n,) for n in names],
                                          "namespace string")
         m = re.match(r"SHOW TABLES (?:IN|FROM) (\S+)$", norm, re.I)
@@ -6905,22 +6883,21 @@ class Engine:
             ns = m.group(1).replace("`", "")
             if ns == "sys":
                 return self._local_df([("dtxns",)], "table string")
-            txn = self._txn()
-            return self._local_df(
-                [(t,) for t in self.catalog.show_tables(txn, ns)],
-                "table string")
+            with self._statement() as txn:
+                tables = self.catalog.show_tables(txn, ns)
+            return self._local_df([(t,) for t in tables], "table string")
         m = re.match(r"SHOW VIEWS (?:IN|FROM) (\S+)$", norm, re.I)
         if m:
-            txn = self._txn()
-            return self._local_df(
-                [(v,) for v in self.catalog.show_views(
-                    txn, m.group(1).replace("`", ""))], "view string")
+            with self._statement() as txn:
+                views = self.catalog.show_views(
+                    txn, m.group(1).replace("`", ""))
+            return self._local_df([(v,) for v in views], "view string")
         m = re.match(r"DESCRIBE (?:NAMESPACE|DATABASE|SCHEMA) (\S+)$",
                      norm, re.I)
         if m:
-            txn = self._txn()
-            ndef = self.catalog.describe_namespace(
-                txn, m.group(1).replace("`", ""))
+            with self._statement() as txn:
+                ndef = self.catalog.describe_namespace(
+                    txn, m.group(1).replace("`", ""))
             rows = sorted(ndef.properties.items()) or [("", "")]
             return self._local_df(rows, "key string, value string")
         m = re.match(r"DESCRIBE HISTORY (\S+\.\S+)$", norm, re.I)
@@ -6941,8 +6918,8 @@ class Engine:
             # a NULL partition.
             from urllib.parse import unquote
             ns, tbl = self._split(m.group(1))
-            txn = self._txn()
-            tdef = self.catalog.describe_table(txn, ns, tbl)
+            with self._statement() as txn:
+                tdef = self.catalog.describe_table(txn, ns, tbl)
             self._refuse_governed_metadata(tdef, f"{ns}.{tbl}",
                                            "SHOW PARTITIONS")
             if not tdef.partition_by:
@@ -6983,8 +6960,8 @@ class Engine:
             # a maintenance job keys on (file count, bytes, rows from the
             # tracked stats — no data scan)
             ns, tbl = self._split(m.group(1))
-            txn = self._txn()
-            tdef = self.catalog.describe_table(txn, ns, tbl)
+            with self._statement() as txn:
+                tdef = self.catalog.describe_table(txn, ns, tbl)
             return self._local_df(
                 [(tdef.format, f"{_DATA_DIR}/{ns}/{tbl}",
                   len(tdef.data_files),
@@ -6998,8 +6975,8 @@ class Engine:
         m = re.match(r"DESCRIBE (?:TABLE )?(\S+\.\S+)$", norm, re.I)
         if m:
             ns, tbl = self._split(m.group(1))
-            txn = self._txn()
-            tdef = self.catalog.describe_table(txn, ns, tbl)
+            with self._statement() as txn:
+                tdef = self.catalog.describe_table(txn, ns, tbl)
             fields = tdef.spark_schema().fields
             return self._local_df(
                 [(f.name, f.dataType.simpleString()) for f in fields],
@@ -7041,85 +7018,83 @@ class Engine:
                              sqltext.split_top_level(part)]
                             if part else [])
             properties = sqltext.key_values(props_raw or "")
-            txn = self._txn()
-            if if_not_exists and self.catalog.table_exists(txn, ns, tbl):
-                self._finish(txn)
-                return ok()
-            if or_replace and self.catalog.table_exists(txn, ns, tbl):
-                # one transaction: the drop and the recreate commit
-                # atomically (a reader never observes the gap)
-                self.catalog.drop_table(txn, ns, tbl)
-            def bucket_spec(schema: T.StructType, pby: list) -> dict:
-                if not clust_cols:
-                    return {}
-                return self._validate_bucket_spec(
-                    {f.name for f in schema.fields}, pby,
-                    [c.strip() for c in clust_cols.split(",")],
-                    int(clust_n))
+            with self._statement() as txn:
+                if if_not_exists and self.catalog.table_exists(txn, ns, tbl):
+                    return ok()
+                if or_replace and self.catalog.table_exists(txn, ns, tbl):
+                    # one transaction: the drop and the recreate commit
+                    # atomically (a reader never observes the gap)
+                    self.catalog.drop_table(txn, ns, tbl)
+                def bucket_spec(schema: T.StructType, pby: list) -> dict:
+                    if not clust_cols:
+                        return {}
+                    return self._validate_bucket_spec(
+                        {f.name for f in schema.fields}, pby,
+                        [c.strip() for c in clust_cols.split(",")],
+                        int(clust_n))
 
-            if ctas:
-                df = self._query(ctas, txn)
-                partition_by, extra, tgen, tsp = \
-                    self._expand_partition_transforms(partition_by,
-                                                      df.schema)
-                schema = T.StructType(list(df.schema.fields) + extra)
-                tdef_new = TableDef(
-                    schema_json=schema.json(),
-                    partition_by=partition_by,
-                    generated_columns=tgen,
-                    bucket_by=bucket_spec(schema, partition_by),
-                    properties={**properties,
-                                **{f"iceberg.transform.{k}": v
-                                   for k, v in tsp.items()}})
-                self.catalog.create_table(txn, ns, tbl, tdef_new)
-                files = self._write_files(df, ns, tbl, partition_by,
-                                          tdef=tdef_new)
-                self.catalog.update_table_files(
-                    txn, ns, tbl, files, [], ActionType.TABLE_INSERT,
-                    {"added": [f.path for f in files]})
-            else:
-                plain, gen, cons = self._split_generated_columns(cols)
-                schema = T.StructType.fromDDL(plain)
-                for g in gen:
-                    if g not in {f.name for f in schema.fields}:
-                        raise ValueError(
-                            f"generated column {g} missing from schema")
-                partition_by, extra, tgen, tsp = \
-                    self._expand_partition_transforms(partition_by,
-                                                      schema)
-                if extra:
-                    dup = set(tgen) & set(gen)
-                    if dup:
-                        raise ValueError(
-                            f"partition transform column(s) collide "
-                            f"with declared generated columns: "
-                            f"{sorted(dup)}")
-                    schema = T.StructType(list(schema.fields) + extra)
-                    gen = {**gen, **tgen}
-                    properties = {**properties,
-                                  **{f"iceberg.transform.{k}": v
-                                     for k, v in tsp.items()}}
-                # constraint/generated expressions must ANALYZE against
-                # the declared schema NOW — a typo'd column name caught
-                # at DDL time, not as an AnalysisException bricking the
-                # first insert
-                probe = self._local_df([], schema)
-                for label, exprs in (("CHECK constraint", cons),
-                                     ("generated column", gen)):
-                    for ename, eexpr in exprs.items():
-                        try:
-                            probe.select(F.expr(eexpr)).schema
-                        except Exception as e:
+                if ctas:
+                    df = self._query(ctas, txn)
+                    partition_by, extra, tgen, tsp = \
+                        self._expand_partition_transforms(partition_by,
+                                                          df.schema)
+                    schema = T.StructType(list(df.schema.fields) + extra)
+                    tdef_new = TableDef(
+                        schema_json=schema.json(),
+                        partition_by=partition_by,
+                        generated_columns=tgen,
+                        bucket_by=bucket_spec(schema, partition_by),
+                        properties={**properties,
+                                    **{f"iceberg.transform.{k}": v
+                                       for k, v in tsp.items()}})
+                    self.catalog.create_table(txn, ns, tbl, tdef_new)
+                    files = self._write_files(df, ns, tbl, partition_by,
+                                              tdef=tdef_new)
+                    self.catalog.update_table_files(
+                        txn, ns, tbl, files, [], ActionType.TABLE_INSERT,
+                        {"added": [f.path for f in files]})
+                else:
+                    plain, gen, cons = self._split_generated_columns(cols)
+                    schema = T.StructType.fromDDL(plain)
+                    for g in gen:
+                        if g not in {f.name for f in schema.fields}:
                             raise ValueError(
-                                f"{label} {ename}: expression "
-                                f"({eexpr}) does not resolve against "
-                                f"the table schema") from e
-                self.catalog.create_table(txn, ns, tbl, TableDef(
-                    schema_json=schema.json(), partition_by=partition_by,
-                    generated_columns=gen, constraints=cons,
-                    bucket_by=bucket_spec(schema, partition_by),
-                    properties=properties))
-            self._finish(txn)
+                                f"generated column {g} missing from schema")
+                    partition_by, extra, tgen, tsp = \
+                        self._expand_partition_transforms(partition_by,
+                                                          schema)
+                    if extra:
+                        dup = set(tgen) & set(gen)
+                        if dup:
+                            raise ValueError(
+                                f"partition transform column(s) collide "
+                                f"with declared generated columns: "
+                                f"{sorted(dup)}")
+                        schema = T.StructType(list(schema.fields) + extra)
+                        gen = {**gen, **tgen}
+                        properties = {**properties,
+                                      **{f"iceberg.transform.{k}": v
+                                         for k, v in tsp.items()}}
+                    # constraint/generated expressions must ANALYZE against
+                    # the declared schema NOW — a typo'd column name caught
+                    # at DDL time, not as an AnalysisException bricking the
+                    # first insert
+                    probe = self._local_df([], schema)
+                    for label, exprs in (("CHECK constraint", cons),
+                                         ("generated column", gen)):
+                        for ename, eexpr in exprs.items():
+                            try:
+                                probe.select(F.expr(eexpr)).schema
+                            except Exception as e:
+                                raise ValueError(
+                                    f"{label} {ename}: expression "
+                                    f"({eexpr}) does not resolve against "
+                                    f"the table schema") from e
+                    self.catalog.create_table(txn, ns, tbl, TableDef(
+                        schema_json=schema.json(), partition_by=partition_by,
+                        generated_columns=gen, constraints=cons,
+                        bucket_by=bucket_spec(schema, partition_by),
+                        properties=properties))
             return ok()
         m = re.match(r"CREATE( OR REPLACE)? TAG ([\w.-]+)"
                      r"(?: AS OF VERSION (\d+))?$", norm, re.I)
@@ -7141,8 +7116,8 @@ class Engine:
         m = re.match(r"SHOW CREATE TABLE (\S+\.\S+)$", norm, re.I)
         if m:
             ns, tbl = self._split(m.group(1))
-            txn = self._txn()
-            tdef = self.catalog.describe_table(txn, ns, tbl)
+            with self._statement() as txn:
+                tdef = self.catalog.describe_table(txn, ns, tbl)
             cols = ", ".join(
                 f"{f.name} {f.dataType.simpleString().upper()}"
                 + (f" GENERATED ALWAYS AS "
@@ -7203,26 +7178,24 @@ class Engine:
         m = re.match(r"TRUNCATE TABLE (\S+\.\S+)$", norm, re.I)
         if m:
             ns, tbl = self._split(m.group(1))
-            txn = self._txn()
-            tdef = self.catalog.describe_table(txn, ns, tbl)
-            self._require_native(tdef, m.group(1), "TRUNCATE")
-            self._mv_guard(tdef, m.group(1), "TRUNCATE")
-            self.catalog.update_table_files(
-                txn, ns, tbl, [], tdef.file_paths(), ActionType.TABLE_DELETE,
-                {"added": [], "removed": tdef.file_paths(),
-                 "expression": "true"})
-            self._finish(txn)
+            with self._statement() as txn:
+                tdef = self.catalog.describe_table(txn, ns, tbl)
+                self._require_native(tdef, m.group(1), "TRUNCATE")
+                self._mv_guard(tdef, m.group(1), "TRUNCATE")
+                self.catalog.update_table_files(
+                    txn, ns, tbl, [], tdef.file_paths(), ActionType.TABLE_DELETE,
+                    {"added": [], "removed": tdef.file_paths(),
+                     "expression": "true"})
             return ok()
         m = re.match(r"DROP TABLE( IF EXISTS)? (\S+\.\S+)$", norm, re.I)
         if m:
             ns, tbl = self._split(m.group(2))
-            txn = self._txn()
-            try:
-                self.catalog.drop_table(txn, ns, tbl)
-            except ObjectNotFoundError:
-                if not m.group(1):
-                    raise
-            self._finish(txn)
+            with self._statement() as txn:
+                try:
+                    self.catalog.drop_table(txn, ns, tbl)
+                except ObjectNotFoundError:
+                    if not m.group(1):
+                        raise
             return ok()
         m = re.match(r"CREATE( OR REPLACE)? MATERIALIZED VIEW (\S+\.\S+) "
                      r"AS (.+)$", norm, re.I | re.S)
@@ -7241,14 +7214,13 @@ class Engine:
         m = re.match(r"DROP MATERIALIZED VIEW (\S+\.\S+)$", norm, re.I)
         if m:
             ns, tbl = self._split(m.group(1))
-            txn = self._txn()
-            tdef = self.catalog.describe_table(txn, ns, tbl)
-            if not tdef.properties.get(self._MV_QUERY_PROP):
-                raise ValueError(
-                    f"{ns}.{tbl} is not a materialized view "
-                    f"(use DROP TABLE)")
-            self.catalog.drop_table(txn, ns, tbl)
-            self._finish(txn)
+            with self._statement() as txn:
+                tdef = self.catalog.describe_table(txn, ns, tbl)
+                if not tdef.properties.get(self._MV_QUERY_PROP):
+                    raise ValueError(
+                        f"{ns}.{tbl} is not a materialized view "
+                        f"(use DROP TABLE)")
+                self.catalog.drop_table(txn, ns, tbl)
             return ok()
         m = re.match(r"(?:CREATE( OR REPLACE)? (GLOBAL )?TEMP(?:ORARY)? VIEW"
                      r"|CACHE( LAZY)? (TABLE)) (\S+?)(?:\s*\(([^)]*)\))? AS "
@@ -7258,7 +7230,8 @@ class Engine:
             # ... AS) is the bound frame, pinned at creation: a SQL view
             # re-resolves its text on read, after the names are dropped
             replace, glob, lazy, cache, view, cols, query = m.groups()
-            df = self._query(query, self._txn())
+            with self._statement() as txn:
+                df = self._query(query, txn)
             if cols:
                 df = df.toDF(*[c.strip().strip("`")
                                for c in sqltext.split_top_level(cols)])
@@ -7278,9 +7251,8 @@ class Engine:
         m = re.match(r"DROP VIEW (\S+\.\S+)$", norm, re.I)
         if m:
             ns, view = self._split(m.group(1))
-            txn = self._txn()
-            self.catalog.drop_view(txn, ns, view)
-            self._finish(txn)
+            with self._statement() as txn:
+                self.catalog.drop_view(txn, ns, view)
             return ok()
         m = re.match(r"INSERT (INTO|OVERWRITE)(?: TABLE)? (\S+?\.\S+?)"
                      r"\s*(\(.+|VALUES.+|SELECT.+|WITH.+|FROM.+"
@@ -7311,80 +7283,80 @@ class Engine:
                 replace_pred, payload = rest[:cut].strip(), rest[cut:]
                 if not replace_pred:
                     raise ValueError("REPLACE WHERE: empty predicate")
-            txn_src = self._txn()
-            ns, tbl = self._split(name)
-            tdef_ins = self.catalog.describe_table(txn_src, ns, tbl)
-            self._mv_guard(tdef_ins, name, "INSERT")
-            schema = tdef_ins.spark_schema()
-            col_list: list[str] | None = None
-            if payload.startswith("("):
-                # explicit column list: INSERT INTO t (a, b) VALUES/SELECT
-                end = sqltext.match_paren(sqltext.code_view(payload), 0)
-                col_list = [c.strip().strip("`") for c in
-                            sqltext.split_top_level(payload[1:end - 1])]
-                payload = payload[end:].strip()
-                unknown = set(col_list) - {f.name for f in schema.fields}
-                if unknown:
-                    raise ValueError(
-                        f"INSERT: column(s) {sorted(unknown)} do not "
-                        f"exist in {name}")
-            target_cols = col_list or [f.name for f in schema.fields]
-            if re.match(r"VALUES", payload, re.I):
-                if col_list is None and tdef_ins.generated_columns:
-                    # hidden-partitioning ergonomics: a bare VALUES
-                    # insert may supply only the non-generated columns
-                    # (the engine owns generated ones and recomputes
-                    # them at the writer regardless) — the tuple arity
-                    # decides which binding applies. EVERY tuple's arity
-                    # is checked up front: binding by the first tuple
-                    # alone would send a mixed-arity list downstream to
-                    # a Spark error that never mentions this binding.
-                    arities = []
-                    code = sqltext.code_view(payload)
-                    i0 = code.find("(")
-                    while i0 != -1:
-                        end = sqltext.match_paren(code, i0)
-                        arities.append(len(sqltext.split_top_level(
-                            payload[i0 + 1:end - 1])))
-                        i0 = code.find("(", end)
-                    plain_cols = [f.name for f in schema.fields
-                                  if f.name not in
-                                  tdef_ins.generated_columns]
-                    if len(set(arities)) > 1:
+            with self._statement() as txn_src:
+                ns, tbl = self._split(name)
+                tdef_ins = self.catalog.describe_table(txn_src, ns, tbl)
+                self._mv_guard(tdef_ins, name, "INSERT")
+                schema = tdef_ins.spark_schema()
+                col_list: list[str] | None = None
+                if payload.startswith("("):
+                    # explicit column list: INSERT INTO t (a, b) VALUES/SELECT
+                    end = sqltext.match_paren(sqltext.code_view(payload), 0)
+                    col_list = [c.strip().strip("`") for c in
+                                sqltext.split_top_level(payload[1:end - 1])]
+                    payload = payload[end:].strip()
+                    unknown = set(col_list) - {f.name for f in schema.fields}
+                    if unknown:
                         raise ValueError(
-                            f"INSERT VALUES: tuples have differing "
-                            f"arities {sorted(set(arities))}; a bare "
-                            f"VALUES insert into a table with generated "
-                            f"columns binds either all {len(target_cols)}"
-                            f" columns or the {len(plain_cols)} "
-                            f"non-generated ones — every tuple must "
-                            f"supply the same count")
-                    arity = arities[0]
-                    if (arity == len(plain_cols)
-                            and arity != len(target_cols)):
-                        target_cols = plain_cols
-                df = spark.sql(f"SELECT * FROM ({payload}) "
-                               f"AS v({', '.join(target_cols)})")
-            else:
-                df = self._query(payload, txn_src)
-                if col_list is not None:
-                    # explicit column list: positional mapping (SQL
-                    # semantics). Without a list the query's own column
-                    # names bind to the table's (order-insensitive).
-                    if len(df.columns) != len(target_cols):
-                        raise ValueError(
-                            f"INSERT: query produces {len(df.columns)} "
-                            f"column(s), target list has "
-                            f"{len(target_cols)}")
-                    df = df.toDF(*target_cols)
-            if col_list is not None or re.match(r"VALUES", payload, re.I):
-                # align to the full table schema: listed columns cast to
-                # their declared types, unlisted columns fill with NULL
-                provided = set(target_cols)
-                df = df.select(*[
-                    (F.col(f.name) if f.name in provided
-                     else F.lit(None)).cast(f.dataType).alias(f.name)
-                    for f in schema.fields])
+                            f"INSERT: column(s) {sorted(unknown)} do not "
+                            f"exist in {name}")
+                target_cols = col_list or [f.name for f in schema.fields]
+                if re.match(r"VALUES", payload, re.I):
+                    if col_list is None and tdef_ins.generated_columns:
+                        # hidden-partitioning ergonomics: a bare VALUES
+                        # insert may supply only the non-generated columns
+                        # (the engine owns generated ones and recomputes
+                        # them at the writer regardless) — the tuple arity
+                        # decides which binding applies. EVERY tuple's arity
+                        # is checked up front: binding by the first tuple
+                        # alone would send a mixed-arity list downstream to
+                        # a Spark error that never mentions this binding.
+                        arities = []
+                        code = sqltext.code_view(payload)
+                        i0 = code.find("(")
+                        while i0 != -1:
+                            end = sqltext.match_paren(code, i0)
+                            arities.append(len(sqltext.split_top_level(
+                                payload[i0 + 1:end - 1])))
+                            i0 = code.find("(", end)
+                        plain_cols = [f.name for f in schema.fields
+                                      if f.name not in
+                                      tdef_ins.generated_columns]
+                        if len(set(arities)) > 1:
+                            raise ValueError(
+                                f"INSERT VALUES: tuples have differing "
+                                f"arities {sorted(set(arities))}; a bare "
+                                f"VALUES insert into a table with generated "
+                                f"columns binds either all {len(target_cols)}"
+                                f" columns or the {len(plain_cols)} "
+                                f"non-generated ones — every tuple must "
+                                f"supply the same count")
+                        arity = arities[0]
+                        if (arity == len(plain_cols)
+                                and arity != len(target_cols)):
+                            target_cols = plain_cols
+                    df = spark.sql(f"SELECT * FROM ({payload}) "
+                                   f"AS v({', '.join(target_cols)})")
+                else:
+                    df = self._query(payload, txn_src)
+                    if col_list is not None:
+                        # explicit column list: positional mapping (SQL
+                        # semantics). Without a list the query's own column
+                        # names bind to the table's (order-insensitive).
+                        if len(df.columns) != len(target_cols):
+                            raise ValueError(
+                                f"INSERT: query produces {len(df.columns)} "
+                                f"column(s), target list has "
+                                f"{len(target_cols)}")
+                        df = df.toDF(*target_cols)
+                if col_list is not None or re.match(r"VALUES", payload, re.I):
+                    # align to the full table schema: listed columns cast to
+                    # their declared types, unlisted columns fill with NULL
+                    provided = set(target_cols)
+                    df = df.select(*[
+                        (F.col(f.name) if f.name in provided
+                         else F.lit(None)).cast(f.dataType).alias(f.name)
+                        for f in schema.fields])
             if replace_pred is not None:
                 n = self.replace_where(name, df, replace_pred)
                 return self._local_df(
@@ -7401,12 +7373,12 @@ class Engine:
             norm, re.I | re.S)
         if m:
             evolve, name, t_alias, src_text, s_alias, on, whens = m.groups()
-            txn_src = self._txn()
             src_text = src_text.strip()
-            if src_text.startswith("("):
-                src_df = self._query(src_text[1:-1], txn_src)
-            else:
-                src_df = self._query(f"SELECT * FROM {src_text}", txn_src)
+            with self._statement() as txn_src:
+                if src_text.startswith("("):
+                    src_df = self._query(src_text[1:-1], txn_src)
+                else:
+                    src_df = self._query(f"SELECT * FROM {src_text}", txn_src)
             matched_clauses, not_matched_clauses, by_source_clauses = \
                 self._parse_merge_whens(whens)
             n = self.merge(name, src_df, on,
@@ -7499,22 +7471,20 @@ class Engine:
             ns, tbl = self._split(m.group(1))
             new_ns, new_tbl = ((m.group(2), m.group(3)) if m.group(3)
                                else (ns, m.group(2)))
-            txn = self._txn()
-            self.catalog.rename_table(txn, ns, tbl, new_ns, new_tbl)
-            self._finish(txn)
+            with self._statement() as txn:
+                self.catalog.rename_table(txn, ns, tbl, new_ns, new_tbl)
             return ok()
         m = re.match(r"ALTER TABLE (\S+\.\S+) SET (?:TBL)?PROPERTIES"
                      r"\s*\((.+)\)$", norm, re.I)
         if m:
             ns, tbl = self._split(m.group(1))
-            txn = self._txn()
-            tdef = self.catalog.describe_table(txn, ns, tbl)
-            tdef.properties.update(sqltext.key_values(m.group(2)))
-            # pointer defs persist pointer-minimal (review r12 pass-3:
-            # committing the hydrated def froze the pointer)
-            self.catalog.alter_table(txn, ns, tbl,
-                                     self._persistable(tdef))
-            self._finish(txn)
+            with self._statement() as txn:
+                tdef = self.catalog.describe_table(txn, ns, tbl)
+                tdef.properties.update(sqltext.key_values(m.group(2)))
+                # pointer defs persist pointer-minimal (review r12 pass-3:
+                # committing the hydrated def froze the pointer)
+                self.catalog.alter_table(txn, ns, tbl,
+                                         self._persistable(tdef))
             return ok()
         m = re.match(r"ALTER (?:NAMESPACE|DATABASE|SCHEMA) "
                      r"sys\.dtxns\.dtxn_([\w-]+) SET (?:DB)?PROPERTIES\s*"
@@ -7528,21 +7498,19 @@ class Engine:
         m = re.match(r"ALTER (?:NAMESPACE|DATABASE|SCHEMA) (\S+) SET "
                      r"(?:DB)?PROPERTIES\s*\((.+)\)$", norm, re.I)
         if m:
-            txn = self._txn()
-            self.catalog.set_namespace_properties(
-                txn, m.group(1).replace("`", ""),
-                sqltext.key_values(m.group(2)))
-            self._finish(txn)
+            with self._statement() as txn:
+                self.catalog.set_namespace_properties(
+                    txn, m.group(1).replace("`", ""),
+                    sqltext.key_values(m.group(2)))
             return ok()
         m = re.match(r"ALTER (?:NAMESPACE|DATABASE|SCHEMA) (\S+) UNSET "
                      r"(?:DB)?PROPERTIES\s*\((.+)\)$", norm, re.I)
         if m:
-            txn = self._txn()
-            self.catalog.unset_namespace_properties(
-                txn, m.group(1).replace("`", ""),
-                [sqltext.word(k)
-                 for k in sqltext.split_top_level(m.group(2))])
-            self._finish(txn)
+            with self._statement() as txn:
+                self.catalog.unset_namespace_properties(
+                    txn, m.group(1).replace("`", ""),
+                    [sqltext.word(k)
+                     for k in sqltext.split_top_level(m.group(2))])
             return ok()
 
         m = re.match(r"EXPLAIN(?: (EXTENDED|FORMATTED|COST|CODEGEN))?\s+(.+)$",
@@ -7582,5 +7550,6 @@ class Engine:
         # pass-through: resolve catalog identifiers, delegate to Catalyst
         rewritten, hidden = _rewrite_qualify(
             _rewrite_tablesample_all(_rewrite_exclude(statement)))
-        df = self._query(rewritten, self._txn())
+        with self._statement() as txn:
+            df = self._query(rewritten, txn)
         return df.drop(*hidden) if hidden else df

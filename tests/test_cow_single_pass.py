@@ -79,7 +79,7 @@ def test_point_delete_and_update_run_one_job(engine, spark):
     want = [(k, -1 if k == 8 else 10 * k) for k in range(1, 101) if k != 7]
     assert _rows(engine) == want
     assert len(engine.catalog.describe_table(
-        engine._txn(), "ns", "t").data_files) == 1
+        engine.catalog.begin(read_only=True), "ns", "t").data_files) == 1
 
 
 def test_two_candidates_count_first(engine, spark, monkeypatch):
@@ -91,7 +91,7 @@ def test_two_candidates_count_first(engine, spark, monkeypatch):
     engine.write_table(spark.createDataFrame(
         [(2, 2), (9, 9)], "k BIGINT, v BIGINT").coalesce(1), "ns.t")
     before = {f.path for f in engine.catalog.describe_table(
-        engine._txn(), "ns", "t").data_files}
+        engine.catalog.begin(read_only=True), "ns", "t").data_files}
     seen = _spy_counts(engine, monkeypatch)
     with spark_jobs(spark) as jobs:
         got = engine.sql("DELETE FROM ns.t WHERE k = 9").collect()
@@ -99,7 +99,7 @@ def test_two_candidates_count_first(engine, spark, monkeypatch):
     assert seen == [1]
     assert jobs.n >= 2                  # the match count, then the write
     after = {f.path for f in engine.catalog.describe_table(
-        engine._txn(), "ns", "t").data_files}
+        engine.catalog.begin(read_only=True), "ns", "t").data_files}
     assert len(before & after) == 1     # the file without a match stays
     assert _rows(engine) == [(1, 1), (2, 2), (10, 10)]
 
@@ -159,7 +159,6 @@ def test_check_violation_in_single_pass_changes_nothing(engine, spark,
     version = engine.catalog.tree.find_latest_version()
     with pytest.raises(CheckConstraintError):
         engine.sql("UPDATE ns.t SET v = -1 WHERE k = 3")
-    engine._auto_txn = None
     assert engine.catalog.tree.find_latest_version() == version
     assert _tree(tmp_path / "wh") == before
     assert _rows(engine) == [(k, 10 * k) for k in range(1, 101)]
@@ -173,7 +172,8 @@ def test_delete_all_rows_leaves_no_zero_row_file(engine, spark, tmp_path,
     _one_file_table(engine, spark)
     got = engine.sql(f"DELETE FROM ns.t WHERE {pred}").collect()
     assert got[0].rows_affected == 100
-    tdef = engine.catalog.describe_table(engine._txn(), "ns", "t")
+    tdef = engine.catalog.describe_table(
+        engine.catalog.begin(read_only=True), "ns", "t")
     assert tdef.data_files == []
     assert _rows(engine) == []
     # the old file is still on disk (time travel); no new parquet file

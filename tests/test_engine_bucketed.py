@@ -102,7 +102,8 @@ def test_dml_preserves_bucket_layout(engine, spark):
     assert 0 not in rows and 7 not in rows
     assert rows[3] == 3 * 1.5 + 1000 and rows[4] == 4 * 1.5
     # every tracked dir stays complete (dir_files bookkeeping)
-    tdef = engine.catalog.describe_table(engine._txn(), "b", "o")
+    tdef = engine.catalog.describe_table(
+        engine.catalog.begin(read_only=True), "b", "o")
     by_dir: dict[str, list] = {}
     for f in tdef.data_files:
         by_dir.setdefault(f.path.rsplit("/", 1)[0], []).append(f)
@@ -198,7 +199,8 @@ def test_hive_bucketed_dml_and_compaction_keep_layout(engine, spark):
             engine.read_table("b.pb").collect()}
     assert set(rows) == expect
     assert rows[1] == (101, "b") and rows[2] == (2, "a")
-    tdef = engine.catalog.describe_table(engine._txn(), "b", "pb")
+    tdef = engine.catalog.describe_table(
+        engine.catalog.begin(read_only=True), "b", "pb")
     by_dir: dict[str, list] = {}
     for f in tdef.data_files:
         by_dir.setdefault(f.path.rsplit("/", 1)[0], []).append(f)
@@ -222,7 +224,8 @@ def test_hive_bucketed_dml_and_compaction_keep_layout(engine, spark):
 def test_bucket_column_rename_rekeys_and_drop_refuses(engine, spark):
     _mk(engine, spark)
     engine.sql("ALTER TABLE b.o RENAME COLUMN ck TO cust")
-    tdef = engine.catalog.describe_table(engine._txn(), "b", "o")
+    tdef = engine.catalog.describe_table(
+        engine.catalog.begin(read_only=True), "b", "o")
     assert tdef.bucket_by["columns"] == ["cust"]
     # writes after the rename keep the layout (physical name unchanged)
     engine.write_table(
@@ -245,12 +248,14 @@ def test_bucketed_compaction_merges_dirs_and_keeps_layout(engine, spark):
     buckets collapse to one complete dir of <= n files, and the read
     stays exchange-free."""
     _mk(engine, spark)
-    tdef = engine.catalog.describe_table(engine._txn(), "b", "o")
+    tdef = engine.catalog.describe_table(
+        engine.catalog.begin(read_only=True), "b", "o")
     n_before = len(tdef.data_files)
     assert n_before > 8
     saved = engine.compact_small_files("b.o")
     assert saved > 0
-    tdef = engine.catalog.describe_table(engine._txn(), "b", "o")
+    tdef = engine.catalog.describe_table(
+        engine.catalog.begin(read_only=True), "b", "o")
     assert len(tdef.data_files) <= 8
     dirs = {f.path.rsplit("/", 1)[0] for f in tdef.data_files}
     assert len(dirs) == 1
@@ -268,7 +273,8 @@ def test_zorder_refused_on_bucketed(engine, spark):
 def test_clone_inherits_bucket_spec(engine, spark):
     _mk(engine, spark)
     engine.sql("CREATE TABLE b.o2 SHALLOW CLONE b.o")
-    tdef = engine.catalog.describe_table(engine._txn(), "b", "o2")
+    tdef = engine.catalog.describe_table(
+        engine.catalog.begin(read_only=True), "b", "o2")
     assert tdef.bucket_by == {"columns": ["ck"], "num_buckets": 8}
     # the clone's read is bucketed too (shared complete dirs)
     agg = engine.read_table("b.o2").groupBy("ck").agg(F.count("*"))
@@ -319,7 +325,8 @@ def test_bucketed_write_emits_at_most_num_buckets_files(engine, spark):
     engine.write_table(
         spark.range(1000).repartition(16).select(
             F.col("id"), (F.col("id") % 40).alias("k")), "b.nb")
-    tdef = engine.catalog.describe_table(engine._txn(), "b", "nb")
+    tdef = engine.catalog.describe_table(
+        engine.catalog.begin(read_only=True), "b", "nb")
     assert 0 < len(tdef.data_files) <= 4
     # bucket ids are parseable from every filename (Spark's contract)
     for f in tdef.data_files:
@@ -467,7 +474,8 @@ def test_vacuumed_bucketed_dir_fails_loud_not_silently_empty(
     import os
     from olympia_spark import engine as engine_mod
     _mk(engine, spark)
-    tdef = engine.catalog.describe_table(engine._txn(), "b", "o")
+    tdef = engine.catalog.describe_table(
+        engine.catalog.begin(read_only=True), "b", "o")
     victim = engine._abs(tdef.data_files[0].path)
     os.remove(victim)
     engine_mod._SHADOW_DIRS.clear()    # next read re-verifies each dir
@@ -545,7 +553,8 @@ def test_streaming_ingest_preserves_bucket_layout(engine, spark, tmp_path):
          .option("checkpointLocation", str(tmp_path / "sck"))
          .trigger(availableNow=True).start())
     q.awaitTermination(300)
-    tdef = eng2.catalog.describe_table(eng2._txn(), "stream", "events")
+    tdef = eng2.catalog.describe_table(
+        eng2.catalog.begin(read_only=True), "stream", "events")
     assert tdef.bucket_by == {"columns": ["event_id"], "num_buckets": 4}
     assert all(f.dir_files > 0 for f in tdef.data_files)
     df = eng2.read_table("stream.events")
@@ -584,7 +593,8 @@ def test_streaming_ingest_into_hive_bucketed_table(engine, spark, tmp_path):
          .option("checkpointLocation", str(tmp_path / "hb_ck"))
          .trigger(availableNow=True).start())
     q.awaitTermination(300)
-    tdef = eng2.catalog.describe_table(eng2._txn(), "stream", "events")
+    tdef = eng2.catalog.describe_table(
+        eng2.catalog.begin(read_only=True), "stream", "events")
     assert all(f.dir_files > 0 for f in tdef.data_files)
     df = eng2.read_table("stream.events").filter("site = 'a'")
     agg = df.groupBy("event_id").agg(F.sum("value"))
@@ -607,7 +617,8 @@ def test_external_vacuum_never_silently_shrinks(engine, spark, tmp_path):
     assert engine.read_table("b.o").count() == 600
     # "another process" vacuums: delete one tracked data file directly
     # on disk, bypassing this session's engine entirely
-    tdef = engine.catalog.describe_table(engine._txn(), "b", "o")
+    tdef = engine.catalog.describe_table(
+        engine.catalog.begin(read_only=True), "b", "o")
     victim = os.path.join(engine._local_root, tdef.data_files[0].path)
     assert os.path.exists(victim)
     os.remove(victim)

@@ -449,12 +449,12 @@ def _mk_src(engine):
 def test_shallow_clone_shares_files_and_diverges(engine):
     _mk_src(engine)
     src_files = set(engine.catalog.describe_table(
-        engine._txn(), "clones", "src").file_paths())
+        engine.catalog.begin(read_only=True), "clones", "src").file_paths())
     n = engine.sql(
         "CREATE TABLE clones.fork SHALLOW CLONE clones.src").first()
     assert n.files_shared == len(src_files)
     fork_files = set(engine.catalog.describe_table(
-        engine._txn(), "clones", "fork").file_paths())
+        engine.catalog.begin(read_only=True), "clones", "fork").file_paths())
     assert fork_files == src_files          # zero-copy: same paths
     # divergence: COW delete on the fork rewrites into ITS directory;
     # the source is untouched
@@ -464,7 +464,8 @@ def test_shallow_clone_shares_files_and_diverges(engine):
     assert engine.sql(
         "SELECT COUNT(*) AS n FROM clones.src").first().n == 4
     assert set(engine.catalog.describe_table(
-        engine._txn(), "clones", "src").file_paths()) == src_files
+        engine.catalog.begin(read_only=True), "clones",
+        "src").file_paths()) == src_files
 
 
 def test_clone_survives_drop_and_vacuum_of_source(engine):
@@ -1068,13 +1069,15 @@ def test_small_file_compaction_leaves_large_files_alone(engine, spark):
         engine.write_table(
             one.selectExpr(f"CAST({6000 + i} AS BIGINT) AS id").coalesce(1),
             "ns1.bp")
-    tdef = engine.catalog.describe_table(engine._txn(), "ns1", "bp")
+    tdef = engine.catalog.describe_table(
+        engine.catalog.begin(read_only=True), "ns1", "bp")
     large_paths = {f.path for f in tdef.data_files if f.size_bytes >= 2000}
     assert len(large_paths) == 2
     v_before = engine.catalog.tree.load_latest_root().version
     saved = engine.compact_small_files("ns1.bp")
     assert saved == 5                      # 6 tiny -> 1 packed file
-    tdef = engine.catalog.describe_table(engine._txn(), "ns1", "bp")
+    tdef = engine.catalog.describe_table(
+        engine.catalog.begin(read_only=True), "ns1", "bp")
     after_large = {f.path for f in tdef.data_files if f.size_bytes >= 2000}
     assert after_large == large_paths      # byte-identical, same paths
     assert len(tdef.data_files) == 3
@@ -1098,7 +1101,8 @@ def test_append_to_large_file_table_never_rewrites(engine, spark):
         engine.write_table(
             one.selectExpr(f"CAST({i} AS BIGINT) AS id").coalesce(1),
             "ns1.lg")
-    tdef = engine.catalog.describe_table(engine._txn(), "ns1", "lg")
+    tdef = engine.catalog.describe_table(
+        engine.catalog.begin(read_only=True), "ns1", "lg")
     assert len(tdef.data_files) == 8       # nothing ever rewritten
     assert engine.sql("SELECT COUNT(*) AS n FROM ns1.lg").first().n == 8
 
@@ -1122,7 +1126,8 @@ def test_small_file_compaction_era_local_partition_values_survive(
                       "GROUP BY src ORDER BY src").collect()
     assert [(r.src, r.n, r.s) for r in rows] == [
         ("books", 5, sum(range(100, 105))), ("web", 5, sum(range(5)))]
-    tdef = engine.catalog.describe_table(engine._txn(), "ns1", "pp")
+    tdef = engine.catalog.describe_table(
+        engine.catalog.begin(read_only=True), "ns1", "pp")
     # every surviving file still hive-encodes its partition
     assert all("src=" in f.path for f in tdef.data_files)
 
@@ -1138,11 +1143,13 @@ def test_small_file_compaction_respects_byte_budget(engine, spark):
         engine.write_table(
             one.selectExpr(f"CAST({i} AS BIGINT) AS id").coalesce(1),
             "ns1.bu")
-    tdef = engine.catalog.describe_table(engine._txn(), "ns1", "bu")
+    tdef = engine.catalog.describe_table(
+        engine.catalog.begin(read_only=True), "ns1", "bu")
     sizes = sorted(f.size_bytes for f in tdef.data_files)
     budget = sum(sizes[:4]) + 1            # fits ~4 smallest files
     engine.compact_small_files("ns1.bu", budget_bytes=budget)
-    tdef = engine.catalog.describe_table(engine._txn(), "ns1", "bu")
+    tdef = engine.catalog.describe_table(
+        engine.catalog.begin(read_only=True), "ns1", "bu")
     assert len(tdef.data_files) == 7       # 4 packed into 1, 6 untouched
     assert engine.sql("SELECT CAST(SUM(id) AS BIGINT) AS s FROM ns1.bu"
                       ).first().s == sum(range(10))
@@ -1158,10 +1165,12 @@ def test_small_file_compaction_skips_single_file_hive_leaves(engine, spark):
                "'auto.compact.threshold'='off')")
     engine.sql("INSERT INTO ns1.sl VALUES "
                + ", ".join(f"({i}, 'p{i}')" for i in range(10)))
-    tdef = engine.catalog.describe_table(engine._txn(), "ns1", "sl")
+    tdef = engine.catalog.describe_table(
+        engine.catalog.begin(read_only=True), "ns1", "sl")
     before = sorted(f.path for f in tdef.data_files)
     assert engine.compact_small_files("ns1.sl") == 0
-    tdef = engine.catalog.describe_table(engine._txn(), "ns1", "sl")
+    tdef = engine.catalog.describe_table(
+        engine.catalog.begin(read_only=True), "ns1", "sl")
     assert sorted(f.path for f in tdef.data_files) == before
     # but two files in the SAME leaf do pack, others stay untouched
     engine.sql("INSERT INTO ns1.sl VALUES (100, 'p0')")
@@ -1274,7 +1283,8 @@ def test_single_leaf_small_files_never_trigger_autocompact(engine, spark):
                "'auto.compact.threshold'='4')")
     for i in range(8):                    # 8 leaves, one tiny file each
         engine.sql(f"INSERT INTO ns1.np VALUES ({i}, 'p{i}')")
-    tdef = engine.catalog.describe_table(engine._txn(), "ns1", "np")
+    tdef = engine.catalog.describe_table(
+        engine.catalog.begin(read_only=True), "ns1", "np")
     assert len(tdef.data_files) == 8      # no packing ever attempted
     v1 = engine.catalog.tree.load_latest_root().version
     engine.sql("INSERT INTO ns1.np VALUES (100, 'p99')")
@@ -1283,7 +1293,8 @@ def test_single_leaf_small_files_never_trigger_autocompact(engine, spark):
     # but 5 files piling into ONE leaf do cross the threshold and pack
     for i in range(5):
         engine.sql(f"INSERT INTO ns1.np VALUES ({200 + i}, 'p0')")
-    tdef = engine.catalog.describe_table(engine._txn(), "ns1", "np")
+    tdef = engine.catalog.describe_table(
+        engine.catalog.begin(read_only=True), "ns1", "np")
     p0 = [f for f in tdef.data_files if "src=p0" in f.path]
     # the pack triggered when the 5th p0 file crossed the threshold;
     # the append after it may add one more

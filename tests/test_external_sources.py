@@ -149,7 +149,8 @@ def test_copy_into_glob_picks_up_only_new_files(spark, tmp_path, engine):
     assert (r2.files_loaded, r2.files_skipped) == (1, len(files))
     # ledger commits atomically with the data: recorded = all loaded
     import json as _json
-    tdef = engine.catalog.describe_table(engine._txn(), "raw", "evj")
+    tdef = engine.catalog.describe_table(
+        engine.catalog.begin(read_only=True), "raw", "evj")
     ledger = set(_json.loads(tdef.properties["copy_into.loaded"]))
     assert ledger == {*(map(str, files)), late}
     assert engine.sql("SELECT COUNT(*) AS n FROM raw.evj").first().n == 300

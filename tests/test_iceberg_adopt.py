@@ -236,7 +236,8 @@ def test_adopt_current_snapshot(spark, tmp_path, ice_table):
                   "FROM lake.t").first()
     assert (got.n, got.s) == (15, sum(range(15)))
     # resolve picked the NEWEST metadata file, not v2
-    tdef = eng.catalog.describe_table(eng._txn(), "lake", "t")
+    tdef = eng.catalog.describe_table(
+        eng.catalog.begin(read_only=True), "lake", "t")
     assert tdef.format == "ICEBERG"
     assert tdef.metadata_location.endswith("v3.metadata.json")
     assert sorted(f.num_rows for f in tdef.data_files) == [5, 10]
@@ -320,7 +321,7 @@ def test_export_then_adopt_round_trip(spark, tmp_path):
     other = Engine(spark, str(tmp_path / "wh2"))
     other.sql("CREATE NAMESPACE lake")
     n_src_files = len(wh.catalog.describe_table(
-        wh._txn(), "nat", "src").data_files)
+        wh.catalog.begin(read_only=True), "nat", "src").data_files)
     assert other.adopt_iceberg_table("lake.src", mpath) == n_src_files
     rows = other.sql("SELECT id, name FROM lake.src ORDER BY id").collect()
     assert [(r.id, r.name) for r in rows] == \
@@ -355,7 +356,8 @@ def test_adopt_identity_partition_values_become_stats(spark, tmp_path):
     eng = Engine(spark, str(tmp_path / "wh"))
     eng.sql("CREATE NAMESPACE lake")
     eng.adopt_iceberg_table("lake.p", mpath)
-    tdef = eng.catalog.describe_table(eng._txn(), "lake", "p")
+    tdef = eng.catalog.describe_table(
+        eng.catalog.begin(read_only=True), "lake", "p")
     stats = {os.path.basename(f.path): f.stats for f in tdef.data_files}
     assert stats["r1.parquet"]["region"] == [1, 1]
     assert stats["r2.parquet"]["region"] == [2, 2]
@@ -1003,7 +1005,8 @@ def test_pointer_mor_position_deletes_read_in_place(spark, tmp_path):
     # aggregation through the same read path
     assert eng.sql("SELECT COUNT(*) AS n FROM lake.t").first().n == 12
     # the def carries the obligation, files stay the Iceberg originals
-    tdef = eng.catalog.describe_table(eng._txn(), "lake", "t")
+    tdef = eng.catalog.describe_table(
+        eng.catalog.begin(read_only=True), "lake", "t")
     assert "iceberg.mor_deletes" in tdef.properties
     assert all(p.startswith("/") for p in (f.path for f in
                                            tdef.data_files))

@@ -711,6 +711,25 @@ def test_keyword_inside_literal_keeps_the_incremental_lane(eng):
     assert _mv_rows(eng) == incremental
 
 
+def test_dotted_literal_keeps_the_incremental_lane(eng):
+    """The qualified-reference check reads the code view: 'a.b' inside
+    a WHERE literal is data, not a table.column reference."""
+    _seed(eng, [(1, "A", 10.0, "x"), (2, "B", 5.0, "a.b")],
+          schema="id LONG, grp STRING, v DOUBLE, tag STRING")
+    eng.sql("CREATE MATERIALIZED VIEW ns1.mv AS "
+            "SELECT grp, COUNT(*) AS n, SUM(v) AS sv FROM ns1.src "
+            "WHERE tag <> 'a.b' GROUP BY grp")
+    eng.sql("INSERT INTO ns1.src VALUES (3, 'A', 1.0, 'y'), "
+            "(4, 'C', 2.0, 'a.b'), (5, 'C', 4.0, 'z')")
+    r = eng.sql("REFRESH MATERIALIZED VIEW ns1.mv").collect()[0]
+    assert (r.mode, r.delta_rows) == ("incremental", 3)
+    incremental = _mv_rows(eng)
+    assert incremental == [("A", 2, 11.0), ("C", 1, 4.0)]
+    r = eng.sql("REFRESH MATERIALIZED VIEW ns1.mv FULL").collect()[0]
+    assert r.mode == "full"
+    assert _mv_rows(eng) == incremental
+
+
 @pytest.fixture(scope="module")
 def lane_eng(spark, tmp_path_factory):
     e = Engine(spark, str(tmp_path_factory.mktemp("lanes") / "wh"))

@@ -379,7 +379,8 @@ def test_export_reference_catalog_round_trip(spark, tmp_path):
     assert (got.n, got.s) == (40, sum(i * 1.5 for i in range(40)))
     assert eng.sql("SELECT COUNT(*) AS n FROM ex.w").first().n == 10
     # bucketed spec survives; values exact through the plain-scan lane
-    tdef = eng.catalog.describe_table(eng._txn(), "ex", "bk")
+    tdef = eng.catalog.describe_table(
+        eng.catalog.begin(read_only=True), "ex", "bk")
     assert tdef.bucket_by == {"columns": ["k"], "num_buckets": 4}
     assert eng.sql("SELECT SUM(v) AS s FROM ex.bk").first().s == 20.0
     # the source is untouched and still serves its own reads
@@ -461,7 +462,8 @@ def test_binpb_catalog_on_object_store(spark, tmp_path):
         shutil.rmtree(eng.catalog.storage.cache_dir, ignore_errors=True)
         eng2 = Engine(spark, f"s3://{bucket}/lake")
         assert eng2.catalog.def_suffix == ".binpb"
-        tdef = eng2.catalog.describe_table(eng2._txn(), "s3ns", "t")
+        tdef = eng2.catalog.describe_table(
+            eng2.catalog.begin(read_only=True), "s3ns", "t")
         assert tdef.bucket_by == {"columns": ["k"], "num_buckets": 4}
         got = eng2.sql(
             "SELECT COUNT(*) AS n, SUM(v) AS s FROM s3ns.t").first()

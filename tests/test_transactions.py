@@ -229,3 +229,158 @@ def test_dist_transaction_resume_survives_cas_loss(cat):
     files = {f.path for f in
              cat2.describe_table(check, "ns1", "t1").data_files}
     assert files == {"data/mine.parquet", "data/theirs.parquet"}
+
+
+# --- statement transactions on an Engine -------------------------------------
+
+@pytest.fixture()
+def engine(spark, tmp_path):
+    from olympia_spark.engine import Engine
+    eng = Engine(spark, str(tmp_path / "wh"))
+    eng.sql("CREATE NAMESPACE ns")
+    return eng
+
+
+def _ks(engine, name):
+    return sorted(r.k for r in engine.sql(f"SELECT k FROM {name}").collect())
+
+
+def test_one_engine_two_threads_keep_every_insert(engine):
+    """Each auto-commit statement owns its transaction, so two threads
+    sharing one Engine commit all of their INSERTs."""
+    import threading
+    engine.sql("CREATE TABLE ns.t (k BIGINT)")
+    errors = []
+
+    def run(base):
+        try:
+            for i in range(10):
+                engine.sql(f"INSERT INTO ns.t VALUES ({base + i})")
+        except Exception as e:          # surfaced by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=run, args=(b,)) for b in (0, 10)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert _ks(engine, "ns.t") == list(range(20))
+
+
+def test_failed_statement_inside_begin_publishes_nothing(engine):
+    """A statement that raises inside BEGIN leaves the block as it was
+    before the statement: COMMIT publishes the earlier INSERT, but
+    neither the failed CTAS's table nor the failed replace's drop."""
+    engine.sql("CREATE TABLE ns.b (k BIGINT)")
+    engine.sql("INSERT INTO ns.b VALUES (7)")
+    engine.sql("CREATE TABLE ns.a (k BIGINT)")
+    engine.sql("BEGIN")
+    engine.sql("INSERT INTO ns.a VALUES (1)")
+    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+        engine.sql("CREATE TABLE ns.c AS SELECT CAST('x' AS INT) AS k")
+    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+        engine.sql("CREATE OR REPLACE TABLE ns.b AS "
+                   "SELECT CAST('y' AS INT) AS k")
+    engine.sql("COMMIT")
+    assert _ks(engine, "ns.a") == [1]
+    assert _ks(engine, "ns.b") == [7]
+    assert [r.table for r in engine.sql("SHOW TABLES IN ns").collect()
+            ] == ["a", "b"]
+
+
+def test_failed_statement_in_resumed_dist_txn_keeps_earlier_work(engine,
+                                                                   spark):
+    """A resumed handle's earlier ops replay only from payloads: a
+    failed statement after the resume must undo just its own ops and
+    raise its own error, and COMMIT still publishes the earlier work."""
+    from olympia_spark.engine import Engine
+    engine.sql("BEGIN")
+    engine.sql("CREATE TABLE ns.d (k BIGINT)")
+    tid = engine.begin_dist()
+    engine.rollback()
+    other = Engine(spark, engine.catalog.storage.root)
+    other.resume_dist(tid)
+    other.sql("INSERT INTO ns.d VALUES (1)")
+    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+        other.sql("CREATE TABLE ns.c AS SELECT CAST('x' AS INT) AS k")
+    other.sql("COMMIT")
+    assert _ks(other, "ns.d") == [1]
+    assert [r.table for r in other.sql("SHOW TABLES IN ns").collect()
+            ] == ["d"]
+
+
+def test_failed_rebuild_leaves_transaction_as_it_was(cat):
+    from olympia_spark.catalog.transactions import roll_back_to
+    txn = cat.begin()
+    cat.create_table(txn, "ns1", "t2", _tdef())
+    cat.create_table(txn, "ns1", "t3", _tdef())
+
+    def failing(t):
+        raise OSError("replay failed")
+
+    txn.ops[0] = failing
+    before = (txn.running_root, txn.base_version, txn.write_actions,
+              txn.ops)
+    with pytest.raises(OSError, match="replay failed"):
+        roll_back_to(txn, 1)
+    assert (txn.running_root, txn.base_version, txn.write_actions,
+            txn.ops) == before
+    cat.commit(txn)
+    assert set(cat.show_tables(cat.begin(), "ns1")) == {"t1", "t2", "t3"}
+
+
+def test_statement_catalog_traffic(engine, monkeypatch):
+    """Transactions begun and catalog versions added per statement
+    class. The counts are those of the engine before statements owned
+    their transactions: no statement begins or commits more than it
+    did."""
+    from olympia_spark.catalog.errors import CheckConstraintError
+    engine.sql("CREATE TABLE ns.p (k BIGINT, v BIGINT, "
+               "CONSTRAINT pos CHECK (v >= 0))")
+    engine.sql("INSERT INTO ns.p VALUES (1, 10), (2, 20), (3, 30)")
+    begins = []
+    begin = type(engine.catalog).begin
+
+    def counting_begin(cat, *a, **kw):
+        begins.append(1)
+        return begin(cat, *a, **kw)
+
+    monkeypatch.setattr(type(engine.catalog), "begin", counting_begin)
+
+    def traffic(*statements, fails=None):
+        begins.clear()
+        v0 = engine.catalog.tree.find_latest_version()
+        for s in statements:
+            if fails is None:
+                engine.sql(s).collect()
+            else:
+                with pytest.raises(fails):
+                    engine.sql(s)
+        return len(begins), engine.catalog.tree.find_latest_version() - v0
+
+    got = {
+        "point select": traffic("SELECT v FROM ns.p WHERE k = 1"),
+        "insert values": traffic("INSERT INTO ns.p VALUES (4, 40)"),
+        "point update": traffic("UPDATE ns.p SET v = 0 WHERE k = 2"),
+        "point delete": traffic("DELETE FROM ns.p WHERE k = 3"),
+        "begin insert insert commit": traffic(
+            "BEGIN", "INSERT INTO ns.p VALUES (5, 50)",
+            "INSERT INTO ns.p VALUES (6, 60)", "COMMIT"),
+        "create table": traffic("CREATE TABLE ns.q (k BIGINT)"),
+        "create if not exists, existing": traffic(
+            "CREATE TABLE IF NOT EXISTS ns.q (k BIGINT)"),
+        "failing update": traffic("UPDATE ns.p SET v = -1 WHERE k = 1",
+                                  fails=CheckConstraintError),
+    }
+    assert got == {
+        "point select": (1, 0),
+        "insert values": (3, 1),      # source read, write, compaction probe
+        "point update": (1, 1),
+        "point delete": (1, 1),
+        "begin insert insert commit": (1, 1),
+        "create table": (1, 1),
+        "create if not exists, existing": (1, 0),
+        "failing update": (1, 0),
+    }
