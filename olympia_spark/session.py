@@ -35,7 +35,18 @@ def get_spark(app_name: str = "olympia_spark",
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.aggregatePushdown", "true")
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = extra_conf or {}
+    if "-Xms" in extra_conf.get("spark.driver.extraJavaOptions", ""):
+        # A heap sized up front (-Xms) is touched once, at JVM start, not
+        # page by page as statements first allocate there: on a VM a
+        # first touch is a page fault of variable cost, so an untouched
+        # heap makes latency depend on how much the session allocated
+        # before. Spark prepends this option to extraJavaOptions. A heap
+        # left to grow is left alone: pre-touch would make each
+        # expansion resident whole.
+        builder = builder.config("spark.driver.defaultJavaOptions",
+                                 "-XX:+AlwaysPreTouch")
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

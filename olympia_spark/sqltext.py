@@ -270,3 +270,24 @@ def key_values(s: str) -> dict[str, str]:
             raise ValueError(f"expected 'key' = 'value', got {item!r}")
         out[word(item[:eq])] = word(item[eq + 1:])
     return out
+
+
+def ident(name: str) -> str:
+    """``name`` as a quoted identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def type_text(dt) -> str:
+    """A Spark ``DataType`` as SQL type text for ``CAST``: struct field
+    names quoted, a non-nullable struct field ``NOT NULL`` (array
+    elements and map values always read back nullable)."""
+    kind = dt.typeName()
+    if kind == "struct":
+        return "STRUCT<" + ", ".join(
+            f"{ident(f.name)}: {type_text(f.dataType)}"
+            + ("" if f.nullable else " NOT NULL") for f in dt.fields) + ">"
+    if kind == "array":
+        return f"ARRAY<{type_text(dt.elementType)}>"
+    if kind == "map":
+        return f"MAP<{type_text(dt.keyType)}, {type_text(dt.valueType)}>"
+    return dt.simpleString()

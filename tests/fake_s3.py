@@ -67,11 +67,15 @@ class FakeS3Client:
             self._objects[Key] = bytes(Body)
         return {"ResponseMetadata": {"HTTPStatusCode": 200}}
 
-    def get_object(self, Bucket: str, Key: str):
+    def get_object(self, Bucket: str, Key: str, Range: str | None = None):
         with self._lock:
             if Key not in self._objects:
                 raise FakeNoSuchKey(Key)
-            return {"Body": io.BytesIO(self._objects[Key])}
+            data = self._objects[Key]
+        if Range is not None:              # "bytes=lo-hi", both inclusive
+            lo, hi = map(int, Range.removeprefix("bytes=").split("-"))
+            data = data[lo:hi + 1]
+        return {"Body": io.BytesIO(data)}
 
     def head_object(self, Bucket: str, Key: str):
         with self._lock:

@@ -2907,3 +2907,48 @@ def test_mv_merge_sql_text_matches_full_recompute(eng):
     eng.sql("INSERT INTO ns1.src VALUES (9, 'D', 3.0)")
     refresh_matches_recompute("ns1.mvd")
     refresh_matches_recompute("ns1.mvg")
+
+
+def test_stored_state_schema_comes_from_the_footer(eng, spark):
+    """Refresh reads the stored MV state (companions and row count
+    included) with the schema Spark records in the file footer, instead
+    of a schema-inference job; for every shape it equals Spark's own
+    inference, before and after an incremental refresh."""
+    eng.sql("CREATE TABLE ns1.src (id BIGINT, grp STRING, v DOUBLE, "
+            "p DECIMAL(30,2), ts TIMESTAMP)")
+    eng.sql("CREATE TABLE ns1.dim (grp STRING, label STRING)")
+    eng.sql("INSERT INTO ns1.src VALUES "
+            "(1, 'A', 1.5, 2.25, TIMESTAMP'2024-01-01 10:00:00'), "
+            "(2, 'B', NULL, NULL, TIMESTAMP'2024-01-02 11:00:00')")
+    eng.sql("INSERT INTO ns1.dim VALUES ('A', 'x'), ('B', 'y')")
+    shapes = {
+        "agg": AGG,
+        "avg": "SELECT grp, AVG(v) AS av, SUM(p) AS sp FROM ns1.src "
+               "GROUP BY grp",
+        "glob": "SELECT COUNT(*) AS n, AVG(p) AS ap FROM ns1.src",
+        "day": "SELECT date_trunc('day', ts) AS day, COUNT(*) AS n "
+               "FROM ns1.src GROUP BY date_trunc('day', ts)",
+        "join": "SELECT d.label AS label, SUM(f.v) AS sv FROM ns1.src f "
+                "JOIN ns1.dim d ON f.grp = d.grp GROUP BY d.label",
+        "uni": "SELECT grp, COUNT(*) AS n FROM (SELECT grp FROM ns1.src "
+               "WHERE v > 0 UNION ALL SELECT grp FROM ns1.src "
+               "WHERE v < 0) u GROUP BY grp",
+    }
+
+    def schemas_agree():
+        for mv in shapes:
+            tdef = eng.catalog.describe_table(
+                eng.catalog.begin(read_only=True), "ns1", mv)
+            paths = tdef.file_paths()
+            inferred = spark.read.parquet(*eng._scan_uris(paths)).schema
+            assert eng._footer_schema(paths[0]) == inferred, mv
+
+    for mv, q in shapes.items():
+        eng.sql(f"CREATE MATERIALIZED VIEW ns1.{mv} AS {q}")
+    schemas_agree()
+    eng.sql("INSERT INTO ns1.src VALUES "
+            "(3, 'A', 2.0, 1.10, TIMESTAMP'2024-01-01 12:00:00')")
+    for mv in shapes:
+        r = eng.sql(f"REFRESH MATERIALIZED VIEW ns1.{mv}").collect()[0]
+        assert r.mode == "incremental", mv
+    schemas_agree()
