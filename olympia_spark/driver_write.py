@@ -6,10 +6,18 @@ module finds such rows (:func:`local_relation`), decides whether the
 session and schema allow the lane (:func:`settings`, :func:`int96`),
 converts the rows to one Arrow table with no Spark job (:func:`to_arrow`)
 and writes them as the same files Spark's ``LocalTableScanExec`` write
-would produce:
+would produce.
+
+A copy-on-write rewrite that Spark would run as one task (one file no
+larger than one scan split) takes the lane too: its rows are gathered
+in one Spark job (:func:`collect`) and written as the one file that task
+would write. Either way the catalog commit publishes the files, so
+Hadoop's output committer (``_temporary`` dirs, renames, ``.crc`` files
+and a forked ``chmod`` per file and dir) buys nothing. The files are:
 
 - ``min(rows, leafNodeDefaultParallelism)`` contiguous slices in row order
-  (``SparkContext.parallelize`` slicing), one empty file for zero rows
+  (``SparkContext.parallelize`` slicing) of local rows, one slice of a
+  rewrite, and one empty file for zero rows
 - one ``part-<5-digit slice>-<write uuid>-c000.snappy.parquet`` per slice
 - Spark's physical types: byte/short as annotated INT32, DATE as INT32,
   TIMESTAMP as INT96 (or INT64 micros), TIMESTAMP_NTZ as INT64 micros,
@@ -27,6 +35,7 @@ import os
 import struct
 import tempfile
 import uuid
+import weakref
 from collections.abc import Callable, Iterator
 
 from pyspark.sql import types as T
@@ -58,6 +67,23 @@ def local_relation(df):
     return plan if plan.nodeName() == "LocalRelation" else None
 
 
+# per gateway: the JVM classes to_arrow calls, each lookup a py4j round trip
+_HANDLES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _handles(jvm) -> tuple:
+    """(ArrowConverters, FileOutputStream, DataOutputStream, PythonRDD)
+    of the gateway ``jvm``, looked up once."""
+    handles = _HANDLES.get(jvm)
+    if handles is None:
+        handles = _HANDLES[jvm] = (
+            getattr(jvm.org.apache.spark.sql.execution.arrow,
+                    "ArrowConverters$").__getattr__("MODULE$"),
+            jvm.java.io.FileOutputStream, jvm.java.io.DataOutputStream,
+            jvm.org.apache.spark.api.python.PythonRDD)
+    return handles
+
+
 def to_arrow(spark, relation):
     """The rows of a LocalRelation as one Arrow table. Spark's own Arrow
     writer converts them in the driver JVM, so no Spark job runs
@@ -66,20 +92,17 @@ def to_arrow(spark, relation):
     labels the Arrow type of TIMESTAMP columns; the values are UTC
     either way and the files carry no Arrow schema."""
     import pyarrow as pa
-    jvm = spark._jvm
-    converters = getattr(jvm.org.apache.spark.sql.execution.arrow,
-                         "ArrowConverters$").__getattr__("MODULE$")
+    converters, file_out, data_out, python_rdd = _handles(spark._jvm)
     # no record count or size cap: one IPC stream holds every row
     streams = converters.toBatchWithSchemaIterator(
         relation.data().iterator(), relation.schema(), 0, 0, "UTC", True,
         False)
     with tempfile.TemporaryDirectory() as tmp:
         path = os.path.join(tmp, "rows.arrows")
-        out = jvm.java.io.DataOutputStream(jvm.java.io.FileOutputStream(path))
+        out = data_out(file_out(path))
         try:
             # each stream framed by its 4-byte big-endian length
-            jvm.org.apache.spark.api.python.PythonRDD.writeIteratorToStream(
-                streams, out)
+            python_rdd.writeIteratorToStream(streams, out)
         finally:
             out.close()
         with open(path, "rb") as f:
@@ -93,6 +116,36 @@ def to_arrow(spark, relation):
         tables.append(pa.ipc.open_stream(converters.createEmptyArrowBatch(
             relation.schema(), "UTC", True, False)).read_all())
     return pa.concat_tables(tables)
+
+
+def collect(df):
+    """The rows of ``df`` as one Arrow table, gathered by one Spark job
+    (``DataFrame.toArrow``) in the order one task would write them when
+    ``df`` runs as one task. Spark's large string and binary types
+    (``spark.sql.execution.arrow.useLargeVarTypes``) become the plain
+    ones, which the encoding choice (:func:`_keeps_dictionary`) knows."""
+    table = df.toArrow()
+    schema = _plain_var_schema(table.schema)
+    return table if schema.equals(table.schema) else table.cast(schema)
+
+
+def _plain_var_schema(schema):
+    import pyarrow as pa
+
+    def plain(t):
+        if pa.types.is_large_string(t):
+            return pa.string()
+        if pa.types.is_large_binary(t):
+            return pa.binary()
+        if pa.types.is_struct(t):
+            return pa.struct([f.with_type(plain(f.type)) for f in t])
+        if pa.types.is_map(t):
+            return pa.map_(t.key_field.with_type(plain(t.key_type)),
+                           t.item_field.with_type(plain(t.item_type)))
+        if pa.types.is_list(t):
+            return pa.list_(t.value_field.with_type(plain(t.value_type)))
+        return t
+    return pa.schema([f.with_type(plain(f.type)) for f in schema])
 
 
 # session settings the lane's files depend on, with the values it

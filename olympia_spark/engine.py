@@ -115,11 +115,14 @@ _BEGIN_RE = re.compile(r"^BEGIN(\s+TRANSACTION)?$", re.I)
 # where the literal is a complete quoted string ('' doubling only — a
 # backslash escape would need unescaping to compare, so such a literal
 # never parses and never prunes) or a complete signed number (decimal /
-# scientific).
+# scientific). ``col BETWEEN literal AND literal`` is the two comparisons
+# ``col >= lo`` and ``col <= hi``, as Spark rewrites it.
+_LITERAL = (r"('(?:[^'\\]|'')*'"
+            r"|[+-]?(?:\d+(?:\.\d+)?|\.\d+)(?:[eE][+-]?\d+)?)")
 _SIMPLE_CMP_RE = re.compile(
-    r"^\s*(\w+)\s*(=|<=|>=|<|>)\s*"
-    r"('(?:[^'\\]|'')*'|[+-]?(?:\d+(?:\.\d+)?|\.\d+)(?:[eE][+-]?\d+)?)"
-    r"\s*$")
+    rf"^\s*(\w+)\s*(=|<=|>=|<|>)\s*{_LITERAL}\s*$")
+_BETWEEN_RE = re.compile(
+    rf"^\s*(\w+)\s+BETWEEN\s+{_LITERAL}\s+AND\s+{_LITERAL}\s*$", re.I)
 _COMMIT_RE = re.compile(r"^COMMIT(\s+TRANSACTION)?$", re.I)
 _ROLLBACK_RE = re.compile(r"^ROLLBACK(\s+TRANSACTION)?$", re.I)
 
@@ -584,8 +587,11 @@ class Engine:
     def commit(self) -> None:
         if self.current_txn is None:
             raise TransactionValueError("no transaction in progress")
-        self.catalog.commit(self.current_txn)
-        self.current_txn = None
+        try:
+            self.catalog.commit(self.current_txn)
+        finally:
+            # a failed COMMIT ends the block too, as in PostgreSQL
+            self.current_txn = None
 
     def rollback(self) -> None:
         """ROLLBACK discards the in-memory transaction
@@ -2173,12 +2179,15 @@ class Engine:
                      tdef: TableDef | None = None,
                      generated_applied: bool = False,
                      rel_dir: str | None = None,
-                     drop_empty: bool = False) -> list[DataFile]:
+                     drop_empty: bool = False,
+                     one_split: bool = False) -> list[DataFile]:
         """Write ``df`` as parquet into a fresh dir (``rel_dir`` when the
         caller must be able to discard it) and return the new files with
         their footer stats. ``drop_empty`` removes zero-row part files
         from the result and from disk — always done for bucketed
-        layouts, whose dir-completeness counts must match the disk."""
+        layouts, whose dir-completeness counts must match the disk.
+        ``one_split``: Spark would run ``df`` as one task, so the driver
+        may gather its rows (:meth:`_write_local`)."""
         rel_dir = rel_dir or self._new_data_dir(ns, tbl)
         # direct lane: executors write straight to the object store
         # (s3a://); spool lane: write into the local read-cache dir,
@@ -2214,7 +2223,8 @@ class Engine:
             if bspec:
                 self._write_bucketed(df, out_dir, bspec, tdef,
                                      partition_by)
-            elif partition_by or not self._write_local(df, rel_dir):
+            elif partition_by or not self._write_local(df, rel_dir,
+                                                       one_split):
                 if partition_by:
                     # distribute rows by partition value before the
                     # dynamic-partition write (guide §6 / Iceberg
@@ -2286,32 +2296,44 @@ class Engine:
                     files))
         return files
 
-    def _write_local(self, df: DataFrame, rel_dir: str) -> bool:
-        """Driver lane: write ``df`` into ``rel_dir`` from the driver when
-        its rows are already there, i.e. it optimizes to a LocalRelation,
-        and return whether it did. One Arrow conversion and pyarrow
-        replace the Spark write job: no task ships the rows, no
-        ``_temporary`` renames, no forked ``chmod``s. The files are the
-        ones Spark's write of the same frame would make
-        (:mod:`driver_write`); the caller collects their stats and
+    def _write_local(self, df: DataFrame, rel_dir: str,
+                     one_split: bool = False) -> str | None:
+        """Driver lane: write ``df`` into ``rel_dir`` from the driver and
+        return the lane taken, or None to leave the write to Spark.
+
+        - ``"local"``: the rows are already on the driver (``df``
+          optimizes to a LocalRelation); one Arrow conversion in the
+          driver JVM replaces the Spark job.
+        - ``"collected"``: ``one_split``, so Spark would write one file
+          from one task; one ``toArrow`` job gathers its rows instead.
+
+        pyarrow then writes the files Spark's write of the same frame
+        would make (:mod:`driver_write`), with no ``_temporary`` renames
+        and no forked ``chmod``s; the caller collects their stats and
         publishes them as it does for Spark's. Only hive layouts and
         bucketing keep the Spark write. A CHECK violation raises here:
-        the optimizer folds the check into the relation."""
+        the optimizer folds the check into the relation, and a gathering
+        job evaluates it."""
         settings = self._driver_lane_settings
         if settings is None:
-            return False
+            return None
         int96_output, n_slices = settings
         int96 = driver_write.int96(df.schema, int96_output)
-        relation = None if int96 is None else driver_write.local_relation(df)
-        if relation is None:
-            return False
-        table = driver_write.to_arrow(self.spark, relation)
+        if int96 is None:
+            return None
+        if one_split:
+            table, n_slices, lane = driver_write.collect(df), 1, "collected"
+        else:
+            relation = driver_write.local_relation(df)
+            if relation is None:
+                return None
+            table, lane = driver_write.to_arrow(self.spark, relation), "local"
         if self.data_plane != "direct":
             out = self._abs(rel_dir)
             os.makedirs(out)
             driver_write.write_slices(table, n_slices, int96,
                                       lambda name: os.path.join(out, name))
-            return True
+            return lane
         import io
         bufs: dict[str, io.BytesIO] = {}
         driver_write.write_slices(table, n_slices, int96,
@@ -2322,7 +2344,7 @@ class Engine:
         with ThreadPoolExecutor(max_workers=min(16, len(bufs))) as pool:
             list(pool.map(lambda kv: storage.overwrite(
                 f"{rel_dir}/{kv[0]}", kv[1].getvalue()), bufs.items()))
-        return True
+        return lane
 
     @property
     def _driver_lane_settings(self) -> tuple[bool, int] | None:
@@ -2754,25 +2776,34 @@ class Engine:
             # WHERE b = 2)` must not prune the target on b) — no pruning.
             return [f.path for f in tdef.data_files]
         # Split on the ANDs that are code (never one inside a literal:
-        # 'x AND v = 3' is data, not a conjunct) and keep ONLY conjuncts
-        # that are in their entirety a simple `col op literal` comparison
-        # with an exactly-parsed literal ('' doubling, scientific
-        # notation, sign). Anything else — IS NULL, BETWEEN, function
-        # calls, a backslash-escaped or unrecognized literal form —
-        # contributes no pruning: partially-parsed literals ('O''Brien'
-        # read as 'O', 1e5 read as 1) would prune files that DO contain
-        # matching rows.
-        conjuncts, pos = [], 0
-        for m in re.finditer(r"\bAND\b", sqltext.code_view(predicate),
-                             re.I):
-            conjuncts.append(predicate[pos:m.start()])
-            pos = m.end()
+        # 'x AND v = 3' is data, not a conjunct), except the AND a
+        # BETWEEN takes, and keep ONLY conjuncts that are in their
+        # entirety a simple `col op literal` comparison or a
+        # `col BETWEEN literal AND literal` with exactly-parsed literals
+        # ('' doubling, scientific notation, sign). Anything else — IS
+        # NULL, function calls, a backslash-escaped or unrecognized
+        # literal form — contributes no pruning: partially-parsed
+        # literals ('O''Brien' read as 'O', 1e5 read as 1) would prune
+        # files that DO contain matching rows.
+        conjuncts, pos, between = [], 0, False
+        for m in re.finditer(r"\b(?:AND|BETWEEN)\b",
+                             sqltext.code_view(predicate), re.I):
+            if m.group().upper() == "BETWEEN":
+                between = True
+            elif between:
+                between = False         # the AND of BETWEEN lo AND hi
+            else:
+                conjuncts.append(predicate[pos:m.start()])
+                pos = m.end()
         conjuncts.append(predicate[pos:])
         comparisons = []
         for conj in conjuncts:
             m = _SIMPLE_CMP_RE.match(conj)
             if m:
                 comparisons.append(m.groups())
+            elif m := _BETWEEN_RE.match(conj):
+                col, lo, hi = m.groups()
+                comparisons += [(col, ">=", lo), (col, "<=", hi)]
         types = {f.name: f.dataType for f in tdef.spark_schema().fields}
         out = []
         for f in tdef.data_files:
@@ -2870,7 +2901,9 @@ class Engine:
         committed. When the write's plan holds no rows at all, the
         optimizer may drop the observed scan, and the count then takes
         a job of its own. A failed write (CHECK violation, executor
-        error) is discarded too, leaving the disk as it was."""
+        error) is discarded too, leaving the disk as it was. A rewrite
+        Spark would run as one task is written from the driver
+        (:meth:`_one_split`)."""
         scan = self._scan(tdef, files)
         obs = None
         if n is None:
@@ -2881,7 +2914,8 @@ class Engine:
         try:
             new_files = self._write_files(
                 transform(scan), ns, tbl, tdef.partition_by, tdef=tdef,
-                rel_dir=rel_dir, drop_empty=True)
+                rel_dir=rel_dir, drop_empty=True,
+                one_split=self._one_split(tdef, files, predicate))
         except Exception:
             self._discard_write(rel_dir)
             raise
@@ -2897,6 +2931,22 @@ class Engine:
                 self._discard_write(rel_dir)
                 return [], 0
         return new_files, n
+
+    def _one_split(self, tdef: TableDef, files: list[str],
+                   predicate: str) -> bool:
+        """Would Spark rewrite ``files`` in one task? It would for one
+        file no larger than both ``spark.sql.files.openCostInBytes`` and
+        ``spark.sql.files.maxPartitionBytes``: its scan packs such a file
+        into one split whatever the parallelism. A subquery predicate
+        plans a join whose shuffle spreads the rows over several tasks.
+        The split size also bounds what the driver gathers."""
+        if len(files) != 1 or re.search(r"\bSELECT\b", predicate, re.I):
+            return False
+        size = next(f.size_bytes for f in tdef.data_files
+                    if f.path == files[0])
+        conf = self.spark._jconf
+        return 0 <= size <= min(conf.filesOpenCostInBytes(),
+                                conf.filesMaxPartitionBytes())
 
     def _discard_write(self, rel_dir: str) -> None:
         """Delete a write dir no commit will reference, through the lane

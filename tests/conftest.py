@@ -112,3 +112,39 @@ def spark_jobs(spark):
         counted.n = len(sc.statusTracker().getJobIdsForGroup(group))
         sc.setLocalProperty("spark.jobGroup.id", prev)
         sc.setLocalProperty("spark.job.description", prev_desc)
+
+
+@pytest.fixture()
+def lane():
+    """``with lane() as taken: ...`` records the lane each ``Engine``
+    data write in the block takes, in order: ``"local"`` (rows already
+    on the driver), ``"collected"`` (a one-split rewrite the driver
+    gathers) or ``"spark"`` (Spark's write job, hive and bucketed
+    layouts included). A write that raises in the driver lane records
+    the lane it was in. ``lane(spark_lane=True)`` stubs the driver lane
+    out, so every write takes Spark's."""
+    from olympia_spark.engine import Engine
+
+    @contextlib.contextmanager
+    def spy(spark_lane: bool = False):
+        taken: list[str] = []
+        write_files, write_local = Engine._write_files, Engine._write_local
+
+        def files_spy(self, *args, **kwargs):
+            taken.append("spark")     # unless the driver lane says else
+            return write_files(self, *args, **kwargs)
+
+        def local_spy(self, df, rel_dir, one_split=False):
+            try:
+                took = None if spark_lane else write_local(
+                    self, df, rel_dir, one_split)
+            except Exception:
+                taken[-1] = "collected" if one_split else "local"
+                raise
+            taken[-1] = took or "spark"
+            return took
+        with pytest.MonkeyPatch.context() as m:
+            m.setattr(Engine, "_write_files", files_spy)
+            m.setattr(Engine, "_write_local", local_spy)
+            yield taken
+    return spy

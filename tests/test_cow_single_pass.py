@@ -2,7 +2,9 @@
 the predicate is plain and deterministic, DELETE/UPDATE skip the
 match-finding job and count the matches inside the rewrite job (an
 Observation on the scan it already runs). Everything else stays on the
-count-first path. Job counts are exact statusTracker counts per job
+count-first path. A one-file rewrite no larger than one scan split is
+gathered and written by the driver (the ``"collected"`` lane), so that
+job is a ``toArrow``. Job counts are exact statusTracker counts per job
 group (``spark_jobs``)."""
 
 from __future__ import annotations
@@ -66,16 +68,17 @@ def _spy_counts(engine, monkeypatch):
     return seen
 
 
-def test_point_delete_and_update_run_one_job(engine, spark):
+def test_point_delete_and_update_run_one_job(engine, spark, lane):
     _one_file_table(engine, spark)
-    with spark_jobs(spark) as jobs:
+    with lane() as taken, spark_jobs(spark) as jobs:
         got = engine.sql("DELETE FROM ns.t WHERE k = 7").collect()
     assert got[0].rows_affected == 1
     assert jobs.n == 1
-    with spark_jobs(spark) as jobs:
+    with lane() as taken2, spark_jobs(spark) as jobs:
         got = engine.sql("UPDATE ns.t SET v = -1 WHERE k = 8").collect()
     assert got[0].rows_affected == 1
     assert jobs.n == 1
+    assert taken + taken2 == ["collected", "collected"]
     want = [(k, -1 if k == 8 else 10 * k) for k in range(1, 101) if k != 7]
     assert _rows(engine) == want
     assert len(engine.catalog.describe_table(
@@ -116,15 +119,33 @@ def test_zero_match_point_delete_leaves_warehouse_identical(engine, spark,
     assert len(_rows(engine)) == 100
 
 
-def test_zero_match_update_commits_nothing(engine, spark, tmp_path):
-    """k = 0 is inside the file's [1, 100] range but matches no row: the
+def test_zero_match_delete_in_range_discards_the_driver_rewrite(
+        engine, spark, tmp_path, lane):
+    """The file's stats admit k = 50 AND v = 15, so the single pass
+    gathers and writes a copy, observes 0 matches and deletes it."""
+    _one_file_table(engine, spark)
+    before = _tree(tmp_path / "wh")
+    version = engine.catalog.tree.find_latest_version()
+    with lane() as taken, spark_jobs(spark) as jobs:
+        got = engine.sql("DELETE FROM ns.t WHERE k = 50 AND v = 15").collect()
+    assert taken == ["collected"]
+    assert got[0].rows_affected == 0
+    assert jobs.n == 1
+    assert engine.catalog.tree.find_latest_version() == version
+    assert _tree(tmp_path / "wh") == before
+
+
+def test_zero_match_update_commits_nothing(engine, spark, tmp_path, lane):
+    """k = 2 is inside the file's [1, 3] range but matches no row: the
     single pass writes a copy, observes 0 and discards it."""
     engine.sql("CREATE TABLE ns.t (k BIGINT, v BIGINT)")
     engine.write_table(spark.createDataFrame(
         [(1, 1), (3, 3)], "k BIGINT, v BIGINT").coalesce(1), "ns.t")
     before = _tree(tmp_path / "wh")
     version = engine.catalog.tree.find_latest_version()
-    got = engine.sql("UPDATE ns.t SET v = 0 WHERE k = 2").collect()
+    with lane() as taken:
+        got = engine.sql("UPDATE ns.t SET v = 0 WHERE k = 2").collect()
+    assert taken == ["collected"]
     assert got[0].rows_affected == 0
     assert engine.catalog.tree.find_latest_version() == version
     assert _tree(tmp_path / "wh") == before
@@ -152,13 +173,14 @@ def test_subquery_and_rand_stay_count_first(engine, spark, monkeypatch):
 
 
 def test_check_violation_in_single_pass_changes_nothing(engine, spark,
-                                                        tmp_path):
+                                                        tmp_path, lane):
     _one_file_table(engine, spark)
     engine.sql("ALTER TABLE ns.t ADD CONSTRAINT pos CHECK (v > 0)")
     before = _tree(tmp_path / "wh")
     version = engine.catalog.tree.find_latest_version()
-    with pytest.raises(CheckConstraintError):
+    with lane() as taken, pytest.raises(CheckConstraintError):
         engine.sql("UPDATE ns.t SET v = -1 WHERE k = 3")
+    assert taken == ["collected"]
     assert engine.catalog.tree.find_latest_version() == version
     assert _tree(tmp_path / "wh") == before
     assert _rows(engine) == [(k, 10 * k) for k in range(1, 101)]
@@ -166,11 +188,13 @@ def test_check_violation_in_single_pass_changes_nothing(engine, spark,
 
 @pytest.mark.parametrize("pred", ["k < 1000", "true"])
 def test_delete_all_rows_leaves_no_zero_row_file(engine, spark, tmp_path,
-                                                 pred):
+                                                 pred, lane):
     """``true`` folds the DELETE filter to false, and the optimizer drops
     the observed scan from the plan: the count still comes out exact."""
     _one_file_table(engine, spark)
-    got = engine.sql(f"DELETE FROM ns.t WHERE {pred}").collect()
+    with lane() as taken:
+        got = engine.sql(f"DELETE FROM ns.t WHERE {pred}").collect()
+    assert taken == ["collected"]
     assert got[0].rows_affected == 100
     tdef = engine.catalog.describe_table(
         engine.catalog.begin(read_only=True), "ns", "t")
@@ -246,7 +270,7 @@ def test_replace_where_counts(engine, spark):
                                    14: 140, 16: 160, 18: 180, 20: 200}
 
 
-def test_spool_lane_single_pass_and_discard(spark, tmp_path):
+def test_spool_lane_single_pass_and_discard(spark, tmp_path, lane):
     from olympia_spark.catalog.storage import S3Storage
     from tests.fake_s3 import FakeS3Client
     client = FakeS3Client()
@@ -264,9 +288,44 @@ def test_spool_lane_single_pass_and_discard(spark, tmp_path):
     assert jobs.n <= 1
     assert set(storage.list("data/")) == keys
     assert _tree(tmp_path / "cache" / "data") == cache
-    with spark_jobs(spark) as jobs:
+    with lane() as taken, spark_jobs(spark) as jobs:
         got = eng.sql("UPDATE ns.t SET v = 1 WHERE k = 4").collect()
     assert got[0].rows_affected == 1
     assert jobs.n == 1
+    assert taken == ["collected"]
     rows = dict(_rows(eng))
     assert rows[4] == 1 and len(rows) == 20
+
+
+def test_between_prunes_a_range_delete_to_one_file(engine, spark,
+                                                   monkeypatch, lane):
+    """``k BETWEEN lo AND hi`` is ``k >= lo AND k <= hi`` for pruning:
+    of four files only the one whose range overlaps is touched, so the
+    DELETE takes the single pass and runs one job."""
+    engine.sql("CREATE TABLE ns.t (k BIGINT, v BIGINT)")
+    for i in range(4):
+        engine.write_table(spark.range(25 * i + 1, 25 * i + 26).select(
+            F.col("id").alias("k"), (F.col("id") * 10).alias("v"))
+            .coalesce(1), "ns.t")
+
+    def paths():
+        return {f.path for f in engine.catalog.describe_table(
+            engine.catalog.begin(read_only=True), "ns", "t").data_files}
+    tdef = engine.catalog.describe_table(
+        engine.catalog.begin(read_only=True), "ns", "t")
+    assert len(engine._candidate_files(tdef, "k NOT BETWEEN 30 AND 40")) \
+        == 4
+    assert len(engine._candidate_files(
+        tdef, "k BETWEEN 30 AND 40 AND k = 90")) == 0
+    before = paths()
+    seen = _spy_counts(engine, monkeypatch)
+    with lane() as taken, spark_jobs(spark) as jobs:
+        got = engine.sql("DELETE FROM ns.t WHERE k BETWEEN 30 AND 40")\
+            .collect()
+    assert got[0].rows_affected == 11
+    assert seen == [None]
+    assert jobs.n == 1
+    assert taken == ["collected"]
+    assert len(before & paths()) == 3
+    assert _rows(engine) == [(k, 10 * k) for k in range(1, 101)
+                             if not 30 <= k <= 40]

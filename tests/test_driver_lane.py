@@ -15,7 +15,6 @@ predicate matches.
 
 from __future__ import annotations
 
-import contextlib
 import os
 from decimal import Decimal
 
@@ -31,21 +30,6 @@ def engine(spark, tmp_path_factory):
     eng = Engine(spark, str(tmp_path_factory.mktemp("driver_lane") / "wh"))
     eng.sql("CREATE NAMESPACE ns")
     return eng
-
-
-@contextlib.contextmanager
-def lane(spark_lane: bool = False):
-    """Record which lane each write takes; ``spark_lane`` forces Spark's."""
-    taken: list[bool] = []
-    write_local = Engine._write_local
-
-    def spy(self, df, rel_dir):
-        took = not spark_lane and write_local(self, df, rel_dir)
-        taken.append(took)
-        return took
-    with pytest.MonkeyPatch.context() as m:
-        m.setattr(Engine, "_write_local", spy)
-        yield taken
 
 
 def _files(engine, name):
@@ -74,18 +58,27 @@ def _rows(engine, name):
     return sorted(map(repr, engine.read_table(name).collect()))
 
 
-def _same_through_both_lanes(engine, name, write):
+def _rows_per_file(engine, name):
+    """Per tracked file, its rows in file order, as Spark reads them."""
+    return [list(map(repr, engine.spark.read.parquet(
+        engine._abs(p)).collect())) for p in _paths(engine, name)]
+
+
+def _same_through_both_lanes(engine, lane, name, write, lanes=None):
     """Run ``write(table)`` into ``<name>_d`` on the driver lane and into
-    ``<name>_s`` on the Spark lane; assert the two tables agree."""
+    ``<name>_s`` on the Spark lane; assert the two tables agree. The
+    writes of ``<name>_d`` take ``lanes`` (default: all ``"local"``)."""
     with lane() as taken:
         write(f"{name}_d")
-    assert taken and all(taken), "driver lane not taken"
+    assert taken and taken == (lanes or ["local"] * len(taken)), taken
     with lane(spark_lane=True):
         write(f"{name}_s")
     driver, spark_files = _files(engine, f"{name}_d"), _files(
         engine, f"{name}_s")
     assert driver == spark_files
     assert _rows(engine, f"{name}_d") == _rows(engine, f"{name}_s")
+    assert _rows_per_file(engine, f"{name}_d") == _rows_per_file(
+        engine, f"{name}_s")
     assert _dictionary_encoded(engine, f"{name}_d") == _dictionary_encoded(
         engine, f"{name}_s")
     return driver
@@ -114,9 +107,9 @@ MATRIX = """SELECT * FROM VALUES
   AS t(k, i8, i16, i32, i64, dbl, flt, dec30, s, b, bo, dt, ts, arr, m, st)"""
 
 
-def test_type_matrix_is_the_same_through_both_lanes(engine, spark):
+def test_type_matrix_is_the_same_through_both_lanes(engine, spark, lane):
     files = _same_through_both_lanes(
-        engine, "ns.matrix",
+        engine, lane, "ns.matrix",
         lambda name: engine.write_table(spark.sql(MATRIX), name))
     parallelism = engine._driver_lane_settings[1]
     assert [n for n, _s in files] == [
@@ -128,20 +121,21 @@ def test_type_matrix_is_the_same_through_both_lanes(engine, spark):
 
 
 def test_ntz_and_empty_frames_are_the_same_through_both_lanes(engine,
-                                                              spark):
+                                                              spark, lane):
     _same_through_both_lanes(
-        engine, "ns.ntz",
+        engine, lane, "ns.ntz",
         lambda name: engine.write_table(spark.sql(
             "SELECT * FROM VALUES (1, TIMESTAMP_NTZ'2024-01-01 10:00:00'), "
             "(2, TIMESTAMP_NTZ'1500-01-02 00:00:00') AS t(k, ntz)"), name))
     files = _same_through_both_lanes(
-        engine, "ns.empty",
+        engine, lane, "ns.empty",
         lambda name: engine.write_table(spark.sql(
             "SELECT CAST(NULL AS BIGINT) AS k WHERE 1 = 0"), name))
     assert files == [(0, {})]
 
 
-def test_pandas_frames_take_the_lane_with_sparks_encodings(engine, spark):
+def test_pandas_frames_take_the_lane_with_sparks_encodings(engine, spark,
+                                                          lane):
     """A pandas-built frame is a LocalRelation. Each column is
     dictionary-encoded where Spark's writer keeps a dictionary (few
     distinct values) and PLAIN where it falls back (many)."""
@@ -156,7 +150,7 @@ def test_pandas_frames_take_the_lane_with_sparks_encodings(engine, spark):
         "x": np.arange(n) / 7.0,
     }))
     _same_through_both_lanes(
-        engine, "ns.pd", lambda name: engine.write_table(frame, name))
+        engine, lane, "ns.pd", lambda name: engine.write_table(frame, name))
     assert _dictionary_encoded(engine, "ns.pd_d")[0] == ["grp", "flag"]
 
 
@@ -179,13 +173,13 @@ def test_sessions_the_lane_cannot_match_keep_the_spark_write(spark, key,
     assert driver_write.settings(spark) is not None
 
 
-def test_small_decimals_keep_the_spark_write(engine, spark):
+def test_small_decimals_keep_the_spark_write(engine, spark, lane):
     # pyarrow cannot store DECIMAL(p <= 18) as an integer the way Spark
     # does, so the lane declines; the integer-backed stats decode
     with lane() as taken:
         engine.sql("CREATE TABLE ns.dec (k INT, p DECIMAL(10,2))")
         engine.sql("INSERT INTO ns.dec VALUES (1, 3.50), (2, -12.25)")
-    assert taken == [False]
+    assert taken == ["spark"]
     assert [r.p for r in engine.sql(
         "SELECT p FROM ns.dec ORDER BY k").collect()] == [
         Decimal("3.50"), Decimal("-12.25")]
@@ -193,40 +187,40 @@ def test_small_decimals_keep_the_spark_write(engine, spark):
     assert stats == [["-12.25", "-12.25"], ["3.50", "3.50"]]
 
 
-def test_frames_spark_refuses_to_write_keep_its_error(engine, spark):
+def test_frames_spark_refuses_to_write_keep_its_error(engine, spark, lane):
     with lane() as taken, pytest.raises(Exception,
                                         match="COLUMN_ALREADY_EXISTS"):
         engine.write_table(spark.sql("SELECT 1 AS a, 2 AS A"), "ns.dup")
-    assert taken == [False]
+    assert taken == ["spark"]
 
 
-def test_values_insert_writes_one_file_per_row(engine):
+def test_values_insert_writes_one_file_per_row(engine, lane):
     def insert(name):
         engine.sql(f"CREATE TABLE {name} (k BIGINT, v STRING)")
         engine.sql(f"INSERT INTO {name} VALUES (1, 'a'), (2, 'b')")
-    files = _same_through_both_lanes(engine, "ns.two", insert)
+    files = _same_through_both_lanes(engine, lane, "ns.two", insert)
     assert [n for n, _s in files] == [1, 1]
 
 
-def test_values_insert_inside_begin_commit(engine):
+def test_values_insert_inside_begin_commit(engine, lane):
     def block(name):
         engine.sql(f"CREATE TABLE {name} (k BIGINT)")
         engine.sql("BEGIN")
         engine.sql(f"INSERT INTO {name} VALUES (1)")
         engine.sql(f"INSERT INTO {name} VALUES (2), (3)")
         engine.sql("COMMIT")
-    _same_through_both_lanes(engine, "ns.blk", block)
+    _same_through_both_lanes(engine, lane, "ns.blk", block)
     assert [r.k for r in engine.sql(
         "SELECT k FROM ns.blk_d ORDER BY k").collect()] == [1, 2, 3]
 
 
-def test_generated_and_renamed_columns(engine):
+def test_generated_and_renamed_columns(engine, lane):
     def write(name):
         engine.sql(f"CREATE TABLE {name} (k BIGINT, v BIGINT, "
                    f"g BIGINT GENERATED ALWAYS AS (v * 10))")
         engine.sql(f"ALTER TABLE {name} RENAME COLUMN k TO key")
         engine.sql(f"INSERT INTO {name} (key, v) VALUES (1, 5), (2, 7)")
-    files = _same_through_both_lanes(engine, "ns.gen", write)
+    files = _same_through_both_lanes(engine, lane, "ns.gen", write)
     # stats sit under the physical (creation) name
     assert sorted(s["k"] for _n, s in files) == [[1, 1], [2, 2]]
     assert sorted((r.key, r.v, r.g) for r in engine.sql(
@@ -234,7 +228,8 @@ def test_generated_and_renamed_columns(engine):
 
 
 @pytest.mark.parametrize("spark_lane", [False, True])
-def test_check_violation_leaves_table_and_disk_unchanged(engine, spark_lane):
+def test_check_violation_leaves_table_and_disk_unchanged(engine, lane,
+                                                          spark_lane):
     name = f"ns.chk_{int(spark_lane)}"
     engine.sql(f"CREATE TABLE {name} (k BIGINT, v BIGINT, "
                f"CONSTRAINT pos CHECK (v >= 0))")
@@ -250,7 +245,7 @@ def test_check_violation_leaves_table_and_disk_unchanged(engine, spark_lane):
     assert _rows(engine, name) == ["Row(k=1, v=10)"]
 
 
-def test_spark_lane_writes_no_success_marker(engine, spark):
+def test_spark_lane_writes_no_success_marker(engine, spark, lane):
     with lane(spark_lane=True):
         engine.write_table(spark.range(3), "ns.marker")
     data = os.path.join(engine.catalog.storage.root, "data", "ns", "marker")
@@ -259,39 +254,39 @@ def test_spark_lane_writes_no_success_marker(engine, spark):
     assert names and not [n for n in names if "SUCCESS" in n]
 
 
-def test_object_store_lanes(spark, tmp_path):
+def _engine_on(spark, tmp_path, plane):
+    """An engine on a fresh fake object store, data plane ``plane``."""
+    from olympia_spark.catalog.storage import S3Storage
+    from tests.fake_s3 import FakeS3Client
+    storage = S3Storage("bucket", plane, client=FakeS3Client(),
+                        cache_dir=str(tmp_path / plane))
+    eng = Engine(spark, storage, data_plane=plane)
+    eng.sql("CREATE NAMESPACE ns")
+    return eng
+
+
+def test_object_store_lanes(spark, tmp_path, lane):
     """Spool lane: the driver writes into the local cache and the shared
     upload publishes. Direct lane: the driver puts the objects itself
     (Spark has no s3a filesystem here, so only the driver lane can write
     there) and the stats come from ranged footer reads."""
-    from olympia_spark.catalog.storage import S3Storage
-    from tests.fake_s3 import FakeS3Client
-
-    def engine_on(plane):
-        client = FakeS3Client()
-        storage = S3Storage("bucket", plane, client=client,
-                            cache_dir=str(tmp_path / plane))
-        eng = Engine(spark, storage, data_plane=plane)
-        eng.sql("CREATE NAMESPACE ns")
-        return eng, client
-
-    spool, _ = engine_on("spool")
+    spool = _engine_on(spark, tmp_path, "spool")
     ins = "INSERT INTO {} VALUES (1, 'a'), (2, NULL), (3, 'c')"
     for name, spark_lane in (("ns.d", False), ("ns.s", True)):
         spool.sql(f"CREATE TABLE {name} (k BIGINT, v STRING)")
         with lane(spark_lane) as taken:
             spool.sql(ins.format(name))
-        assert taken == [not spark_lane]
+        assert taken == ["spark" if spark_lane else "local"]
     assert _files(spool, "ns.d") == _files(spool, "ns.s")
     assert _rows(spool, "ns.d") == _rows(spool, "ns.s")
     assert {p for p in spool.catalog.storage.list("data/ns/d/")} == {
         p for p in _paths(spool, "ns.d")}
 
-    direct, client = engine_on("direct")
+    direct = _engine_on(spark, tmp_path, "direct")
     direct.sql("CREATE TABLE ns.d (k BIGINT, v STRING)")
     with lane() as taken:
         direct.sql(ins.format("ns.d"))
-    assert taken == [True]
+    assert taken == ["local"]
     assert _files(direct, "ns.d") == _files(spool, "ns.d")
     assert sorted(direct.catalog.storage.list("data/ns/d/")) == sorted(
         _paths(direct, "ns.d"))
@@ -302,6 +297,176 @@ def _paths(engine, name):
     ns, tbl = name.split(".")
     return engine.catalog.describe_table(
         engine.catalog.begin(read_only=True), ns, tbl).file_paths()
+
+
+# --- one-split copy-on-write rewrites ---------------------------------------
+#
+# A rewrite of one file no larger than one scan split is one Spark task:
+# the driver gathers its rows (one toArrow job) and writes the one file
+# that task would, with no output committer.
+
+REWRITES = {
+    "delete": lambda engine, name: engine.sql(
+        f"DELETE FROM {name} WHERE k = 3"),
+    "update": lambda engine, name: engine.sql(
+        f"UPDATE {name} SET s = 'new', dbl = dbl * 2, ts = NULL "
+        f"WHERE k = 2"),
+    "replace_where": lambda engine, name: engine.replace_where(
+        name, engine.spark.sql(MATRIX).where("k = 4"), "k = 4"),
+}
+
+
+def _data_tree(engine, name):
+    """Every dir and file under the table's data dir."""
+    root = os.path.join(engine.catalog.storage.root, "data",
+                        *name.split("."))
+    return sorted(os.path.relpath(os.path.join(d, x), root)
+                  for d, dirs, names in os.walk(root) for x in dirs + names)
+
+
+@pytest.mark.parametrize("dml", sorted(REWRITES))
+def test_rewrites_are_the_same_through_both_lanes(engine, spark, lane, dml):
+    def write(name):
+        engine.write_table(spark.sql(MATRIX).coalesce(1), name)
+        REWRITES[dml](engine, name)
+    # replace_where's inserted rows are a persisted frame: Spark writes them
+    lanes = ["spark", "collected"] + ["spark"] * (dml == "replace_where")
+    files = _same_through_both_lanes(engine, lane, f"ns.rw_{dml}", write,
+                                     lanes)
+    assert sum(n for n, _s in files) == (4 if dml == "delete" else 5)
+    for arm in "sd":
+        rewritten = _paths(engine, f"ns.rw_{dml}_{arm}")[0]
+        assert os.path.basename(rewritten).startswith("part-00000-")
+    # the driver's rewrite dir holds its one file: no committer dirs,
+    # no .crc files
+    listing = os.listdir(os.path.dirname(engine._abs(rewritten)))
+    assert listing == [os.path.basename(rewritten)]
+
+
+def test_large_var_types_are_written_as_plain_ones(engine, spark, lane):
+    """With ``useLargeVarTypes`` Spark hands ``toArrow`` large strings and
+    binaries, nested ones too; the rewrite still writes Spark's file."""
+    key = "spark.sql.execution.arrow.useLargeVarTypes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        _same_through_both_lanes(
+            engine, lane, "ns.large",
+            lambda name: (engine.write_table(spark.sql(MATRIX).coalesce(1),
+                                             name),
+                          REWRITES["update"](engine, name)),
+            ["spark", "collected"])
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_rewrite_lane_runs_no_spark_write(engine, spark, lane, monkeypatch):
+    engine.write_table(spark.range(10).coalesce(1), "ns.nowrite")
+    before = _data_tree(engine, "ns.nowrite")
+    monkeypatch.setattr(type(spark.range(1)), "write", property(
+        lambda df: pytest.fail("a Spark write job ran")))
+    with lane() as taken:
+        engine.sql("UPDATE ns.nowrite SET id = -1 WHERE id = 4")
+    assert taken == ["collected"]
+    (path,) = _paths(engine, "ns.nowrite")
+    new_dir = os.path.relpath(os.path.dirname(path), "data/ns/nowrite")
+    assert sorted(set(_data_tree(engine, "ns.nowrite")) - set(before)) == [
+        new_dir, os.path.join(new_dir, os.path.basename(path))]
+    assert sorted(r.id for r in engine.read_table("ns.nowrite").collect()) \
+        == [-1, 0, 1, 2, 3, 5, 6, 7, 8, 9]
+
+
+@pytest.mark.parametrize("spark_lane", [False, True])
+def test_check_violation_in_a_rewrite_changes_nothing(engine, spark, lane,
+                                                     spark_lane):
+    name = f"ns.rchk_{int(spark_lane)}"
+    engine.sql(f"CREATE TABLE {name} (k BIGINT, v BIGINT, "
+               f"CONSTRAINT pos CHECK (v >= 0))")
+    engine.write_table(spark.range(1, 11).selectExpr(
+        "id AS k", "id * 10 AS v").coalesce(1), name)
+    before, on_disk = _files(engine, name), _data_tree(engine, name)
+    with lane(spark_lane) as taken, pytest.raises(CheckConstraintError):
+        engine.sql(f"UPDATE {name} SET v = -1 WHERE k = 3")
+    assert taken == ["spark" if spark_lane else "collected"]
+    assert _files(engine, name) == before
+    assert _data_tree(engine, name) == on_disk
+    assert len(_rows(engine, name)) == 10
+
+
+@pytest.mark.parametrize("key", ["spark.sql.files.openCostInBytes",
+                                 "spark.sql.files.maxPartitionBytes"])
+def test_a_file_above_one_split_keeps_the_spark_write(engine, spark, lane,
+                                                      key):
+    name = f"ns.split_{key.rsplit('.', 1)[1].lower()}"
+    engine.write_table(spark.range(100).coalesce(1), name)
+    old = spark.conf.get(key)
+
+    def rewrite_at_limit(over: int):
+        (size,) = [f.size_bytes for f in engine.catalog.describe_table(
+            engine.catalog.begin(read_only=True), *name.split(".")
+        ).data_files]
+        spark.conf.set(key, str(size - over))
+        with lane() as taken:
+            engine.sql(f"UPDATE {name} SET id = id + 1000 WHERE id = 7")
+        return taken
+    try:
+        assert rewrite_at_limit(over=0) == ["collected"]
+        assert rewrite_at_limit(over=1) == ["spark"]
+    finally:
+        spark.conf.set(key, old)
+    assert len(_rows(engine, name)) == 100
+
+
+def test_partitioned_bucketed_and_subquery_rewrites_keep_the_spark_write(
+        engine, spark, lane):
+    engine.sql("CREATE TABLE ns.rp (k BIGINT, p STRING) PARTITIONED BY (p)")
+    engine.write_table(spark.range(1, 11).selectExpr(
+        "id AS k", "'a' AS p").coalesce(1), "ns.rp")
+    engine.sql("CREATE TABLE ns.rb (k BIGINT, v BIGINT) "
+               "CLUSTERED BY (k) INTO 4 BUCKETS")
+    engine.write_table(spark.createDataFrame([(2, 20)], "k BIGINT, v BIGINT"),
+                       "ns.rb")
+    engine.write_table(spark.range(1, 11).selectExpr("id AS k").coalesce(1),
+                       "ns.rq")
+    with lane() as taken:
+        engine.sql("DELETE FROM ns.rp WHERE k = 3")
+        engine.sql("UPDATE ns.rb SET v = 0 WHERE k = 2")
+        # a subquery plans a join: its shuffle spreads the rows over tasks
+        engine.sql("DELETE FROM ns.rq WHERE k IN (SELECT k FROM ns.rp "
+                   "WHERE k < 3)")
+    assert taken == ["spark"] * 3
+    assert sorted(r.k for r in engine.read_table("ns.rq").collect()) == \
+        list(range(3, 11))
+
+
+def test_object_store_rewrites(spark, tmp_path, lane):
+    """Spool lane: the driver writes the rewrite into the local cache and
+    the shared upload publishes it. Direct lane: the driver puts the
+    object itself; Spark's scans read copies the test fetches, since
+    there is no s3a filesystem here."""
+    spool = _engine_on(spark, tmp_path, "spool")
+    direct = _engine_on(spark, tmp_path, "direct")
+    direct._scan_uris = direct._ensure_local
+    dml = ("UPDATE {} SET v = 'x' WHERE k = 2", "DELETE FROM {} WHERE k = 3")
+    for eng, name, spark_lane in ((spool, "ns.d", False),
+                                  (spool, "ns.s", True),
+                                  (direct, "ns.d", False)):
+        eng.sql(f"CREATE TABLE {name} (k BIGINT, v STRING)")
+        eng.sql(f"INSERT INTO {name} VALUES (1, 'a'), (2, NULL), (3, 'c'), "
+                f"(4, 'd'), (5, NULL), (6, 'f')")
+        written = set(_paths(eng, name))
+        with lane(spark_lane) as taken:
+            for stmt in dml:
+                eng.sql(stmt.format(name))
+                written |= set(_paths(eng, name))
+        assert taken == ["spark" if spark_lane else "collected"] * 2
+        prefix = f"data/{name.replace('.', '/')}/"
+        assert set(eng.catalog.storage.list(prefix)) == written
+    assert _files(spool, "ns.d") == _files(spool, "ns.s")
+    assert _files(direct, "ns.d") == _files(spool, "ns.d")
+    assert _rows(direct, "ns.d") == _rows(spool, "ns.s") == [
+        "Row(k=1, v='a')", "Row(k=2, v='x')", "Row(k=4, v='d')",
+        "Row(k=5, v=None)", "Row(k=6, v='f')"]
 
 
 # --- stats pruning keyed on the declared type --------------------------------
@@ -335,7 +500,7 @@ def test_noncanonical_date_literal_never_prunes(engine, spark):
     assert got[0].rows_affected == 1
 
 
-def test_nan_rows_are_never_pruned_away(engine, spark):
+def test_nan_rows_are_never_pruned_away(engine, spark, lane):
     # every file holds a 2.0 and a NaN: Spark's footer says max = NaN,
     # the driver's records no x stats (Arrow's max would say 2.0)
     n = engine._driver_lane_settings[1]
@@ -347,7 +512,7 @@ def test_nan_rows_are_never_pruned_away(engine, spark):
     engine.sql("CREATE TABLE ns.nan_d (k INT, x DOUBLE)")
     with lane() as taken:
         engine.write_table(spark.sql(rows), "ns.nan_d")
-    assert taken == [True]
+    assert taken == ["local"]
     assert all("x" not in s for _n, s in _files(engine, "ns.nan_d"))
     got = engine.sql("DELETE FROM ns.nan_s WHERE x = 2.0").collect()
     assert got[0].rows_affected == n

@@ -242,6 +242,27 @@ def test_serializable_engine_read_write_conflict(engine, spark):
         ser.sql("COMMIT")
 
 
+def test_failed_commit_ends_the_block(engine, spark):
+    """A COMMIT that loses its CAS ends the block, as in PostgreSQL: the
+    next BEGIN works without a ROLLBACK, and none of the loser's rows
+    were published."""
+    engine.sql("CREATE TABLE ns1.fc (x BIGINT)")
+    other = Engine(spark, engine.catalog.storage.root,
+                   isolation_level="SERIALIZABLE")
+    other.sql("BEGIN")
+    other.sql("SELECT * FROM ns1.fc").collect()  # records TABLE_SELECT
+    other.sql("INSERT INTO ns1.fc VALUES (1), (2)")
+    engine.sql("INSERT INTO ns1.fc VALUES (3)")   # concurrent write
+    with pytest.raises(CommitConflictError):
+        other.sql("COMMIT")
+    assert other.current_txn is None
+    other.sql("BEGIN")
+    other.sql("INSERT INTO ns1.fc VALUES (4)")
+    other.sql("COMMIT")
+    assert sorted(r.x for r in engine.sql(
+        "SELECT x FROM ns1.fc").collect()) == [3, 4]
+
+
 # --- MERGE: multiple / conditional WHEN clauses ------------------------------
 
 def test_merge_multi_clause_conditional(engine, spark):
@@ -1049,7 +1070,7 @@ def test_add_constraint_conflicts_with_concurrent_writes(engine, spark):
     other.sql("COMMIT")
     with pytest.raises(CommitConflictError):
         engine.sql("COMMIT")
-    engine.current_txn = None
+    assert engine.current_txn is None
     # direction (b): constraint loses the CAS to a concurrent write
     eng3 = Engine(spark, engine.catalog.storage.root)
     eng3.sql("ALTER TABLE ns1.cw DROP CONSTRAINT v_pos")
@@ -1060,7 +1081,7 @@ def test_add_constraint_conflicts_with_concurrent_writes(engine, spark):
     other.sql("COMMIT")
     with pytest.raises(CommitConflictError):
         engine.sql("COMMIT")
-    engine.current_txn = None
+    assert engine.current_txn is None
 
 
 def test_create_table_round_trip_and_ddl_validation(engine):
